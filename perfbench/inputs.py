@@ -1,147 +1,26 @@
-"""Seeded input generators for the benchmark workloads.
+"""Seeded input generator for the ``incremental_sync`` workload.
 
-Everything here is a pure function of its seed: the same seed writes
-byte-identical parquet. The star-schema tables follow the shapes of
-the engine's synthetic test tables (TPC-H-like keys and value ranges,
-a 31-word document vocabulary with a few percent near-duplicates), so
-every registered query runs on them and its DuckDB oracle applies.
 The sync stream is a sequence of collection-document snapshots whose
-creates, updates and deletes per generation are known exactly.
+creates, updates and deletes per generation are known exactly. It is a
+pure function of its seed: the same seed writes byte-identical parquet.
+(``short_queries`` reads the fixed sf0.1 tables under ``data/``.)
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-PART_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 WORDS = (
     "a agg batch big column customer data fast filter group hash join key line merge "
     "order part query row scan slow small sort spark stream table the value vector window"
 ).split()
-LANGS = ["de", "en", "es", "fr", "zh"]
 
 
-def _strs(prefix: str, keys: np.ndarray, width: int = 0) -> pa.Array:
-    digits = pc.cast(pa.array(keys), pa.string())
-    if width:
-        digits = pc.utf8_lpad(digits, width, "0")
-    return pc.binary_join_element_wise(prefix, digits, "")
-
-
-def _pick(rng: np.random.Generator, values: list[str], n: int) -> pa.Array:
-    return pa.array(np.asarray(values, dtype=object)[rng.integers(0, len(values), n)], pa.string())
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.integers(int(lo * 100), int(hi * 100), n) / 100.0, 2)
-
-
-def _days(rng: np.random.Generator, start: str, span_days: int, n: int) -> pa.Array:
-    d = np.datetime64(start, "D") + rng.integers(0, span_days, n).astype("timedelta64[D]")
-    return pa.array(d.astype("datetime64[us]"))
-
-
-def _documents(rng: np.random.Generator, n: int) -> pa.Table:
-    vocab = np.asarray(WORDS, dtype=object)
-    texts = [" ".join(vocab[rng.integers(0, len(WORDS), int(k))]) for k in rng.integers(10, 101, n)]
-    # ~5% near-duplicates (an earlier document plus a 'dup' token) and
-    # a handful of exact copies feed the dedup and search legs.
-    for i in np.flatnonzero(rng.random(n) < 0.05):
-        if i:
-            texts[i] = texts[int(rng.integers(0, i))] + (" dup" if rng.random() < 0.97 else "")
-    return pa.table(
-        {
-            "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-            "text": pa.array(texts, pa.string()),
-            "lang": _pick(rng, LANGS, n),
-            "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-        }
-    )
-
-
-def write_star_tables(out_dir: str, seed: int, sf: float) -> dict[str, int]:
-    """Write the eight tables the short queries read; return rows per table."""
-    rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_line, n_docs = int(1_500_000 * sf), int(6_000_000 * sf), int(50_000 * sf)
-    i32 = pa.int32()
-    tables = {
-        "region": pa.table({"r_regionkey": pa.array(range(5), i32), "r_name": REGIONS}),
-        "nation": pa.table(
-            {
-                "n_nationkey": pa.array(range(25), i32),
-                "n_name": [f"NATION_{i}" for i in range(25)],
-                "n_regionkey": pa.array([i % 5 for i in range(25)], i32),
-            }
-        ),
-        "customer": pa.table(
-            {
-                "c_custkey": pa.array(np.arange(n_cust, dtype=np.int64)),
-                "c_name": _strs("Customer#", np.arange(n_cust), 9),
-                "c_nationkey": pa.array(rng.integers(0, 25, n_cust), i32),
-                "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-                "c_mktsegment": _pick(rng, SEGMENTS, n_cust),
-            }
-        ),
-        "supplier": pa.table(
-            {
-                "s_suppkey": pa.array(np.arange(n_supp, dtype=np.int64)),
-                "s_name": _strs("Supplier#", np.arange(n_supp), 9),
-                "s_nationkey": pa.array(rng.integers(0, 25, n_supp), i32),
-                "s_acctbal": _money(rng, -999.99, 9999.99, n_supp),
-            }
-        ),
-        "part": pa.table(
-            {
-                "p_partkey": pa.array(np.arange(n_part, dtype=np.int64)),
-                "p_name": _pick(rng, [f"{a} {b}" for a in PART_ADJ for b in PART_NOUN], n_part),
-                "p_brand": _strs("Brand#", rng.integers(1, 26, n_part)),
-                "p_type": _pick(rng, PART_TYPES, n_part),
-                "p_size": pa.array(rng.integers(1, 51, n_part), i32),
-                "p_retailprice": np.round(900.0 + (np.arange(n_part) % 1000) / 10.0, 1),
-            }
-        ),
-        "orders": pa.table(
-            {
-                "o_orderkey": pa.array(np.arange(n_ord, dtype=np.int64)),
-                "o_custkey": pa.array(rng.integers(0, n_cust, n_ord)),
-                "o_orderstatus": _pick(rng, ["F", "O", "P"], n_ord),
-                "o_totalprice": _money(rng, 1000.0, 500000.0, n_ord),
-                "o_orderdate": _days(rng, "1995-01-01", 2405, n_ord),
-                "o_orderpriority": _pick(rng, PRIORITIES, n_ord),
-            }
-        ),
-        "lineitem": pa.table(
-            {
-                "l_orderkey": pa.array(rng.integers(0, n_ord, n_line)),
-                "l_partkey": pa.array(rng.integers(0, n_part, n_line)),
-                "l_suppkey": pa.array(rng.integers(0, n_supp, n_line)),
-                "l_linenumber": pa.array(rng.integers(1, 8, n_line), i32),
-                "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
-                "l_extendedprice": _money(rng, 900.0, 105000.0, n_line),
-                "l_discount": rng.integers(0, 11, n_line) / 100.0,
-                "l_tax": rng.integers(0, 9, n_line) / 100.0,
-                "l_returnflag": _pick(rng, ["A", "N", "R"], n_line),
-                "l_linestatus": _pick(rng, ["F", "O"], n_line),
-                "l_shipdate": _days(rng, "1995-01-02", 2499, n_line),
-            }
-        ),
-        "documents": _documents(rng, n_docs),
-    }
-    for name, t in tables.items():
-        pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}
+def _strs(prefix: str, keys: np.ndarray) -> pa.Array:
+    return pc.binary_join_element_wise(prefix, pc.cast(pa.array(keys), pa.string()), "")
 
 
 def _mix(x: np.ndarray) -> np.ndarray:

@@ -5,23 +5,24 @@ Run from the root of a checkout:
 
     python3 perfbench/run.py --workload short_queries --seed 1 --seconds 10 --trace 0
 
-One run starts a fresh Spark session sized to the host, generates its
-inputs from the seed, runs the cold first pass and the warm-up (the
-set-up), then times whole passes for ``--seconds`` seconds with one
-driver thread (a closed loop with one client), checks the outputs and
-prints one JSON object as the last line of stdout. ``--trace 0`` prints
-the end-to-end metrics named in BENCHMARK.json; ``--trace 1`` is a
-separate run with Spark's event log on and every call tagged with a job
-group, and prints the per-layer metrics. See README.md in this
+One run starts a fresh Spark session sized to the host, prepares its
+inputs (the seed drives the query order and the generated sync data),
+runs the cold first pass and the warm-up (the set-up), then times whole
+passes for ``--seconds`` seconds with one driver thread (a closed loop
+with one client), checks the outputs and prints one JSON object as the
+last line of stdout. ``--trace 0`` prints the end-to-end metrics named
+in BENCHMARK.json; ``--trace 1`` is a separate run with Spark's event
+log on and every call tagged with a job group, and prints the
+per-layer metrics. See README.md in this
 directory for the workloads and the metric definitions.
 """
 
 from __future__ import annotations
 
 import argparse
+import gc
 import hashlib
 import json
-import math
 import os
 import random
 import shlex
@@ -51,7 +52,8 @@ SHORT_QUERIES = [
     "pricing_summary",
     "regional_revenue",
 ]
-SHORT_SF = 0.1  # star-schema scale: 15,000 customers, 600,000 line items, 5,000 documents
+# the engine's sf0.1 test tables, copied byte for byte (README.md)
+SHORT_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.1")
 SHORT_WARMUP_PASSES = 1
 SYNC_ROWS = 400_000
 SYNC_CHURN = 0.02  # share of live rows deleted, updated and created per generation (each)
@@ -64,20 +66,12 @@ def _now_ms() -> float:
     return time.time() * 1e3
 
 
-def _canon(v) -> str:
-    """Order-insensitive row rendering, as the oracle harness does."""
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    return repr(v)
-
-
 def result_digest(cols: list[str], rows: list[tuple]) -> tuple[list[str], int, str]:
-    """Sorted column names, row count and a hash of the sorted rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = sorted("\x1f".join(_canon(r[i]) for i in order) for r in rows)
-    return [cols[i] for i in order], len(canon), hashlib.sha256("\n".join(canon).encode()).hexdigest()
+    """Sorted column names, row count and a hash of the oracle harness's canonical rows."""
+    from tests.oracle_harness import canon_rows
+
+    cols, canon = canon_rows(cols, rows)
+    return cols, len(canon), hashlib.sha256(repr(canon).encode()).hexdigest()
 
 
 def quantile(values: list[float], q: int) -> float:
@@ -90,13 +84,14 @@ def quantile(values: list[float], q: int) -> float:
 class Bench:
     """One run: a fresh Spark session, its spans and its counters."""
 
-    def __init__(self, args: argparse.Namespace, run_dir: str) -> None:
+    def __init__(self, args: argparse.Namespace, run_dir: str, shm_dir: str | None) -> None:
         self.workload = args.workload
         self.seed = args.seed
         self.seconds = args.seconds
         self.trace = bool(args.trace)
         self.rng = random.Random(args.seed)
         self.run_dir = run_dir
+        self.shm_dir = shm_dir
         self.cores = len(os.sched_getaffinity(0))
         self.spans: list[eventlog.Span] = []
         self.attempted = 0
@@ -111,25 +106,23 @@ class Bench:
         return p
 
     def start_spark(self) -> None:
-        """Launch a Spark session sized to this host, writing only under the run directory."""
+        """Launch a Spark session sized to this host. Spark's shuffle scratch
+        goes where the engine puts it by default (tmpfs), in a directory of
+        this run; everything else the run writes stays in the run directory."""
         tmp = self.path("tmp", "")
         mem_gb = max(1, min(4, os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**30 // 4))
-        os.environ.update(
-            {
-                "SPARK_GRAFT_CPUS": str(self.cores),
-                "SPARK_GRAFT_DRIVER_MEM": f"{mem_gb}g",
-                "SPARK_GRAFT_LOCAL_DIR": self.path("local", ""),
-                "SPARK_LOCAL_DIRS": self.path("local", ""),
-                "TMPDIR": tmp,
-            }
-        )
+        os.environ.update({"SPARK_GRAFT_CPUS": str(self.cores), "SPARK_GRAFT_DRIVER_MEM": f"{mem_gb}g", "TMPDIR": tmp})
+        os.environ.pop("SPARK_LOCAL_DIRS", None)  # it would override spark.local.dir
+        if self.shm_dir:
+            os.environ["SPARK_GRAFT_LOCAL_DIR"] = self.shm_dir
+        else:
+            os.environ.pop("SPARK_GRAFT_LOCAL_DIR", None)
         # ensure_package_shipped zips the package under tempfile's directory
         tempfile.tempdir = tmp
         conf = {
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.warehouse.dir": self.path("warehouse", ""),
-            # a fixed-size heap: peak RSS then does not follow G1's timing-driven heap resizing
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{mem_gb}g",
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
         }
         if self.trace:
             conf.update(
@@ -168,6 +161,25 @@ class Bench:
         for pid in procstat.descendants():
             os.kill(pid, 9)
 
+    def retained_heap_mb(self) -> float:
+        """Driver JVM heap in use once everything the session no longer references
+        is freed: what it keeps (persisted RDDs, broadcasts, caches), whenever G1
+        last collected. Python's collector first drops the py4j proxies that pin
+        JVM objects; the JVM's full collection then lets Spark's ContextCleaner
+        unpersist unreachable RDDs, which frees more at a later round."""
+        jvm = self.spark.sparkContext._jvm
+        heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        readings: list[float] = []
+        while len(readings) < 20:
+            gc.collect()
+            jvm.java.lang.System.gc()
+            time.sleep(0.5)
+            readings.append(heap.getHeapMemoryUsage().getUsed() / 2**20)
+            # the cleaner's unpersist can land a few rounds late: wait for four steady readings
+            if len(readings) >= 6 and max(readings[-4:]) - min(readings[-4:]) < 1.0:
+                break
+        return readings[-1]
+
     def call(self, module: str, call: str, phase: str, fn):
         """Run one call into the engine as a span; tag its jobs when tracing."""
         if self.trace:
@@ -203,18 +215,20 @@ class ShortQueries:
 
     name = "short_queries"
     warmup_passes = SHORT_WARMUP_PASSES
-    check_after_cold = True  # the cold pass collects the results it checks
+    tables = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "documents"]
 
     def __init__(self, bench: Bench) -> None:
         self.b = bench
-        self.data = bench.path("data", "")
+        self.data = SHORT_DATA
         self.rows = 0
-        self.results: dict[str, tuple[list[str], list[tuple]]] = {}
+        self.results: dict[str, tuple[list[str], list[tuple]]] = {}  # collected by the cold pass
         self.persisted: list[int] = []  # persisted RDDs after each query, when tracing
 
     def setup_inputs(self) -> None:
-        self.tables = inputs.write_star_tables(self.data, self.b.seed, SHORT_SF)
-        self.rows = sum(self.tables.values())
+        """Count the rows of the tables the ten queries read."""
+        import pyarrow.parquet as pq
+
+        self.rows = sum(pq.read_metadata(os.path.join(self.data, f"{t}.parquet")).num_rows for t in self.tables)
 
     def _query(self, name: str, collect: bool):
         from namegraph_collections_spark.queries import REGISTRY
@@ -244,16 +258,12 @@ class ShortQueries:
 
     def check(self) -> None:
         """Compare each cold-pass result with its registry DuckDB oracle."""
-        import duckdb
-
         from namegraph_collections_spark.queries import REGISTRY
+        from tests.oracle_harness import duck_connection
 
-        con = duckdb.connect()
+        os.environ["SPARK_GRAFT_DUCK_MEM"] = "1GB"
+        con = duck_connection(self.data)
         try:
-            con.execute("SET memory_limit = '1GB'")
-            con.execute("SET threads = " + str(self.b.cores))
-            for t in self.tables:
-                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{self.data}{t}.parquet'")
             for name, (cols, rows) in self.results.items():
                 rel = con.sql(REGISTRY[name].oracle)
                 expected = result_digest(list(rel.columns), rel.fetchall())
@@ -281,7 +291,6 @@ class IncrementalSync:
 
     name = "incremental_sync"
     warmup_passes = SYNC_WARMUP_STEPS
-    check_after_cold = False  # checks the last timed step
     compare_cols = ["collection_name", "members_count", "collection_rank", "keywords_csv",
                     "top_members_csv", "is_merged", "version"]
 
@@ -382,8 +391,6 @@ def measure(b: Bench, w) -> dict:
     b.start_spark()
     w.setup_inputs()
     first_pass_s = b.run_pass(w.next_pass(cold=True))[0]
-    if w.check_after_cold:
-        w.check()
     warmup = []
     for _ in range(w.warmup_passes):
         w.prepare()
@@ -403,9 +410,9 @@ def measure(b: Bench, w) -> dict:
             cpus.append(cpu)
             ops.extend(done)
     window = (window_start, _now_ms())
+    retained_heap_mb = b.retained_heap_mb()
     timed_spans = b.spans[n_spans:]
-    if not w.check_after_cold:
-        w.check()
+    w.check()
     return {
         "setup_s": setup_s,
         "first_pass_s": first_pass_s,
@@ -414,6 +421,7 @@ def measure(b: Bench, w) -> dict:
         "cpus": cpus,
         "ops": ops,
         "peak_rss_mb": rss.peak_mb,
+        "retained_heap_mb": retained_heap_mb,
         "window": window,
         "timed_spans": timed_spans,
     }
@@ -428,7 +436,7 @@ def end_to_end(w, raw: dict) -> dict[str, float]:
         "latency_p50_s": quantile(lat, 5),
         "latency_p90_s": quantile(lat, 9),
         "cpu_s": statistics.median(raw["cpus"]),
-        "peak_rss_mb": raw["peak_rss_mb"],
+        "retained_heap_mb": raw["retained_heap_mb"],
     }
 
 
@@ -438,6 +446,7 @@ def per_layer(b: Bench, w, raw: dict) -> dict[str, float]:
     logs = os.listdir(b.path("events", ""))
     folded, written = eventlog.fold(b.path("events", logs[0]), raw["timed_spans"], raw["window"], b.cores, n_ops)
     b.layer.update(folded)
+    b.layer["session.peak_rss_mb"] = raw["peak_rss_mb"]
     w.finish_layers(raw["timed_spans"], n_ops, written)
     span_s = sum(s.end_ms - s.start_ms for s in raw["timed_spans"]) / 1e3
     walls = [wall for _, wall in raw["ops"]]
@@ -462,7 +471,8 @@ def main() -> int:
     host = procstat.HostState()
     os.makedirs(os.path.join(ROOT, ".perfbench"), exist_ok=True)
     run_dir = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=os.path.join(ROOT, ".perfbench"))
-    b = Bench(args, run_dir)
+    shm_dir = tempfile.mkdtemp(prefix="perfbench-", dir="/dev/shm") if os.path.isdir("/dev/shm") else None
+    b = Bench(args, run_dir, shm_dir)
     w = WORKLOADS[args.workload](b)
     try:
         try:
@@ -472,6 +482,8 @@ def main() -> int:
         values = per_layer(b, w, raw) if b.trace else end_to_end(w, raw)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
+        if shm_dir:
+            shutil.rmtree(shm_dir, ignore_errors=True)
 
     wanted = spec["per_layer"] if b.trace else spec["end_to_end"]
     metrics = {m["name"]: {"value": float(values.get(m["name"], 0.0)), "unit": m["unit"]} for m in wanted}
