@@ -61,8 +61,9 @@ def tree_rss_mb() -> float:
 class PeakRss:
     """Samples the tree's resident memory from a thread while active."""
 
-    def __init__(self, interval_s: float = 0.2) -> None:
+    def __init__(self, interval_s: float = 0.2, enabled: bool = True) -> None:
         self.interval_s = interval_s
+        self.enabled = enabled  # a disabled sampler starts no thread and reads 0
         self.peak_mb = 0.0
         self.active = True  # samples taken while inactive are dropped
         self._stop = threading.Event()
@@ -76,12 +77,14 @@ class PeakRss:
             self._stop.wait(self.interval_s)
 
     def __enter__(self) -> PeakRss:
-        self._thread.start()
+        if self.enabled:
+            self._thread.start()
         return self
 
     def __exit__(self, *exc) -> None:
         self._stop.set()
-        self._thread.join()
+        if self.enabled:
+            self._thread.join()
 
 
 def _cpu_ticks() -> list[int]:

@@ -3,17 +3,17 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload short_queries --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload short_queries --seed 1 --seconds 5 --trace 0
 
 One run starts a fresh Spark session sized to the host, prepares its
 inputs (the seed drives the query order and the generated sync data),
 runs the cold first pass and the warm-up (the set-up), then times whole
-passes for ``--seconds`` seconds with one driver thread (a closed loop
-with one client), checks the outputs and prints one JSON object as the
-last line of stdout. ``--trace 0`` prints the end-to-end metrics named
-in BENCHMARK.json; ``--trace 1`` is a separate run with Spark's event
-log on and every call tagged with a job group, and prints the
-per-layer metrics. See README.md in this
+passes for at least ``--seconds`` seconds and at least two passes with
+one driver thread (a closed loop with one client), checks the outputs
+and prints one JSON object as the last line of stdout. ``--trace 0``
+prints the end-to-end metrics named in BENCHMARK.json; ``--trace 1`` is
+a separate run with Spark's event log on and every call tagged with a
+job group, and prints the per-layer metrics. See README.md in this
 directory for the workloads and the metric definitions.
 """
 
@@ -57,7 +57,12 @@ SHORT_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "s
 SHORT_WARMUP_PASSES = 1
 SYNC_ROWS = 400_000
 SYNC_CHURN = 0.02  # share of live rows deleted, updated and created per generation (each)
-SYNC_WARMUP_STEPS = 3
+SYNC_WARMUP_STEPS = 2
+# timed passes per run, at the least, whatever --seconds says: a fixed count
+# keeps every run on the same stretch of the warm-up curve, and a burst of host
+# contention during one pass moves the median over passes and queries less
+SHORT_TIMED_PASSES = 2
+SYNC_TIMED_STEPS = 2
 SYNC_KEEP_SNAPSHOTS = 2
 NAMEHASH_NAMES = 300
 
@@ -173,7 +178,7 @@ class Bench:
         while len(readings) < 20:
             gc.collect()
             jvm.java.lang.System.gc()
-            time.sleep(0.5)
+            time.sleep(0.25)  # the cleaner thread polls its reference queue every 0.1 s
             readings.append(heap.getHeapMemoryUsage().getUsed() / 2**20)
             # the cleaner's unpersist can land a few rounds late: wait for four steady readings
             if len(readings) >= 6 and max(readings[-4:]) - min(readings[-4:]) < 1.0:
@@ -215,13 +220,14 @@ class ShortQueries:
 
     name = "short_queries"
     warmup_passes = SHORT_WARMUP_PASSES
+    timed_passes = SHORT_TIMED_PASSES
     tables = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "documents"]
 
     def __init__(self, bench: Bench) -> None:
         self.b = bench
         self.data = SHORT_DATA
         self.rows = 0
-        self.results: dict[str, tuple[list[str], list[tuple]]] = {}  # collected by the cold pass
+        self.results: dict[str, tuple[list[str], list[tuple]]] = {}  # collected by the last warm-up pass
         self.persisted: list[int] = []  # persisted RDDs after each query, when tracing
 
     def setup_inputs(self) -> None:
@@ -248,16 +254,16 @@ class ShortQueries:
 
         return op
 
-    def next_pass(self, cold: bool = False):
+    def next_pass(self, collect: bool = False):
         order = SHORT_QUERIES[:]
         self.b.rng.shuffle(order)
-        return [(q, self._query(q, collect=cold)) for q in order]
+        return [(q, self._query(q, collect)) for q in order]
 
     def prepare(self) -> None:
         pass
 
     def check(self) -> None:
-        """Compare each cold-pass result with its registry DuckDB oracle."""
+        """Compare each result of the last warm-up pass with its registry DuckDB oracle."""
         from namegraph_collections_spark.queries import REGISTRY
         from tests.oracle_harness import duck_connection
 
@@ -273,7 +279,7 @@ class ShortQueries:
         finally:
             con.close()
         missing = set(SHORT_QUERIES) - set(self.results)
-        if missing:  # their cold pass raised and was already counted
+        if missing:  # their warm-up query raised and was already counted
             print(f"perfbench: no result to check for {sorted(missing)}", file=sys.stderr)
 
     def finish_layers(self, timed: list[eventlog.Span], n_ops: int, written: dict[str, list[float]]) -> None:
@@ -291,6 +297,7 @@ class IncrementalSync:
 
     name = "incremental_sync"
     warmup_passes = SYNC_WARMUP_STEPS
+    timed_passes = SYNC_TIMED_STEPS
     compare_cols = ["collection_name", "members_count", "collection_rank", "keywords_csv",
                     "top_members_csv", "is_merged", "version"]
 
@@ -334,7 +341,7 @@ class IncrementalSync:
 
         return op
 
-    def next_pass(self, cold: bool = False):
+    def next_pass(self, collect: bool = False):
         return [(f"step{self.stream.generation}", self._step())]
 
     def check(self) -> None:
@@ -386,22 +393,24 @@ def namehash_us(names: list[str]) -> float:
 
 
 def measure(b: Bench, w) -> dict:
-    """Set up, time whole passes for ``b.seconds``, check; return raw results."""
+    """Set up, time whole passes for ``b.seconds`` and at least
+    ``w.timed_passes`` passes, check; return raw results."""
     t_setup = time.time()
     b.start_spark()
     w.setup_inputs()
-    first_pass_s = b.run_pass(w.next_pass(cold=True))[0]
+    first_pass_s = b.run_pass(w.next_pass())[0]
     warmup = []
-    for _ in range(w.warmup_passes):
+    for i in range(w.warmup_passes):
         w.prepare()
-        warmup.append(b.run_pass(w.next_pass())[0])
+        warmup.append(b.run_pass(w.next_pass(collect=i == w.warmup_passes - 1))[0])
     setup_s = time.time() - t_setup
 
     passes, cpus, ops = [], [], []
     n_spans = len(b.spans)
     window_start = _now_ms()
-    with procstat.PeakRss() as rss:
-        while sum(passes) < b.seconds:
+    # memory is sampled from a thread of this process: only in the traced run
+    with procstat.PeakRss(enabled=b.trace) as rss:
+        while sum(passes) < b.seconds or len(passes) < w.timed_passes:
             rss.active = False
             w.prepare()
             rss.active = True
