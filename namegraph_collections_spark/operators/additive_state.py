@@ -55,7 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.cdc import (
-    LATEST_MARKER,
+    _read_marker as marker_stamp,
+    _write_marker as repoint_marker,
     latest_snapshot,
     rotate_snapshot,
 )
@@ -112,31 +113,6 @@ def snapshot_committed(spark: SparkSession, base_dir: str, stamp: str) -> bool:
         f"{base_dir}/snapshot={stamp}/_SUCCESS"
     )
     return success.getFileSystem(conf).exists(success)
-
-
-def marker_stamp(spark: SparkSession, base_dir: str) -> str | None:
-    """The stamp the latest-marker currently points at (None before
-    the first rotation)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
-    fs = marker.getFileSystem(conf)
-    if not fs.exists(marker):
-        return None
-    stream = fs.open(marker)
-    try:
-        return bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
-
-
-def repoint_marker(spark: SparkSession, base_dir: str, stamp: str) -> None:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
-    out = marker.getFileSystem(conf).create(marker, True)
-    out.write(bytearray(stamp.encode("utf-8")))
-    out.close()
 
 
 #: Per-column merge operators a keyed state may declare. Each must be

@@ -25,15 +25,22 @@ NULL_SENTINEL = "\x00<null>"
 SEP = "\x01"
 
 
-def row_hash(cols: Sequence[str]):
+def row_hash(cols: Sequence[str], prefix: str = ""):
     """Deterministic row digest over ``cols``: md5 of the
     null-canonicalized, separator-joined values.
 
     Mirrors JSONLIndex.hash (update_es.py:98-104 — sha256 of
     sort_keys-canonical JSON) with a column-order canonicalization
     that both Spark and DuckDB compute identically.
+
+    ``prefix`` reads each column ``c`` from ``prefix + c`` (a renamed
+    copy of the snapshot's columns after a join); the order stays the
+    order of the unprefixed names, so the digest is the same.
     """
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_SENTINEL)) for c in sorted(cols)]
+    parts = [
+        F.coalesce(F.col(prefix + c).cast("string"), F.lit(NULL_SENTINEL))
+        for c in sorted(cols)
+    ]
     return F.md5(F.concat_ws(SEP, *parts))
 
 
@@ -248,6 +255,35 @@ def write_operations_jsonl(ops: DataFrame, path: str) -> None:
 LATEST_MARKER = "_LATEST"
 
 
+def _marker(spark, base_dir: str):
+    """(filesystem, path) of the latest-marker under ``base_dir``."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def _read_marker(spark, base_dir: str) -> str | None:
+    """The stamp the latest-marker points at; None before the first
+    rotation."""
+    fs, path = _marker(spark, base_dir)
+    if not fs.exists(path):
+        return None
+    stream = fs.open(path)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _write_marker(spark, base_dir: str, stamp: str) -> None:
+    """Point the latest-marker at ``stamp`` (replacing the file)."""
+    fs, path = _marker(spark, base_dir)
+    out = fs.create(path, True)
+    try:
+        out.write(bytearray(stamp.encode("utf-8")))
+    finally:
+        out.close()
+
+
 def rotate_snapshot(current: DataFrame, base_dir: str, stamp: str) -> str:
     """D4: persist the current snapshot as a dated Parquet dataset and
     point the latest-marker at it (archive_merged_final,
@@ -255,14 +291,7 @@ def rotate_snapshot(current: DataFrame, base_dir: str, stamp: str) -> str:
     restated as versioned directories + a marker file)."""
     path = f"{base_dir}/snapshot={stamp}"
     current.write.mode("overwrite").parquet(path)
-    spark = current.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
-    fs = marker.getFileSystem(conf)
-    out = fs.create(marker, True)
-    out.write(bytearray(stamp.encode("utf-8")))
-    out.close()
+    _write_marker(current.sparkSession, base_dir, stamp)
     return path
 
 
@@ -270,17 +299,9 @@ def latest_snapshot(spark, base_dir: str) -> DataFrame | None:
     """Read the snapshot the marker points at; None before first
     rotation (the reference's first-run create-everything path,
     update_es.py:24,367-370)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
-    fs = marker.getFileSystem(conf)
-    if not fs.exists(marker):
+    stamp = _read_marker(spark, base_dir)
+    if stamp is None:
         return None
-    stream = fs.open(marker)
-    try:
-        stamp = bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
     return spark.read.parquet(f"{base_dir}/snapshot={stamp}")
 
 
@@ -418,14 +439,7 @@ def prune_snapshots(spark, base_dir: str, keep_last: int) -> list[str]:
         )
     )
     # never prune the marker's target or anything newer than it
-    jmarker = jvm.org.apache.hadoop.fs.Path(f"{base_dir}/{LATEST_MARKER}")
-    current = None
-    if fs.exists(jmarker):
-        stream = fs.open(jmarker)
-        try:
-            current = bytes(stream.readAllBytes()).decode("utf-8")
-        finally:
-            stream.close()
+    current = _read_marker(spark, base_dir)
     eligible = [
         s
         for s in stamps
@@ -481,16 +495,76 @@ def sync_index(
     compare_cols: Sequence[str],
     index_name: str = "collection-templates-1",
 ) -> DataFrame:
-    """§3.2 end-to-end: previous snapshot (or empty) → diff → bulk ops
-    → rotate. Returns the ops DataFrame (materialized before rotation
-    so the diff reads the PRE-rotation latest)."""
+    """§3.2 end-to-end: previous snapshot (or empty) → bulk ops →
+    rotate. Returns the ops DataFrame, materialized (an eager local
+    checkpoint) from the PRE-rotation latest snapshot. The ops rows are
+    those of ``bulk_operations(snapshot_diff(previous, current, ...))``
+    for unique, non-null keys.
+
+    Plan: ONE full-outer join on ``key`` of ``previous`` (the key, its
+    compare columns renamed, a presence flag) with ``current`` (every
+    column, a presence flag). ``row_hash`` of each side is evaluated
+    after the join, in the parallel reduce tasks, and the
+    create/update/delete rows are built from the joined row — so
+    ``current`` is scanned once for the ops, with no second join
+    against it to fetch the documents.
+
+    Schedule: the ops checkpoint and the Parquet write of
+    ``snapshot=<stamp>`` run at the same time from two driver threads
+    (they keep the caller's job group); the diff reads a different
+    directory, so they do not conflict. When ``stamp`` is already the
+    marker's stamp, the write would replace the snapshot the diff
+    reads, so the checkpoint runs first and the write after it.
+
+    The marker flips last, only after both succeed: a failed sync
+    leaves ``latest_snapshot`` on the previous stamp, and a rerun with
+    the same stamp overwrites whatever the failed write left."""
+    from namegraph_collections_spark.queries.registry import run_parallel
+
     spark = current.sparkSession
-    previous = latest_snapshot(spark, base_dir)
-    if previous is None:
+    latest = _read_marker(spark, base_dir)
+    if latest is None:
         previous = spark.createDataFrame([], current.schema)
-    diff = snapshot_diff(previous, current, key, compare_cols)
-    ops = bulk_operations(diff, current, key, index_name).localCheckpoint(eager=True)
-    rotate_snapshot(current, base_dir, stamp)
+    else:
+        previous = spark.read.parquet(f"{base_dir}/snapshot={latest}")
+    prefix = "_prev_"
+    prev = previous.select(
+        F.col(key),
+        *[F.col(c).alias(prefix + c) for c in compare_cols],
+        F.lit(True).alias("_in_prev"),
+    )
+    joined = prev.join(current.withColumn("_in_curr", F.lit(True)), on=key, how="full_outer")
+    in_prev, in_curr = F.col("_in_prev").isNotNull(), F.col("_in_curr").isNotNull()
+    # The hashes appear only in this filter, so each is computed once.
+    changed = joined.filter(
+        ~in_prev | ~in_curr | (row_hash(compare_cols, prefix) != row_hash(compare_cols))
+    )
+    op = F.when(~in_prev, F.lit("create")).when(~in_curr, F.lit("delete")).otherwise(F.lit("update"))
+    doc_json = F.to_json(F.struct(*[c for c in current.columns if c != key]))
+    ops = changed.select(
+        op.alias("_op_type"),
+        F.lit(index_name).alias("_index"),
+        F.col(key).cast("string").alias("_id"),
+        F.when(~in_prev, doc_json).alias("_source"),
+        F.when(in_prev & in_curr, doc_json)
+        .when(~in_curr, F.to_json(F.struct(F.lit(True).alias("archived"))))
+        .alias("doc"),
+    )
+
+    path = f"{base_dir}/snapshot={stamp}"
+
+    def checkpoint() -> DataFrame:
+        return ops.localCheckpoint(eager=True)
+
+    def write() -> None:
+        current.write.mode("overwrite").parquet(path)
+
+    if stamp == latest:
+        ops = checkpoint()
+        write()
+    else:
+        ops, _ = run_parallel(checkpoint, write)
+    _write_marker(spark, base_dir, stamp)
     return ops
 
 

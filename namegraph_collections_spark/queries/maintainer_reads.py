@@ -280,46 +280,49 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concerned SERIAL lazy checkpoints paying ~1s of driver planning
     # each; threading the seven eager builds overlaps that planning
     # with executor work — paired A/B in OPTIMIZATION_r13.md.)
-    (
-        ivf_state,
-        vocab_state,
-        div_state,
-        nbq_state,
-        hist_state_ck,
-        cms_state,
-        cand,
-    ) = build_parallel(
-        spark,
-        lambda: folded_state(
-            emb, "vec_id", ivf_state_for, ["cluster", "dim"], {"s": "sum", "n": "sum"}
-        ).localCheckpoint(eager=True),
-        lambda: folded_state(
-            docs, "doc_id", vocab_state_for, ["tok"], {"first_doc": "min", "occ": "sum"}
-        ).localCheckpoint(eager=True),
-        lambda: folded_state(
-            emb, "vec_id", diversity_state_for, ["label", "dim"],
-            {"s": "sum", "self2": "sum", "n": "sum"},
-        ).localCheckpoint(eager=True),
-        lambda: folded_state(
-            docs, "doc_id", nbq_state_for, ["bucket"], {"cp": "sum", "cn": "sum"}
-        ).localCheckpoint(eager=True),
-        lambda: folded_state(
-            li, "l_orderkey", hist_state_for, ["bucket"], {"c": "sum"}
-        ).localCheckpoint(eager=True),
-        lambda: folded_state(
-            docs, "doc_id", cms_state_for, ["d", "bucket"], {"c": "sum"}
-        ).localCheckpoint(eager=True),
-        lambda: ranked_topk(
-            cms_bigrams_of(docs).groupBy("token").agg(F.count(F.lit(1)).alias("n_exact")),
-            CMS_TOP,
-            F.col("n_exact").desc(),
-            F.col("token").asc(),
-        ).localCheckpoint(eager=True),
-    )
-    # Every read below consumes materialized state; the corpus-sized
-    # spread caches have no remaining consumer in the returned plan.
-    emb.unpersist()
-    docs.unpersist()
+    try:
+        (
+            ivf_state,
+            vocab_state,
+            div_state,
+            nbq_state,
+            hist_state_ck,
+            cms_state,
+            cand,
+        ) = build_parallel(
+            spark,
+            lambda: folded_state(
+                emb, "vec_id", ivf_state_for, ["cluster", "dim"], {"s": "sum", "n": "sum"}
+            ).localCheckpoint(eager=True),
+            lambda: folded_state(
+                docs, "doc_id", vocab_state_for, ["tok"], {"first_doc": "min", "occ": "sum"}
+            ).localCheckpoint(eager=True),
+            lambda: folded_state(
+                emb, "vec_id", diversity_state_for, ["label", "dim"],
+                {"s": "sum", "self2": "sum", "n": "sum"},
+            ).localCheckpoint(eager=True),
+            lambda: folded_state(
+                docs, "doc_id", nbq_state_for, ["bucket"], {"cp": "sum", "cn": "sum"}
+            ).localCheckpoint(eager=True),
+            lambda: folded_state(
+                li, "l_orderkey", hist_state_for, ["bucket"], {"c": "sum"}
+            ).localCheckpoint(eager=True),
+            lambda: folded_state(
+                docs, "doc_id", cms_state_for, ["d", "bucket"], {"c": "sum"}
+            ).localCheckpoint(eager=True),
+            lambda: ranked_topk(
+                cms_bigrams_of(docs).groupBy("token").agg(F.count(F.lit(1)).alias("n_exact")),
+                CMS_TOP,
+                F.col("n_exact").desc(),
+                F.col("token").asc(),
+            ).localCheckpoint(eager=True),
+        )
+    finally:
+        # Every read below consumes materialized state; the corpus-sized
+        # spread caches have no remaining consumer in the returned plan,
+        # and a failed build must not leave them cached either.
+        emb.unpersist()
+        docs.unpersist()
 
     cent = centroids_from_state(ivf_state).select(
         F.lit("ivf_centroid").alias("op"),

@@ -145,16 +145,24 @@ def checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
     """
     if len(dfs) == 1:
         return [dfs[0].localCheckpoint(eager=False)]
+    return run_parallel(*[lambda df=df: df.localCheckpoint(eager=False) for df in dfs])
+
+
+def run_parallel(*thunks):
+    """Run independent thunks from a driver thread pool and return
+    their results in thunk order. Every thunk runs to its end; then the
+    exception of the first failed thunk, in thunk order, is re-raised.
+    Each thread inherits the caller's job-local properties (job group,
+    description, scheduler pool) through ``inheritable_thread_target``,
+    as the PySpark docs prescribe for driver-side job threads, so the
+    jobs a thunk starts are attributed like the caller's own."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    @inheritable_thread_target
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False)
-
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(_ckpt, dfs))
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def build_parallel(spark: SparkSession, *thunks):
@@ -167,13 +175,7 @@ def build_parallel(spark: SparkSession, *thunks):
     are no-op set lookups, not racing ``addPyFile``s.
     """
     ensure_package_shipped(spark)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
-        return [f.result() for f in futures]
+    return run_parallel(*thunks)
 
 
 def ranked_topk(df: DataFrame, k: int, *order, rnk: str = "rnk") -> DataFrame:

@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter
+    of physical RAM, capped at 16g. The JVM is not the only tenant of
+    the host (Python workers, tmpfs shuffle scratch), and a fixed 16g
+    heap on a 15 GiB host without swap lets the JVM grow until the
+    kernel kills it partway through a run."""
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{max(1024, min(16 * 1024, phys_mb // 4))}m"
+
+
 def get_spark(app_name: str = "namegraph-collections-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -38,7 +48,7 @@ def get_spark(app_name: str = "namegraph-collections-spark", cpus: int | None = 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -78,6 +79,113 @@ def test_sync_index_rotation(spark, tmp_path):
     assert ops2 == {"a": "update", "c": "create"}  # b unchanged → noop
     latest = latest_snapshot(spark, base)
     assert {r["id"] for r in latest.collect()} == {"a", "b", "c"}
+
+
+_SYNC_SCHEMA = "id string, name string, note string, rank bigint"
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+# Every generation touches a case the one-pass plan must classify
+# exactly like snapshot_diff: NULLs in compare columns, a NULL that
+# becomes the hash's NULL sentinel text, and values containing the
+# hash's \x01 separator — both where the joined string is unchanged
+# (md5 equal → noop, as snapshot_diff says) and where it really moved.
+_GENERATIONS = [
+    ("s1", [("a", "alpha", None, 1), ("b", "b\x01c", "d", 2), ("c", None, None, None),
+            ("d", "delta", "x", 4), ("e", "eps", "\x00<null>", 5)]),
+    ("s2", [("a", "alpha", None, 1), ("b", "b", "c\x01d", 2), ("c", "gamma", None, None),
+            ("e", "eps", None, 5), ("f", "f\x01", "new", 6)]),
+    ("s2", [("a", "alpha", "n", 1), ("b", "b", "c\x01d", 2), ("c", "gamma", None, 3),
+            ("g", None, None, None)]),
+    ("s3", [("a", "alpha", "n", 1), ("c", "gamma", None, 3), ("g", "g", None, None),
+            ("h", "eta", "\x01", 8)]),
+]
+
+
+@pytest.mark.parametrize(
+    "compare_cols",
+    [["name", "note", "rank"], ["id", "name", "note", "rank"]],
+    ids=["payload_cols", "key_in_compare_cols"],
+)
+def test_sync_index_matches_diff_then_bulk_operations(spark, tmp_path, compare_cols):
+    """sync_index's one-join ops equal bulk_operations(snapshot_diff())
+    step by step: a first run with no previous snapshot, rotations to
+    new stamps (the overlapped write) and a re-sync under the latest
+    stamp (checkpoint first, then the write)."""
+    from namegraph_collections_spark.operators.cdc import latest_snapshot, sync_index
+
+    base = str(tmp_path / "snaps")
+    steps = []
+    for stamp, rows in _GENERATIONS:
+        current = spark.createDataFrame(rows, _SYNC_SCHEMA)
+        previous = latest_snapshot(spark, base)
+        if previous is None:
+            previous = spark.createDataFrame([], _SYNC_SCHEMA)
+        want = _sorted_rows(
+            bulk_operations(snapshot_diff(previous, current, "id", compare_cols), current, "id", "idx-1")
+        )
+        got = _sorted_rows(sync_index(current, base, stamp, "id", compare_cols, "idx-1"))
+        assert got == want, stamp
+        assert _sorted_rows(latest_snapshot(spark, base)) == _sorted_rows(current), stamp
+        steps.append({r[2]: r[0] for r in got})
+    # s1 → s2: 'b' moved its \x01 across a column boundary and 'e'
+    # swapped the sentinel text for a NULL — the same hash input, so
+    # both are noops, exactly as snapshot_diff classifies them
+    assert steps[1] == {"c": "update", "d": "delete", "f": "create"}
+
+
+def test_sync_index_failure_leaves_marker(spark, tmp_path):
+    """A sync whose current snapshot fails at execution raises, the
+    marker still names the previous stamp, and a good rerun under the
+    failed stamp succeeds."""
+    from namegraph_collections_spark.operators.cdc import (
+        _read_marker,
+        latest_snapshot,
+        sync_index,
+    )
+
+    base = str(tmp_path / "snaps")
+    cols = ["name", "rank"]
+    v1 = _snap(spark, [("a", "alpha", 1), ("b", "beta", 2)])
+    sync_index(v1, base, "t1", "id", cols)
+    v2 = _snap(spark, [("a", "alpha", 9), ("b", "beta", 2), ("c", "new", 3)])
+    broken = v2.withColumn(
+        "name", F.when(F.col("id") == "b", F.raise_error(F.lit("boom"))).otherwise(F.col("name"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        sync_index(broken, base, "t2", "id", cols)
+    assert _read_marker(spark, base) == "t1"
+    assert _sorted_rows(latest_snapshot(spark, base)) == _sorted_rows(v1)
+
+    ops = {r["_id"]: r["_op_type"] for r in sync_index(v2, base, "t2", "id", cols).collect()}
+    assert ops == {"a": "update", "c": "create"}
+    assert _read_marker(spark, base) == "t2"
+    assert _sorted_rows(latest_snapshot(spark, base)) == _sorted_rows(v2)
+
+
+def test_sync_index_jobs_keep_callers_job_group(spark, tmp_path):
+    """Both driver threads of a sync (ops checkpoint, snapshot write)
+    run their jobs under the caller's job group: no job of the sync
+    lands outside it."""
+    from namegraph_collections_spark.operators.cdc import sync_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    base = str(tmp_path / "snaps")
+    sync_index(_snap(spark, [("a", "alpha", 1)]), base, "t1", "id", ["name", "rank"])
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("sync-group-test", "operators.sync_index/exec")
+    try:
+        sync_index(_snap(spark, [("a", "alpha", 2), ("b", "beta", 3)]), base, "t2", "id", ["name", "rank"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker only evicts old jobs, so any new ungrouped id is the sync's
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup("sync-group-test")) >= 2  # checkpoint + write
 
 
 # --- three-way CDC (D2 full form + F12 gate + count adjustments) -----------

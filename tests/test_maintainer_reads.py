@@ -8,6 +8,7 @@ Value-exactness of the read paths is the oracle sweep's job."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.additive_state import (
@@ -95,3 +96,18 @@ def test_vocab_fold_respects_the_min_monoid(spark):
     want = {r.tok: r.first_doc for r in fold.collect()}
     for r in head:
         assert r.first_doc == want[r.tok]
+
+
+def test_failed_state_build_releases_spread_caches(spark, monkeypatch):
+    """A failure inside the battery's parallel state build must not
+    leave the corpus-sized emb/docs caches in the CacheManager."""
+    from namegraph_collections_spark.queries import maintainer_reads
+
+    def failing_build(spark, *thunks):
+        raise RuntimeError("state build failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(maintainer_reads, "build_parallel", failing_build)
+    with pytest.raises(RuntimeError, match="state build failed"):
+        maintainer_reads.maintainer_state_battery(spark, SF_DIR)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -435,3 +435,30 @@ def test_salted_agg_is_two_stage(spark):
 def test_skew_diagnostics_topk_is_bounded(spark):
     plan = formatted_plan(REGISTRY["skew_key_diagnostics"].fn(spark, SF))
     assert "TakeOrderedAndProject" in plan
+
+
+def test_sync_index_ops_plan_one_join_one_scan(spark, tmp_path, monkeypatch):
+    """The ops frame sync_index checkpoints joins the previous and the
+    current snapshot ONCE and scans the current snapshot's files ONCE:
+    the documents come from the joined row, not from a second join
+    that re-reads ``current``."""
+    from namegraph_collections_spark.operators.cdc import sync_index
+
+    schema = "id string, name string, rank bigint"
+    base, incoming = str(tmp_path / "snaps"), str(tmp_path / "incoming")
+    sync_index(spark.createDataFrame([("a", "x", 1), ("b", "y", 2)], schema), base, "s1", "id", ["name", "rank"])
+    spark.createDataFrame([("a", "x", 9), ("c", "z", 3)], schema).write.parquet(incoming)
+    captured = _capture_checkpoints(monkeypatch)
+    sync_index(spark.read.parquet(incoming), base, "s2", "id", ["name", "rank"])
+    assert len(captured) == 1
+    nodes = list(_walk_physical(captured[0]._jdf.queryExecution().executedPlan()))
+    names = [n.getClass().getSimpleName() for n in nodes]
+    joins = [c for c in names if c.endswith("JoinExec") or c == "CartesianProductExec"]
+    assert len(joins) == 1, joins
+    scans = [
+        n.relation().location().rootPaths().mkString(",")
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert sum(incoming in s for s in scans) == 1, scans
+    assert sum("snapshot=s1" in s for s in scans) == 1, scans
