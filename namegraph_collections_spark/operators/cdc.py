@@ -563,7 +563,7 @@ def sync_index(
         ops = checkpoint()
         write()
     else:
-        ops, _ = run_parallel(checkpoint, write)
+        ops, _ = run_parallel(spark, checkpoint, write)
     _write_marker(spark, base_dir, stamp)
     return ops
 

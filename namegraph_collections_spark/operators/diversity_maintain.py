@@ -40,6 +40,31 @@ STATE_COLS = ["label", "dim", "s", "self2", "n"]
 SENTINEL_DIM = -1
 
 
+def _assert_dim_width(per: DataFrame) -> DataFrame:
+    """Plan-level guard for the DIM-width invariant the sentinel row's
+    vector count rests on: every embedding explodes into exactly
+    ``DIM`` component rows, so a group's row count ``cnt`` is a
+    multiple of ``DIM`` and ``cnt div DIM`` counts its vectors. A short
+    (or long) embedding breaks that and would silently truncate the
+    count, so raise instead. Spelled as a filter, like
+    ``assert_diversity_bound``, so no projection can prune it."""
+    bad = (F.col("_gid") == 1) & (F.col("cnt") % F.lit(int(DIM)) != 0)
+    return per.filter(
+        F.when(
+            bad,
+            F.raise_error(
+                F.concat(
+                    F.lit("embedding diversity: DIM-width invariant violated — label "),
+                    F.col("label").cast("string"),
+                    F.lit(" has "),
+                    F.col("cnt").cast("string"),
+                    F.lit(f" embedding components, not a multiple of DIM={int(DIM)}"),
+                )
+            ),
+        ).isNull()
+    )
+
+
 def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     """A batch's additive contribution: per-(label, dim) component
     sums plus the per-label sentinel row — the IDENTICAL quantization
@@ -58,7 +83,7 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     # exact-integer Σ qc² in a coarser grouping (long sums are
     # associative — bit-identical), and n is the coarse row count
     # div DIM (every vector contributes exactly one exploded row per
-    # dimension; the DIM-width invariant is fixture-pinned). A single
+    # dimension; ``_assert_dim_width`` raises when one does not). A single
     # projection then shapes each grouping-set row into its state row
     # — one scan, one aggregation, no union, no cache entry.
     qv = quantized_unit_vectors(emb, extra=extra)
@@ -76,7 +101,7 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     # detail row; 1 → per-(label[,tag]) sentinel source. Coarser
     # prefixes (label-only under a tag, grand total) are dropped.
     zero = F.lit(0).cast("long")
-    return per.filter(F.col("_gid") <= 1).select(
+    return _assert_dim_width(per.filter(F.col("_gid") <= 1)).select(
         "label",
         F.when(F.col("_gid") == 0, F.col("dim").cast("long"))
         .otherwise(F.lit(SENTINEL_DIM).cast("long"))

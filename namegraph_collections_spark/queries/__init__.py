@@ -13,9 +13,12 @@ for editing the window:
 
 - it holds exactly 50 names (the driver's check budget);
 - redundant single-operator rows composite into ONE tagged multi-part
-  query (precedent: ``customer_key_set_algebra``, ``string_ops_battery``)
-  rather than dropping any operator's value-hash — the single-operator
-  forms stay registered after the window for the local sweep;
+  query rather than dropping any operator's value-hash — the
+  single-operator forms stay registered after the window for the
+  local sweep. Write a new composite as a ``registry.Battery`` spec
+  (queries/batteries.py): one leg table generates both its Spark union
+  and its oracle, which embeds each component's oracle verbatim, and
+  tests/test_batteries.py's ``BATTERIES`` map lists its components;
 - freed slots go to the operator families with the hardest / most
   novel semantics (round 5: the skew-proof chunked as-of join, the
   iterative-numeric PageRank, and the KMV distinct sketch — round 4's

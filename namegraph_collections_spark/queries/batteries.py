@@ -1,18 +1,24 @@
-"""Driver-window composites (round-6 widening of driver coverage).
+"""Driver-window composites ("batteries").
 
 The external driver value-hashes only the first 50 registry rows, but
-the registry holds more operators than slots. Following the
-``string_ops_battery``/``customer_key_set_algebra`` precedent, each
-battery here unions SEVERAL unchanged single-operator queries into one
-tagged result — null-padded to a common schema — so one driver row
-hash-pins every component's FULL output. The single-operator forms
-stay registered (after the window) for the local parity sweep and for
-users who want one operator's plain result.
+the registry holds more operators than slots. Each battery here unions
+SEVERAL unchanged single-operator queries into one ``op``-tagged result,
+null-padded to a common schema, so one driver row hash-pins every
+component's FULL output. The single-operator forms stay registered
+(after the window) for the local parity sweep and for users who want
+one operator's plain result.
 
-Construction rule: a battery calls the registered component functions
-and wraps the component ORACLES verbatim (read from the registry at
-import time), so the battery can never drift from the singles — any
-edit to a component changes both sides of the battery identically.
+Every battery is a ``registry.Battery`` spec: its ``slots`` (output
+column → SQL type) and, per tag, the component query plus a
+``{slot: SQL expression}`` map. The spec generates both sides from the
+same text — the DuckDB oracle wraps each component's registered oracle
+verbatim, and the Spark union runs the same expressions through
+``selectExpr`` — so a battery can drift neither from its components
+nor between its two engines. A battery whose legs are all plain
+components is a ``register_battery`` call with no function body; one
+whose legs share builds (one k-means codebook, one bands build, one
+LM fit) builds those once and hands the spec the legs made from them
+through the components' ``_from`` seams.
 
 Scale note: a union of k independent plans executes each branch with
 its own (already audited) shuffle structure; the union itself is a
@@ -24,99 +30,72 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from namegraph_collections_spark.queries.event_analytics import (
-    cohort_retention,
-    event_transition_matrix,
-    funnel_conversion,
-)
 from namegraph_collections_spark.queries.ann_eval import recall_eval_from
-from namegraph_collections_spark.queries.quality_signals import (
-    doc_quality_signals,
-    repetition_signals,
+from namegraph_collections_spark.queries.bpe import (
+    _encode_from,
+    _learn,
+    _merge_union,
+    tokenizer_fertility_from,
 )
-from namegraph_collections_spark.queries.registry import (
-    REGISTRY,
-    register,
-    spread,
-    tbl,
-)
-from namegraph_collections_spark.queries.semantic_dedup import (
-    semdedup_from,
-    semdedup_keep_list,  # noqa: F401  (oracle parity; battery uses the _from seam)
-)
-from namegraph_collections_spark.queries.similarity import (
-    cosine_topk_bruteforce,
-    ivf_topk,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    ivf_topk_from,
-    kmeans_lists,
-    lsh_bucket_neighbors,
-)
-from namegraph_collections_spark.queries.temporal import (
-    asof_join_chunked_events,
-    asof_join_events,
-    interval_range_join,
-)
-from namegraph_collections_spark.queries.data_selection import (
-    ccnet_ppl_buckets,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    ccnet_ppl_buckets_from,
-    dsir_importance_weights,
-)
-from namegraph_collections_spark.queries.span_dedup import dup_span_extract
-from namegraph_collections_spark.queries.corpus_stats import (  # noqa: E402
-    embedding_diversity,
+from namegraph_collections_spark.queries.closure import transitive_closure_reachability
+from namegraph_collections_spark.queries.corpus_stats import (
     heaps_law_curve,
     source_unigram_drift,
-    temperature_sampling_plan,
 )
-from namegraph_collections_spark.queries.chunking import (  # noqa: E402
-    padding_waste_eval,
-    passage_chunking,
+from namegraph_collections_spark.queries.data_selection import ccnet_ppl_buckets_from
+from namegraph_collections_spark.queries.dedup import (
+    _minhash_bands,
+    _minhash_pairs_from,
+    dedup_cluster_stats_from,
+    incremental_minhash_dedup_from,
+    lsh_tuning_eval_from,
+    ngram_jaccard_pairs,
 )
-from namegraph_collections_spark.queries.overlap_audit import (  # noqa: E402
-    ngram_novelty_audit,
-    source_overlap_matrix,
-)
+from namegraph_collections_spark.queries.dedup_select import neardup_representatives_from
+from namegraph_collections_spark.queries.graph_metrics import neardup_triangles
+from namegraph_collections_spark.queries.overlap_audit import source_overlap_matrix
+from namegraph_collections_spark.queries.pipeline_e2e import training_pipeline_e2e_from
 from namegraph_collections_spark.queries.quality_classifier import (
-    nb_quality_calibration,  # noqa: F401  (oracle parity; battery uses the _from seam)
     nb_quality_calibration_from,
-    nb_quality_eval,  # noqa: F401  (oracle parity; battery uses the _from seam)
     nb_quality_eval_from,
     nb_quality_scores,
 )
+from namegraph_collections_spark.queries.quality_signals import doc_quality_signals
+from namegraph_collections_spark.queries.registry import (
+    Battery,
+    Melt,
+    build_parallel,
+    register,
+    register_battery,
+    run_parallel,
+    spread,
+    tbl,
+)
+from namegraph_collections_spark.queries.semantic_dedup import semdedup_from
+from namegraph_collections_spark.queries.similarity import (
+    cosine_topk_bruteforce,
+    ivf_topk_from,
+    kmeans_lists,
+)
+from namegraph_collections_spark.queries.similarity_pq import (
+    _adc_scored,
+    pq_adc_topk_from,
+    pq_rerank_topk,
+    pq_rerank_topk_from,
+)
+from namegraph_collections_spark.queries.span_dedup import dup_span_extract
 from namegraph_collections_spark.queries.text_analysis import (
     bigram_lm_perplexity,
-    token_frequencies,
-    unigram_logprob,
+    language_id,
+    language_id_eval_from,
 )
-
-# (language_id is imported further down with the text-mining block; by
-# the time any battery body runs, the whole module is bound.)
-
-# Typed null pads must be built lazily: F.lit() needs an active
-# SparkContext, and this module imports at registry-population time
-# (before any session exists).
-def _NULL_I():
-    return F.lit(None).cast("int")
+from namegraph_collections_spark.queries.training_data import fuzzy_decontamination_from
 
 
-def _NULL_L():
-    return F.lit(None).cast("long")
-
-
-def _NULL_D():
-    return F.lit(None).cast("double")
-
-
-def _NULL_S():
-    return F.lit(None).cast("string")
-
-
-def _NULL_B():
-    return F.lit(None).cast("boolean")
-
-
-def _oracle(name: str) -> str:
-    return REGISTRY[name].oracle  # type: ignore[return-value]
+def _micro(col: str) -> str:
+    # Decimal outputs stay off the hash surface: every source is a
+    # DECIMAL with <= 6 fractional digits, so *1e6 -> BIGINT is exact.
+    return f"CAST({col} * 1000000 AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -126,168 +105,100 @@ def _oracle(name: str) -> str:
 # itself witness that the skew-proof chunked plan equals the one-window
 # plan, not just our local tests.
 # ---------------------------------------------------------------------------
-@register(
+_ASOF = {
+    "event_id": "click_event_id",
+    "user_id": "user_id",
+    "ts_us": "click_ts_us",
+    "match_event_id": "purchase_event_id",
+    "match_ts_us": "purchase_ts_us",
+    "staleness_us": "staleness_us",
+    "val": "purchase_value",
+}
+register_battery(
     "temporal_join_battery",
-    oracle=f"""
-    SELECT 'asof' AS op, click_event_id AS event_id, user_id,
-           click_ts_us AS ts_us, purchase_event_id AS match_event_id,
-           purchase_ts_us AS match_ts_us, staleness_us,
-           purchase_value AS val,
-           CAST(NULL AS BIGINT) AS n_clicks, CAST(NULL AS BIGINT) AS first_click_us
-    FROM ({_oracle("asof_join_events")})
-    UNION ALL
-    SELECT 'asof_chunked' AS op, click_event_id, user_id, click_ts_us,
-           purchase_event_id, purchase_ts_us, staleness_us, purchase_value,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("asof_join_chunked_events")})
-    UNION ALL
-    SELECT 'interval' AS op, purchase_event_id, user_id, start_us,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           total_click_value, n_clicks, first_click_us
-    FROM ({_oracle("interval_range_join")})
-    """,
-)
-def temporal_join_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join + chunked as-of + binned interval range join in one
-    tagged result (see module docstring). Components unchanged:
-    queries/temporal.py; operator design notes in operators/temporal.py.
-    """
-    asof = asof_join_events(spark, sf_dir).select(
-        F.lit("asof").alias("op"),
-        F.col("click_event_id").alias("event_id"),
-        "user_id",
-        F.col("click_ts_us").alias("ts_us"),
-        F.col("purchase_event_id").alias("match_event_id"),
-        F.col("purchase_ts_us").alias("match_ts_us"),
-        "staleness_us",
-        F.col("purchase_value").alias("val"),
-        _NULL_L().alias("n_clicks"),
-        _NULL_L().alias("first_click_us"),
-    )
-    chunked = asof_join_chunked_events(spark, sf_dir).select(
-        F.lit("asof_chunked").alias("op"),
-        F.col("click_event_id").alias("event_id"),
-        "user_id",
-        F.col("click_ts_us").alias("ts_us"),
-        F.col("purchase_event_id").alias("match_event_id"),
-        F.col("purchase_ts_us").alias("match_ts_us"),
-        "staleness_us",
-        F.col("purchase_value").alias("val"),
-        _NULL_L().alias("n_clicks"),
-        _NULL_L().alias("first_click_us"),
-    )
-    interval = interval_range_join(spark, sf_dir).select(
-        F.lit("interval").alias("op"),
-        F.col("purchase_event_id").alias("event_id"),
-        "user_id",
-        F.col("start_us").alias("ts_us"),
-        _NULL_L().alias("match_event_id"),
-        _NULL_L().alias("match_ts_us"),
-        _NULL_L().alias("staleness_us"),
-        F.col("total_click_value").alias("val"),
-        "n_clicks",
-        "first_click_us",
-    )
-    return asof.unionByName(chunked).unionByName(interval)
-
-
-# ---------------------------------------------------------------------------
-# Event-analytics battery: ordered funnel + cohort retention +
-# transition matrix — all over `events`, disjoint output schemas.
-# ---------------------------------------------------------------------------
-@register(
-    "event_analytics_battery",
-    oracle=f"""
-    SELECT 'funnel' AS op, stage, CAST(NULL AS BIGINT) AS cohort_day,
-           CAST(NULL AS BIGINT) AS offset_days,
-           CAST(NULL AS VARCHAR) AS prev_type, CAST(NULL AS VARCHAR) AS next_type,
-           n_users AS n
-    FROM ({_oracle("funnel_conversion")})
-    UNION ALL
-    SELECT 'cohort' AS op, CAST(NULL AS INTEGER), cohort_day, offset_days,
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR), n_active
-    FROM ({_oracle("cohort_retention")})
-    UNION ALL
-    SELECT 'transition' AS op, CAST(NULL AS INTEGER), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), prev_type, next_type, n
-    FROM ({_oracle("event_transition_matrix")})
-    """,
+    tagged result. Components unchanged: queries/temporal.py; operator
+    design notes in operators/temporal.py.""",
+    slots={
+        "event_id": "BIGINT", "user_id": "BIGINT", "ts_us": "BIGINT",
+        "match_event_id": "BIGINT", "match_ts_us": "BIGINT",
+        "staleness_us": "BIGINT", "val": "DOUBLE", "n_clicks": "BIGINT",
+        "first_click_us": "BIGINT",
+    },
+    legs={
+        "asof": ("asof_join_events", _ASOF),
+        "asof_chunked": ("asof_join_chunked_events", _ASOF),
+        "interval": ("interval_range_join", {
+            "event_id": "purchase_event_id", "user_id": "user_id",
+            "ts_us": "start_us", "val": "total_click_value",
+            "n_clicks": "n_clicks", "first_click_us": "first_click_us",
+        }),
+    },
 )
-def event_analytics_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+register_battery(
+    "event_analytics_battery",
     """Ordered funnel + cohort-retention triangle + event transition
     matrix in one tagged result. Components unchanged:
-    queries/event_analytics.py (single shuffle key end-to-end each).
-    """
-    funnel = funnel_conversion(spark, sf_dir).select(
-        F.lit("funnel").alias("op"),
-        "stage",
-        _NULL_L().alias("cohort_day"),
-        _NULL_L().alias("offset_days"),
-        _NULL_S().alias("prev_type"),
-        _NULL_S().alias("next_type"),
-        F.col("n_users").alias("n"),
-    )
-    cohort = cohort_retention(spark, sf_dir).select(
-        F.lit("cohort").alias("op"),
-        _NULL_I().alias("stage"),
-        "cohort_day",
-        "offset_days",
-        _NULL_S().alias("prev_type"),
-        _NULL_S().alias("next_type"),
-        F.col("n_active").alias("n"),
-    )
-    trans = event_transition_matrix(spark, sf_dir).select(
-        F.lit("transition").alias("op"),
-        _NULL_I().alias("stage"),
-        _NULL_L().alias("cohort_day"),
-        _NULL_L().alias("offset_days"),
-        "prev_type",
-        "next_type",
-        "n",
-    )
-    return funnel.unionByName(cohort).unionByName(trans)
+    queries/event_analytics.py (single shuffle key end-to-end each).""",
+    slots={
+        "stage": "INT", "cohort_day": "BIGINT", "offset_days": "BIGINT",
+        "prev_type": "STRING", "next_type": "STRING", "n": "BIGINT",
+    },
+    legs={
+        "funnel": ("funnel_conversion", {"stage": "stage", "n": "n_users"}),
+        "cohort": ("cohort_retention", {
+            "cohort_day": "cohort_day", "offset_days": "offset_days", "n": "n_active",
+        }),
+        "transition": ("event_transition_matrix", {
+            "prev_type": "prev_type", "next_type": "next_type", "n": "n",
+        }),
+    },
+)
 
 
 # ---------------------------------------------------------------------------
 # Similarity battery: brute-force cosine baseline + learned-IVF ANN +
-# LSH sign bucketing — the three ANN strategies over `embeddings`.
+# LSH sign bucketing — the three ANN strategies over `embeddings` —
+# plus the recall eval, SemDeDup and the diversity table.
 # ---------------------------------------------------------------------------
-@register(
-    "similarity_battery",
-    oracle=f"""
-    SELECT 'cos' AS op, q_id, c_id, CAST(c_label AS BIGINT) AS c_label,
-           CAST(NULL AS VARCHAR) AS labels,
-           CAST(NULL AS INTEGER) AS grp, cosine, rnk,
-           CAST(NULL AS BIGINT) AS n_vecs, CAST(NULL AS BOOLEAN) AS keep
-    FROM ({_oracle("cosine_topk_bruteforce")})
-    UNION ALL
-    SELECT 'ivf' AS op, q_id, c_id, CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
-           c_cluster, cosine, rnk, CAST(NULL AS BIGINT), CAST(NULL AS BOOLEAN)
-    FROM ({_oracle("ivf_topk")})
-    UNION ALL
-    SELECT 'lsh' AS op, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), labels,
-           bucket, CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT), n_vecs,
-           CAST(NULL AS BOOLEAN)
-    FROM ({_oracle("lsh_bucket_neighbors")})
-    UNION ALL
-    SELECT 'recall' AS op, q_id, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           method, CAST(NULL AS INTEGER), recall, CAST(NULL AS BIGINT),
-           CAST(hits AS BIGINT),
-           CAST(NULL AS BOOLEAN)
-    FROM ({_oracle("ann_recall_eval")})
-    UNION ALL
-    SELECT 'semdedup' AS op, vec_id, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), cluster, max_earlier_cosine,
-           CAST(NULL AS BIGINT), n_dups, keep
-    FROM ({_oracle("semdedup_keep_list")})
-    UNION ALL
-    SELECT 'diversity' AS op, pair_num, pair_den, label,
-           CAST(NULL AS VARCHAR), CAST(NULL AS INTEGER),
-           CAST(NULL AS DOUBLE), self_sq, n_vecs, CAST(NULL AS BOOLEAN)
-    FROM ({_oracle("embedding_diversity")})
-    """,
+_SIMILARITY = Battery(
+    slots={
+        "q_id": "BIGINT", "c_id": "BIGINT", "c_label": "BIGINT",
+        "labels": "STRING", "grp": "INT", "cosine": "DOUBLE", "rnk": "INT",
+        "n_vecs": "BIGINT", "keep": "BOOLEAN",
+    },
+    legs={
+        "cos": ("cosine_topk_bruteforce", {
+            "q_id": "q_id", "c_id": "c_id", "c_label": "CAST(c_label AS BIGINT)",
+            "cosine": "cosine", "rnk": "rnk",
+        }),
+        "ivf": ("ivf_topk", {
+            "q_id": "q_id", "c_id": "c_id", "grp": "CAST(c_cluster AS INT)",
+            "cosine": "cosine", "rnk": "rnk",
+        }),
+        "lsh": ("lsh_bucket_neighbors", {
+            "labels": "labels", "grp": "CAST(bucket AS INT)", "n_vecs": "n_vecs",
+        }),
+        "recall": ("ann_recall_eval", {
+            "q_id": "q_id", "labels": "method", "cosine": "recall",
+            "n_vecs": "CAST(hits AS BIGINT)",
+        }),
+        "semdedup": ("semdedup_keep_list", {
+            "q_id": "vec_id", "grp": "CAST(cluster AS INT)",
+            "cosine": "max_earlier_cosine", "n_vecs": "n_dups", "keep": "keep",
+        }),
+        # one-pass mean-pairwise-cosine rational per label (+ corpus
+        # row): pair_num/pair_den ride the two id slots, self_sq rnk
+        "diversity": ("embedding_diversity", {
+            "q_id": "pair_num", "c_id": "pair_den", "c_label": "label",
+            "rnk": "self_sq", "n_vecs": "n_vecs",
+        }),
+    },
 )
+
+
+@register("similarity_battery", oracle=_SIMILARITY.oracle())
 def similarity_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k + IVF (learned lists) top-k + LSH
     bucket census + the ANN recall@k evaluation (per-query and macro
@@ -305,27 +216,24 @@ def similarity_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.58/1.71/1.56/1.66s — ~1.5x. pq_rerank is referenced once (its
     battery leg lives in pq_battery), so it is not checkpointed here.
 
-    The round-7 SemDeDup leg shares ONE k-means build with the IVF
-    leg: `kmeans_lists` runs once, the assignment is localCheckpointed
+    The SemDeDup leg shares ONE k-means build with the IVF leg:
+    `kmeans_lists` runs once, the assignment is localCheckpointed
     (tiny: one row per vector), and both `ivf_topk_from` and
     `semdedup_from` consume it — the singles each build their own
     codebook, but inside the battery that would be the same
     double-execution this docstring's first paragraph removed.
     """
     emb = spread(tbl(spark, sf_dir, "embeddings"), "vec_id")
-    # Three independent job-running roots (guide §2.6), scheduled as a
-    # DAG from the thread pool (round 13 — the banded-dedup precedent):
+    # Three independent job-running roots, built from the thread pool:
     # (a) the k-means chain (per-round eager k-row checkpoints make its
     #     BUILD job-running) → assigned checkpoint → IVF search
     #     checkpoint, chained inside one thread;
     # (b) the brute-force cosine search checkpoint;
     # (c) the PQ Lloyd chain behind pq_rerank_topk (same job-running
     #     build as (a)).
-    # Before, (a) ran serially first, then (b) in a barrier wave, then
-    # (c) inside the recall leg — each chain's driver planning idled
-    # the others' executor work. Same plans, same checkpoints, same
-    # results; only the submission schedule changes.
-    from namegraph_collections_spark.queries.registry import build_parallel
+    # Serially, each chain's driver planning idled the others'
+    # executor work. Same plans, same checkpoints, same results; only
+    # the submission schedule changes.
 
     def _ann_chain():
         assigned, cents = kmeans_lists(emb)
@@ -339,889 +247,293 @@ def similarity_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: cosine_topk_bruteforce(spark, sf_dir).localCheckpoint(eager=False),
         lambda: pq_rerank_topk(spark, sf_dir),
     )
-    cos = cos_full.select(
-        F.lit("cos").alias("op"),
-        "q_id",
-        "c_id",
-        F.col("c_label").cast("long").alias("c_label"),
-        _NULL_S().alias("labels"),
-        _NULL_I().alias("grp"),
-        "cosine",
-        "rnk",
-        _NULL_L().alias("n_vecs"),
-        _NULL_B().alias("keep"),
-    )
-    ivf = ivf_full.select(
-        F.lit("ivf").alias("op"),
-        "q_id",
-        "c_id",
-        _NULL_L().alias("c_label"),
-        _NULL_S().alias("labels"),
-        F.col("c_cluster").cast("int").alias("grp"),
-        "cosine",
-        "rnk",
-        _NULL_L().alias("n_vecs"),
-        _NULL_B().alias("keep"),
-    )
-    lsh = lsh_bucket_neighbors(spark, sf_dir).select(
-        F.lit("lsh").alias("op"),
-        _NULL_L().alias("q_id"),
-        _NULL_L().alias("c_id"),
-        _NULL_L().alias("c_label"),
-        "labels",
-        F.col("bucket").cast("int").alias("grp"),
-        _NULL_D().alias("cosine"),
-        _NULL_I().alias("rnk"),
-        "n_vecs",
-        _NULL_B().alias("keep"),
-    )
-    recall = recall_eval_from(cos_full, ivf_full, pq_full).select(
-        F.lit("recall").alias("op"),
-        "q_id",
-        _NULL_L().alias("c_id"),
-        _NULL_L().alias("c_label"),
-        F.col("method").alias("labels"),
-        _NULL_I().alias("grp"),
-        F.col("recall").alias("cosine"),
-        _NULL_I().alias("rnk"),
-        F.col("hits").alias("n_vecs"),
-        _NULL_B().alias("keep"),
-    )
-    semd = semdedup_from(emb, assigned).select(
-        F.lit("semdedup").alias("op"),
-        F.col("vec_id").alias("q_id"),
-        _NULL_L().alias("c_id"),
-        _NULL_L().alias("c_label"),
-        _NULL_S().alias("labels"),
-        F.col("cluster").cast("int").alias("grp"),
-        F.col("max_earlier_cosine").alias("cosine"),
-        _NULL_I().alias("rnk"),
-        F.col("n_dups").alias("n_vecs"),
-        "keep",
-    )
-    # Round-10 diversity leg: the one-pass mean-pairwise-cosine
-    # rational per label (+ corpus row) — pair_num/pair_den ride the
-    # two id slots, self_sq the rnk slot.
-    div = embedding_diversity(spark, sf_dir).select(
-        F.lit("diversity").alias("op"),
-        F.col("pair_num").alias("q_id"),
-        F.col("pair_den").alias("c_id"),
-        F.col("label").alias("c_label"),
-        _NULL_S().alias("labels"),
-        _NULL_I().alias("grp"),
-        _NULL_D().alias("cosine"),
-        F.col("self_sq").alias("rnk"),
-        "n_vecs",
-        _NULL_B().alias("keep"),
-    )
-    return (
-        cos.unionByName(ivf)
-        .unionByName(lsh)
-        .unionByName(recall)
-        .unionByName(semd)
-        .unionByName(div)
+    return _SIMILARITY.union(
+        spark,
+        sf_dir,
+        cos=cos_full,
+        ivf=ivf_full,
+        recall=recall_eval_from(cos_full, ivf_full, pq_full),
+        semdedup=semdedup_from(emb, assigned),
     )
 
 
 # ---------------------------------------------------------------------------
 # Unigram text battery: corpus token/document frequencies + per-doc
-# unigram-LM log-probability.
+# unigram-LM log-probability + the LM/quality/vocabulary legs.
 # ---------------------------------------------------------------------------
-@register(
-    "unigram_text_battery",
-    oracle=f"""
-    SELECT 'freq' AS op, token, CAST(NULL AS BIGINT) AS doc_id, n, df,
-           CAST(NULL AS DOUBLE) AS logp, CAST(NULL AS DOUBLE) AS nll,
-           CAST(NULL AS BOOLEAN) AS is_train, CAST(NULL AS BOOLEAN) AS keep,
-           CAST(NULL AS BIGINT) AS n_stop,
-           CAST(NULL AS BIGINT) AS q_mean_len_micro,
-           CAST(NULL AS BIGINT) AS q_symbol_micro,
-           CAST(NULL AS BIGINT) AS q_bullet_micro,
-           CAST(NULL AS BIGINT) AS q_ellipsis_micro,
-           CAST(NULL AS BIGINT) AS q_alpha_micro,
-           CAST(NULL AS BIGINT) AS q_dup_line_micro,
-           CAST(NULL AS BIGINT) AS q_dup_bigram_micro
-    FROM ({_oracle("token_frequencies")})
-    UNION ALL
-    SELECT 'logprob' AS op, CAST(NULL AS VARCHAR), doc_id,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), name_log_probability,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN), CAST(NULL AS BOOLEAN),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("unigram_logprob")})
-    UNION ALL
-    SELECT 'lm' AS op, CAST(NULL AS VARCHAR), doc_id, n_pairs,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), nll, is_train, keep,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("bigram_lm_perplexity")})
-    UNION ALL
-    SELECT 'quality' AS op, CAST(NULL AS VARCHAR), doc_id, n_words,
-           n_lines, CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), keep, n_stopword_hits,
-           mean_len_micro, symbol_micro, bullet_micro,
-           ellipsis_micro, alpha_micro, dup_line_micro,
-           dup_bigram_micro
-    FROM ({_oracle("doc_quality_signals")})
-    UNION ALL
-    SELECT 'ccnet' AS op, lang || ':' || bucket, doc_id, lang_n,
-           CAST(rnk AS BIGINT), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BOOLEAN), nll_micro,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("ccnet_ppl_buckets")})
-    UNION ALL
-    SELECT 'heaps' AS op, CAST(NULL AS VARCHAR), k, cp_docs, cum_tokens,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BOOLEAN), vocab_size,
-           ttr_micro, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("heaps_law_curve")})
-    UNION ALL
-    SELECT 'drift' AS op, source, CAST(NULL AS BIGINT), n_tokens,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BOOLEAN), drift_num,
-           drift_den, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("source_unigram_drift")})
-    """,
+_UNIGRAM = Battery(
+    slots={
+        "token": "STRING", "doc_id": "BIGINT", "n": "BIGINT", "df": "BIGINT",
+        "logp": "DOUBLE", "nll": "DOUBLE", "is_train": "BOOLEAN",
+        "keep": "BOOLEAN", "n_stop": "BIGINT", "q_mean_len_micro": "BIGINT",
+        "q_symbol_micro": "BIGINT", "q_bullet_micro": "BIGINT",
+        "q_ellipsis_micro": "BIGINT", "q_alpha_micro": "BIGINT",
+        "q_dup_line_micro": "BIGINT", "q_dup_bigram_micro": "BIGINT",
+    },
+    legs={
+        "freq": ("token_frequencies", {"token": "token", "n": "n", "df": "df"}),
+        "logprob": ("unigram_logprob", {"doc_id": "doc_id", "logp": "name_log_probability"}),
+        "lm": ("bigram_lm_perplexity", {
+            "doc_id": "doc_id", "n": "n_pairs", "nll": "nll",
+            "is_train": "is_train", "keep": "keep",
+        }),
+        "quality": ("doc_quality_signals", {
+            "doc_id": "doc_id", "n": "n_words", "df": "n_lines", "keep": "keep",
+            "n_stop": "n_stopword_hits", "q_mean_len_micro": "mean_len_micro",
+            "q_symbol_micro": "symbol_micro", "q_bullet_micro": "bullet_micro",
+            "q_ellipsis_micro": "ellipsis_micro", "q_alpha_micro": "alpha_micro",
+            "q_dup_line_micro": "dup_line_micro",
+            "q_dup_bigram_micro": "dup_bigram_micro",
+        }),
+        "ccnet": ("ccnet_ppl_buckets", {
+            "token": "lang || ':' || bucket", "doc_id": "doc_id", "n": "lang_n",
+            "df": "CAST(rnk AS BIGINT)", "n_stop": "nll_micro",
+        }),
+        # vocabulary growth + TTR checkpoints: k rides the doc_id slot,
+        # vocab the n_stop slot, TTR the first micro slot
+        "heaps": ("heaps_law_curve", {
+            "doc_id": "k", "n": "cp_docs", "df": "cum_tokens",
+            "n_stop": "vocab_size", "q_mean_len_micro": "ttr_micro",
+        }),
+        # per-source TV drift: the exact rational (num, den) rides the
+        # n_stop/first-micro slots, the heaps leg's twin
+        "drift": ("source_unigram_drift", {
+            "token": "source", "n": "n_tokens", "n_stop": "drift_num",
+            "q_mean_len_micro": "drift_den",
+        }),
+    },
 )
+
+
+@register("unigram_text_battery", oracle=_UNIGRAM.oracle())
 def unigram_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token/document frequencies + unigram-LM per-doc log-probability
     + bigram-LM perplexity quality filter + Gopher/C4 quality signals
-    + (round 9) the CCNet head/middle/tail perplexity bucketing in one
-    tagged result. Components unchanged: queries/text_analysis.py,
-    quality_signals.py, data_selection.py. The ccnet leg rides the
-    SAME checkpointed bigram-LM frame as the lm leg (the `_from`
-    sharing seam), so the LM trains and scores once.
+    + the CCNet head/middle/tail perplexity bucketing + Heaps-law
+    vocabulary growth + per-source unigram drift in one tagged result.
+    Components unchanged: queries/text_analysis.py, quality_signals.py,
+    data_selection.py, corpus_stats.py. The ccnet leg rides the SAME
+    checkpointed bigram-LM frame as the lm leg (the `_from` sharing
+    seam), so the LM trains and scores once.
     """
-
-    def _qpad():
-        return [
-            _NULL_L().alias("n_stop"),
-            _NULL_L().alias("q_mean_len_micro"),
-            _NULL_L().alias("q_symbol_micro"),
-            _NULL_L().alias("q_bullet_micro"),
-            _NULL_L().alias("q_ellipsis_micro"),
-            _NULL_L().alias("q_alpha_micro"),
-            _NULL_L().alias("q_dup_line_micro"),
-            _NULL_L().alias("q_dup_bigram_micro"),
-        ]
-
-    freq = token_frequencies(spark, sf_dir).select(
-        F.lit("freq").alias("op"),
-        "token",
-        _NULL_L().alias("doc_id"),
-        "n",
-        "df",
-        _NULL_D().alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        _NULL_B().alias("keep"),
-        *_qpad(),
-    )
-    lp = unigram_logprob(spark, sf_dir).select(
-        F.lit("logprob").alias("op"),
-        _NULL_S().alias("token"),
-        "doc_id",
-        _NULL_L().alias("n"),
-        _NULL_L().alias("df"),
-        F.col("name_log_probability").alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        _NULL_B().alias("keep"),
-        *_qpad(),
-    )
     # Three leg builds run jobs on the driver (the LM checkpoint, the
     # heaps and drift legs' internal checkpoints) and are independent
-    # subtrees — build them from the §2.6 thread pool.
-    from namegraph_collections_spark.queries.registry import build_parallel
-
+    # subtrees — build them from the thread pool.
     lm_full, heaps_full, drift_full = build_parallel(
         spark,
         lambda: bigram_lm_perplexity(spark, sf_dir).localCheckpoint(eager=False),
         lambda: heaps_law_curve(spark, sf_dir),
         lambda: source_unigram_drift(spark, sf_dir),
     )
-    lm = lm_full.select(
-        F.lit("lm").alias("op"),
-        _NULL_S().alias("token"),
-        "doc_id",
-        F.col("n_pairs").alias("n"),
-        _NULL_L().alias("df"),
-        _NULL_D().alias("logp"),
-        "nll",
-        "is_train",
-        "keep",
-        *_qpad(),
-    )
-    ccnet = ccnet_ppl_buckets_from(lm_full, language_id(spark, sf_dir)).select(
-        F.lit("ccnet").alias("op"),
-        F.expr("lang || ':' || bucket").alias("token"),
-        "doc_id",
-        F.col("lang_n").alias("n"),
-        F.col("rnk").cast("long").alias("df"),
-        _NULL_D().alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        _NULL_B().alias("keep"),
-        F.col("nll_micro").alias("n_stop"),
-        _NULL_L().alias("q_mean_len_micro"),
-        _NULL_L().alias("q_symbol_micro"),
-        _NULL_L().alias("q_bullet_micro"),
-        _NULL_L().alias("q_ellipsis_micro"),
-        _NULL_L().alias("q_alpha_micro"),
-        _NULL_L().alias("q_dup_line_micro"),
-        _NULL_L().alias("q_dup_bigram_micro"),
-    )
-    quality = doc_quality_signals(spark, sf_dir).select(
-        F.lit("quality").alias("op"),
-        _NULL_S().alias("token"),
-        "doc_id",
-        F.col("n_words").alias("n"),
-        F.col("n_lines").alias("df"),
-        _NULL_D().alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        "keep",
-        F.col("n_stopword_hits").alias("n_stop"),
-        F.col("mean_len_micro").alias("q_mean_len_micro"),
-        F.col("symbol_micro").alias("q_symbol_micro"),
-        F.col("bullet_micro").alias("q_bullet_micro"),
-        F.col("ellipsis_micro").alias("q_ellipsis_micro"),
-        F.col("alpha_micro").alias("q_alpha_micro"),
-        F.col("dup_line_micro").alias("q_dup_line_micro"),
-        F.col("dup_bigram_micro").alias("q_dup_bigram_micro"),
-    )
-    # Round-10 Heaps-law leg: vocabulary growth + TTR checkpoints —
-    # k rides the doc_id slot, the cumulative counts the n/df slots,
-    # vocab the n_stop slot, TTR the first micro slot.
-    heaps = heaps_full.select(
-        F.lit("heaps").alias("op"),
-        _NULL_S().alias("token"),
-        F.col("k").alias("doc_id"),
-        F.col("cp_docs").alias("n"),
-        F.col("cum_tokens").alias("df"),
-        _NULL_D().alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        _NULL_B().alias("keep"),
-        F.col("vocab_size").alias("n_stop"),
-        F.col("ttr_micro").alias("q_mean_len_micro"),
-        _NULL_L().alias("q_symbol_micro"),
-        _NULL_L().alias("q_bullet_micro"),
-        _NULL_L().alias("q_ellipsis_micro"),
-        _NULL_L().alias("q_alpha_micro"),
-        _NULL_L().alias("q_dup_line_micro"),
-        _NULL_L().alias("q_dup_bigram_micro"),
-    )
-    # Round-11 per-source unigram drift leg: source rides the token
-    # slot, the exact TV rational (num, den) the n_stop/first-micro
-    # slots — the mixture-QA twin of the heaps vocabulary leg.
-    drift = drift_full.select(
-        F.lit("drift").alias("op"),
-        F.col("source").alias("token"),
-        _NULL_L().alias("doc_id"),
-        F.col("n_tokens").alias("n"),
-        _NULL_L().alias("df"),
-        _NULL_D().alias("logp"),
-        _NULL_D().alias("nll"),
-        _NULL_B().alias("is_train"),
-        _NULL_B().alias("keep"),
-        F.col("drift_num").alias("n_stop"),
-        F.col("drift_den").alias("q_mean_len_micro"),
-        _NULL_L().alias("q_symbol_micro"),
-        _NULL_L().alias("q_bullet_micro"),
-        _NULL_L().alias("q_ellipsis_micro"),
-        _NULL_L().alias("q_alpha_micro"),
-        _NULL_L().alias("q_dup_line_micro"),
-        _NULL_L().alias("q_dup_bigram_micro"),
-    )
-    return (
-        freq.unionByName(lp).unionByName(lm)
-        .unionByName(quality).unionByName(ccnet).unionByName(heaps)
-        .unionByName(drift)
+    return _UNIGRAM.union(
+        spark,
+        sf_dir,
+        lm=lm_full,
+        ccnet=ccnet_ppl_buckets_from(lm_full, language_id(spark, sf_dir)),
+        heaps=heaps_full,
+        drift=drift_full,
     )
 
 
-# ---------------------------------------------------------------------------
-# Round-6 second wave (same construction rules as above).
-# ---------------------------------------------------------------------------
-from namegraph_collections_spark.queries.dedup import (  # noqa: E402
-    _minhash_bands,
-    _minhash_pairs_from,
-    dedup_cluster_stats,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    dedup_cluster_stats_from,
-    embedding_neardup_pairs,
-    exact_dedup_groups,
-    incremental_minhash_dedup,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    incremental_minhash_dedup_from,
-    lsh_tuning_eval_from,
-    ngram_jaccard_pairs,
-    passage_dedup,
-    simhash_neardup_candidates,
-    tfidf_cosine_pairs,
-    winnowing_fingerprints,
-)
-from namegraph_collections_spark.queries.dedup_select import (  # noqa: E402
-    neardup_representatives,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    neardup_representatives_from,
-)
-from namegraph_collections_spark.queries.pipeline_e2e import (  # noqa: E402
-    training_pipeline_e2e,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    training_pipeline_e2e_from,
-)
-from namegraph_collections_spark.queries.relational import (  # noqa: E402
-    hourly_event_rollup,
-)
-from namegraph_collections_spark.queries.rollups import (  # noqa: E402
-    cascading_time_rollup,
-    incremental_hourly_rollup,
-)
-from namegraph_collections_spark.queries.scale_ops import (  # noqa: E402
-    grouped_deterministic_sample,
-)
-from namegraph_collections_spark.queries.training_data import (  # noqa: E402
-    deterministic_mix_sample,
-    deterministic_split,
-    epoch_shuffle_plan,
-    fuzzy_decontamination,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    fuzzy_decontamination_from,
-    packing_efficiency_eval,
-    weighted_sample_topk,
-)
-
-
-@register(
+register_battery(
     "rollup_battery",
-    oracle=f"""
-    SELECT 'hourly' AS op, CAST(NULL AS VARCHAR) AS grain, hour_us AS bucket_us,
-           event_type, n, total_value, CAST(NULL AS DOUBLE) AS mean_value
-    FROM ({_oracle("hourly_event_rollup")})
-    UNION ALL
-    SELECT 'cascading' AS op, grain, bucket_us, event_type, n, total_value,
-           CAST(NULL AS DOUBLE)
-    FROM ({_oracle("cascading_time_rollup")})
-    UNION ALL
-    SELECT 'incremental' AS op, CAST(NULL AS VARCHAR), bucket_us, event_type,
-           n_events, total_value, mean_value
-    FROM ({_oracle("incremental_hourly_rollup")})
-    """,
-)
-def rollup_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly rollup + minute→hour→day cascade + split-and-merge
     incremental rollup in one tagged result. Components unchanged:
-    queries/relational.py, queries/rollups.py.
-    """
-    hourly = hourly_event_rollup(spark, sf_dir).select(
-        F.lit("hourly").alias("op"),
-        _NULL_S().alias("grain"),
-        F.col("hour_us").alias("bucket_us"),
-        "event_type",
-        "n",
-        "total_value",
-        _NULL_D().alias("mean_value"),
-    )
-    casc = cascading_time_rollup(spark, sf_dir).select(
-        F.lit("cascading").alias("op"),
-        "grain",
-        "bucket_us",
-        "event_type",
-        "n",
-        "total_value",
-        _NULL_D().alias("mean_value"),
-    )
-    inc = incremental_hourly_rollup(spark, sf_dir).select(
-        F.lit("incremental").alias("op"),
-        _NULL_S().alias("grain"),
-        "bucket_us",
-        "event_type",
-        F.col("n_events").alias("n"),
-        "total_value",
-        "mean_value",
-    )
-    return hourly.unionByName(casc).unionByName(inc)
+    queries/relational.py, queries/rollups.py.""",
+    slots={
+        "grain": "STRING", "bucket_us": "BIGINT", "event_type": "STRING",
+        "n": "BIGINT", "total_value": "DOUBLE", "mean_value": "DOUBLE",
+    },
+    legs={
+        "hourly": ("hourly_event_rollup", {
+            "bucket_us": "hour_us", "event_type": "event_type", "n": "n",
+            "total_value": "total_value",
+        }),
+        "cascading": ("cascading_time_rollup", {
+            "grain": "grain", "bucket_us": "bucket_us", "event_type": "event_type",
+            "n": "n", "total_value": "total_value",
+        }),
+        "incremental": ("incremental_hourly_rollup", {
+            "bucket_us": "bucket_us", "event_type": "event_type", "n": "n_events",
+            "total_value": "total_value", "mean_value": "mean_value",
+        }),
+    },
+)
 
-
-@register(
+register_battery(
     "sampling_battery",
-    oracle=f"""
-    SELECT 'mix' AS op, doc_id, source, CAST(NULL AS VARCHAR) AS split,
-           CAST(NULL AS INTEGER) AS rk, CAST(NULL AS BIGINT) AS w,
-           CAST(NULL AS DOUBLE) AS skey, CAST(NULL AS INTEGER) AS rnk,
-           CAST(NULL AS BIGINT) AS n_docs, CAST(NULL AS BIGINT) AS min_doc_id,
-           CAST(NULL AS BIGINT) AS max_doc_id, CAST(NULL AS BIGINT) AS doc_id_sum
-    FROM ({_oracle("deterministic_mix_sample")})
-    UNION ALL
-    SELECT 'grouped' AS op, doc_id, source, CAST(NULL AS VARCHAR), rk,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), CAST(NULL AS INTEGER),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("grouped_deterministic_sample")})
-    UNION ALL
-    SELECT 'weighted' AS op, doc_id, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(NULL AS INTEGER), w, skey, rnk,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("weighted_sample_topk")})
-    UNION ALL
-    SELECT 'split' AS op, CAST(NULL AS BIGINT), source, split,
-           CAST(NULL AS INTEGER), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(NULL AS INTEGER), n_docs, min_doc_id, max_doc_id, doc_id_sum
-    FROM ({_oracle("deterministic_split")})
-    UNION ALL
-    SELECT 'epoch_' || op AS op, doc_id, skey8, CAST(epoch AS VARCHAR),
-           shard, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(NULL AS INTEGER), n_docs, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), doc_id_sum
-    FROM ({_oracle("epoch_shuffle_plan")})
-    UNION ALL
-    SELECT 'dsir' AS op, doc_id, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(CASE WHEN is_target THEN 1 ELSE 0 END AS INTEGER),
-           weight_micro, CAST(NULL AS DOUBLE),
-           CAST(CASE WHEN selected THEN 1 ELSE 0 END AS INTEGER),
-           n_grams, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT)
-    FROM ({_oracle("dsir_importance_weights")})
-    UNION ALL
-    SELECT 'tempmix' AS op, CAST(NULL AS BIGINT), lang, CAST(NULL AS VARCHAR),
-           CAST(NULL AS INTEGER), repeat_micro, CAST(NULL AS DOUBLE),
-           CAST(NULL AS INTEGER), n_docs, share_micro, q_micro, alloc_docs
-    FROM ({_oracle("temperature_sampling_plan")})
-    UNION ALL
-    SELECT 'packeff' AS op, CAST(NULL AS BIGINT), source, CAST(NULL AS VARCHAR),
-           CAST(n_bins AS INTEGER), fill_micro, CAST(NULL AS DOUBLE),
-           CAST(min_bins AS INTEGER), n_docs, total_tokens, max_bin_tokens,
-           capacity_tokens
-    FROM ({_oracle("packing_efficiency_eval")})
-    UNION ALL
-    SELECT 'padwaste' AS op, bucket, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           CAST(batch AS INTEGER), waste, CAST(NULL AS DOUBLE),
-           CAST(NULL AS INTEGER), n_docs, max_words, sum_words,
-           eff_micro
-    FROM ({_oracle("padding_waste_eval")})
-    """,
+    """The deterministic selection/ordering policies in one tagged
+    result: temperature-mix sampling, per-group hash-order sampling,
+    weighted reservoir (A-Res) top-k, the content-addressed
+    train/val/test split, the fixed-seed epoch-shuffle shard plan, the
+    DSIR hashed-ngram importance weights with their threshold
+    selection flag, the sqrt-temperature language sampling plan, the
+    packing-efficiency eval and the padding-waste eval. Components
+    unchanged: queries/training_data.py, scale_ops.py,
+    data_selection.py, corpus_stats.py, chunking.py.""",
+    slots={
+        "doc_id": "BIGINT", "source": "STRING", "split": "STRING", "rk": "INT",
+        "w": "BIGINT", "skey": "DOUBLE", "rnk": "INT", "n_docs": "BIGINT",
+        "min_doc_id": "BIGINT", "max_doc_id": "BIGINT", "doc_id_sum": "BIGINT",
+    },
+    legs={
+        "mix": ("deterministic_mix_sample", {"doc_id": "doc_id", "source": "source"}),
+        "grouped": ("grouped_deterministic_sample", {
+            "doc_id": "doc_id", "source": "source", "rk": "rk",
+        }),
+        "weighted": ("weighted_sample_topk", {
+            "doc_id": "doc_id", "w": "w", "skey": "skey", "rnk": "rnk",
+        }),
+        "split": ("deterministic_split", {
+            "source": "source", "split": "split", "n_docs": "n_docs",
+            "min_doc_id": "min_doc_id", "max_doc_id": "max_doc_id",
+            "doc_id_sum": "doc_id_sum",
+        }),
+        "epoch": ("epoch_shuffle_plan", {
+            "op": "'epoch_' || op", "doc_id": "doc_id", "source": "skey8",
+            "split": "CAST(epoch AS STRING)", "rk": "shard", "n_docs": "n_docs",
+            "doc_id_sum": "doc_id_sum",
+        }),
+        # the two booleans ride the 0/1 INT slots (rk: is_target, rnk:
+        # selected), the micro-nat weight the BIGINT w slot
+        "dsir": ("dsir_importance_weights", {
+            "doc_id": "doc_id", "rk": "CAST(IF(is_target, 1, 0) AS INT)",
+            "w": "weight_micro", "rnk": "CAST(IF(selected, 1, 0) AS INT)",
+            "n_docs": "n_grams",
+        }),
+        "tempmix": ("temperature_sampling_plan", {
+            "source": "lang", "w": "repeat_micro", "n_docs": "n_docs",
+            "min_doc_id": "share_micro", "max_doc_id": "q_micro",
+            "doc_id_sum": "alloc_docs",
+        }),
+        "packeff": ("packing_efficiency_eval", {
+            "source": "source", "rk": "CAST(n_bins AS INT)", "w": "fill_micro",
+            "rnk": "CAST(min_bins AS INT)", "n_docs": "n_docs",
+            "min_doc_id": "total_tokens", "max_doc_id": "max_bin_tokens",
+            "doc_id_sum": "capacity_tokens",
+        }),
+        "padwaste": ("padding_waste_eval", {
+            "doc_id": "bucket", "rk": "CAST(batch AS INT)", "w": "waste",
+            "n_docs": "n_docs", "min_doc_id": "max_words",
+            "max_doc_id": "sum_words", "doc_id_sum": "eff_micro",
+        }),
+    },
 )
-def sampling_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The six deterministic selection/ordering policies in one
-    tagged result: temperature-mix sampling, per-group hash-order
-    sampling, weighted reservoir (A-Res) top-k, the content-addressed
-    train/val/test split, (round 8) the fixed-seed epoch-shuffle shard
-    plan, and (round 9) the DSIR hashed-ngram importance weights with
-    their threshold selection flag. Components unchanged:
-    queries/training_data.py, scale_ops.py, data_selection.py.
-    """
-    mix = deterministic_mix_sample(spark, sf_dir).select(
-        F.lit("mix").alias("op"),
-        "doc_id",
-        "source",
-        _NULL_S().alias("split"),
-        _NULL_I().alias("rk"),
-        _NULL_L().alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        _NULL_L().alias("n_docs"),
-        _NULL_L().alias("min_doc_id"),
-        _NULL_L().alias("max_doc_id"),
-        _NULL_L().alias("doc_id_sum"),
-    )
-    grouped = grouped_deterministic_sample(spark, sf_dir).select(
-        F.lit("grouped").alias("op"),
-        "doc_id",
-        "source",
-        _NULL_S().alias("split"),
-        "rk",
-        _NULL_L().alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        _NULL_L().alias("n_docs"),
-        _NULL_L().alias("min_doc_id"),
-        _NULL_L().alias("max_doc_id"),
-        _NULL_L().alias("doc_id_sum"),
-    )
-    weighted = weighted_sample_topk(spark, sf_dir).select(
-        F.lit("weighted").alias("op"),
-        "doc_id",
-        _NULL_S().alias("source"),
-        _NULL_S().alias("split"),
-        _NULL_I().alias("rk"),
-        "w",
-        "skey",
-        "rnk",
-        _NULL_L().alias("n_docs"),
-        _NULL_L().alias("min_doc_id"),
-        _NULL_L().alias("max_doc_id"),
-        _NULL_L().alias("doc_id_sum"),
-    )
-    split = deterministic_split(spark, sf_dir).select(
-        F.lit("split").alias("op"),
-        _NULL_L().alias("doc_id"),
-        "source",
-        "split",
-        _NULL_I().alias("rk"),
-        _NULL_L().alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        "n_docs",
-        "min_doc_id",
-        "max_doc_id",
-        "doc_id_sum",
-    )
-    epoch = epoch_shuffle_plan(spark, sf_dir).select(
-        F.concat(F.lit("epoch_"), "op").alias("op"),
-        "doc_id",
-        F.col("skey8").alias("source"),
-        F.col("epoch").cast("string").alias("split"),
-        F.col("shard").alias("rk"),
-        _NULL_L().alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        "n_docs",
-        _NULL_L().alias("min_doc_id"),
-        _NULL_L().alias("max_doc_id"),
-        "doc_id_sum",
-    )
-    # Round-9 DSIR leg: the hashed-ngram importance weight + the
-    # scale-free selection flag; the two booleans ride the 0/1 INT
-    # slots (rk: is_target, rnk: selected), the micro-nat weight the
-    # BIGINT w slot.
-    dsir = dsir_importance_weights(spark, sf_dir).select(
-        F.lit("dsir").alias("op"),
-        "doc_id",
-        _NULL_S().alias("source"),
-        _NULL_S().alias("split"),
-        F.expr("CAST(IF(is_target, 1, 0) AS INT)").alias("rk"),
-        F.col("weight_micro").alias("w"),
-        _NULL_D().alias("skey"),
-        F.expr("CAST(IF(selected, 1, 0) AS INT)").alias("rnk"),
-        F.col("n_grams").alias("n_docs"),
-        _NULL_L().alias("min_doc_id"),
-        _NULL_L().alias("max_doc_id"),
-        _NULL_L().alias("doc_id_sum"),
-    )
-    # Round-10 temperature-sampling leg: the per-language sqrt-
-    # smoothed allocation plan — lang rides the source slot, the four
-    # BIGINT outputs the w/n_docs/min/max/sum slots.
-    tempmix = temperature_sampling_plan(spark, sf_dir).select(
-        F.lit("tempmix").alias("op"),
-        _NULL_L().alias("doc_id"),
-        F.col("lang").alias("source"),
-        _NULL_S().alias("split"),
-        _NULL_I().alias("rk"),
-        F.col("repeat_micro").alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        "n_docs",
-        F.col("share_micro").alias("min_doc_id"),
-        F.col("q_micro").alias("max_doc_id"),
-        F.col("alloc_docs").alias("doc_id_sum"),
-    )
-    # Round-10 packing-efficiency leg: one source-grain aggregate over
-    # the packing plan.
-    packeff = packing_efficiency_eval(spark, sf_dir).select(
-        F.lit("packeff").alias("op"),
-        _NULL_L().alias("doc_id"),
-        "source",
-        _NULL_S().alias("split"),
-        F.col("n_bins").cast("int").alias("rk"),
-        F.col("fill_micro").alias("w"),
-        _NULL_D().alias("skey"),
-        F.col("min_bins").cast("int").alias("rnk"),
-        "n_docs",
-        F.col("total_tokens").alias("min_doc_id"),
-        F.col("max_bin_tokens").alias("max_doc_id"),
-        F.col("capacity_tokens").alias("doc_id_sum"),
-    )
-    # Round-11 padding-waste leg: the length-bucketed-batching
-    # efficiency table (bounded (bucket, batch) grain).
-    padwaste = padding_waste_eval(spark, sf_dir).select(
-        F.lit("padwaste").alias("op"),
-        F.col("bucket").alias("doc_id"),
-        _NULL_S().alias("source"),
-        _NULL_S().alias("split"),
-        F.col("batch").cast("int").alias("rk"),
-        F.col("waste").alias("w"),
-        _NULL_D().alias("skey"),
-        _NULL_I().alias("rnk"),
-        "n_docs",
-        F.col("max_words").alias("min_doc_id"),
-        F.col("sum_words").alias("max_doc_id"),
-        F.col("eff_micro").alias("doc_id_sum"),
-    )
-    return (
-        mix.unionByName(grouped)
-        .unionByName(weighted)
-        .unionByName(split)
-        .unionByName(epoch)
-        .unionByName(dsir)
-        .unionByName(tempmix)
-        .unionByName(packeff)
-        .unionByName(padwaste)
-    )
 
 
-@register(
-    "lexical_dedup_battery",
-    oracle=f"""
-    SELECT 'exact' AS op, fingerprint AS fp, CAST(NULL AS VARCHAR) AS s,
-           canonical_doc_id AS id_a, CAST(NULL AS BIGINT) AS id_b,
-           dup_count AS cnt, CAST(NULL AS BIGINT) AS nd,
-           CAST(NULL AS DOUBLE) AS cosine, CAST(NULL AS BOOLEAN) AS is_dup,
-           CAST(NULL AS BIGINT) AS n_keep, CAST(NULL AS BIGINT) AS rep_words
-    FROM ({_oracle("exact_dedup_groups")})
-    UNION ALL
-    SELECT 'passage' AS op, passage_hash, passage, first_doc_id,
-           CAST(NULL AS BIGINT), n_occurrences, n_docs, CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("passage_dedup")})
-    UNION ALL
-    SELECT 'tfidf' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           doc_a, doc_b, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), cosine,
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("tfidf_cosine_pairs")})
-    UNION ALL
-    SELECT 'winnow' AS op, CAST(fp AS VARCHAR), CAST(NULL AS VARCHAR),
-           doc_id, fp_pos, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("winnowing_fingerprints")})
-    UNION ALL
-    SELECT 'spans' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           doc_id, span_id, start_word, end_word,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           span_words, n_shingles
-    FROM ({_oracle("dup_span_extract")})
-    UNION ALL
-    SELECT 'novelty' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           doc_id, CAST(NULL AS BIGINT), n_shingles, n_seen,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           novelty_micro, CAST(NULL AS BIGINT)
-    FROM ({_oracle("ngram_novelty_audit")})
-    UNION ALL
-    SELECT 'srcover' AS op, src_a, src_b,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), n_shared, n_a,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           containment_micro, CAST(NULL AS BIGINT)
-    FROM ({_oracle("source_overlap_matrix")})
-    UNION ALL
-    SELECT 'chunk' AS op, chunk_hash, CAST(NULL AS VARCHAR),
-           doc_id, chunk_id, start_word, end_word,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           n_words, CAST(NULL AS BIGINT)
-    FROM ({_oracle("passage_chunking")})
-    """,
+# ---------------------------------------------------------------------------
+# The dedup family, split over two driver rows: the independent-scan
+# fingerprint/audit legs (lexical) and the MinHash-band family, whose
+# legs share one bands build (banded). A red leg then costs only its
+# half's attribution.
+# ---------------------------------------------------------------------------
+_DEDUP_SLOTS = {
+    "fp": "STRING", "s": "STRING", "id_a": "BIGINT", "id_b": "BIGINT",
+    "cnt": "BIGINT", "nd": "BIGINT", "cosine": "DOUBLE", "is_dup": "BOOLEAN",
+    "n_keep": "BIGINT", "rep_words": "BIGINT",
+}
+_LEXICAL = Battery(
+    slots=_DEDUP_SLOTS,
+    legs={
+        "exact": ("exact_dedup_groups", {
+            "fp": "fingerprint", "id_a": "canonical_doc_id", "cnt": "dup_count",
+        }),
+        "passage": ("passage_dedup", {
+            "fp": "passage_hash", "s": "passage", "id_a": "first_doc_id",
+            "cnt": "n_occurrences", "nd": "n_docs",
+        }),
+        "tfidf": ("tfidf_cosine_pairs", {"id_a": "doc_a", "id_b": "doc_b", "cosine": "cosine"}),
+        "winnow": ("winnowing_fingerprints", {
+            "fp": "CAST(fp AS STRING)", "id_a": "doc_id", "id_b": "fp_pos",
+        }),
+        "spans": ("dup_span_extract", {
+            "id_a": "doc_id", "id_b": "span_id", "cnt": "start_word",
+            "nd": "end_word", "n_keep": "span_words", "rep_words": "n_shingles",
+        }),
+        "novelty": ("ngram_novelty_audit", {
+            "id_a": "doc_id", "cnt": "n_shingles", "nd": "n_seen",
+            "n_keep": "novelty_micro",
+        }),
+        "srcover": ("source_overlap_matrix", {
+            "fp": "src_a", "s": "src_b", "cnt": "n_shared", "nd": "n_a",
+            "n_keep": "containment_micro",
+        }),
+        # chunk-grain fingerprinting is the passage_dedup family at a
+        # fixed window, so it belongs to this half
+        "chunk": ("passage_chunking", {
+            "fp": "chunk_hash", "id_a": "doc_id", "id_b": "chunk_id",
+            "cnt": "start_word", "nd": "end_word", "n_keep": "n_words",
+        }),
+    },
 )
+
+
+@register("lexical_dedup_battery", oracle=_LEXICAL.oracle())
 def lexical_dedup_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fingerprint/shingle-grain dedup legs in one tagged result:
     exact fingerprint groups + cross-document passage dedup +
     idf-weighted cosine pairs + winnowing local fingerprints +
     ExactSubstr-style duplicated spans + the n-gram novelty audit +
-    the source containment matrix. Every leg is an independent scan
-    (its own honest shingle/fingerprint grain — no sharing seam
-    applies). Round-11 bisect (VERDICT r10 #2, the
-    sketch_stats_battery precedent): the MinHash-band family moved to
-    ``banded_dedup_battery`` so the slowest, fastest-growing driver
-    row splits into two balanced halves and a red leg costs only its
-    half's attribution. Components unchanged: queries/dedup.py,
-    span_dedup.py, overlap_audit.py.
+    the source containment matrix + overlapping passage chunking.
+    Every leg is an independent scan (its own honest shingle/
+    fingerprint grain — no sharing seam applies). Components
+    unchanged: queries/dedup.py, span_dedup.py, overlap_audit.py,
+    chunking.py.
     """
-    exact = exact_dedup_groups(spark, sf_dir).select(
-        F.lit("exact").alias("op"),
-        F.col("fingerprint").alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("canonical_doc_id").alias("id_a"),
-        _NULL_L().alias("id_b"),
-        F.col("dup_count").alias("cnt"),
-        _NULL_L().alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    passage = passage_dedup(spark, sf_dir).select(
-        F.lit("passage").alias("op"),
-        F.col("passage_hash").alias("fp"),
-        F.col("passage").alias("s"),
-        F.col("first_doc_id").alias("id_a"),
-        _NULL_L().alias("id_b"),
-        F.col("n_occurrences").alias("cnt"),
-        F.col("n_docs").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    tfidf = tfidf_cosine_pairs(spark, sf_dir).select(
-        F.lit("tfidf").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("doc_a").alias("id_a"),
-        F.col("doc_b").alias("id_b"),
-        _NULL_L().alias("cnt"),
-        _NULL_L().alias("nd"),
-        "cosine",
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    winnow = winnowing_fingerprints(spark, sf_dir).select(
-        F.lit("winnow").alias("op"),
-        F.col("fp").cast("string").alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("doc_id").alias("id_a"),
-        F.col("fp_pos").alias("id_b"),
-        _NULL_L().alias("cnt"),
-        _NULL_L().alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    # Round-9 duplicated-span leg (ExactSubstr-style span extraction;
-    # independent shingle grain from the MinHash bands, so no sharing
-    # seam applies — its own scan+explode is the honest cost).
     # The spans and source-overlap legs run jobs during their builds
     # (internal checkpoints) and are independent scans by design —
-    # build them from the §2.6 thread pool.
-    from namegraph_collections_spark.queries.registry import build_parallel
-
-    spans_full, srcover_full = build_parallel(
+    # build them from the thread pool.
+    spans, srcover = build_parallel(
         spark,
         lambda: dup_span_extract(spark, sf_dir),
         lambda: source_overlap_matrix(spark, sf_dir),
     )
-    spans = spans_full.select(
-        F.lit("spans").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("doc_id").alias("id_a"),
-        F.col("span_id").alias("id_b"),
-        F.col("start_word").alias("cnt"),
-        F.col("end_word").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        F.col("span_words").alias("n_keep"),
-        F.col("n_shingles").alias("rep_words"),
-    )
-    # Round-10 overlap-audit legs: both are distinct-shingle-grain
-    # programs with their own (uncapped-by-design) existence joins —
-    # independent grain from the MinHash bands, so their scans are the
-    # honest cost (the dup-span precedent).
-    novelty = ngram_novelty_audit(spark, sf_dir).select(
-        F.lit("novelty").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("doc_id").alias("id_a"),
-        _NULL_L().alias("id_b"),
-        F.col("n_shingles").alias("cnt"),
-        F.col("n_seen").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        F.col("novelty_micro").alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    srcover = srcover_full.select(
-        F.lit("srcover").alias("op"),
-        F.col("src_a").alias("fp"),
-        F.col("src_b").alias("s"),
-        _NULL_L().alias("id_a"),
-        _NULL_L().alias("id_b"),
-        F.col("n_shared").alias("cnt"),
-        F.col("n_a").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        F.col("containment_micro").alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    # Round-11 passage-chunking leg: the chunk content hash rides the
-    # fingerprint slot — chunk-grain fingerprinting is the passage_
-    # dedup family at a fixed window, so it belongs to this half.
-    chunk = passage_chunking(spark, sf_dir).select(
-        F.lit("chunk").alias("op"),
-        F.col("chunk_hash").alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("doc_id").alias("id_a"),
-        F.col("chunk_id").alias("id_b"),
-        F.col("start_word").alias("cnt"),
-        F.col("end_word").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        F.col("n_words").alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    return (
-        exact.unionByName(passage)
-        .unionByName(tfidf)
-        .unionByName(winnow)
-        .unionByName(spans)
-        .unionByName(novelty)
-        .unionByName(srcover)
-        .unionByName(chunk)
-    )
+    return _LEXICAL.union(spark, sf_dir, spans=spans, srcover=srcover)
 
 
-@register(
-    "banded_dedup_battery",
-    oracle=f"""
-    SELECT 'incremental' AS op, CAST(NULL AS VARCHAR) AS fp,
-           CAST(NULL AS VARCHAR) AS s,
-           new_doc AS id_a, old_doc AS id_b, CAST(NULL AS BIGINT) AS cnt,
-           CAST(NULL AS BIGINT) AS nd,
-           jaccard AS cosine, is_dup,
-           CAST(NULL AS BIGINT) AS n_keep, CAST(NULL AS BIGINT) AS rep_words
-    FROM ({_oracle("incremental_minhash_dedup")})
-    UNION ALL
-    SELECT 'rep' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           cluster_id, rep_doc_id, cluster_size, n_dropped,
-           CAST(NULL AS DOUBLE), rep_keep, n_quality_keep, rep_n_words
-    FROM ({_oracle("neardup_representatives")})
-    UNION ALL
-    SELECT 'funnel' AS op, stage, detail, doc_id_sum,
-           CAST(NULL AS BIGINT), n_docs, n_words_total,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("training_pipeline_e2e")})
-    UNION ALL
-    SELECT 'cstats' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           cluster_size, n_clusters, n_docs, n_removable,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("dedup_cluster_stats")})
-    UNION ALL
-    SELECT 'fdecon' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           train_doc_id, first_test_doc, n_test_matches,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("fuzzy_decontamination")})
-    UNION ALL
-    SELECT 'lshtune' AS op, metric, CAST(NULL AS VARCHAR),
-           thr_micro, value_micro, n_hit, n_pairs,
-           CAST(NULL AS DOUBLE), CAST(NULL AS BOOLEAN),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("lsh_tuning_eval")})
-    """,
+_BANDED = Battery(
+    slots=_DEDUP_SLOTS,
+    legs={
+        "incremental": ("incremental_minhash_dedup", {
+            "id_a": "new_doc", "id_b": "old_doc", "cosine": "jaccard", "is_dup": "is_dup",
+        }),
+        "rep": ("neardup_representatives", {
+            "id_a": "cluster_id", "id_b": "rep_doc_id", "cnt": "cluster_size",
+            "nd": "n_dropped", "is_dup": "rep_keep", "n_keep": "n_quality_keep",
+            "rep_words": "rep_n_words",
+        }),
+        "funnel": ("training_pipeline_e2e", {
+            "fp": "stage", "s": "detail", "id_a": "doc_id_sum", "cnt": "n_docs",
+            "nd": "n_words_total",
+        }),
+        "cstats": ("dedup_cluster_stats", {
+            "id_a": "cluster_size", "id_b": "n_clusters", "cnt": "n_docs",
+            "nd": "n_removable",
+        }),
+        "fdecon": ("fuzzy_decontamination", {
+            "id_a": "train_doc_id", "id_b": "first_test_doc", "cnt": "n_test_matches",
+        }),
+        "lshtune": ("lsh_tuning_eval", {
+            "fp": "metric", "id_a": "thr_micro", "id_b": "value_micro",
+            "cnt": "n_hit", "nd": "n_pairs",
+        }),
+    },
 )
+
+
+@register("banded_dedup_battery", oracle=_BANDED.oracle())
 def banded_dedup_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-band family in one tagged result: incremental
     (batch-vs-corpus) MinHash dedup + per-cluster representative
     selection + the end-to-end training-pipeline funnel + the
     cluster-size histogram + MinHash-band fuzzy decontamination + the
-    LSH banding tuning eval. Split out of ``lexical_dedup_battery``
-    in round 11 (VERDICT r10 #2): these six legs share ONE bands
-    build / ONE quality frame / ONE components closure, so they stay
-    together; the independent-scan fingerprint/audit legs form the
-    other half. Components unchanged: queries/dedup.py,
-    dedup_select.py, pipeline_e2e.py, training_data.py.
+    LSH banding tuning eval. These six legs share ONE bands build /
+    ONE quality frame / ONE components closure, so they stay together;
+    the independent-scan fingerprint/audit legs form the other half
+    (``lexical_dedup_battery``). Components unchanged:
+    queries/dedup.py, dedup_select.py, pipeline_e2e.py,
+    training_data.py.
     """
-    from namegraph_collections_spark.queries.registry import tbl as _tbl
-
     # ONE bands build feeds the incremental probe (which itself
     # references it twice: index side + batch side), the
     # representative closure's pair generation, the fdecon leg, and
@@ -1229,959 +541,384 @@ def banded_dedup_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReusedExchange does not dedup the repeated subtrees (the
     # measured battery finding; A/B in MEASUREMENTS.md). ONE quality
     # frame and ONE components closure (rep_full) feed the rep leg,
-    # the cstats histogram, and the funnel's fuzzy stage.
-    docs = _tbl(spark, sf_dir, "documents")
-    # bands / quality / the exact-Jaccard truth side are three
-    # INDEPENDENT subtrees — checkpoint them from the §2.6 thread
-    # pool so their AQE job chains overlap instead of running
-    # serially on the driver. Round 13: the second wave is scheduled
-    # as a dependency DAG instead of a barrier — rep_full needs only
-    # (bands, quality) and tune_cand only bands, but the former
-    # two-wave shape made both wait for tune_truth, the measured
-    # wave-1 straggler (truth 3.3s vs bands 0.7s + quality 0.4s warm;
-    # rep_full 3.3s is the wave-2 straggler, so chaining it off
-    # bands+quality overlaps it with truth's shingle pass). Same
-    # frames, same checkpoints, same results — only the submission
-    # schedule changes (the checkpoint_parallel contract note).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
+    # the cstats histogram, and the funnel's fuzzy stage. The
+    # lshtune legs consume each pair frame twice (recall AND
+    # precision), so both pair frames are checkpointed too.
+    docs = tbl(spark, sf_dir, "documents")
 
     def _ck(df):
         return df.localCheckpoint(eager=False)
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        bands_f = pool.submit(
-            inheritable_thread_target(lambda: _ck(_minhash_bands(docs)))
+    # rep_full needs only (bands, quality) and tune_cand only bands, so
+    # that chain runs beside the exact-Jaccard truth side, the
+    # measured straggler (truth 3.3s vs bands 0.7s + quality 0.4s
+    # warm; rep_full 3.3s overlaps truth's shingle pass). Same frames,
+    # same checkpoints, same results; only the submission schedule
+    # changes.
+    def _bands_chain():
+        bands, quality = run_parallel(
+            spark,
+            lambda: _ck(_minhash_bands(docs)),
+            lambda: _ck(doc_quality_signals(spark, sf_dir)),
         )
-        quality_f = pool.submit(
-            inheritable_thread_target(lambda: _ck(doc_quality_signals(spark, sf_dir)))
+        rep_full, tune_cand = run_parallel(
+            spark,
+            lambda: _ck(
+                neardup_representatives_from(docs, _minhash_pairs_from(bands), quality)
+            ),
+            lambda: _ck(_minhash_pairs_from(bands).withColumn("hit", F.lit(1))),
         )
-        truth_f = pool.submit(
-            inheritable_thread_target(
-                lambda: _ck(
-                    ngram_jaccard_pairs(spark, sf_dir).select(
-                        "doc_a",
-                        "doc_b",
-                        F.expr(
-                            "CAST(floor(jaccard * 1000000 + 0.5) AS BIGINT)"
-                        ).alias("j_micro"),
-                    )
-                )
+        return bands, quality, rep_full, tune_cand
+
+    (bands, quality, rep_full, tune_cand), tune_truth = run_parallel(
+        spark,
+        _bands_chain,
+        lambda: _ck(
+            ngram_jaccard_pairs(spark, sf_dir).select(
+                "doc_a",
+                "doc_b",
+                F.expr("CAST(floor(jaccard * 1000000 + 0.5) AS BIGINT)").alias("j_micro"),
             )
-        )
-        rep_f = pool.submit(
-            inheritable_thread_target(
-                lambda: _ck(
-                    neardup_representatives_from(
-                        docs, _minhash_pairs_from(bands_f.result()), quality_f.result()
-                    )
-                )
-            )
-        )
-        cand_f = pool.submit(
-            inheritable_thread_target(
-                lambda: _ck(
-                    _minhash_pairs_from(bands_f.result()).withColumn("hit", F.lit(1))
-                )
-            )
-        )
-        bands = bands_f.result()
-        quality = quality_f.result()
-        tune_truth = truth_f.result()
-        rep_full = rep_f.result()
-        tune_cand = cand_f.result()
-    inc = incremental_minhash_dedup_from(docs, bands).select(
-        F.lit("incremental").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("new_doc").alias("id_a"),
-        F.col("old_doc").alias("id_b"),
-        _NULL_L().alias("cnt"),
-        _NULL_L().alias("nd"),
-        F.col("jaccard").alias("cosine"),
-        "is_dup",
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
+        ),
     )
-    rep = rep_full.select(
-        F.lit("rep").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("cluster_id").alias("id_a"),
-        F.col("rep_doc_id").alias("id_b"),
-        F.col("cluster_size").alias("cnt"),
-        F.col("n_dropped").alias("nd"),
-        _NULL_D().alias("cosine"),
-        F.col("rep_keep").alias("is_dup"),
-        F.col("n_quality_keep").alias("n_keep"),
-        F.col("rep_n_words").alias("rep_words"),
-    )
-    funnel = training_pipeline_e2e_from(docs, rep_full, quality).select(
-        F.lit("funnel").alias("op"),
-        F.col("stage").alias("fp"),
-        F.col("detail").alias("s"),
-        F.col("doc_id_sum").alias("id_a"),
-        _NULL_L().alias("id_b"),
-        F.col("n_docs").alias("cnt"),
-        F.col("n_words_total").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    # cluster-stats leg: rep_full is already one row per cluster
-    # carrying cluster_size, so the histogram costs one tiny groupBy
-    # on the shared closure — no second components build.
-    cstats = dedup_cluster_stats_from(rep_full).select(
-        F.lit("cstats").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("cluster_size").alias("id_a"),
-        F.col("n_clusters").alias("id_b"),
-        F.col("n_docs").alias("cnt"),
-        F.col("n_removable").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    fdecon = fuzzy_decontamination_from(bands).select(
-        F.lit("fdecon").alias("op"),
-        _NULL_S().alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("train_doc_id").alias("id_a"),
-        F.col("first_test_doc").alias("id_b"),
-        F.col("n_test_matches").alias("cnt"),
-        _NULL_L().alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    # LSH-tuning leg: the candidate side rides the SAME checkpointed
-    # bands build as the other legs; only the exact-Jaccard truth
-    # side adds its own (df-capped, never all-pairs) shingle pass.
-    # Both pair frames are checkpointed (in the thread-pool waves
-    # above) because recall AND precision legs consume each (the
-    # lsh_tuning_eval double-subtree finding).
-    lshtune = lsh_tuning_eval_from(tune_truth, tune_cand).select(
-        F.lit("lshtune").alias("op"),
-        F.col("metric").alias("fp"),
-        _NULL_S().alias("s"),
-        F.col("thr_micro").alias("id_a"),
-        F.col("value_micro").alias("id_b"),
-        F.col("n_hit").alias("cnt"),
-        F.col("n_pairs").alias("nd"),
-        _NULL_D().alias("cosine"),
-        _NULL_B().alias("is_dup"),
-        _NULL_L().alias("n_keep"),
-        _NULL_L().alias("rep_words"),
-    )
-    return (
-        inc.unionByName(rep)
-        .unionByName(funnel)
-        .unionByName(cstats)
-        .unionByName(fdecon)
-        .unionByName(lshtune)
+    return _BANDED.union(
+        spark,
+        sf_dir,
+        incremental=incremental_minhash_dedup_from(docs, bands),
+        rep=rep_full,
+        funnel=training_pipeline_e2e_from(docs, rep_full, quality),
+        # rep_full is already one row per cluster carrying
+        # cluster_size, so the histogram is one tiny groupBy on the
+        # shared closure — no second components build
+        cstats=dedup_cluster_stats_from(rep_full),
+        fdecon=fuzzy_decontamination_from(bands),
+        lshtune=lsh_tuning_eval_from(tune_truth, tune_cand),
     )
 
 
-@register(
+register_battery(
     "neardup_candidates_battery",
-    oracle=f"""
-    SELECT 'simhash' AS op, doc_a AS id_a, doc_b AS id_b,
-           a_hi, a_lo, b_hi, b_lo, hamming,
-           CAST(NULL AS DOUBLE) AS cosine
-    FROM ({_oracle("simhash_neardup_candidates")})
-    UNION ALL
-    SELECT 'emblsh' AS op, vec_a, vec_b,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS INTEGER), cosine
-    FROM ({_oracle("embedding_neardup_pairs")})
-    """,
-)
-def neardup_candidates_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming-ball candidates + embedding sign-bit-LSH
-    cosine pairs in one tagged result — composited in round 11 to
-    free the driver-window slot the ``lexical_dedup_battery`` bisect
-    needs (the round-9 ``revenue_olap_battery`` precedent). The two
-    singles stay registered; components unchanged: queries/dedup.py.
-    """
-    sim = simhash_neardup_candidates(spark, sf_dir).select(
-        F.lit("simhash").alias("op"),
-        F.col("doc_a").alias("id_a"),
-        F.col("doc_b").alias("id_b"),
-        "a_hi",
-        "a_lo",
-        "b_hi",
-        "b_lo",
-        "hamming",
-        _NULL_D().alias("cosine"),
-    )
-    emb = embedding_neardup_pairs(spark, sf_dir).select(
-        F.lit("emblsh").alias("op"),
-        F.col("vec_a").alias("id_a"),
-        F.col("vec_b").alias("id_b"),
-        _NULL_L().alias("a_hi"),
-        _NULL_L().alias("a_lo"),
-        _NULL_L().alias("b_hi"),
-        _NULL_L().alias("b_lo"),
-        _NULL_I().alias("hamming"),
-        "cosine",
-    )
-    return sim.unionByName(emb)
-
-
-# ---------------------------------------------------------------------------
-# Round-6 third wave.
-# ---------------------------------------------------------------------------
-from namegraph_collections_spark.queries.similarity_pq import (  # noqa: E402
-    pq_adc_topk,
-    pq_rerank_topk,
+    """SimHash Hamming-ball candidates + embedding sign-bit-LSH cosine
+    pairs in one tagged result — composited to free the driver-window
+    slot the lexical/banded dedup split needs. The two singles stay
+    registered; components unchanged: queries/dedup.py.""",
+    slots={
+        "id_a": "BIGINT", "id_b": "BIGINT", "a_hi": "BIGINT", "a_lo": "BIGINT",
+        "b_hi": "BIGINT", "b_lo": "BIGINT", "hamming": "INT", "cosine": "DOUBLE",
+    },
+    legs={
+        "simhash": ("simhash_neardup_candidates", {
+            "id_a": "doc_a", "id_b": "doc_b", "a_hi": "a_hi", "a_lo": "a_lo",
+            "b_hi": "b_hi", "b_lo": "b_lo", "hamming": "hamming",
+        }),
+        "emblsh": ("embedding_neardup_pairs", {
+            "id_a": "vec_a", "id_b": "vec_b", "cosine": "cosine",
+        }),
+    },
 )
 
 
-@register(
-    "pq_battery",
-    oracle=f"""
-    SELECT 'adc' AS op, q_id, c_id, approx_l2 AS score, rnk
-    FROM ({_oracle("pq_adc_topk")})
-    UNION ALL
-    SELECT 'rerank' AS op, q_id, c_id, cosine, rnk
-    FROM ({_oracle("pq_rerank_topk")})
-    """,
+_PQ = Battery(
+    slots={"q_id": "BIGINT", "c_id": "BIGINT", "score": "DOUBLE", "rnk": "INT"},
+    legs={
+        "adc": ("pq_adc_topk", {"q_id": "q_id", "c_id": "c_id", "score": "approx_l2", "rnk": "rnk"}),
+        "rerank": ("pq_rerank_topk", {"q_id": "q_id", "c_id": "c_id", "score": "cosine", "rnk": "rnk"}),
+    },
 )
+
+
+@register("pq_battery", oracle=_PQ.oracle())
 def pq_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN pair in one tagged result: raw ADC
     (integer-LUT asymmetric distances) top-k and the exact-cosine
     re-rank over the ADC shortlist. Components unchanged:
     queries/similarity_pq.py.
     """
-    # ONE codebook training feeds both legs (round 13, the
-    # `ivf_topk_from` seam precedent): the singles each run the full
-    # PQ Lloyd chain, so composing them verbatim trained the SAME
-    # deterministic codebook twice — the training executes at build
-    # time (per-round eager checkpoints), so sharing the scored frame
-    # halves the battery's training work while the legs' results stay
-    # bit-identical to the singles'.
-    from namegraph_collections_spark.queries.similarity_pq import (
-        _adc_scored,
-        pq_adc_topk_from,
-        pq_rerank_topk_from,
-    )
-
+    # ONE codebook training feeds both legs: the singles each run the
+    # full PQ Lloyd chain at build time (per-round eager checkpoints),
+    # so sharing the scored frame halves the battery's training work
+    # while the legs' results stay bit-identical to the singles'.
     scored = _adc_scored(spark, sf_dir)
-    adc = pq_adc_topk_from(scored).select(
-        F.lit("adc").alias("op"),
-        "q_id",
-        "c_id",
-        F.col("approx_l2").alias("score"),
-        "rnk",
+    return _PQ.union(
+        spark,
+        sf_dir,
+        adc=pq_adc_topk_from(scored),
+        rerank=pq_rerank_topk_from(spark, sf_dir, scored),
     )
-    rr = pq_rerank_topk_from(spark, sf_dir, scored).select(
-        F.lit("rerank").alias("op"),
-        "q_id",
-        "c_id",
-        F.col("cosine").alias("score"),
-        "rnk",
-    )
-    return adc.unionByName(rr)
 
 
-from namegraph_collections_spark.queries import bpe as _bpe  # noqa: E402,F401  (oracle refs; legs share _bpe._learn)
-from namegraph_collections_spark.queries.cdc import (  # noqa: E402
-    cdc_driven_rollup,
-    cdc_three_way_ops,
-)
-from namegraph_collections_spark.queries.centrality import (  # noqa: E402,F401  (graph battery)
-    bipartite_pagerank,
-)
-from namegraph_collections_spark.queries.closure import (  # noqa: E402
-    transitive_closure_reachability,
-)
-from namegraph_collections_spark.queries.collections_ops import (  # noqa: E402
-    suffix_mining,
-)
-from namegraph_collections_spark.queries.graph_metrics import (  # noqa: E402
-    neardup_triangles,
-)
-from namegraph_collections_spark.queries.olap import (  # noqa: E402
-    cube_status_priority,
-    rollup_regional_revenue,
-    status_priority_pivot,
-)
-from namegraph_collections_spark.queries.percentiles import (  # noqa: E402
-    histogram_quantiles,
-    length_percentile_trim,
-)
-from namegraph_collections_spark.queries.profiling import (  # noqa: E402
-    table_stats_profile,
-)
-from namegraph_collections_spark.queries.relational import (  # noqa: E402
-    customer_key_set_algebra,
-    pricing_summary,
-    regional_revenue,
-    status_histogram,
-)
-from namegraph_collections_spark.queries.rollups import cms_heavy_hitters  # noqa: E402
-from namegraph_collections_spark.queries.scale_ops import (  # noqa: E402
-    bloom_pruned_semi_join,
-    salted_skew_agg,
-    skew_key_diagnostics,
-)
-from namegraph_collections_spark.queries.text_analysis import (  # noqa: E402
-    bigram_pmi,
-    language_id,
-    language_id_eval,  # noqa: F401  (oracle parity; battery uses the _from seam)
-    language_id_eval_from,
-)
-
-
-@register(
+# ---------------------------------------------------------------------------
+# The sketch/statistics family. The six-leg battery stays registered
+# after the window; the driver hashes it as two 3-leg rows (probe and
+# skew/salt/trim) so a disagreement localizes to one row. Both rows
+# carry a strictly BIGINT/VARCHAR/INTEGER surface: every aggregate
+# that DuckDB would promote to HUGEINT is CAST to BIGINT, rnk is pinned
+# INTEGER on both engines, and no DOUBLE or DECIMAL column exists.
+# ---------------------------------------------------------------------------
+register_battery(
     "sketch_stats_battery",
-    oracle=f"""
-    SELECT 'cms' AS op, token AS s, CAST(NULL AS BIGINT) AS k,
-           CAST(NULL AS BIGINT) AS k2, CAST(NULL AS BIGINT) AS k3,
-           n_exact AS n1, cms_estimate AS n2, overcount AS n3, rnk,
-           CAST(NULL AS BIGINT) AS d1_micro, CAST(NULL AS BIGINT) AS d2_micro,
-           CAST(NULL AS BIGINT) AS d3_micro,
-           CAST(NULL AS VARCHAR) AS s2, CAST(NULL AS VARCHAR) AS s3
-    FROM ({_oracle("cms_heavy_hitters")})
-    UNION ALL
-    SELECT 'hist' AS op, quantile, bucket, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), n_rows, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS INTEGER),
-           CAST(est_lo * 1000000 AS BIGINT), CAST(est_hi * 1000000 AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-    FROM ({_oracle("histogram_quantiles")})
-    UNION ALL
-    SELECT 'stats' AS op, col, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), n_rows, n_nulls, n_distinct,
-           CAST(NULL AS INTEGER), CAST(min_num * 1000000 AS BIGINT),
-           CAST(max_num * 1000000 AS BIGINT), CAST(NULL AS BIGINT),
-           min_str, max_str
-    FROM ({_oracle("table_stats_profile")})
-    UNION ALL
-    SELECT 'skew_' || op AS op, CAST(NULL AS VARCHAR), key, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), cnt, n_keys, n_rows, rnk,
-           skew_ratio_micro,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-    FROM ({_oracle("skew_key_diagnostics")})
-    UNION ALL
-    SELECT 'salted' AS op, event_type, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), n_events, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS INTEGER),
-           CAST(total_value * 1000000 AS BIGINT), CAST(min_value * 1000000 AS BIGINT),
-           CAST(max_value * 1000000 AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-    FROM ({_oracle("salted_skew_agg")})
-    UNION ALL
-    SELECT 'trim' AS op, source, p50, p90, p99, n_docs, n_kept,
-           CAST(NULL AS BIGINT), CAST(NULL AS INTEGER), CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-    FROM ({_oracle("length_percentile_trim")})
-    """,
-)
-def sketch_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sketch/statistics family in one tagged result: count-min
     heavy hitters, fixed-grid histogram quantiles, the one-pass table
     stats profile, shuffle-key skew diagnostics, the salted two-stage
     aggregate, and exact-percentile outlier trim. Components
     unchanged: queries/rollups.py, percentiles.py, profiling.py,
-    scale_ops.py.
-    """
-    # round 8: decimal outputs are off the hash surface — every d-column
-    # source is DECIMAL with <=6 fractional digits, so *1e6 -> BIGINT is
-    # an exact integerization (Spark: decimal(28,6)*int -> decimal(36,6)).
-    def _micro(col: str):
-        return F.expr(f"CAST({col} * 1000000 AS BIGINT)")
-    cms = cms_heavy_hitters(spark, sf_dir).select(
-        F.lit("cms").alias("op"),
-        F.col("token").alias("s"),
-        _NULL_L().alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("n_exact").alias("n1"),
-        F.col("cms_estimate").alias("n2"),
-        F.col("overcount").alias("n3"),
-        "rnk",
-        _NULL_L().alias("d1_micro"), _NULL_L().alias("d2_micro"), _NULL_L().alias("d3_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    hist = histogram_quantiles(spark, sf_dir).select(
-        F.lit("hist").alias("op"),
-        F.col("quantile").alias("s"),
-        F.col("bucket").alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("n_rows").alias("n1"), _NULL_L().alias("n2"), _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("est_lo").alias("d1_micro"), _micro("est_hi").alias("d2_micro"),
-        _NULL_L().alias("d3_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    stats = table_stats_profile(spark, sf_dir).select(
-        F.lit("stats").alias("op"),
-        F.col("col").alias("s"),
-        _NULL_L().alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("n_rows").alias("n1"),
-        F.col("n_nulls").alias("n2"),
-        F.col("n_distinct").alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("min_num").alias("d1_micro"), _micro("max_num").alias("d2_micro"),
-        _NULL_L().alias("d3_micro"),
-        F.col("min_str").alias("s2"), F.col("max_str").alias("s3"),
-    )
-    skew = skew_key_diagnostics(spark, sf_dir).select(
-        F.concat(F.lit("skew_"), "op").alias("op"),
-        _NULL_S().alias("s"),
-        F.col("key").alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("cnt").alias("n1"),
-        F.col("n_keys").alias("n2"),
-        F.col("n_rows").alias("n3"),
-        "rnk",
-        F.col("skew_ratio_micro").alias("d1_micro"), _NULL_L().alias("d2_micro"),
-        _NULL_L().alias("d3_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    salted = salted_skew_agg(spark, sf_dir).select(
-        F.lit("salted").alias("op"),
-        F.col("event_type").alias("s"),
-        _NULL_L().alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("n_events").alias("n1"), _NULL_L().alias("n2"), _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("total_value").alias("d1_micro"),
-        _micro("min_value").alias("d2_micro"),
-        _micro("max_value").alias("d3_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    trim = length_percentile_trim(spark, sf_dir).select(
-        F.lit("trim").alias("op"),
-        F.col("source").alias("s"),
-        F.col("p50").alias("k"), F.col("p90").alias("k2"), F.col("p99").alias("k3"),
-        F.col("n_docs").alias("n1"), F.col("n_kept").alias("n2"),
-        _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _NULL_L().alias("d1_micro"), _NULL_L().alias("d2_micro"), _NULL_L().alias("d3_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    return (
-        cms.unionByName(hist).unionByName(stats)
-        .unionByName(skew).unionByName(salted).unionByName(trim)
-    )
+    scale_ops.py.""",
+    slots={
+        "s": "STRING", "k": "BIGINT", "k2": "BIGINT", "k3": "BIGINT",
+        "n1": "BIGINT", "n2": "BIGINT", "n3": "BIGINT", "rnk": "INT",
+        "d1_micro": "BIGINT", "d2_micro": "BIGINT", "d3_micro": "BIGINT",
+        "s2": "STRING", "s3": "STRING",
+    },
+    legs={
+        "cms": ("cms_heavy_hitters", {
+            "s": "token", "n1": "n_exact", "n2": "cms_estimate", "n3": "overcount",
+            "rnk": "rnk",
+        }),
+        "hist": ("histogram_quantiles", {
+            "s": "quantile", "k": "bucket", "n1": "n_rows",
+            "d1_micro": _micro("est_lo"), "d2_micro": _micro("est_hi"),
+        }),
+        "stats": ("table_stats_profile", {
+            "s": "col", "n1": "n_rows", "n2": "n_nulls", "n3": "n_distinct",
+            "d1_micro": _micro("min_num"), "d2_micro": _micro("max_num"),
+            "s2": "min_str", "s3": "max_str",
+        }),
+        "skew": ("skew_key_diagnostics", {
+            "op": "'skew_' || op", "k": "key", "n1": "cnt", "n2": "n_keys",
+            "n3": "n_rows", "rnk": "rnk", "d1_micro": "skew_ratio_micro",
+        }),
+        "salted": ("salted_skew_agg", {
+            "s": "event_type", "n1": "n_events", "d1_micro": _micro("total_value"),
+            "d2_micro": _micro("min_value"), "d3_micro": _micro("max_value"),
+        }),
+        "trim": ("length_percentile_trim", {
+            "s": "source", "k": "p50", "k2": "p90", "k3": "p99", "n1": "n_docs",
+            "n2": "n_kept",
+        }),
+    },
+)
 
-
-# ---------------------------------------------------------------------------
-# Round-9 bisect of the sketch/stats family (VERDICT r8 "Next round"
-# #1): sketch_stats_battery has been the ONE red driver row for three
-# consecutive rounds across three encodings (raw DOUBLE r6 -> DECIMAL
-# r7 -> micro-BIGINT r8) while its values reproduce bitwise-equal to
-# the DuckDB oracle in a driver-style plain session — so the six legs
-# split across TWO window rows to let the driver itself localize which
-# leg it disagrees on. Both rows carry a strictly BIGINT/VARCHAR/
-# INTEGER surface: every aggregate that DuckDB would promote to
-# HUGEINT is CAST to BIGINT, rnk is pinned INTEGER on both engines,
-# and no DOUBLE or DECIMAL column exists at all (the r8 micro-BIGINT
-# convention, now with zero type asymmetries left). The six singles
-# and the original six-leg battery stay registered post-window for the
-# local sweep, so evidence continuity is unbroken whatever the driver
-# says.
-# ---------------------------------------------------------------------------
-@register(
+register_battery(
     "sketch_probe_battery",
-    oracle=f"""
-    SELECT 'cms' AS op, token AS s, CAST(NULL AS BIGINT) AS k,
-           CAST(n_exact AS BIGINT) AS n1, CAST(cms_estimate AS BIGINT) AS n2,
-           CAST(overcount AS BIGINT) AS n3, CAST(rnk AS INTEGER) AS rnk,
-           CAST(NULL AS BIGINT) AS d1_micro, CAST(NULL AS BIGINT) AS d2_micro,
-           CAST(NULL AS VARCHAR) AS s2, CAST(NULL AS VARCHAR) AS s3
-    FROM ({_oracle("cms_heavy_hitters")})
-    UNION ALL
-    SELECT 'hist' AS op, quantile, CAST(bucket AS BIGINT),
-           CAST(n_rows AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS INTEGER),
-           CAST(est_lo * 1000000 AS BIGINT), CAST(est_hi * 1000000 AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-    FROM ({_oracle("histogram_quantiles")})
-    UNION ALL
-    SELECT 'stats' AS op, col, CAST(NULL AS BIGINT),
-           CAST(n_rows AS BIGINT), CAST(n_nulls AS BIGINT),
-           CAST(n_distinct AS BIGINT), CAST(NULL AS INTEGER),
-           CAST(min_num * 1000000 AS BIGINT), CAST(max_num * 1000000 AS BIGINT),
-           min_str, max_str
-    FROM ({_oracle("table_stats_profile")})
-    """,
-)
-def sketch_probe_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect row A of the sketch/stats family: count-min heavy
-    hitters, fixed-grid histogram quantiles, and the one-pass table
-    stats profile (see the section comment for why the six-leg battery
+    """Row A of the sketch/stats family: count-min heavy hitters,
+    fixed-grid histogram quantiles, and the one-pass table stats
+    profile (see the section comment for why the six-leg battery
     split). Components unchanged: queries/rollups.py, percentiles.py,
-    profiling.py.
-    """
-    def _micro(col: str):
-        return F.expr(f"CAST({col} * 1000000 AS BIGINT)")
-    cms = cms_heavy_hitters(spark, sf_dir).select(
-        F.lit("cms").alias("op"),
-        F.col("token").alias("s"),
-        _NULL_L().alias("k"),
-        F.col("n_exact").cast("long").alias("n1"),
-        F.col("cms_estimate").cast("long").alias("n2"),
-        F.col("overcount").cast("long").alias("n3"),
-        F.col("rnk").cast("int").alias("rnk"),
-        _NULL_L().alias("d1_micro"), _NULL_L().alias("d2_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    hist = histogram_quantiles(spark, sf_dir).select(
-        F.lit("hist").alias("op"),
-        F.col("quantile").alias("s"),
-        F.col("bucket").cast("long").alias("k"),
-        F.col("n_rows").cast("long").alias("n1"),
-        _NULL_L().alias("n2"), _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("est_lo").alias("d1_micro"), _micro("est_hi").alias("d2_micro"),
-        _NULL_S().alias("s2"), _NULL_S().alias("s3"),
-    )
-    stats = table_stats_profile(spark, sf_dir).select(
-        F.lit("stats").alias("op"),
-        F.col("col").alias("s"),
-        _NULL_L().alias("k"),
-        F.col("n_rows").cast("long").alias("n1"),
-        F.col("n_nulls").cast("long").alias("n2"),
-        F.col("n_distinct").cast("long").alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("min_num").alias("d1_micro"), _micro("max_num").alias("d2_micro"),
-        F.col("min_str").alias("s2"), F.col("max_str").alias("s3"),
-    )
-    return cms.unionByName(hist).unionByName(stats)
+    profiling.py.""",
+    slots={
+        "s": "STRING", "k": "BIGINT", "n1": "BIGINT", "n2": "BIGINT",
+        "n3": "BIGINT", "rnk": "INT", "d1_micro": "BIGINT", "d2_micro": "BIGINT",
+        "s2": "STRING", "s3": "STRING",
+    },
+    legs={
+        "cms": ("cms_heavy_hitters", {
+            "s": "token", "n1": "CAST(n_exact AS BIGINT)",
+            "n2": "CAST(cms_estimate AS BIGINT)", "n3": "CAST(overcount AS BIGINT)",
+            "rnk": "CAST(rnk AS INT)",
+        }),
+        "hist": ("histogram_quantiles", {
+            "s": "quantile", "k": "CAST(bucket AS BIGINT)",
+            "n1": "CAST(n_rows AS BIGINT)",
+            "d1_micro": _micro("est_lo"), "d2_micro": _micro("est_hi"),
+        }),
+        "stats": ("table_stats_profile", {
+            "s": "col", "n1": "CAST(n_rows AS BIGINT)", "n2": "CAST(n_nulls AS BIGINT)",
+            "n3": "CAST(n_distinct AS BIGINT)", "d1_micro": _micro("min_num"),
+            "d2_micro": _micro("max_num"), "s2": "min_str", "s3": "max_str",
+        }),
+    },
+)
 
-
-@register(
+register_battery(
     "skew_salt_trim_battery",
-    oracle=f"""
-    SELECT 'skew_' || op AS op, CAST(NULL AS VARCHAR) AS s, key AS k,
-           CAST(NULL AS BIGINT) AS k2, CAST(NULL AS BIGINT) AS k3,
-           cnt AS n1, n_keys AS n2, n_rows AS n3, CAST(rnk AS INTEGER) AS rnk,
-           skew_ratio_micro AS d1_micro, CAST(NULL AS BIGINT) AS d2_micro,
-           CAST(NULL AS BIGINT) AS d3_micro
-    FROM ({_oracle("skew_key_diagnostics")})
-    UNION ALL
-    SELECT 'salted' AS op, event_type, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           n_events, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS INTEGER),
-           CAST(total_value * 1000000 AS BIGINT),
-           CAST(min_value * 1000000 AS BIGINT),
-           CAST(max_value * 1000000 AS BIGINT)
-    FROM ({_oracle("salted_skew_agg")})
-    UNION ALL
-    SELECT 'trim' AS op, source, p50, p90, p99, n_docs, n_kept,
-           CAST(NULL AS BIGINT), CAST(NULL AS INTEGER),
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("length_percentile_trim")})
-    """,
-)
-def skew_salt_trim_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect row B of the sketch/stats family: shuffle-key skew
-    diagnostics (skew_ratio_micro is a direct BIGINT — no double or
-    decimal round-trip), the salted two-stage aggregate, and the
+    """Row B of the sketch/stats family: shuffle-key skew diagnostics
+    (skew_ratio_micro is a direct BIGINT — no double or decimal
+    round-trip), the salted two-stage aggregate, and the
     exact-percentile outlier trim. Components unchanged:
-    queries/scale_ops.py, percentiles.py.
-    """
-    def _micro(col: str):
-        return F.expr(f"CAST({col} * 1000000 AS BIGINT)")
-    skew = skew_key_diagnostics(spark, sf_dir).select(
-        F.concat(F.lit("skew_"), "op").alias("op"),
-        _NULL_S().alias("s"),
-        F.col("key").alias("k"),
-        _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("cnt").alias("n1"),
-        F.col("n_keys").alias("n2"),
-        F.col("n_rows").alias("n3"),
-        F.col("rnk").cast("int").alias("rnk"),
-        F.col("skew_ratio_micro").alias("d1_micro"),
-        _NULL_L().alias("d2_micro"), _NULL_L().alias("d3_micro"),
-    )
-    salted = salted_skew_agg(spark, sf_dir).select(
-        F.lit("salted").alias("op"),
-        F.col("event_type").alias("s"),
-        _NULL_L().alias("k"), _NULL_L().alias("k2"), _NULL_L().alias("k3"),
-        F.col("n_events").alias("n1"),
-        _NULL_L().alias("n2"), _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _micro("total_value").alias("d1_micro"),
-        _micro("min_value").alias("d2_micro"),
-        _micro("max_value").alias("d3_micro"),
-    )
-    trim = length_percentile_trim(spark, sf_dir).select(
-        F.lit("trim").alias("op"),
-        F.col("source").alias("s"),
-        F.col("p50").alias("k"), F.col("p90").alias("k2"), F.col("p99").alias("k3"),
-        F.col("n_docs").alias("n1"), F.col("n_kept").alias("n2"),
-        _NULL_L().alias("n3"),
-        _NULL_I().alias("rnk"),
-        _NULL_L().alias("d1_micro"), _NULL_L().alias("d2_micro"),
-        _NULL_L().alias("d3_micro"),
-    )
-    return skew.unionByName(salted).unionByName(trim)
-
-
-@register(
-    "text_mining_battery",
-    oracle=f"""
-    SELECT 'bpe' AS op, a AS s1, b AS s2, merged AS s3, cnt AS n,
-           CAST(NULL AS BIGINT) AS n2, CAST(NULL AS DOUBLE) AS d,
-           round AS rnk
-    FROM ({_oracle("bpe_merge_table")})
-    UNION ALL
-    SELECT 'bpe_encode' AS op, token, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), total_count, n_words,
-           CAST(NULL AS DOUBLE), token_len
-    FROM ({_oracle("bpe_encode_tokens")})
-    UNION ALL
-    SELECT 'langid' AS op, lang, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), hits, doc_id,
-           CAST(n_words AS DOUBLE), rnk
-    FROM ({_oracle("language_id")})
-    UNION ALL
-    SELECT 'lid_eval' AS op, label_lang, pred_lang, CAST(NULL AS VARCHAR),
-           n_docs, label_total, CAST(NULL AS DOUBLE),
-           CAST(share_micro AS INTEGER)
-    FROM ({_oracle("language_id_eval")})
-    UNION ALL
-    SELECT 'fertility' AS op, f.lang, m.metric, CAST(NULL AS VARCHAR),
-           CASE m.metric
-             WHEN 'words' THEN f.n_word_occ
-             WHEN 'tokens' THEN f.n_token_occ
-             WHEN 'chars' THEN f.n_chars
-             WHEN 'fert' THEN f.fertility_micro
-             ELSE f.chars_per_token_micro
-           END,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), CAST(NULL AS INTEGER)
-    FROM ({_oracle("tokenizer_fertility")}) f
-    CROSS JOIN (VALUES ('words'), ('tokens'), ('chars'), ('fert'),
-                       ('cpt')) m(metric)
-    """,
+    queries/scale_ops.py, percentiles.py.""",
+    slots={
+        "s": "STRING", "k": "BIGINT", "k2": "BIGINT", "k3": "BIGINT",
+        "n1": "BIGINT", "n2": "BIGINT", "n3": "BIGINT", "rnk": "INT",
+        "d1_micro": "BIGINT", "d2_micro": "BIGINT", "d3_micro": "BIGINT",
+    },
+    legs={
+        "skew": ("skew_key_diagnostics", {
+            "op": "'skew_' || op", "k": "key", "n1": "cnt", "n2": "n_keys",
+            "n3": "n_rows", "rnk": "CAST(rnk AS INT)", "d1_micro": "skew_ratio_micro",
+        }),
+        "salted": ("salted_skew_agg", {
+            "s": "event_type", "n1": "n_events", "d1_micro": _micro("total_value"),
+            "d2_micro": _micro("min_value"), "d3_micro": _micro("max_value"),
+        }),
+        "trim": ("length_percentile_trim", {
+            "s": "source", "k": "p50", "k2": "p90", "k3": "p99", "n1": "n_docs",
+            "n2": "n_kept",
+        }),
+    },
 )
+
+
+# ---------------------------------------------------------------------------
+# The text-mining family, split over two driver rows with one schema:
+# the tokenizer half (one BPE merge loop feeds three legs, one
+# classifier scan two) and the NB-classifier/corpus-mining half (one
+# classifier fit feeds three legs). Shared-build groups stay together.
+# ---------------------------------------------------------------------------
+_TEXT_SLOTS = {
+    "s1": "STRING", "s2": "STRING", "s3": "STRING", "n": "BIGINT",
+    "n2": "BIGINT", "d": "DOUBLE", "rnk": "INT",
+}
+_TEXT_MINING = Battery(
+    slots=_TEXT_SLOTS,
+    legs={
+        "bpe": ("bpe_merge_table", {
+            "s1": "a", "s2": "b", "s3": "merged", "n": "cnt", "rnk": "CAST(round AS INT)",
+        }),
+        "bpe_encode": ("bpe_encode_tokens", {
+            "s1": "token", "n": "total_count", "n2": "n_words", "rnk": "token_len",
+        }),
+        "langid": ("language_id", {
+            "s1": "lang", "n": "hits", "n2": "doc_id", "d": "CAST(n_words AS DOUBLE)",
+            "rnk": "rnk",
+        }),
+        "lid_eval": ("language_id_eval", {
+            "s1": "label_lang", "s2": "pred_lang", "n": "n_docs", "n2": "label_total",
+            "rnk": "CAST(share_micro AS INT)",
+        }),
+        "fertility": (
+            "tokenizer_fertility",
+            {"s1": "lang", "s2": "metric", "n": "val"},
+            Melt(("lang",), ("metric", "val"), {
+                "words": ("n_word_occ",), "tokens": ("n_token_occ",),
+                "chars": ("n_chars",), "fert": ("fertility_micro",),
+                "cpt": ("chars_per_token_micro",),
+            }),
+        ),
+    },
+)
+
+
+@register("text_mining_battery", oracle=_TEXT_MINING.oracle())
 def text_mining_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TOKENIZER half of the round-12 text-mining bisect (VERDICT
-    r11 #3 — at 12.7s and 11 legs the combined battery was the slowest
-    driver row; one red leg would have cost every component's
-    attribution): BPE merge learning + BPE corpus encoding + tokenizer
-    fertility — all three riding ONE merge-loop run — plus
-    multi-profile language identification and its confusion-matrix
-    eval, fed from the SAME classifier scan. The NB-classifier and
-    corpus-mining legs moved to ``nbq_mining_battery`` (the r11
-    lexical-bisect precedent: shared-build groups stay together).
-    Components unchanged: queries/bpe.py, text_analysis.py.
+    """The TOKENIZER half of the text-mining family: BPE merge
+    learning + BPE corpus encoding + tokenizer fertility — all three
+    riding ONE merge-loop run — plus multi-profile language
+    identification and its confusion-matrix eval, fed from the SAME
+    classifier scan. The NB-classifier and corpus-mining legs live in
+    ``nbq_mining_battery``. Components unchanged: queries/bpe.py,
+    text_analysis.py.
     """
-    # ONE merge-loop run feeds both BPE legs (the similarity_battery
-    # treatment): _learn's per-round frames are already eagerly
-    # localCheckpointed, so the union leg and the vocabulary leg read
-    # the same materialized loop instead of re-training it twice.
-    from namegraph_collections_spark.queries.bpe import (
-        _encode_from,
-        _learn,
-        _merge_union,
-        tokenizer_fertility_from,
-    )
-
-    # The BPE merge loop and the language-id classifier scan both run
-    # jobs during their builds (per-round eager checkpoints / the
-    # shared-scan checkpoint) and are independent — build them from
-    # the §2.6 thread pool.
-    from namegraph_collections_spark.queries.registry import build_parallel
-
+    # The BPE merge loop (per-round eager checkpoints, so the union leg
+    # and the vocabulary leg read the same materialized loop) and the
+    # language-id classifier scan (checkpointed: it feeds two legs)
+    # both run jobs during their builds and are independent — build
+    # them from the thread pool.
     (winners, d_final), li = build_parallel(
         spark,
         lambda: _learn(spark, sf_dir),
         lambda: language_id(spark, sf_dir).localCheckpoint(eager=False),
     )
-    bpe = _merge_union(winners).select(
-        F.lit("bpe").alias("op"),
-        F.col("a").alias("s1"),
-        F.col("b").alias("s2"),
-        F.col("merged").alias("s3"),
-        F.col("cnt").alias("n"),
-        _NULL_L().alias("n2"),
-        _NULL_D().alias("d"),
-        F.col("round").cast("int").alias("rnk"),
-    )
-    enc = _encode_from(d_final).select(
-        F.lit("bpe_encode").alias("op"),
-        F.col("token").alias("s1"),
-        _NULL_S().alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("total_count").alias("n"),
-        F.col("n_words").alias("n2"),
-        _NULL_D().alias("d"),
-        F.col("token_len").alias("rnk"),
-    )
-    # ONE classifier scan feeds both the per-doc leg and the
-    # confusion-matrix eval leg (the BPE-loop sharing treatment);
-    # checkpointed in the thread-pool wave above.
-    langid = li.select(
-        F.lit("langid").alias("op"),
-        F.col("lang").alias("s1"),
-        _NULL_S().alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("hits").alias("n"),
-        F.col("doc_id").alias("n2"),
-        F.col("n_words").cast("double").alias("d"),
-        "rnk",
-    )
-    lid_eval = language_id_eval_from(li).select(
-        F.lit("lid_eval").alias("op"),
-        F.col("label_lang").alias("s1"),
-        F.col("pred_lang").alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("n_docs").alias("n"),
-        F.col("label_total").alias("n2"),
-        _NULL_D().alias("d"),
-        F.col("share_micro").cast("int").alias("rnk"),
-    )
-    # Round-9b fertility leg: rides the SAME _learn loop as the two
-    # BPE legs (d_final already materialized by the eager checkpoints
-    # inside _learn) — the tokenizer trains once for all three.
-    fert = tokenizer_fertility_from(
-        spread(tbl(spark, sf_dir, "documents"), "doc_id"), d_final
-    ).selectExpr(
-        "lang",
-        "stack(5,"
-        " 'words', n_word_occ, 'tokens', n_token_occ, 'chars', n_chars,"
-        " 'fert', fertility_micro, 'cpt', chars_per_token_micro)"
-        " AS (metric, val)",
-    ).select(
-        F.lit("fertility").alias("op"),
-        F.col("lang").alias("s1"),
-        F.col("metric").alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("val").alias("n"),
-        _NULL_L().alias("n2"),
-        _NULL_D().alias("d"),
-        _NULL_I().alias("rnk"),
-    )
-    return (
-        bpe.unionByName(enc).unionByName(langid).unionByName(lid_eval)
-        .unionByName(fert)
+    return _TEXT_MINING.union(
+        spark,
+        sf_dir,
+        bpe=_merge_union(winners),
+        bpe_encode=_encode_from(d_final),
+        langid=li,
+        lid_eval=language_id_eval_from(li),
+        fertility=tokenizer_fertility_from(
+            spread(tbl(spark, sf_dir, "documents"), "doc_id"), d_final
+        ),
     )
 
 
-@register(
-    "nbq_mining_battery",
-    oracle=f"""
-    SELECT 'suffix' AS op, suffix AS s1, CAST(NULL AS VARCHAR) AS s2,
-           examples AS s3, n_names AS n, CAST(NULL AS BIGINT) AS n2,
-           CAST(NULL AS DOUBLE) AS d, CAST(NULL AS INTEGER) AS rnk
-    FROM ({_oracle("suffix_mining")})
-    UNION ALL
-    SELECT 'pmi' AS op, a, b, CAST(NULL AS VARCHAR), n_pair,
-           CAST(NULL AS BIGINT), pmi, rnk
-    FROM ({_oracle("bigram_pmi")})
-    UNION ALL
-    SELECT 'rep' AS op, m.metric, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), r.doc_id,
-           CASE m.metric
-             WHEN 'top2' THEN r.top2_micro
-             WHEN 'top3' THEN r.top3_micro
-             WHEN 'top4' THEN r.top4_micro
-             WHEN 'dup5' THEN r.dup5_micro
-             WHEN 'dup8' THEN r.dup8_micro
-             WHEN 'chars' THEN r.total_chars
-             ELSE CASE WHEN r.rep_keep THEN 1 ELSE 0 END
-           END,
-           CAST(NULL AS DOUBLE), CAST(NULL AS INTEGER)
-    FROM ({_oracle("repetition_signals")}) r
-    CROSS JOIN (VALUES ('top2'), ('top3'), ('top4'), ('dup5'), ('dup8'),
-                       ('chars'), ('keep')) m(metric)
-    UNION ALL
-    SELECT 'nbq' AS op,
-           CASE WHEN label_hq THEN 'hq' ELSE 'lq' END,
-           CASE WHEN pred_hq THEN 'hq' ELSE 'lq' END,
-           CASE WHEN is_train THEN 'train' ELSE 'test' END,
-           doc_id, margin_micro, CAST(NULL AS DOUBLE),
-           CAST(n_grams AS INTEGER)
-    FROM ({_oracle("nb_quality_scores")})
-    UNION ALL
-    SELECT 'nbq_eval' AS op, metric, CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), num, den, CAST(NULL AS DOUBLE),
-           CAST(value_micro AS INTEGER)
-    FROM ({_oracle("nb_quality_eval")})
-    UNION ALL
-    SELECT 'nbq_cal' AS op, metric, CAST(thr_micro AS VARCHAR),
-           CAST(k AS VARCHAR), num, den, CAST(NULL AS DOUBLE),
-           CAST(value_micro AS INTEGER)
-    FROM ({_oracle("nb_quality_calibration")})
-    """,
+_NBQ_MINING = Battery(
+    slots=_TEXT_SLOTS,
+    legs={
+        "suffix": ("suffix_mining", {"s1": "suffix", "s3": "examples", "n": "n_names"}),
+        "pmi": ("bigram_pmi", {"s1": "a", "s2": "b", "n": "n_pair", "d": "pmi", "rnk": "rnk"}),
+        # melted long-form: one row per (doc, metric), the keep flag as 0/1
+        "rep": (
+            "repetition_signals",
+            {"s1": "metric", "n": "doc_id", "n2": "val"},
+            Melt(("doc_id",), ("metric", "val"), {
+                "top2": ("top2_micro",), "top3": ("top3_micro",),
+                "top4": ("top4_micro",), "dup5": ("dup5_micro",),
+                "dup8": ("dup8_micro",), "chars": ("total_chars",),
+                "keep": ("CAST(IF(rep_keep, 1, 0) AS BIGINT)",),
+            }),
+        ),
+        "nbq": ("nb_quality_scores", {
+            "s1": "CASE WHEN label_hq THEN 'hq' ELSE 'lq' END",
+            "s2": "CASE WHEN pred_hq THEN 'hq' ELSE 'lq' END",
+            "s3": "CASE WHEN is_train THEN 'train' ELSE 'test' END",
+            "n": "doc_id", "n2": "margin_micro", "rnk": "CAST(n_grams AS INT)",
+        }),
+        "nbq_eval": ("nb_quality_eval", {
+            "s1": "metric", "n": "num", "n2": "den", "rnk": "CAST(value_micro AS INT)",
+        }),
+        "nbq_cal": ("nb_quality_calibration", {
+            "s1": "metric", "s2": "CAST(thr_micro AS STRING)", "s3": "CAST(k AS STRING)",
+            "n": "num", "n2": "den", "rnk": "CAST(value_micro AS INT)",
+        }),
+    },
 )
+
+
+@register("nbq_mining_battery", oracle=_NBQ_MINING.oracle())
 def nbq_mining_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NB-CLASSIFIER/corpus-mining half of the round-12
-    text-mining bisect (same seam rule as the r11 lexical bisect:
-    shared-build groups move whole): the NB quality filter's scores,
-    held-out eval, and threshold-sweep calibration — all three riding
-    ONE classifier fit — plus suffix mining, bigram PMI collocations,
-    and the Gopher n-gram repetition signals. Schema identical to
-    ``text_mining_battery``'s. Components unchanged:
-    queries/collections_ops.py, text_analysis.py, quality_signals.py,
-    quality_classifier.py.
+    """The NB-CLASSIFIER/corpus-mining half of the text-mining family:
+    the NB quality filter's scores, held-out eval, and threshold-sweep
+    calibration — all three riding ONE classifier fit — plus suffix
+    mining, bigram PMI collocations, and the Gopher n-gram repetition
+    signals. Schema identical to ``text_mining_battery``'s. Components
+    unchanged: queries/collections_ops.py, text_analysis.py,
+    quality_signals.py, quality_classifier.py.
     """
-    suf = suffix_mining(spark, sf_dir).select(
-        F.lit("suffix").alias("op"),
-        F.col("suffix").alias("s1"),
-        _NULL_S().alias("s2"),
-        F.col("examples").alias("s3"),
-        F.col("n_names").alias("n"),
-        _NULL_L().alias("n2"),
-        _NULL_D().alias("d"),
-        _NULL_I().alias("rnk"),
-    )
-    pmi = bigram_pmi(spark, sf_dir).select(
-        F.lit("pmi").alias("op"),
-        F.col("a").alias("s1"),
-        F.col("b").alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("n_pair").alias("n"),
-        _NULL_L().alias("n2"),
-        F.col("pmi").alias("d"),
-        "rnk",
-    )
-    # ONE NB classifier fit feeds the per-doc scores leg, the held-out
-    # eval leg, AND the threshold-sweep calibration curve.
     nbs = nb_quality_scores(spark, sf_dir).localCheckpoint(eager=False)
-    nbq = nbs.selectExpr(
-        "'nbq' AS op",
-        "CASE WHEN label_hq THEN 'hq' ELSE 'lq' END AS s1",
-        "CASE WHEN pred_hq THEN 'hq' ELSE 'lq' END AS s2",
-        "CASE WHEN is_train THEN 'train' ELSE 'test' END AS s3",
-        "doc_id AS n",
-        "margin_micro AS n2",
-        "CAST(NULL AS DOUBLE) AS d",
-        "CAST(n_grams AS INTEGER) AS rnk",
-    )
-    nbq_eval = nb_quality_eval_from(nbs).selectExpr(
-        "'nbq_eval' AS op",
-        "metric AS s1",
-        "CAST(NULL AS STRING) AS s2",
-        "CAST(NULL AS STRING) AS s3",
-        "num AS n",
-        "den AS n2",
-        "CAST(NULL AS DOUBLE) AS d",
-        "CAST(value_micro AS INTEGER) AS rnk",
-    )
-    nbq_cal = nb_quality_calibration_from(nbs).selectExpr(
-        "'nbq_cal' AS op",
-        "metric AS s1",
-        "CAST(thr_micro AS STRING) AS s2",
-        "CAST(k AS STRING) AS s3",
-        "num AS n",
-        "den AS n2",
-        "CAST(NULL AS DOUBLE) AS d",
-        "CAST(value_micro AS INTEGER) AS rnk",
-    )
-    # Repetition leg, melted long-form: one stack() row per
-    # (doc, metric) — the same values the wide single emits, including
-    # the keep flag as 0/1.
-    rep = repetition_signals(spark, sf_dir).selectExpr(
-        "doc_id",
-        "stack(7,"
-        " 'top2', top2_micro, 'top3', top3_micro, 'top4', top4_micro,"
-        " 'dup5', dup5_micro, 'dup8', dup8_micro, 'chars', total_chars,"
-        " 'keep', CAST(IF(rep_keep, 1, 0) AS BIGINT)) AS (metric, val)",
-    ).select(
-        F.lit("rep").alias("op"),
-        F.col("metric").alias("s1"),
-        _NULL_S().alias("s2"),
-        _NULL_S().alias("s3"),
-        F.col("doc_id").alias("n"),
-        F.col("val").alias("n2"),
-        _NULL_D().alias("d"),
-        _NULL_I().alias("rnk"),
-    )
-    return (
-        suf.unionByName(pmi).unionByName(rep)
-        .unionByName(nbq).unionByName(nbq_eval).unionByName(nbq_cal)
+    return _NBQ_MINING.union(
+        spark,
+        sf_dir,
+        nbq=nbs,
+        nbq_eval=nb_quality_eval_from(nbs),
+        nbq_cal=nb_quality_calibration_from(nbs),
     )
 
 
-@register(
+register_battery(
     "training_mix_battery",
-    oracle=f"""
-    SELECT 'decon' AS op, CAST(NULL AS VARCHAR) AS src,
-           test_doc_id AS k1, n_train_docs AS v1,
-           n_shared_shingles AS v2, CAST(NULL AS BIGINT) AS v3,
-           CAST(NULL AS BIGINT) AS v4, CAST(NULL AS DOUBLE) AS d
-    FROM ({_oracle("decontamination_overlap")})
-    UNION ALL
-    SELECT 'pack' AS op, source, bin_id, n_docs, total_tokens,
-           first_doc_id, last_doc_id, CAST(NULL AS DOUBLE)
-    FROM ({_oracle("sequence_packing")})
-    UNION ALL
-    SELECT 'mix' AS op, source, CAST(NULL AS BIGINT), n_docs,
-           expected_docs, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           share
-    FROM ({_oracle("domain_mix_plan")})
-    """,
-)
-def training_mix_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination overlap + FFD sequence packing + domain mix
-    plan in one tagged result — the round-12 composite that freed the
-    driver-window slots for the text-mining bisect and the maintainer
-    battery (the pricing_summary precedent; the singles stay
-    registered post-window for the local sweep). Components unchanged:
-    queries/training_data.py.
-    """
-    from namegraph_collections_spark.queries.training_data import (
-        decontamination_overlap,
-        domain_mix_plan,
-        sequence_packing,
-    )
-
-    decon = decontamination_overlap(spark, sf_dir).select(
-        F.lit("decon").alias("op"),
-        _NULL_S().alias("src"),
-        F.col("test_doc_id").alias("k1"),
-        F.col("n_train_docs").alias("v1"),
-        F.col("n_shared_shingles").alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_D().alias("d"),
-    )
-    pack = sequence_packing(spark, sf_dir).select(
-        F.lit("pack").alias("op"),
-        F.col("source").alias("src"),
-        F.col("bin_id").alias("k1"),
-        F.col("n_docs").alias("v1"),
-        F.col("total_tokens").alias("v2"),
-        F.col("first_doc_id").alias("v3"),
-        F.col("last_doc_id").alias("v4"),
-        _NULL_D().alias("d"),
-    )
-    mix = domain_mix_plan(spark, sf_dir).select(
-        F.lit("mix").alias("op"),
-        F.col("source").alias("src"),
-        _NULL_L().alias("k1"),
-        F.col("n_docs").alias("v1"),
-        F.col("expected_docs").alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        F.col("share").alias("d"),
-    )
-    return decon.unionByName(pack).unionByName(mix)
-
-
-@register(
-    "graph_battery",
-    oracle=f"""
-    SELECT 'closure' AS op, src, dst,
-           CAST(NULL AS BIGINT) AS t1, CAST(NULL AS BIGINT) AS t2,
-           CAST(NULL AS BIGINT) AS t3
-    FROM ({_oracle("transitive_closure_reachability")})
-    UNION ALL
-    SELECT 'triangle' AS op, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-           t1, t2, t3
-    FROM ({_oracle("neardup_triangles")})
-    """,
+    plan in one tagged result — composited to free driver-window slots
+    (the singles stay registered post-window for the local sweep).
+    Components unchanged: queries/training_data.py.""",
+    slots={
+        "src": "STRING", "k1": "BIGINT", "v1": "BIGINT", "v2": "BIGINT",
+        "v3": "BIGINT", "v4": "BIGINT", "d": "DOUBLE",
+    },
+    legs={
+        "decon": ("decontamination_overlap", {
+            "k1": "test_doc_id", "v1": "n_train_docs", "v2": "n_shared_shingles",
+        }),
+        "pack": ("sequence_packing", {
+            "src": "source", "k1": "bin_id", "v1": "n_docs", "v2": "total_tokens",
+            "v3": "first_doc_id", "v4": "last_doc_id",
+        }),
+        "mix": ("domain_mix_plan", {
+            "src": "source", "v1": "n_docs", "v2": "expected_docs", "d": "share",
+        }),
+    },
 )
+
+
+_GRAPH = Battery(
+    slots={"src": "STRING", "dst": "STRING", "t1": "BIGINT", "t2": "BIGINT", "t3": "BIGINT"},
+    legs={
+        "closure": ("transitive_closure_reachability", {"src": "src", "dst": "dst"}),
+        "triangle": ("neardup_triangles", {"t1": "t1", "t2": "t2", "t3": "t3"}),
+    },
+)
+
+
+@register("graph_battery", oracle=_GRAPH.oracle())
 def graph_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-naive transitive closure + degree-ordered triangle
     enumeration in one tagged result. Components unchanged:
@@ -2189,249 +926,97 @@ def graph_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The two legs both run jobs during their BUILD (the closure's
     per-round lazy checkpoints, the triangle leg's eager edge-list
-    checkpoint) and are independent, so they build from the §2.6
-    thread pool instead of serially on the driver.
+    checkpoint) and are independent, so they build from the thread
+    pool instead of serially on the driver.
     """
-    from namegraph_collections_spark.queries.registry import (
-        build_parallel,
-    )
-
-    clo_full, tri_full = build_parallel(
+    closure, triangle = build_parallel(
         spark,
         lambda: transitive_closure_reachability(spark, sf_dir),
         lambda: neardup_triangles(spark, sf_dir),
     )
-    clo = clo_full.select(
-        F.lit("closure").alias("op"),
-        "src",
-        "dst",
-        _NULL_L().alias("t1"), _NULL_L().alias("t2"), _NULL_L().alias("t3"),
-    )
-    tri = tri_full.select(
-        F.lit("triangle").alias("op"),
-        _NULL_S().alias("src"),
-        _NULL_S().alias("dst"),
-        "t1", "t2", "t3",
-    )
-    return clo.unionByName(tri)
+    return _GRAPH.union(spark, sf_dir, closure=closure, triangle=triangle)
 
 
-@register(
+register_battery(
     "revenue_olap_battery",
-    oracle=f"""
-    SELECT 'regional' AS op, n_name AS s1, CAST(NULL AS VARCHAR) AS s2,
-           CAST(NULL AS BIGINT) AS lvl, revenue, n_items AS n,
-           CAST(NULL AS DOUBLE) AS d2, CAST(NULL AS DOUBLE) AS d3,
-           CAST(NULL AS DOUBLE) AS d4, CAST(NULL AS DOUBLE) AS d5
-    FROM ({_oracle("regional_revenue")})
-    UNION ALL
-    SELECT 'rollup' AS op, r_name, n_name, lvl, revenue, n_orders,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({_oracle("rollup_regional_revenue")})
-    UNION ALL
-    SELECT 'cube' AS op, o_orderstatus, o_orderpriority, lvl, revenue, n_orders,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({_oracle("cube_status_priority")})
-    UNION ALL
-    SELECT 'pricing' AS op, l_returnflag, l_linestatus,
-           CAST(NULL AS BIGINT), sum_disc_price, count_order,
-           sum_qty, sum_base_price, avg_qty, avg_price
-    FROM ({_oracle("pricing_summary")})
-    UNION ALL
-    SELECT 'statush' AS op, h.o_orderpriority, m.metric,
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CASE m.metric
-             WHEN 'open' THEN h.open_count
-             WHEN 'finished' THEN h.finished_count
-             WHEN 'pending' THEN h.pending_count
-             ELSE h.closed_or_pending
-           END,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({_oracle("status_histogram")}) h
-    CROSS JOIN (VALUES ('open'), ('finished'), ('pending'), ('cop')) m(metric)
-    UNION ALL
-    SELECT 'pivot' AS op, p.o_orderstatus, m.pr,
-           CAST(NULL AS BIGINT),
-           CASE m.pr WHEN '1' THEN p.rev_1 WHEN '2' THEN p.rev_2
-                     WHEN '3' THEN p.rev_3 WHEN '4' THEN p.rev_4
-                     ELSE p.rev_5 END,
-           CASE m.pr WHEN '1' THEN p.n_1 WHEN '2' THEN p.n_2
-                     WHEN '3' THEN p.n_3 WHEN '4' THEN p.n_4
-                     ELSE p.n_5 END,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-    FROM ({_oracle("status_priority_pivot")}) p
-    CROSS JOIN (VALUES ('1'), ('2'), ('3'), ('4'), ('5')) m(pr)
-    """,
-)
-def revenue_olap_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The revenue aggregation family in one tagged result: the
     dimension-join regional rollup, the ROLLUP hierarchy, the CUBE
-    grouping sets, and (round 9 — compositing the slot free for the
-    sketch bisect) the TPC-H-Q1-style pricing summary. Components
-    unchanged: queries/relational.py, olap.py. The pricing leg's sums
-    are decimal-exact DOUBLEs and its means micro-rounded DOUBLEs —
-    the hash-safe double classes (green since round 1 on this row's
-    revenue column).
-    """
-    reg = regional_revenue(spark, sf_dir).select(
-        F.lit("regional").alias("op"),
-        F.col("n_name").alias("s1"),
-        _NULL_S().alias("s2"),
-        _NULL_L().alias("lvl"),
-        "revenue",
-        F.col("n_items").alias("n"),
-        _NULL_D().alias("d2"), _NULL_D().alias("d3"),
-        _NULL_D().alias("d4"), _NULL_D().alias("d5"),
-    )
-    rol = rollup_regional_revenue(spark, sf_dir).select(
-        F.lit("rollup").alias("op"),
-        F.col("r_name").alias("s1"),
-        F.col("n_name").alias("s2"),
-        "lvl",
-        "revenue",
-        F.col("n_orders").alias("n"),
-        _NULL_D().alias("d2"), _NULL_D().alias("d3"),
-        _NULL_D().alias("d4"), _NULL_D().alias("d5"),
-    )
-    cub = cube_status_priority(spark, sf_dir).select(
-        F.lit("cube").alias("op"),
-        F.col("o_orderstatus").alias("s1"),
-        F.col("o_orderpriority").alias("s2"),
-        "lvl",
-        "revenue",
-        F.col("n_orders").alias("n"),
-        _NULL_D().alias("d2"), _NULL_D().alias("d3"),
-        _NULL_D().alias("d4"), _NULL_D().alias("d5"),
-    )
-    pri = pricing_summary(spark, sf_dir).select(
-        F.lit("pricing").alias("op"),
-        F.col("l_returnflag").alias("s1"),
-        F.col("l_linestatus").alias("s2"),
-        _NULL_L().alias("lvl"),
-        F.col("sum_disc_price").alias("revenue"),
-        F.col("count_order").alias("n"),
-        F.col("sum_qty").alias("d2"),
-        F.col("sum_base_price").alias("d3"),
-        F.col("avg_qty").alias("d4"),
-        F.col("avg_price").alias("d5"),
-    )
-    # Round-10 coverage-closing legs (the COVERAGE.json derivation
-    # surfaced these as the last operators no driver row hashes):
-    # the A6 conditional-count histogram and the pinned-domain pivot,
-    # both melted long-form into the battery schema — two tiny
-    # orders-grain aggregates, no new scan heavier than the cube leg.
-    sth = status_histogram(spark, sf_dir).selectExpr(
-        "o_orderpriority",
-        "stack(4, 'open', open_count, 'finished', finished_count,"
-        " 'pending', pending_count, 'cop', closed_or_pending)"
-        " AS (metric, cnt)",
-    ).select(
-        F.lit("statush").alias("op"),
-        F.col("o_orderpriority").alias("s1"),
-        F.col("metric").alias("s2"),
-        _NULL_L().alias("lvl"),
-        _NULL_D().alias("revenue"),
-        F.col("cnt").alias("n"),
-        _NULL_D().alias("d2"), _NULL_D().alias("d3"),
-        _NULL_D().alias("d4"), _NULL_D().alias("d5"),
-    )
-    piv = status_priority_pivot(spark, sf_dir).selectExpr(
-        "o_orderstatus",
-        "stack(5, '1', n_1, rev_1, '2', n_2, rev_2, '3', n_3, rev_3,"
-        " '4', n_4, rev_4, '5', n_5, rev_5) AS (pr, cnt, rev)",
-    ).select(
-        F.lit("pivot").alias("op"),
-        F.col("o_orderstatus").alias("s1"),
-        F.col("pr").alias("s2"),
-        _NULL_L().alias("lvl"),
-        F.col("rev").alias("revenue"),
-        F.col("cnt").alias("n"),
-        _NULL_D().alias("d2"), _NULL_D().alias("d3"),
-        _NULL_D().alias("d4"), _NULL_D().alias("d5"),
-    )
-    return (
-        reg.unionByName(rol).unionByName(cub).unionByName(pri)
-        .unionByName(sth).unionByName(piv)
-    )
-
-
-@register(
-    "cdc_battery",
-    oracle=f"""
-    SELECT 'three_way' AS op, o_orderkey AS key, op AS cdc_op, doc_id,
-           members_out, CAST(NULL AS VARCHAR) AS status,
-           CAST(NULL AS BIGINT) AS n_orders, CAST(NULL AS BIGINT) AS total_cents
-    FROM ({_oracle("cdc_three_way_ops")})
-    UNION ALL
-    SELECT 'ivm_rollup' AS op, CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
-           CAST(NULL AS VARCHAR), CAST(NULL AS BIGINT), o_orderstatus,
-           n_orders, total_cents
-    FROM ({_oracle("cdc_driven_rollup")})
-    """,
+    grouping sets, the TPC-H-Q1-style pricing summary, and the A6
+    conditional-count histogram and pinned-domain pivot, both melted
+    long-form. Components unchanged: queries/relational.py, olap.py.
+    The pricing leg's sums are decimal-exact DOUBLEs and its means
+    micro-rounded DOUBLEs — the hash-safe double classes.""",
+    slots={
+        "s1": "STRING", "s2": "STRING", "lvl": "BIGINT", "revenue": "DOUBLE",
+        "n": "BIGINT", "d2": "DOUBLE", "d3": "DOUBLE", "d4": "DOUBLE", "d5": "DOUBLE",
+    },
+    legs={
+        "regional": ("regional_revenue", {"s1": "n_name", "revenue": "revenue", "n": "n_items"}),
+        "rollup": ("rollup_regional_revenue", {
+            "s1": "r_name", "s2": "n_name", "lvl": "lvl", "revenue": "revenue",
+            "n": "n_orders",
+        }),
+        "cube": ("cube_status_priority", {
+            "s1": "o_orderstatus", "s2": "o_orderpriority", "lvl": "lvl",
+            "revenue": "revenue", "n": "n_orders",
+        }),
+        "pricing": ("pricing_summary", {
+            "s1": "l_returnflag", "s2": "l_linestatus", "revenue": "sum_disc_price",
+            "n": "count_order", "d2": "sum_qty", "d3": "sum_base_price",
+            "d4": "avg_qty", "d5": "avg_price",
+        }),
+        "statush": (
+            "status_histogram",
+            {"s1": "o_orderpriority", "s2": "metric", "n": "cnt"},
+            Melt(("o_orderpriority",), ("metric", "cnt"), {
+                "open": ("open_count",), "finished": ("finished_count",),
+                "pending": ("pending_count",), "cop": ("closed_or_pending",),
+            }),
+        ),
+        "pivot": (
+            "status_priority_pivot",
+            {"s1": "o_orderstatus", "s2": "pr", "revenue": "rev", "n": "cnt"},
+            Melt(("o_orderstatus",), ("pr", "cnt", "rev"), {
+                p: (f"n_{p}", f"rev_{p}") for p in "12345"
+            }),
+        ),
+    },
 )
-def cdc_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+register_battery(
+    "cdc_battery",
     """Three-way snapshot CDC classification + the CDC-delta-maintained
     incremental rollup in one tagged result. Components unchanged:
-    queries/cdc.py, operators/cdc.py.
-    """
-    three = cdc_three_way_ops(spark, sf_dir).select(
-        F.lit("three_way").alias("op"),
-        F.col("o_orderkey").alias("key"),
-        F.col("op").alias("cdc_op"),
-        "doc_id",
-        "members_out",
-        _NULL_S().alias("status"),
-        _NULL_L().alias("n_orders"),
-        _NULL_L().alias("total_cents"),
-    )
-    ivm = cdc_driven_rollup(spark, sf_dir).select(
-        F.lit("ivm_rollup").alias("op"),
-        _NULL_L().alias("key"),
-        _NULL_S().alias("cdc_op"),
-        _NULL_S().alias("doc_id"),
-        _NULL_L().alias("members_out"),
-        F.col("o_orderstatus").alias("status"),
-        "n_orders",
-        "total_cents",
-    )
-    return three.unionByName(ivm)
-
-
-@register(
-    "set_prune_battery",
-    oracle=f"""
-    SELECT 'set_' || op AS op, c_custkey AS key, CAST(NULL AS BIGINT) AS key2,
-           c_name AS s1, c_mktsegment AS s2, CAST(NULL AS DOUBLE) AS price
-    FROM ({_oracle("customer_key_set_algebra")})
-    UNION ALL
-    SELECT 'bloom' AS op, o_orderkey, o_custkey, o_orderstatus,
-           CAST(NULL AS VARCHAR), o_totalprice
-    FROM ({_oracle("bloom_pruned_semi_join")})
-    """,
+    queries/cdc.py, operators/cdc.py.""",
+    slots={
+        "key": "BIGINT", "cdc_op": "STRING", "doc_id": "STRING",
+        "members_out": "BIGINT", "status": "STRING", "n_orders": "BIGINT",
+        "total_cents": "BIGINT",
+    },
+    legs={
+        "three_way": ("cdc_three_way_ops", {
+            "key": "o_orderkey", "cdc_op": "op", "doc_id": "doc_id",
+            "members_out": "members_out",
+        }),
+        "ivm_rollup": ("cdc_driven_rollup", {
+            "status": "o_orderstatus", "n_orders": "n_orders", "total_cents": "total_cents",
+        }),
+    },
 )
-def set_prune_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+register_battery(
+    "set_prune_battery",
     """Key-set algebra (union/intersect/except as semi/anti joins) +
     the bloom-pruned semi-join in one tagged result. Components
-    unchanged: queries/relational.py, scale_ops.py.
-    """
-    ks = customer_key_set_algebra(spark, sf_dir).select(
-        F.concat(F.lit("set_"), "op").alias("op"),
-        F.col("c_custkey").alias("key"),
-        _NULL_L().alias("key2"),
-        F.col("c_name").alias("s1"),
-        F.col("c_mktsegment").alias("s2"),
-        _NULL_D().alias("price"),
-    )
-    bl = bloom_pruned_semi_join(spark, sf_dir).select(
-        F.lit("bloom").alias("op"),
-        F.col("o_orderkey").alias("key"),
-        F.col("o_custkey").alias("key2"),
-        F.col("o_orderstatus").alias("s1"),
-        _NULL_S().alias("s2"),
-        F.col("o_totalprice").alias("price"),
-    )
-    return ks.unionByName(bl)
+    unchanged: queries/relational.py, scale_ops.py.""",
+    slots={"key": "BIGINT", "key2": "BIGINT", "s1": "STRING", "s2": "STRING", "price": "DOUBLE"},
+    legs={
+        "set": ("customer_key_set_algebra", {
+            "op": "'set_' || op", "key": "c_custkey", "s1": "c_name", "s2": "c_mktsegment",
+        }),
+        "bloom": ("bloom_pruned_semi_join", {
+            "key": "o_orderkey", "key2": "o_custkey", "s1": "o_orderstatus",
+            "price": "o_totalprice",
+        }),
+    },
+)

@@ -48,6 +48,7 @@ from namegraph_collections_spark.queries.quality_classifier import (
 )
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
+    Battery,
     build_parallel,
     ranked_topk,
     register,
@@ -110,16 +111,39 @@ def folded_state(
     return per_batch.groupBy(*[F.col(c) for c in key_cols]).agg(*aggs)
 
 
-def _NULL_L():
-    return F.lit(None).cast("long")
-
-
-def _NULL_S():
-    return F.lit(None).cast("string")
-
-
-def _oracle(name: str) -> str:
-    return REGISTRY[name].oracle  # type: ignore[return-value]
+#: The Spark side of ``maintainer_state_battery``. Its legs read
+#: folded state, and the oracle derives them from CTEs over the base
+#: tables rather than from registered components, so the spec builds
+#: only the padded union; the oracle below is written by hand.
+_MAINTAINER = Battery(
+    slots={
+        "k1": "BIGINT", "k2": "BIGINT", "ks": "STRING", "v1": "BIGINT",
+        "v2": "BIGINT", "v3": "BIGINT", "v4": "BIGINT", "v5": "BIGINT",
+    },
+    legs={
+        # exact rational (s, n_vecs): the read path's c_milli double is
+        # s/n_vecs and stays off the hash surface by convention
+        "ivf_centroid": (None, {"k1": "cluster", "k2": "dim", "v1": "s", "v2": "n_vecs"}),
+        "ivf_balance": (None, {
+            "v1": "n_lists", "v2": "n_vecs", "v3": "max_list", "v4": "min_list",
+            "v5": "imbalance_micro",
+        }),
+        "vocab_stats": (None, {
+            "v1": "n_types", "v2": "n_tokens", "v3": "hapax_types", "v4": "ttr_micro",
+        }),
+        "vocab_head": (None, {
+            "k1": "CAST(rnk AS BIGINT)", "ks": "tok", "v1": "occ", "v2": "first_doc",
+        }),
+        "diversity": (None, {
+            "k1": "label", "v1": "n_vecs", "v2": "self_sq", "v3": "pair_num",
+            "v4": "pair_den",
+        }),
+        "nbq_w": (None, {"k1": "bucket", "v1": "w_micro"}),
+        "nbq_prior": (None, {"v1": "prior_micro"}),
+        "hist": (None, {"k1": "bucket", "ks": "quantile", "v1": "n_rows"}),
+        "cms_probe": (None, {"ks": "token", "v1": "cms_estimate"}),
+    },
+)
 
 
 #: CTE names are prefixed (ivf_/v) to never collide with the CTE
@@ -200,7 +224,7 @@ _VOCAB_ORACLE_CTES = """vtoks AS (
     SELECT 'diversity', label, CAST(NULL AS BIGINT),
            CAST(NULL AS VARCHAR), n_vecs, self_sq, pair_num, pair_den,
            CAST(NULL AS BIGINT)
-    FROM ({_oracle("embedding_diversity")})
+    FROM ({REGISTRY["embedding_diversity"].oracle})
     UNION ALL
     SELECT 'nbq_w', bucket, CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
            w_micro, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
@@ -215,12 +239,12 @@ _VOCAB_ORACLE_CTES = """vtoks AS (
     SELECT 'hist', CAST(bucket AS BIGINT), CAST(NULL AS BIGINT), quantile,
            n_rows, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
            CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("histogram_quantiles")})
+    FROM ({REGISTRY["histogram_quantiles"].oracle})
     UNION ALL
     SELECT 'cms_probe', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), token,
            cms_estimate, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
            CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-    FROM ({_oracle("cms_heavy_hitters")})
+    FROM ({REGISTRY["cms_heavy_hitters"].oracle})
     """,
 )
 def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,127 +348,22 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.unpersist()
         docs.unpersist()
 
-    cent = centroids_from_state(ivf_state).select(
-        F.lit("ivf_centroid").alias("op"),
-        F.col("cluster").alias("k1"),
-        F.col("dim").alias("k2"),
-        _NULL_S().alias("ks"),
-        # exact rational (s, n_vecs) — the read path's c_milli double
-        # is s/n_vecs and stays off the hash surface by convention
-        F.col("s").alias("v1"),
-        F.col("n_vecs").alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-    bal = list_balance_from_state(ivf_state).select(
-        F.lit("ivf_balance").alias("op"),
-        _NULL_L().alias("k1"),
-        _NULL_L().alias("k2"),
-        _NULL_S().alias("ks"),
-        F.col("n_lists").alias("v1"),
-        F.col("n_vecs").alias("v2"),
-        F.col("max_list").alias("v3"),
-        F.col("min_list").alias("v4"),
-        F.col("imbalance_micro").alias("v5"),
-    )
-
-    vstats = vocab_stats_from_state(vocab_state).select(
-        F.lit("vocab_stats").alias("op"),
-        _NULL_L().alias("k1"),
-        _NULL_L().alias("k2"),
-        _NULL_S().alias("ks"),
-        F.col("n_types").alias("v1"),
-        F.col("n_tokens").alias("v2"),
-        F.col("hapax_types").alias("v3"),
-        F.col("ttr_micro").alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-    vhead = vocab_head_from_state(vocab_state, VOCAB_HEAD_K).select(
-        F.lit("vocab_head").alias("op"),
-        F.col("rnk").cast("long").alias("k1"),
-        _NULL_L().alias("k2"),
-        F.col("tok").alias("ks"),
-        F.col("occ").alias("v1"),
-        F.col("first_doc").alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-
-    div = diversity_from_state(div_state).select(
-        F.lit("diversity").alias("op"),
-        F.col("label").alias("k1"),
-        _NULL_L().alias("k2"),
-        _NULL_S().alias("ks"),
-        F.col("n_vecs").alias("v1"),
-        F.col("self_sq").alias("v2"),
-        F.col("pair_num").alias("v3"),
-        F.col("pair_den").alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-
     w, prior = nbq_model_from_state(nbq_state)
-    nbq_w = w.select(
-        F.lit("nbq_w").alias("op"),
-        F.col("bucket").alias("k1"),
-        _NULL_L().alias("k2"),
-        _NULL_S().alias("ks"),
-        F.col("w_micro").alias("v1"),
-        _NULL_L().alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-    nbq_p = prior.select(
-        F.lit("nbq_prior").alias("op"),
-        _NULL_L().alias("k1"),
-        _NULL_L().alias("k2"),
-        _NULL_S().alias("ks"),
-        F.col("prior_micro").alias("v1"),
-        _NULL_L().alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-
+    # no-op limit by construction; states the bound for the cumsum
+    # window of the quantile read (the hist_buckets_of idiom)
     hist_state = hist_state_ck.limit(HIST_MAX_B)
-    # ^ no-op by construction; states the bound for the cumsum window
-    # below (the hist_buckets_of idiom)
-    hq = hist_quantiles_from_state(hist_state).select(
-        F.lit("hist").alias("op"),
-        F.col("bucket").alias("k1"),
-        _NULL_L().alias("k2"),
-        F.col("quantile").alias("ks"),
-        F.col("n_rows").alias("v1"),
-        _NULL_L().alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-
-    # the probe set (``cand``, checkpointed above): the exact
-    # top-CMS_TOP bigrams, built the same way cms_heavy_hitters builds
-    # its candidate list (one occurrence scan)
-    cms = cms_estimates_from(cms_state, cand.select("token")).select(
-        F.lit("cms_probe").alias("op"),
-        _NULL_L().alias("k1"),
-        _NULL_L().alias("k2"),
-        F.col("token").alias("ks"),
-        F.col("cms_estimate").alias("v1"),
-        _NULL_L().alias("v2"),
-        _NULL_L().alias("v3"),
-        _NULL_L().alias("v4"),
-        _NULL_L().alias("v5"),
-    )
-
-    return (
-        cent.unionByName(bal)
-        .unionByName(vstats)
-        .unionByName(vhead)
-        .unionByName(div)
-        .unionByName(nbq_w)
-        .unionByName(nbq_p)
-        .unionByName(hq)
-        .unionByName(cms)
+    # the probe set (``cand``): the exact top-CMS_TOP bigrams, built
+    # the same way cms_heavy_hitters builds its candidate list
+    return _MAINTAINER.union(
+        spark,
+        sf_dir,
+        ivf_centroid=centroids_from_state(ivf_state),
+        ivf_balance=list_balance_from_state(ivf_state),
+        vocab_stats=vocab_stats_from_state(vocab_state),
+        vocab_head=vocab_head_from_state(vocab_state, VOCAB_HEAD_K),
+        diversity=diversity_from_state(div_state),
+        nbq_w=w,
+        nbq_prior=prior,
+        hist=hist_quantiles_from_state(hist_state),
+        cms_probe=cms_estimates_from(cms_state, cand.select("token")),
     )

@@ -38,8 +38,10 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -145,23 +147,24 @@ def checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
     """
     if len(dfs) == 1:
         return [dfs[0].localCheckpoint(eager=False)]
-    return run_parallel(*[lambda df=df: df.localCheckpoint(eager=False) for df in dfs])
+    return run_parallel(
+        dfs[0].sparkSession, *[lambda df=df: df.localCheckpoint(eager=False) for df in dfs]
+    )
 
 
-def run_parallel(*thunks):
+def run_parallel(spark: SparkSession, *thunks):
     """Run independent thunks from a driver thread pool and return
     their results in thunk order. Every thunk runs to its end; then the
     exception of the first failed thunk, in thunk order, is re-raised.
     Each thread inherits the caller's job-local properties (job group,
-    description, scheduler pool) through ``inheritable_thread_target``,
-    as the PySpark docs prescribe for driver-side job threads, so the
-    jobs a thunk starts are attributed like the caller's own."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    description, scheduler pool) and the session's ``addTag`` tags
+    through ``inheritable_thread_target(spark)``, as the PySpark docs
+    prescribe for driver-side job threads, so the jobs a thunk starts
+    are attributed like the caller's own. A thunk may call
+    ``run_parallel`` itself, which is how a dependency chain runs
+    beside an independent build."""
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futures]
 
 
@@ -175,7 +178,113 @@ def build_parallel(spark: SparkSession, *thunks):
     are no-op set lookups, not racing ``addPyFile``s.
     """
     ensure_package_shipped(spark)
-    return run_parallel(*thunks)
+    return run_parallel(spark, *thunks)
+
+
+@dataclass(frozen=True)
+class Melt:
+    """A long-form reshape applied to a battery leg's component before
+    its slots are mapped: ``keys`` pass through, and each entry of
+    ``rows`` becomes one output row per input row, labelled in
+    ``names[0]`` with its expressions in ``names[1:]``. Spark runs it
+    as ``stack(...)``; the oracle as a CROSS JOIN over the labels with
+    one ``CASE`` per value column."""
+
+    keys: tuple[str, ...]
+    names: tuple[str, ...]
+    rows: dict[str, tuple[str, ...]]
+
+    def spark(self, df: DataFrame) -> DataFrame:
+        args = ", ".join(f"'{lab}', " + ", ".join(es) for lab, es in self.rows.items())
+        stack = f"stack({len(self.rows)}, {args}) AS ({', '.join(self.names)})"
+        return df.selectExpr(*self.keys, stack)
+
+    def sql(self, source: str) -> str:
+        label, values = self.names[0], self.names[1:]
+        cases = [
+            f"CASE m.{label} "
+            + " ".join(f"WHEN '{lab}' THEN {es[i]}" for lab, es in self.rows.items())
+            + f" END AS {v}"
+            for i, v in enumerate(values)
+        ]
+        labels = ", ".join(f"('{lab}')" for lab in self.rows)
+        return (
+            f"SELECT {', '.join([*self.keys, f'm.{label}', *cases])}\n"
+            f"    FROM ({source}) CROSS JOIN (VALUES {labels}) m({label})"
+        )
+
+
+@dataclass(frozen=True)
+class Battery:
+    """A battery: registered component queries unioned into one
+    ``op``-tagged, null-padded result, so one driver row value-hashes
+    every component's full output.
+
+    ``slots`` maps each output column to its SQL type; ``op`` is
+    implicit and first. ``legs`` maps a tag to ``(component, cols)`` or
+    ``(component, cols, Melt)``: ``cols`` maps slots to SQL expressions
+    over the component's columns (an ``op`` entry replaces the tag
+    literal), and every unmapped slot is a typed NULL. One expression
+    string serves both engines, so it uses the dialect they share:
+    INT/BIGINT/DOUBLE/STRING/BOOLEAN casts, ``IF``, ``||``, and no
+    quoted identifiers.
+
+    ``oracle()`` wraps each component's registered oracle verbatim;
+    ``union()`` runs the same expressions through ``selectExpr``. So
+    a battery cannot drift from its components, and its two sides
+    cannot drift from each other."""
+
+    slots: dict[str, str]
+    legs: dict[str, tuple]
+
+    def __post_init__(self):
+        for tag, (_, cols, *_melt) in self.legs.items():
+            unknown = set(cols) - set(self.slots) - {"op"}
+            if unknown:
+                raise KeyError(f"leg {tag!r} maps unknown slots {sorted(unknown)}")
+
+    def _exprs(self, tag: str, cols: dict[str, str]) -> list[str]:
+        out = [f"{cols.get('op', repr(tag))} AS op"]
+        for slot, typ in self.slots.items():
+            e = cols.get(slot, f"CAST(NULL AS {typ})")
+            # a bare name, not `x AS x`: Catalyst would keep the no-op alias
+            out.append(slot if e == slot else f"{e} AS {slot}")
+        return out
+
+    def oracle(self) -> str:
+        selects = []
+        for tag, (comp, cols, *melt) in self.legs.items():
+            source = REGISTRY[comp].oracle
+            if melt:
+                source = melt[0].sql(source)
+            selects.append(f"SELECT {', '.join(self._exprs(tag, cols))}\n    FROM ({source})")
+        return "\n    UNION ALL\n    ".join(selects)
+
+    def union(self, spark: SparkSession, sf_dir: str, **frames: DataFrame) -> DataFrame:
+        """The Spark side. A leg absent from ``frames`` runs its
+        registered component; a battery that shares builds between
+        legs passes the legs built from them (the ``_from`` seams)."""
+        unknown = set(frames) - set(self.legs)
+        if unknown:
+            raise KeyError(f"frames for unknown legs: {sorted(unknown)}")
+        parts = []
+        for tag, (comp, cols, *melt) in self.legs.items():
+            df = frames[tag] if tag in frames else REGISTRY[comp].fn(spark, sf_dir)
+            if melt:
+                df = melt[0].spark(df)
+            parts.append(df.selectExpr(*self._exprs(tag, cols)))
+        return functools.reduce(DataFrame.unionByName, parts)
+
+
+def register_battery(name: str, doc: str, slots: dict[str, str], legs: dict[str, tuple]) -> None:
+    """Register a battery whose legs are all plain components."""
+    battery = Battery(slots, legs)
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return battery.union(spark, sf_dir)
+
+    run.__name__, run.__doc__ = name, doc
+    register(name, oracle=battery.oracle())(run)
 
 
 def ranked_topk(df: DataFrame, k: int, *order, rnk: str = "rnk") -> DataFrame:

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from namegraph_collections_spark.queries.registry import register, tbl
+from namegraph_collections_spark.queries.registry import Battery, register, tbl
 
 # Reference name-filter regexes, verbatim from
 # /root/reference/airflow/dags/create_merged.py:595-604 (F9 ★) and the
@@ -157,289 +157,109 @@ def strip_suffix_and_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # three single-operator forms stay registered after the window for the
 # local sweep, bench continuity, and direct use.
 # ---------------------------------------------------------------------------
-# The PII scan/redaction leg (queries/pii.py) joins this battery: it
-# is the same regex-operator family over a different table, and the
-# battery is its one driver-hashed surface. Importing the module here
-# registers it before this oracle is built.
-from namegraph_collections_spark.queries.pii import pii_scan_redact  # noqa: E402
-from namegraph_collections_spark.queries.registry import REGISTRY as _REG  # noqa: E402
-
-# The URL canonicalization/dedup leg (queries/url_ops.py) also rides
-# this battery — string canonicalization over a different table, with
-# the battery as its one driver-hashed surface (round-8 addition).
-from namegraph_collections_spark.queries.url_ops import url_canonical_dedup  # noqa: E402
-
-# The per-domain quality rollup and its gate-application stage
-# (queries/web_rollup.py) ride this battery too: they aggregate/apply
-# the URL leg's domain key, and the battery is their one driver-hashed
-# surface (round-8 additions). Importing the module registers them
-# before this oracle is built; the battery feeds both legs from ONE
-# fused per-doc frame via the _from seams.
+# The legs below ride this battery as their one driver-hashed surface:
+# PII scan/redaction (the same regex-operator family over a different
+# table), URL canonicalization/dedup, the per-domain quality rollup
+# and its gate-application stage (fed from ONE fused per-doc frame via
+# the _from seams), C4 line-level cleaning, and the ER-style blocked
+# edit-distance pairs. Importing their modules here registers them
+# before this battery's oracle is built (ahead of queries/__init__'s
+# own imports; @register is idempotent across the later import). The
+# import order fixes these components' places in ``list(REGISTRY)``.
+from namegraph_collections_spark.queries import pii  # noqa: E402,F401
+from namegraph_collections_spark.queries import url_ops  # noqa: E402,F401
 from namegraph_collections_spark.queries.web_rollup import (  # noqa: E402
-    domain_gated_corpus,  # noqa: F401  (oracle parity; battery uses the _from seam)
     domain_gated_corpus_from,
-    host_quality_rollup,  # noqa: F401  (oracle parity; battery uses the _from seam)
     host_quality_rollup_from,
     per_doc_web_frame,
 )
+from namegraph_collections_spark.queries import c4_clean  # noqa: E402,F401
+from namegraph_collections_spark.queries import scale_ops  # noqa: E402,F401
 
-# The C4 line-level cleaning leg (queries/c4_clean.py) rides this
-# battery as well (round 9 — the one round-8 operator that shipped
-# without a driver hash): per-doc line-bucket counts, the cleaned
-# page's md5 + kept-char count, and the composite page flag, all
-# BIGINT/VARCHAR/BOOLEAN.
-from namegraph_collections_spark.queries.c4_clean import c4_line_filter  # noqa: E402
 
-# Imported here (ahead of queries/__init__'s scale_ops import) so the
-# round-10 fuzzy leg can embed its oracle; @register is idempotent
-# across the later package-level import.
-from namegraph_collections_spark.queries.scale_ops import (  # noqa: E402
-    fuzzy_blocked_pairs,
+_STRING_OPS = Battery(
+    slots={
+        "p_partkey": "BIGINT", "s": "STRING", "n_tokens": "BIGINT",
+        "first_token": "STRING", "brand_num": "INT", "type_lc": "STRING",
+        "n_emails": "BIGINT", "n_phones": "BIGINT", "n_ips": "BIGINT",
+        "has_pii": "BOOLEAN", "masked_phone": "STRING",
+    },
+    legs={
+        "curate": ("curate_names", {
+            "p_partkey": "p_partkey", "s": "curated_name",
+            "n_tokens": "CAST(n_tokens AS BIGINT)", "first_token": "first_token",
+        }),
+        "filter": ("name_regex_filters", {"p_partkey": "p_partkey", "s": "name"}),
+        "strip": ("strip_suffix_and_extract", {
+            "p_partkey": "p_partkey", "s": "stripped", "brand_num": "brand_num",
+            "type_lc": "type_lc",
+        }),
+        "pii": ("pii_scan_redact", {
+            "p_partkey": "c_custkey", "s": "redacted", "n_tokens": "pii_total",
+            "n_emails": "n_emails", "n_phones": "n_phones", "n_ips": "n_ips",
+            "has_pii": "has_pii", "masked_phone": "masked_phone",
+        }),
+        "url": ("url_canonical_dedup", {
+            "p_partkey": "doc_id", "s": "norm_url", "n_tokens": "dup_count",
+            "first_token": "raw_url", "type_lc": "domain", "has_pii": "url_keep",
+        }),
+        # The micro-unit rates ride BIGINT/INT slots (dup_rate_micro <
+        # 1e6 always — a count ratio <= 1 — so the INT cast is exact on
+        # both engines); the gated leg's three verdicts ride 0/1 BIGINTs.
+        "hostq": ("host_quality_rollup", {
+            "p_partkey": "sum_words", "s": "domain", "n_tokens": "n_docs",
+            "brand_num": "CAST(dup_rate_micro AS INT)", "n_emails": "n_pages",
+            "n_phones": "n_keep", "n_ips": "keep_rate_micro", "has_pii": "domain_keep",
+        }),
+        "gated": ("domain_gated_corpus", {
+            "p_partkey": "doc_id", "s": "domain",
+            "n_tokens": "CAST(IF(domain_keep, 1, 0) AS BIGINT)",
+            "n_emails": "CAST(IF(doc_keep, 1, 0) AS BIGINT)",
+            "n_phones": "CAST(IF(url_keep, 1, 0) AS BIGINT)", "has_pii": "final_keep",
+        }),
+        # n_lines rides the INT slot (page reconstruction bounds it far
+        # below 2^31), kept_chars the string slot (CAST(BIGINT AS
+        # STRING) is canonical decimal on both engines)
+        "c4": ("c4_line_filter", {
+            "p_partkey": "doc_id", "s": "cleaned_hash", "n_tokens": "n_kept",
+            "brand_num": "CAST(n_lines AS INT)", "n_emails": "n_drop_punct",
+            "n_phones": "n_drop_short", "n_ips": "n_drop_js", "has_pii": "page_keep",
+            "masked_phone": "CAST(kept_chars AS STRING)",
+        }),
+        # ER-style blocked edit-distance pairs over the part-name
+        # dictionary: name_a/name_b ride the two string slots, the
+        # support counts two BIGINT slots, the edit distance the INT slot
+        "fuzzy": ("fuzzy_blocked_pairs", {
+            "s": "name_a", "n_tokens": "n_a", "first_token": "name_b",
+            "brand_num": "edit_dist", "n_emails": "n_b",
+        }),
+    },
 )
 
 
-@register(
-    "string_ops_battery",
-    oracle=f"""
-    SELECT 'curate' AS op, p_partkey, curated_name AS s,
-           n_tokens, first_token,
-           CAST(NULL AS INTEGER) AS brand_num, CAST(NULL AS VARCHAR) AS type_lc,
-           CAST(NULL AS BIGINT) AS n_emails, CAST(NULL AS BIGINT) AS n_phones,
-           CAST(NULL AS BIGINT) AS n_ips, CAST(NULL AS BOOLEAN) AS has_pii,
-           CAST(NULL AS VARCHAR) AS masked_phone
-    FROM ({_CURATE_ORACLE})
-    UNION ALL
-    SELECT 'filter' AS op, p_partkey, name AS s,
-           CAST(NULL AS BIGINT) AS n_tokens, CAST(NULL AS VARCHAR) AS first_token,
-           CAST(NULL AS INTEGER) AS brand_num, CAST(NULL AS VARCHAR) AS type_lc,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS VARCHAR)
-    FROM ({_FILTER_ORACLE})
-    UNION ALL
-    SELECT 'strip' AS op, p_partkey, stripped AS s,
-           CAST(NULL AS BIGINT) AS n_tokens, CAST(NULL AS VARCHAR) AS first_token,
-           brand_num, type_lc,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS VARCHAR)
-    FROM ({_STRIP_ORACLE})
-    UNION ALL
-    SELECT 'pii' AS op, c_custkey, redacted AS s,
-           pii_total, CAST(NULL AS VARCHAR) AS first_token,
-           CAST(NULL AS INTEGER) AS brand_num, CAST(NULL AS VARCHAR) AS type_lc,
-           n_emails, n_phones, n_ips, has_pii, masked_phone
-    FROM ({_REG["pii_scan_redact"].oracle})
-    UNION ALL
-    SELECT 'url' AS op, doc_id, norm_url AS s,
-           dup_count, raw_url AS first_token,
-           CAST(NULL AS INTEGER) AS brand_num, domain AS type_lc,
-           CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           url_keep, CAST(NULL AS VARCHAR)
-    FROM ({_REG["url_canonical_dedup"].oracle})
-    UNION ALL
-    SELECT 'hostq' AS op, sum_words, domain AS s,
-           n_docs, CAST(NULL AS VARCHAR) AS first_token,
-           CAST(dup_rate_micro AS INTEGER) AS brand_num,
-           CAST(NULL AS VARCHAR) AS type_lc,
-           n_pages, n_keep, keep_rate_micro,
-           domain_keep, CAST(NULL AS VARCHAR)
-    FROM ({_REG["host_quality_rollup"].oracle})
-    UNION ALL
-    SELECT 'gated' AS op, doc_id, domain AS s,
-           CASE WHEN domain_keep THEN 1 ELSE 0 END,
-           CAST(NULL AS VARCHAR) AS first_token,
-           CAST(NULL AS INTEGER) AS brand_num,
-           CAST(NULL AS VARCHAR) AS type_lc,
-           CASE WHEN doc_keep THEN 1 ELSE 0 END,
-           CASE WHEN url_keep THEN 1 ELSE 0 END,
-           CAST(NULL AS BIGINT),
-           final_keep, CAST(NULL AS VARCHAR)
-    FROM ({_REG["domain_gated_corpus"].oracle})
-    UNION ALL
-    SELECT 'c4' AS op, doc_id, cleaned_hash AS s,
-           n_kept, CAST(NULL AS VARCHAR) AS first_token,
-           CAST(n_lines AS INTEGER) AS brand_num,
-           CAST(NULL AS VARCHAR) AS type_lc,
-           n_drop_punct, n_drop_short, n_drop_js,
-           page_keep, CAST(kept_chars AS VARCHAR)
-    FROM ({_REG["c4_line_filter"].oracle})
-    UNION ALL
-    SELECT 'fuzzy' AS op, CAST(NULL AS BIGINT), name_a AS s,
-           n_a, name_b AS first_token,
-           edit_dist AS brand_num, CAST(NULL AS VARCHAR) AS type_lc,
-           n_b, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-           CAST(NULL AS BOOLEAN), CAST(NULL AS VARCHAR)
-    FROM ({_REG["fuzzy_blocked_pairs"].oracle})
-    """,
-)
+@register("string_ops_battery", oracle=_STRING_OPS.oracle())
 def string_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """curate_name + the filter-regex battery + strip/extract scalars
     + the PII scan/redaction leg in one tagged result (SURVEY §2.7
-    C3/C6, §2.2 F9/F10 ★; queries/pii.py).
+    C3/C6, §2.2 F9/F10 ★; queries/pii.py), with the URL
+    canonicalization/dedup, domain-rollup, gate-application, C4
+    line-cleaning and blocked edit-distance legs riding the same
+    schema (see the leg comments in ``_STRING_OPS``).
 
     Each part is the unchanged single-operator query, null-padded to
     the common schema and unioned with an ``op`` tag — so the one
-    driver row value-hashes all eight operators' full outputs (the
-    round-8 URL canonicalization/dedup leg rides the same schema:
-    norm_url→s, raw_url→first_token, domain→type_lc,
-    dup_count→n_tokens, url_keep→has_pii; the round-8 domain-rollup
-    and gate-application legs likewise: domain→s, counts/micro-rates/
-    0-1 verdicts into the BIGINT/INT slots, the keep flag→has_pii;
-    the round-9 C4 line-cleaning leg: cleaned_hash→s,
-    n_kept→n_tokens, bucket counts→the three BIGINT slots,
-    n_lines→brand_num, kept_chars→masked_phone, page_keep→has_pii).
+    driver row value-hashes every operator's full output.
     """
-    null_i = F.lit(None).cast("int")
-    null_l = F.lit(None).cast("long")
-    null_s = F.lit(None).cast("string")
-    null_b = F.lit(None).cast("boolean")
-    pii_pads = [
-        null_l.alias("n_emails"),
-        null_l.alias("n_phones"),
-        null_l.alias("n_ips"),
-        null_b.alias("has_pii"),
-        null_s.alias("masked_phone"),
-    ]
-    curate = curate_names(spark, sf_dir).select(
-        F.lit("curate").alias("op"),
-        "p_partkey",
-        F.col("curated_name").alias("s"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "first_token",
-        null_i.alias("brand_num"),
-        null_s.alias("type_lc"),
-        *pii_pads,
-    )
-    filt = name_regex_filters(spark, sf_dir).select(
-        F.lit("filter").alias("op"),
-        "p_partkey",
-        F.col("name").alias("s"),
-        null_l.alias("n_tokens"),
-        null_s.alias("first_token"),
-        null_i.alias("brand_num"),
-        null_s.alias("type_lc"),
-        *pii_pads,
-    )
-    strip = strip_suffix_and_extract(spark, sf_dir).select(
-        F.lit("strip").alias("op"),
-        "p_partkey",
-        F.col("stripped").alias("s"),
-        null_l.alias("n_tokens"),
-        null_s.alias("first_token"),
-        "brand_num",
-        "type_lc",
-        *pii_pads,
-    )
-    pii_leg = pii_scan_redact(spark, sf_dir).select(
-        F.lit("pii").alias("op"),
-        F.col("c_custkey").alias("p_partkey"),
-        F.col("redacted").alias("s"),
-        F.col("pii_total").alias("n_tokens"),
-        null_s.alias("first_token"),
-        null_i.alias("brand_num"),
-        null_s.alias("type_lc"),
-        "n_emails",
-        "n_phones",
-        "n_ips",
-        "has_pii",
-        "masked_phone",
-    )
-    url_leg = url_canonical_dedup(spark, sf_dir).select(
-        F.lit("url").alias("op"),
-        F.col("doc_id").alias("p_partkey"),
-        F.col("norm_url").alias("s"),
-        F.col("dup_count").alias("n_tokens"),
-        F.col("raw_url").alias("first_token"),
-        null_i.alias("brand_num"),
-        F.col("domain").alias("type_lc"),
-        null_l.alias("n_emails"),
-        null_l.alias("n_phones"),
-        null_l.alias("n_ips"),
-        F.col("url_keep").alias("has_pii"),
-        null_s.alias("masked_phone"),
-    )
-    # Round-8 domain-rollup + gate-application legs, fed from ONE
+    # The domain-rollup and gate-application legs are fed from ONE
     # fused per-doc scan (the _from seams; localCheckpoint because
-    # ReusedExchange does not dedup the repeated subtree). The
-    # micro-unit rates ride BIGINT/INT slots (dup_rate_micro < 1e6
-    # always — a count ratio ≤ 1 — so the INT cast is exact on both
-    # engines); the gated leg's three verdicts ride 0/1 BIGINTs.
+    # ReusedExchange does not dedup the repeated subtree), and ONE
+    # rollup aggregation feeds both the hostq leg and the gated leg's
+    # broadcast side.
     per_doc = per_doc_web_frame(spark, sf_dir).localCheckpoint(eager=False)
-    # ONE rollup aggregation feeds both the hostq leg and the gated
-    # leg's broadcast side (ReusedExchange would not dedup the
-    # repeated groupBy subtree, same reason per_doc is checkpointed).
     roll = host_quality_rollup_from(per_doc).localCheckpoint(eager=False)
-    hostq = roll.select(
-        F.lit("hostq").alias("op"),
-        F.col("sum_words").alias("p_partkey"),
-        F.col("domain").alias("s"),
-        F.col("n_docs").alias("n_tokens"),
-        null_s.alias("first_token"),
-        F.col("dup_rate_micro").cast("int").alias("brand_num"),
-        null_s.alias("type_lc"),
-        F.col("n_pages").alias("n_emails"),
-        F.col("n_keep").alias("n_phones"),
-        F.col("keep_rate_micro").alias("n_ips"),
-        F.col("domain_keep").alias("has_pii"),
-        null_s.alias("masked_phone"),
-    )
-    gated = domain_gated_corpus_from(
-        per_doc, gate=roll.select("domain", "domain_keep")
-    ).select(
-        F.lit("gated").alias("op"),
-        F.col("doc_id").alias("p_partkey"),
-        F.col("domain").alias("s"),
-        F.expr("CAST(IF(domain_keep, 1, 0) AS BIGINT)").alias("n_tokens"),
-        null_s.alias("first_token"),
-        null_i.alias("brand_num"),
-        null_s.alias("type_lc"),
-        F.expr("CAST(IF(doc_keep, 1, 0) AS BIGINT)").alias("n_emails"),
-        F.expr("CAST(IF(url_keep, 1, 0) AS BIGINT)").alias("n_phones"),
-        null_l.alias("n_ips"),
-        F.col("final_keep").alias("has_pii"),
-        null_s.alias("masked_phone"),
-    )
-    # Round-9 C4 line-cleaning leg: zero-shuffle scan shape, BIGINT
-    # counts + md5 string + boolean flag — n_lines rides the INT slot
-    # (page reconstruction bounds it far below 2^31), kept_chars rides
-    # the string slot (CAST(BIGINT AS VARCHAR) is canonical decimal on
-    # both engines).
-    c4 = c4_line_filter(spark, sf_dir).select(
-        F.lit("c4").alias("op"),
-        F.col("doc_id").alias("p_partkey"),
-        F.col("cleaned_hash").alias("s"),
-        F.col("n_kept").alias("n_tokens"),
-        null_s.alias("first_token"),
-        F.col("n_lines").cast("int").alias("brand_num"),
-        null_s.alias("type_lc"),
-        F.col("n_drop_punct").alias("n_emails"),
-        F.col("n_drop_short").alias("n_phones"),
-        F.col("n_drop_js").alias("n_ips"),
-        F.col("page_keep").alias("has_pii"),
-        F.col("kept_chars").cast("string").alias("masked_phone"),
-    )
-    # Round-10 coverage-closing leg: the ER-style blocked
-    # edit-distance pairs over the part-name dictionary — the last
-    # string-family operator no driver row value-hashed
-    # (COVERAGE.json derivation). name_a/name_b ride the two string
-    # slots, the dictionary support counts two BIGINT slots, the
-    # banded edit distance the INT slot.
-    fuzzy = fuzzy_blocked_pairs(spark, sf_dir).select(
-        F.lit("fuzzy").alias("op"),
-        null_l.alias("p_partkey"),
-        F.col("name_a").alias("s"),
-        F.col("n_a").alias("n_tokens"),
-        F.col("name_b").alias("first_token"),
-        F.col("edit_dist").alias("brand_num"),
-        null_s.alias("type_lc"),
-        F.col("n_b").alias("n_emails"),
-        null_l.alias("n_phones"),
-        null_l.alias("n_ips"),
-        null_b.alias("has_pii"),
-        null_s.alias("masked_phone"),
-    )
-    return (
-        curate.unionByName(filt).unionByName(strip)
-        .unionByName(pii_leg).unionByName(url_leg)
-        .unionByName(hostq).unionByName(gated).unionByName(c4)
-        .unionByName(fuzzy)
+    return _STRING_OPS.union(
+        spark,
+        sf_dir,
+        hostq=roll,
+        gated=domain_gated_corpus_from(per_doc, gate=roll.select("domain", "domain_keep")),
     )

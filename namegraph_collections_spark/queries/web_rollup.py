@@ -60,18 +60,14 @@ _GATE_SQL = (
 )
 
 
-def _component_oracle(name: str) -> str:
-    # Import-time embed of the component oracles verbatim (battery
-    # construction rule; this module imports after quality_signals
-    # and url_ops — pinned in queries/__init__.py).
-    return REGISTRY[name].oracle  # type: ignore[return-value]
-
-
+# The oracles embed the component oracles verbatim (battery
+# construction rule; this module imports after quality_signals and
+# url_ops — pinned in queries/__init__.py).
 @register(
     "host_quality_rollup",
     oracle=f"""
-    WITH q AS ({_component_oracle("doc_quality_signals")}),
-    u AS ({_component_oracle("url_canonical_dedup")}),
+    WITH q AS ({REGISTRY["doc_quality_signals"].oracle}),
+    u AS ({REGISTRY["url_canonical_dedup"].oracle}),
     j AS (
       SELECT u.domain, u.norm_url, q.keep, q.n_words
       FROM q JOIN u USING (doc_id)
@@ -163,9 +159,9 @@ def finish_rollup(agg: DataFrame) -> DataFrame:
 @register(
     "domain_gated_corpus",
     oracle=f"""
-    WITH u AS ({_component_oracle("url_canonical_dedup")}),
-    q AS ({_component_oracle("doc_quality_signals")}),
-    g AS ({_component_oracle("host_quality_rollup")})
+    WITH u AS ({REGISTRY["url_canonical_dedup"].oracle}),
+    q AS ({REGISTRY["doc_quality_signals"].oracle}),
+    g AS ({REGISTRY["host_quality_rollup"].oracle})
     SELECT u.doc_id, u.domain,
            g.domain_keep, q.keep AS doc_keep, u.url_keep,
            (g.domain_keep AND q.keep AND u.url_keep) AS final_keep

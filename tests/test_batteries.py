@@ -1,16 +1,24 @@
-"""Battery construction-rule pins (no Spark needed).
+"""Battery construction-rule pins.
 
 A battery must wrap its components' ORACLES verbatim — that is the
 property that makes one driver row equivalent to checking every
 component: if a component's oracle changes, the battery's oracle
-changes identically, and the two can never drift. This test pins the
-rule structurally so a future battery (or an edit that inlines a
-stale copy of a component's SQL) fails fast.
+changes identically, and the two can never drift. The first test pins
+the rule structurally, against a hand-kept component list, so a
+future battery (or an edit that inlines a stale copy of a component's
+SQL) fails fast. The spec tests at the end check that
+``registry.Battery`` generates a Spark union and a DuckDB oracle that
+agree, on toy components.
 """
 
 from __future__ import annotations
 
+import duckdb
+import pytest
+
 from namegraph_collections_spark.queries import REGISTRY
+from namegraph_collections_spark.queries.registry import Battery, Melt, QuerySpec
+from tests.oracle_harness import canon_rows
 
 #: battery -> components whose oracle text must appear verbatim
 BATTERIES = {
@@ -219,3 +227,65 @@ def test_battery_components_stay_registered():
     for components in BATTERIES.values():
         for comp in components:
             assert comp in REGISTRY
+
+
+_DUCK_TYPES = {"bigint": "BIGINT", "int": "INTEGER", "string": "VARCHAR",
+               "double": "DOUBLE", "boolean": "BOOLEAN"}
+
+
+def test_battery_spec_spark_union_equals_its_oracle(spark, tmp_path, monkeypatch):
+    """Two toy components over tiny parquet files: the legs cover a
+    typed-NULL pad, a tag override, a bare pass-through column, an
+    expression, and a melted leg."""
+    a = str(tmp_path / "toy_a")
+    b = str(tmp_path / "toy_b")
+    spark.createDataFrame(
+        [(1, "x", 2.5, "up"), (2, "y", None, "down"), (3, None, -1.0, "up")],
+        "id BIGINT, name STRING, score DOUBLE, op STRING",
+    ).write.parquet(a)
+    spark.createDataFrame(
+        [(7, True), (8, None)], "k INT, flag BOOLEAN"
+    ).write.parquet(b)
+    for name, path in (("toy_a", a), ("toy_b", b)):
+        monkeypatch.setitem(REGISTRY, name, QuerySpec(
+            name=name,
+            fn=lambda spark, sf_dir, path=path: spark.read.parquet(path),
+            oracle=f"SELECT * FROM '{path}/*.parquet'",
+            doc="",
+        ))
+    battery = Battery(
+        slots={"id": "BIGINT", "name": "STRING", "score": "DOUBLE", "k": "INT",
+               "flag": "BOOLEAN"},
+        legs={
+            "a": ("toy_a", {"op": "'skew_' || op", "id": "id", "name": "upper(name)",
+                            "score": "score"}),
+            "b": ("toy_b", {"id": "CAST(k AS BIGINT)", "k": "k", "flag": "flag"}),
+            "melt": ("toy_a", {"id": "id", "name": "metric", "score": "val"},
+                     Melt(("id",), ("metric", "val"), {
+                         "score": ("score",),
+                         "neg": ("-score",),
+                     })),
+        },
+    )
+    got = battery.union(spark, "unused")
+    con = duckdb.connect()
+    try:
+        rel = con.sql(battery.oracle())
+        d_cols, d_types = list(rel.columns), [str(t) for t in rel.types]
+        d_rows = rel.fetchall()
+    finally:
+        con.close()
+    assert got.columns == d_cols == ["op", "id", "name", "score", "k", "flag"]
+    assert [_DUCK_TYPES[f.dataType.simpleString()] for f in got.schema.fields] == d_types
+    s_rows = [tuple(r) for r in got.collect()]
+    assert canon_rows(got.columns, s_rows) == canon_rows(d_cols, d_rows)
+    assert {r[0] for r in s_rows} == {"skew_up", "skew_down", "b", "melt"}
+    assert len(s_rows) == 3 + 2 + 6
+
+
+def test_battery_spec_rejects_unknown_slots_and_frames(spark):
+    with pytest.raises(KeyError, match="unknown slots"):
+        Battery(slots={"id": "BIGINT"}, legs={"a": ("toy_a", {"idd": "id"})})
+    battery = Battery(slots={"id": "BIGINT"}, legs={"a": ("toy_a", {"id": "id"})})
+    with pytest.raises(KeyError, match="unknown legs"):
+        battery.union(spark, "unused", b=spark.range(1))

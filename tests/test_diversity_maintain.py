@@ -141,3 +141,23 @@ def test_exactness_bound_raises_instead_of_wrapping(spark, monkeypatch):
     monkeypatch.setattr(corpus_stats, "DIVERSITY_MAX_VECS", 2)
     with pytest.raises(Exception, match="exceeds the signed-64"):
         diversity_from_state(state).collect()
+
+
+def test_short_embedding_raises_the_dim_width_guard(spark):
+    """The sentinel row counts a label's vectors as its exploded
+    component rows div DIM. One short embedding would silently
+    truncate that count; the guard names the invariant instead."""
+    import pyspark.sql.functions as F
+
+    from namegraph_collections_spark.queries.similarity import DIM
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    first = emb.agg(F.min("vec_id")).first()[0]
+    short = emb.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == first, F.slice("embedding", 1, DIM - 1)
+        ).otherwise(F.col("embedding")),
+    )
+    with pytest.raises(Exception, match="DIM-width invariant"):
+        diversity_state_for(short).collect()

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from namegraph_collections_spark.queries.registry import checkpoint_parallel
+from namegraph_collections_spark.queries.registry import checkpoint_parallel, run_parallel
 from tests.conftest import SF_DIR
 
 
@@ -34,3 +34,14 @@ def test_checkpoint_parallel_single_frame_passthrough(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     (ck,) = checkpoint_parallel(docs.select("doc_id"))
     assert ck.count() == docs.count()
+
+
+def test_run_parallel_threads_inherit_session_tags(spark):
+    """Jobs a thunk starts carry the caller's ``spark.addTag`` tags, so
+    ``spark.interruptTag`` and tag-based attribution reach them."""
+    spark.addTag("run_parallel_tag")
+    try:
+        (tags,) = run_parallel(spark, lambda: spark.getTags())
+    finally:
+        spark.removeTag("run_parallel_tag")
+    assert "run_parallel_tag" in tags
