@@ -16,7 +16,7 @@ carries the label's vector count in ``n`` and self-square sum in
 Deployment story this closes: SemDeDup-style redundancy monitoring at
 ingest — each embedding micro-batch updates the state, and the read
 path answers "which clusters are going redundant" without touching
-the corpus (streaming twin: streaming/diversity_stream.py).
+the corpus (streaming twin: ``streaming.run_maintenance_stream``).
 """
 
 from __future__ import annotations
@@ -41,14 +41,14 @@ SENTINEL_DIM = -1
 
 
 def _assert_dim_width(per: DataFrame) -> DataFrame:
-    """Plan-level guard for the DIM-width invariant the sentinel row's
-    vector count rests on: every embedding explodes into exactly
-    ``DIM`` component rows, so a group's row count ``cnt`` is a
-    multiple of ``DIM`` and ``cnt div DIM`` counts its vectors. A short
-    (or long) embedding breaks that and would silently truncate the
-    count, so raise instead. Spelled as a filter, like
+    """Plan-level guard for the DIM-width invariant: every embedding
+    explodes into exactly ``DIM`` component rows, so a group's
+    component count ``cnt`` is ``DIM`` times its vector count ``vecs``.
+    A short, long, empty or NULL embedding breaks that (a NULL one
+    explodes to no component at all, and would silently drop out of
+    the state), so raise instead. Spelled as a filter, like
     ``assert_diversity_bound``, so no projection can prune it."""
-    bad = (F.col("_gid") == 1) & (F.col("cnt") % F.lit(int(DIM)) != 0)
+    bad = (F.col("_gid") == 1) & (F.col("cnt") != F.lit(int(DIM)) * F.col("vecs"))
     return per.filter(
         F.when(
             bad,
@@ -58,7 +58,9 @@ def _assert_dim_width(per: DataFrame) -> DataFrame:
                     F.col("label").cast("string"),
                     F.lit(" has "),
                     F.col("cnt").cast("string"),
-                    F.lit(f" embedding components, not a multiple of DIM={int(DIM)}"),
+                    F.lit(" embedding components over "),
+                    F.col("vecs").cast("string"),
+                    F.lit(f" vectors, not DIM={int(DIM)} per vector"),
                 )
             ),
         ).isNull()
@@ -81,19 +83,23 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     # of ONE rollup aggregation instead (grouping sets (label[,tag],
     # dim) and (label[,tag])): the sentinel's self2 is the same
     # exact-integer Σ qc² in a coarser grouping (long sums are
-    # associative — bit-identical), and n is the coarse row count
-    # div DIM (every vector contributes exactly one exploded row per
-    # dimension; ``_assert_dim_width`` raises when one does not). A single
-    # projection then shapes each grouping-set row into its state row
-    # — one scan, one aggregation, no union, no cache entry.
+    # associative — bit-identical), and n counts the input vectors:
+    # the outer explode gives every vector one row at dim 0, or one
+    # row with a NULL dim when it has no components, so a NULL
+    # embedding is counted instead of vanishing. ``cnt`` counts the
+    # components, and ``_assert_dim_width`` raises unless each vector
+    # has exactly DIM of them. A single projection then shapes each
+    # grouping-set row into its state row — one scan, one
+    # aggregation, no union, no cache entry.
     qv = quantized_unit_vectors(emb, extra=extra)
     per = (
-        qv.select("label", *grp, F.posexplode("qv").alias("dim", "qc"))
+        qv.select("label", *grp, F.posexplode_outer("qv").alias("dim", "qc"))
         .rollup("label", *grp, "dim")
         .agg(
             F.sum("qc").cast("long").alias("s"),
             F.sum(F.col("qc") * F.col("qc")).cast("long").alias("q2"),
-            F.count(F.lit(1)).cast("long").alias("cnt"),
+            F.count("dim").cast("long").alias("cnt"),
+            F.count_if(F.coalesce(F.col("dim"), F.lit(0)) == 0).cast("long").alias("vecs"),
             F.grouping_id().alias("_gid"),
         )
     )
@@ -109,9 +115,7 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
         *grp,
         F.when(F.col("_gid") == 0, F.col("s")).otherwise(zero).alias("s"),
         F.when(F.col("_gid") == 1, F.col("q2")).otherwise(zero).alias("self2"),
-        F.when(F.col("_gid") == 1, F.expr(f"cnt div {int(DIM)}"))
-        .otherwise(zero)
-        .alias("n"),
+        F.when(F.col("_gid") == 1, F.col("vecs")).otherwise(zero).alias("n"),
     )
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from namegraph_collections_spark.queries.registry import REGISTRY, build_parallel, register
+from namegraph_collections_spark.queries.registry import REGISTRY, register, run_parallel
 from namegraph_collections_spark.queries.similarity import (
     TOP_K,
     cosine_topk_bruteforce,
@@ -153,7 +153,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its build is a pure lazy plan, no jobs to overlap. Interleaved
     # in-process A/B at sf0.1: serial 5.0–6.2s vs 3.7–4.3s, 1.37x,
     # 4/4 wins.
-    ivf, pq = build_parallel(
+    ivf, pq = run_parallel(
         spark,
         lambda: ivf_topk(spark, sf_dir),
         lambda: pq_rerank_topk(spark, sf_dir),

@@ -64,7 +64,6 @@ from namegraph_collections_spark.queries.quality_signals import doc_quality_sign
 from namegraph_collections_spark.queries.registry import (
     Battery,
     Melt,
-    build_parallel,
     register,
     register_battery,
     run_parallel,
@@ -241,7 +240,7 @@ def similarity_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_full = ivf_topk_from(emb, assigned, cents).localCheckpoint(eager=False)
         return assigned, ivf_full
 
-    (assigned, ivf_full), cos_full, pq_full = build_parallel(
+    (assigned, ivf_full), cos_full, pq_full = run_parallel(
         spark,
         _ann_chain,
         lambda: cosine_topk_bruteforce(spark, sf_dir).localCheckpoint(eager=False),
@@ -319,7 +318,7 @@ def unigram_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three leg builds run jobs on the driver (the LM checkpoint, the
     # heaps and drift legs' internal checkpoints) and are independent
     # subtrees — build them from the thread pool.
-    lm_full, heaps_full, drift_full = build_parallel(
+    lm_full, heaps_full, drift_full = run_parallel(
         spark,
         lambda: bigram_lm_perplexity(spark, sf_dir).localCheckpoint(eager=False),
         lambda: heaps_law_curve(spark, sf_dir),
@@ -483,7 +482,7 @@ def lexical_dedup_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The spans and source-overlap legs run jobs during their builds
     # (internal checkpoints) and are independent scans by design —
     # build them from the thread pool.
-    spans, srcover = build_parallel(
+    spans, srcover = run_parallel(
         spark,
         lambda: dup_span_extract(spark, sf_dir),
         lambda: source_overlap_matrix(spark, sf_dir),
@@ -813,7 +812,7 @@ def text_mining_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # language-id classifier scan (checkpointed: it feeds two legs)
     # both run jobs during their builds and are independent — build
     # them from the thread pool.
-    (winners, d_final), li = build_parallel(
+    (winners, d_final), li = run_parallel(
         spark,
         lambda: _learn(spark, sf_dir),
         lambda: language_id(spark, sf_dir).localCheckpoint(eager=False),
@@ -929,7 +928,7 @@ def graph_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint) and are independent, so they build from the thread
     pool instead of serially on the driver.
     """
-    closure, triangle = build_parallel(
+    closure, triangle = run_parallel(
         spark,
         lambda: transitive_closure_reachability(spark, sf_dir),
         lambda: neardup_triangles(spark, sf_dir),

@@ -15,8 +15,8 @@ from pyspark.sql.window import Window
 
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
-    checkpoint_parallel,
     register,
+    run_parallel,
     spread,
     tbl,
 )
@@ -411,8 +411,8 @@ NEARDUP_COSINE = 0.2  # synthetic embeddings are near-orthogonal; low bar keeps 
 N_HYPERPLANES = 16  # sign-bit hyperplanes (3 planes / 8 buckets is O(n²/8) at scale)
 EMB_BANDS = 4  # 4 bands × 4 bits — multi-band OR: a pair is a candidate
 EMB_BAND_BITS = 4  # if it agrees on ALL bits of ANY band
-#: Deterministic per-bucket membership cap. The scaling curve
-#: (tools/scale_curve_result.json) caught the old 4096 value as a
+#: Deterministic per-bucket membership cap. The sf0.1 -> sf1 scaling
+#: curve (README, "Measured scaling curve") caught the old 4096 value as a
 #: scale defect: 4 bands x 4 bits is only 64 buckets TOTAL, so bucket
 #: occupancy is n/16 and candidate volume grows O(n^2/64) until the
 #: cap binds — at 4096 that bind point was ~65k vectors and sf1
@@ -1353,15 +1353,18 @@ def lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle/banding build (the battery-wide ReusedExchange finding;
     # measured 16.8s -> 5.7s at sf0.1). The two sides are independent
     # subtrees, so they checkpoint from the §2.6 thread pool.
-    truth, cand = checkpoint_parallel(
-        ngram_jaccard_pairs(spark, sf_dir).select(
-            "doc_a",
-            "doc_b",
-            F.expr("CAST(floor(jaccard * 1000000 + 0.5) AS BIGINT)").alias("j_micro"),
-        ),
-        minhash_lsh_candidates(spark, sf_dir).withColumn("hit", F.lit(1)),
+    truth = ngram_jaccard_pairs(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        F.expr("CAST(floor(jaccard * 1000000 + 0.5) AS BIGINT)").alias("j_micro"),
     )
-    return lsh_tuning_eval_from(truth, cand)
+    cand = minhash_lsh_candidates(spark, sf_dir).withColumn("hit", F.lit(1))
+    truth_ck, cand_ck = run_parallel(
+        spark,
+        lambda: truth.localCheckpoint(eager=False),
+        lambda: cand.localCheckpoint(eager=False),
+    )
+    return lsh_tuning_eval_from(truth_ck, cand_ck)
 
 
 def lsh_tuning_eval_from(truth: DataFrame, cand: DataFrame) -> DataFrame:

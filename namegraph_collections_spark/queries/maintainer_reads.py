@@ -49,9 +49,9 @@ from namegraph_collections_spark.queries.quality_classifier import (
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
     Battery,
-    build_parallel,
     ranked_topk,
     register,
+    run_parallel,
     spread,
     tbl,
 )
@@ -313,7 +313,7 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             hist_state_ck,
             cms_state,
             cand,
-        ) = build_parallel(
+        ) = run_parallel(
             spark,
             lambda: folded_state(
                 emb, "vec_id", ivf_state_for, ["cluster", "dim"], {"s": "sum", "n": "sum"}

@@ -124,34 +124,6 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(n, F.col(key))
 
 
-def checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
-    """Lazy-localCheckpoint several INDEPENDENT frames from a driver
-    thread pool (guide §2.6 — overlap independent jobs).
-
-    Under AQE, even an ``eager=False`` localCheckpoint drives its
-    subtree's shuffle-stage jobs at CALL time (``toRdd`` forces
-    AdaptiveSparkPlanExec to materialize every non-result query
-    stage), so a battery that checkpoints k independent frames pays k
-    serial AQE job chains on the driver — verified: a lazy checkpoint
-    of a 1-exchange aggregation ran 1 job at build. Submitting the
-    independent checkpoints from threads lets each chain's stages
-    backfill the others' stragglers and overlaps their driver-side
-    planning with executor work. Same plans, same blocks, same
-    results — only the submission schedule changes; per-thread job
-    properties are inherited via ``inheritable_thread_target`` as the
-    PySpark docs prescribe for driver-side job threads.
-
-    Callers must only batch frames with NO dependency on each other
-    (a dependent frame would serialize anyway through its parent's
-    lock, wasting a pool slot at best).
-    """
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=False)]
-    return run_parallel(
-        dfs[0].sparkSession, *[lambda df=df: df.localCheckpoint(eager=False) for df in dfs]
-    )
-
-
 def run_parallel(spark: SparkSession, *thunks):
     """Run independent thunks from a driver thread pool and return
     their results in thunk order. Every thunk runs to its end; then the
@@ -162,23 +134,19 @@ def run_parallel(spark: SparkSession, *thunks):
     prescribe for driver-side job threads, so the jobs a thunk starts
     are attributed like the caller's own. A thunk may call
     ``run_parallel`` itself, which is how a dependency chain runs
-    beside an independent build."""
+    beside an independent build.
+
+    Use it for builds that run jobs (iterative loops' per-round
+    checkpoints, eager checkpoints) and for lazy checkpoints of
+    independent frames (``lambda: df.localCheckpoint(eager=False)``):
+    under AQE even a lazy checkpoint runs its subtree's shuffle-stage
+    jobs at call time, so k serial checkpoints pay k serial job chains
+    on the driver. Threads change only the submission schedule; the
+    plans, blocks and results are the same. Thunks must not depend on
+    each other: a dependent frame serializes on its parent anyway."""
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futures]
-
-
-def build_parallel(spark: SparkSession, *thunks):
-    """Run independent DataFrame-BUILDING thunks from driver threads
-    (guide §2.6) — for composites whose legs run jobs during their
-    own build (iterative loops' per-round checkpoints, eager
-    checkpoints), which otherwise execute serially on the driver.
-    Returns the built frames in thunk order. The package zip ships
-    once up front so the per-thread ``ensure_package_shipped`` calls
-    are no-op set lookups, not racing ``addPyFile``s.
-    """
-    ensure_package_shipped(spark)
-    return run_parallel(spark, *thunks)
 
 
 @dataclass(frozen=True)

@@ -346,7 +346,7 @@ def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # happens in integer space and both engines agree bit-for-bit.
     # ROUND(double, 6) diverged here at sf1 — 13911.3/320 = 43.4728125
     # is an exact half at 6 decimals, and the engines' half-way rules
-    # differ (caught by tools/sweep_scales.py at sf1).
+    # differ (caught by the sf1 oracle-parity sweep, README).
     return merged.select(
         "bucket_us",
         "event_type",

@@ -45,8 +45,8 @@ from namegraph_collections_spark.plans.collections_core import (
 )
 from namegraph_collections_spark.functions.det_round import round6_det
 from namegraph_collections_spark.queries.registry import (
-    checkpoint_parallel,
     register,
+    run_parallel,
     tbl,
 )
 from namegraph_collections_spark.sources.ntriples import assemble_entities
@@ -418,7 +418,11 @@ def _fixture(spark: SparkSession, sf_dir: str):
     # iteration. The other five inputs are shallow single-selects over
     # the checkpointed base and stay lazy (each checkpoint is a
     # sequential job barrier; fewer barriers, faster wall-clock).
-    triples_ck, wikimapper_ck = checkpoint_parallel(all_triples, wikimapper)
+    triples_ck, wikimapper_ck = run_parallel(
+        spark,
+        lambda: all_triples.localCheckpoint(eager=False),
+        lambda: wikimapper.localCheckpoint(eager=False),
+    )
     return (
         triples_ck,
         wikimapper_ck,

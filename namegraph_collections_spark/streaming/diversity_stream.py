@@ -1,15 +1,14 @@
-"""Continuous embedding-diversity maintenance — the foreachBatch twin
-of operators/diversity_maintain.py: new embedding files fold their
-(label, dim) component sums and per-label sentinel rows into the
-standing state via the batch function verbatim, so an ingest pipeline
-watches its clusters' redundancy drift without ever rescanning the
-store. Same stamp-keyed replay contract as every maintenance stream.
+"""The embeddings source of the streaming maintainers: new embedding
+files feed ``run_maintenance_stream`` (streaming/__init__.py) with the
+diversity or IVF maintainer (operators/diversity_maintain.py,
+operators/ivf_maintain.py), so an ingest pipeline watches its
+clusters' redundancy drift and an ANN index's sufficient statistics
+without rescanning the store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (schema literals)
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -17,11 +16,6 @@ from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
-)
-
-from namegraph_collections_spark.operators.additive_state import batch_stamp
-from namegraph_collections_spark.operators.diversity_maintain import (
-    maintain_diversity_state,
 )
 
 EMBEDDINGS_SCHEMA = StructType(
@@ -38,27 +32,4 @@ def read_embeddings_stream(spark: SparkSession, emb_dir: str) -> DataFrame:
         spark.readStream.schema(EMBEDDINGS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(emb_dir)
-    )
-
-
-def run_diversity_maintenance_stream(
-    emb_stream: DataFrame, base_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain an available-now embeddings stream through the diversity
-    maintenance: every micro-batch merges via the batch function
-    verbatim, stamped with the shared zero-padded batch id."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_diversity_state(
-            batch_df.sparkSession, base_dir, batch_df, batch_stamp(batch_id)
-        )
-
-    (
-        emb_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )

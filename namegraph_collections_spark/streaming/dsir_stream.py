@@ -1,53 +1,22 @@
-"""Continuous DSIR — the streaming halves of the importance-weight
-pipeline (operators/dsir_maintain.py):
+"""Continuous DSIR scoring — the ingest half of the importance-weight
+pipeline (operators/dsir_maintain.py), whose state half runs as
+``run_maintenance_stream(stream, maintain_dsir_state, ...)``
+(streaming/__init__.py).
 
-- **State maintenance** (``run_dsir_maintenance_stream``): every
-  micro-batch folds its hashed-gram bucket counts into the standing
-  <= DSIR_B-row state via the BATCH maintenance function verbatim
-  (one code path, no drift) — the same foreachBatch upsert idiom as
-  the gate maintenance, with the same stamp-keyed replay idempotence.
-
-- **Ingest scoring** (``dsir_score_stream``): new documents are
-  scored against a FITTED weight-table snapshot as a plain
-  append-mode transformation — the weight table is a small static
-  broadcast side, the stream side is the same per-doc bucket-count
-  program as the batch scorer (``dsir_score_against``), so the
-  filter runs at ingest bandwidth with zero state. This is the
-  deployment split the DSIR paper implies: fit the distributions on
-  the standing corpus, apply the ratio at the door.
+New documents are scored against a FITTED weight-table snapshot as a
+plain append-mode transformation — the weight table is a small static
+broadcast side, the stream side is the same per-doc bucket-count
+program as the batch scorer (``dsir_score_against``), so the filter
+runs at ingest bandwidth with zero state. This is the deployment
+split the DSIR paper implies: fit the distributions on the standing
+corpus, apply the ratio at the door.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from namegraph_collections_spark.operators.additive_state import batch_stamp
-from namegraph_collections_spark.operators.dsir_maintain import (
-    maintain_dsir_state,
-)
-
-
-def run_dsir_maintenance_stream(
-    docs_stream: DataFrame, base_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain an available-now documents stream through the DSIR
-    bucket-state maintenance: each micro-batch merges via the batch
-    function verbatim, stamped with the zero-padded batch id."""
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        maintain_dsir_state(
-            batch_df.sparkSession, base_dir, batch_df, batch_stamp(batch_id)
-        )
-
-    (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+from namegraph_collections_spark.streaming import drain_batches
 
 
 def run_dsir_scoring_stream(
@@ -75,15 +44,8 @@ def run_dsir_scoring_stream(
         write_scored_batch,
     )
 
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_scored_batch(dsir_score_against(batch_df, bw), out_dir, batch_id)
-
-    (
-        docs_stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_batches(
+        docs_stream,
+        lambda batch_df, batch_id: write_scored_batch(dsir_score_against(batch_df, bw), out_dir, batch_id),
+        checkpoint_dir,
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from namegraph_collections_spark.queries.quality_classifier import (
     nbq_score_against,
 )
+from namegraph_collections_spark.streaming import drain_batches
 from namegraph_collections_spark.streaming.idempotent_sink import (
     write_scored_batch,
 )
@@ -39,18 +40,8 @@ def run_nbq_scoring_stream(
     (``ingest_batch=`` partitions, dynamic overwrite) so an
     at-least-once redelivery overwrites its own partition instead of
     appending a duplicate copy — see streaming/idempotent_sink.py."""
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_scored_batch(
-            nbq_score_against(batch_df, w, prior), out_dir, batch_id
-        )
-
-    (
-        docs_stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_batches(
+        docs_stream,
+        lambda batch_df, batch_id: write_scored_batch(nbq_score_against(batch_df, w, prior), out_dir, batch_id),
+        checkpoint_dir,
     )

@@ -80,9 +80,7 @@ def test_streaming_maintenance_equals_the_one_shot_sketch(spark, tmp_path):
     the streaming maintenance leaves EXACTLY the one-shot sketch."""
     import shutil
 
-    from namegraph_collections_spark.streaming.cms_maintain_stream import (
-        run_cms_maintenance_stream,
-    )
+    from namegraph_collections_spark.streaming import run_maintenance_stream
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
@@ -98,7 +96,7 @@ def test_streaming_maintenance_equals_the_one_shot_sketch(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "cms_state_stream")
-    run_cms_maintenance_stream(
-        read_documents_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_documents_stream(spark, str(zone)), maintain_cms_state, base, str(tmp_path / "ckpt")
     )
     assert _rows(latest_snapshot(spark, base)) == _rows(_one_shot_sketch(spark))

@@ -49,9 +49,9 @@ def test_replayed_batch_does_not_remerge(spark, tmp_path):
 def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
     import shutil
 
+    from namegraph_collections_spark.streaming import run_maintenance_stream
     from namegraph_collections_spark.streaming.diversity_stream import (
         read_embeddings_stream,
-        run_diversity_maintenance_stream,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -64,8 +64,8 @@ def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "div_stream_state")
-    run_diversity_maintenance_stream(
-        read_embeddings_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_embeddings_stream(spark, str(zone)), maintain_diversity_state, base, str(tmp_path / "ckpt")
     )
     got = diversity_from_state(latest_snapshot(spark, base))
     want = diversity_from_state(diversity_state_for(emb))
@@ -161,3 +161,20 @@ def test_short_embedding_raises_the_dim_width_guard(spark):
     )
     with pytest.raises(Exception, match="DIM-width invariant"):
         diversity_state_for(short).collect()
+
+
+def test_null_embedding_raises_the_dim_width_guard(spark):
+    """A NULL embedding explodes to no component rows, so a component
+    count alone cannot see it: the vector would drop out of the state
+    while the one-shot query still counts it. The guard counts each
+    label's vectors next to its components and names the invariant."""
+    import pyspark.sql.functions as F
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    first = emb.agg(F.min("vec_id")).first()[0]
+    nulled = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == first, F.lit(None)).otherwise(F.col("embedding")),
+    )
+    with pytest.raises(Exception, match="DIM-width invariant"):
+        diversity_state_for(nulled).collect()

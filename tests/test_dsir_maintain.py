@@ -66,9 +66,7 @@ def test_streaming_maintenance_rederives_the_one_shot_weights(spark, tmp_path):
     import shutil
 
     from namegraph_collections_spark.operators.cdc import latest_snapshot
-    from namegraph_collections_spark.streaming.dsir_stream import (
-        run_dsir_maintenance_stream,
-    )
+    from namegraph_collections_spark.streaming import run_maintenance_stream
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
@@ -83,8 +81,8 @@ def test_streaming_maintenance_rederives_the_one_shot_weights(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "dsir_state_stream")
-    run_dsir_maintenance_stream(
-        read_documents_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_documents_stream(spark, str(zone)), maintain_dsir_state, base, str(tmp_path / "ckpt")
     )
 
     got = dsir_weights_from_state(latest_snapshot(spark, base))

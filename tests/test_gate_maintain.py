@@ -62,9 +62,7 @@ def test_streaming_maintenance_rederives_the_one_shot_gate(spark, tmp_path):
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
-    from namegraph_collections_spark.streaming.gate_maintain_stream import (
-        run_gate_maintenance_stream,
-    )
+    from namegraph_collections_spark.streaming import run_maintenance_stream
     from namegraph_collections_spark.operators.cdc import latest_snapshot
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -77,8 +75,8 @@ def test_streaming_maintenance_rederives_the_one_shot_gate(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "gate_state_stream")
-    run_gate_maintenance_stream(
-        read_documents_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_documents_stream(spark, str(zone)), maintain_gate_state, base, str(tmp_path / "ckpt")
     )
 
     got = gate_from_state(latest_snapshot(spark, base))

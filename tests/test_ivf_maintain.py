@@ -60,9 +60,9 @@ def test_balance_row_is_consistent(spark, tmp_path):
 
 
 def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
-    from namegraph_collections_spark.streaming.ivf_stream import (
+    from namegraph_collections_spark.streaming import run_maintenance_stream
+    from namegraph_collections_spark.streaming.diversity_stream import (
         read_embeddings_stream,
-        run_ivf_maintenance_stream,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -75,8 +75,8 @@ def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "ivf_stream_state")
-    run_ivf_maintenance_stream(
-        read_embeddings_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_embeddings_stream(spark, str(zone)), maintain_ivf_state, base, str(tmp_path / "ckpt")
     )
     got = centroids_from_state(latest_snapshot(spark, base))
     want = centroids_from_state(ivf_state_for(emb))

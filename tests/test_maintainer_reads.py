@@ -107,7 +107,7 @@ def test_failed_state_build_releases_spread_caches(spark, monkeypatch):
         raise RuntimeError("state build failed")
 
     spark.catalog.clearCache()
-    monkeypatch.setattr(maintainer_reads, "build_parallel", failing_build)
+    monkeypatch.setattr(maintainer_reads, "run_parallel", failing_build)
     with pytest.raises(RuntimeError, match="state build failed"):
         maintainer_reads.maintainer_state_battery(spark, SF_DIR)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

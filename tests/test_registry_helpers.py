@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from namegraph_collections_spark.queries.registry import checkpoint_parallel, run_parallel
+from namegraph_collections_spark.queries.registry import run_parallel
 from tests.conftest import SF_DIR
 
 
@@ -20,7 +20,9 @@ def test_checkpoint_parallel_matches_serial_checkpoints(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     a = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     b = docs.select("doc_id").filter(F.col("doc_id") % 2 == 0)
-    ck_a, ck_b = checkpoint_parallel(a, b)
+    ck_a, ck_b = run_parallel(
+        spark, lambda: a.localCheckpoint(eager=False), lambda: b.localCheckpoint(eager=False)
+    )
     assert _rows(ck_a) == _rows(a)
     assert _rows(ck_b) == _rows(b)
     # lineage really is truncated (the checkpoint happened): the
@@ -32,7 +34,7 @@ def test_checkpoint_parallel_matches_serial_checkpoints(spark):
 
 def test_checkpoint_parallel_single_frame_passthrough(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    (ck,) = checkpoint_parallel(docs.select("doc_id"))
+    (ck,) = run_parallel(spark, lambda: docs.select("doc_id").localCheckpoint(eager=False))
     assert ck.count() == docs.count()
 
 

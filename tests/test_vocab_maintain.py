@@ -68,9 +68,7 @@ def test_streaming_twin_matches_the_batch_path(spark, tmp_path):
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
-    from namegraph_collections_spark.streaming.vocab_stream import (
-        run_vocab_maintenance_stream,
-    )
+    from namegraph_collections_spark.streaming import run_maintenance_stream
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     zone = tmp_path / "zone"
@@ -82,8 +80,8 @@ def test_streaming_twin_matches_the_batch_path(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     base = str(tmp_path / "vocab_stream_state")
-    run_vocab_maintenance_stream(
-        read_documents_stream(spark, str(zone)), base, str(tmp_path / "ckpt")
+    run_maintenance_stream(
+        read_documents_stream(spark, str(zone)), maintain_vocab_state, base, str(tmp_path / "ckpt")
     )
     got = latest_snapshot(spark, base)
     assert _rows(got) == _rows(vocab_state_for(docs))

@@ -1,18 +1,25 @@
 #!/usr/bin/env python3
-"""Regenerate PLANS.md: formatted physical plans for the bench headline
-queries at sf0.001, the artifact backing the engine's plan-quality
-claims (pushdown reaching scans, broadcast dims, whole-stage codegen
-spans, no Python eval nodes in relational paths).
+"""Render formatted physical plans of registered queries, with every
+pre-checkpoint frame.
 
-Run from the repo root: python3 tools/dump_plans.py
+    python3 tools/dump_plans.py                      # bench.py's HEADLINE -> PLANS.md
+    python3 tools/dump_plans.py q1 q2 [--sf-dir DIR] [--out FILE]
+
+With no query names it regenerates PLANS.md at sf0.001: the artifact
+backing the engine's plan-quality claims (pushdown reaching scans,
+broadcast dims, whole-stage codegen spans, no Python eval nodes in
+relational paths). Named queries go to ``--out`` (default stdout), the
+per-query before/after evidence of a plan change (plans/README.md).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from namegraph_collections_spark.queries import REGISTRY  # noqa: E402
@@ -71,15 +78,21 @@ def _capture_checkpoints() -> list:
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="registered query names (default: bench.py's HEADLINE into PLANS.md)")
+    ap.add_argument("--sf-dir", default=SF)
+    ap.add_argument("--out", help="output file (default: PLANS.md without query names, else stdout)")
+    args = ap.parse_args()
+    names = args.queries or HEADLINE
     spark = get_spark("plan-dump", cpus=8)
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     captured = _capture_checkpoints()
-    out = [HEADER]
+    out = [] if args.queries else [HEADER]
     n_pre = 0
-    for name in HEADLINE:
+    for name in names:
         captured.clear()
-        df = REGISTRY[name].fn(spark, SF)
+        df = REGISTRY[name].fn(spark, args.sf_dir)
         plan = _ascii_safe(df._jdf.queryExecution().explainString(mode))
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
         for i, pre in enumerate(captured, 1):
@@ -91,12 +104,13 @@ def main() -> None:
                 f"```\n{pre_plan}\n```\n"
             )
             n_pre += 1
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    path = args.out or (None if args.queries else os.path.join(REPO, "PLANS.md"))
+    if path is None:
+        sys.stdout.write("".join(out))
+        return
+    with open(path, "w") as f:
         f.write("".join(out))
-    print(
-        f"wrote PLANS.md with {len(HEADLINE)} plans "
-        f"+ {n_pre} pre-checkpoint frames"
-    )
+    print(f"wrote {path} with {len(names)} plans + {n_pre} pre-checkpoint frames", file=sys.stderr)
 
 
 if __name__ == "__main__":
