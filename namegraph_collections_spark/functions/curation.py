@@ -3,9 +3,9 @@
 curate_name is pure column expressions (JVM-side). curate_member needs
 the Python normalizer, so it ships as (a) a plain Python function (the
 semantic contract + unit-testable against the reference goldens) and
-(b) an Arrow-batched pandas UDF applied with the reference's own
-distinct→compute→join pattern (create_merged.py:100-134 — SURVEY §4
-"distinct-before-expensive-UDF").
+(b) an Arrow-batched pandas UDF, which plans/enrich_merge.py applies
+with the reference's own distinct→compute→join pattern
+(create_merged.py:100-134 — SURVEY §4 "distinct-before-expensive-UDF").
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import re
 from urllib.parse import unquote
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -95,21 +95,3 @@ def curate_member_udf(members: pd.Series) -> pd.DataFrame:
         curated.append(r[0] if r else None)
         tokenized.append(r[1] if r else None)
     return pd.DataFrame({"curated": curated, "tokenized": tokenized})
-
-
-def curate_members_distinct_join(df: DataFrame, member_col: str = "member") -> DataFrame:
-    """Apply C5 with the distinct→compute→join idiom.
-
-    The reference memoizes per-row in RocksDB (memoize_ram,
-    create_merged.py:44-79); the Spark-scale equivalent computes each
-    distinct member once and joins the result back — at 100 TB the UDF
-    runs over |distinct members| (~2.1M in the reference run), not
-    |member occurrences| (~27M).
-    """
-    distinct = df.select(member_col).distinct()
-    computed = distinct.withColumn("_cur", curate_member_udf(F.col(member_col))).select(
-        member_col,
-        F.col("_cur.curated").alias("curated"),
-        F.col("_cur.tokenized").alias("tokenized"),
-    )
-    return df.join(computed, member_col, "left")

@@ -4,21 +4,16 @@ Reference: JSONLIndex.hash (/root/reference/airflow/dags/
 update_es.py:98-104) — sha256 updated with
 ``json.dumps(value, sort_keys=True)`` of each compare-field, in the
 field-list order. Byte-for-byte parity requires Python's exact dump
-formatting, so this is a pandas UDF over the JSON form of each field
-(the engine's CDC joins use the cheaper column-level row_hash in
-operators/cdc.py; this UDF exists for parity with reference hashes).
+formatting, so this is a plain Python function over the JSON form of
+each field (the engine's CDC joins use the cheaper column-level
+row_hash in operators/cdc.py; this one exists for parity with
+reference hashes).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 
 def canonical_document_hash(field_jsons: list[str | None]) -> str:
@@ -29,17 +24,3 @@ def canonical_document_hash(field_jsons: list[str | None]) -> str:
         value = None if fj is None else json.loads(fj)
         h.update(json.dumps(value, sort_keys=True).encode("utf-8"))
     return h.hexdigest()
-
-
-@pandas_udf(T.StringType())
-def canonical_hash_udf(fields: pd.Series) -> pd.Series:
-    """Input: array<string> of per-field JSON values (use F.to_json on
-    struct columns); output: hex sha256."""
-    return fields.map(lambda arr: canonical_document_hash(list(arr)) if arr is not None else None)
-
-
-def document_hash_col(*field_cols: Column) -> Column:
-    """Column helper: canonical hash over struct/scalar columns in the
-    given (reference UPDATING_FIELDS) order — update_es.py:27-29."""
-    jsons = F.array(*[F.to_json(c) if not isinstance(c, str) else F.to_json(F.col(c)) for c in field_cols])
-    return canonical_hash_udf(jsons)

@@ -10,21 +10,17 @@ Reference: banner (create_merged.py:898-899, 915 →
 ``tc-{n:02d}.png`` with ``randint(0, 19)``); AvatarEmoji.get_emoji
 (create_merged.py:829-856: sort own types by ascending global emoji
 count — missing → maxsize — seed with the id, choice from the first
-type's emoji list, else the OTHER list); random 12-char ES id
-(update_es.py:133-135).
+type's emoji list, else the OTHER list).
 """
 
 from __future__ import annotations
 
 import random
-import string
 import sys
 
 import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
-
-_ID_ALPHABET = string.ascii_letters + string.digits + "_"
 
 
 def seeded_banner(collection_id: str) -> str:
@@ -47,16 +43,6 @@ def seeded_emoji(
     if ordered and ordered[0] in emojis_by_type:
         return rnd.choice(emojis_by_type[ordered[0]])
     return rnd.choice(other_emojis)
-
-
-def generate_id(seed: str | None = None) -> str:
-    """12-char [A-Za-z0-9_] id (update_es.py:133-135). Seeded form is
-    the engine's deterministic default (SURVEY C9: randomness only
-    affects ES _ids; determinism makes conflict retries vanish)."""
-    rnd = random.Random()
-    if seed is not None:
-        rnd.seed(seed)
-    return "".join(rnd.choice(_ID_ALPHABET) for _ in range(12))
 
 
 @pandas_udf(T.StringType())

@@ -21,10 +21,6 @@ import math
 import re
 from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
 from namegraph_collections_spark.functions.normalize import _is_emoji
 
 _SPLIT_RE = re.compile(r"([a-zA-Z0-9']+|\d+)")
@@ -138,8 +134,3 @@ def tokenize_name(name: str) -> list[str]:
                 # normalized labels, so these are rare punctuation runs.
                 tokens.append(chunk)
     return tokens
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_name_udf(names: pd.Series) -> pd.Series:
-    return names.map(lambda n: tokenize_name(n) if n is not None else None)

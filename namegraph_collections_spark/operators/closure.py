@@ -15,9 +15,10 @@ Scale notes:
 - cycles terminate naturally because the frontier ∖ known set goes
   empty (same role as the DFS visited-set guard at
   create_collections.py:560-590);
-- a ``same_as`` redirect table is folded in as an edge rewrite
-  (edges ∪ same_as∘edges) before iterating, mirroring the per-node
-  fallback at create_collections.py:566-575.
+- a ``same_as`` redirect table is folded in by the caller as an edge
+  rewrite (edges ∪ same_as∘edges) before iterating
+  (plans/collections_core.py::subclass_reachability), mirroring the
+  per-node fallback at create_collections.py:566-575.
 """
 
 from __future__ import annotations
@@ -29,27 +30,6 @@ from namegraph_collections_spark.operators.iterative import (
     checkpoint_rdd_id,
     unpersist_rdd_ids,
 )
-
-
-def rewrite_edges_with_redirects(edges: DataFrame, same_as: DataFrame) -> DataFrame:
-    """Fold redirects into the edge set: if s→s' is a redirect, then
-    every edge s'→d is also reachable from s (and d-redirects apply on
-    the target side).
-
-    ``edges``: (src, dst); ``same_as``: (alias, canonical). An alias
-    with no edges of its own inherits the canonical node's outgoing
-    edges (the ParentFinder fallback: "if db2[X] missing, use
-    db2[same_as[X]]").
-    """
-    alias_src = (
-        same_as.join(edges, same_as["canonical"] == edges["src"])
-        .select(same_as["alias"].alias("src"), edges["dst"])
-    )
-    alias_dst = (
-        edges.join(same_as, edges["dst"] == same_as["alias"])
-        .select(edges["src"], same_as["canonical"].alias("dst"))
-    )
-    return edges.unionByName(alias_src).unionByName(alias_dst).distinct()
 
 
 def transitive_closure(

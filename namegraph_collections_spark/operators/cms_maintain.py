@@ -36,32 +36,16 @@ from pyspark.sql import DataFrame, SparkSession
 from namegraph_collections_spark.operators.additive_state import (
     maintain_additive_state,
 )
-from namegraph_collections_spark.queries.rollups import (
-    cms_bigrams_of,
-    cms_sketch_of,
-)
-
-#: State schema: one row per sketch cell — at most CMS_D x CMS_W rows.
-STATE_COLS = ["d", "bucket", "c"]
-
-
-def cms_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
-    """A batch's additive contribution: the IDENTICAL bigram + cell
-    program as the one-shot sketch, over the batch's documents only.
-    ``extra`` names a pass-through grouping column (the single-pass
-    fold fixture's batch tag — see ivf_state_for's docstring)."""
-    cols = ["text"] if extra is None else [extra, "text"]
-    return cms_sketch_of(
-        cms_bigrams_of(docs.select(*cols), extra=extra), extra=extra
-    )
+from namegraph_collections_spark.queries.rollups import cms_state_for
 
 
 def maintain_cms_state(
     spark: SparkSession, base_dir: str, new_docs: DataFrame, stamp: str
 ) -> DataFrame:
-    """Merge a batch's cell counts into the standing sketch and rotate
-    a dated snapshot (sum-by-key over <= CMS_D x CMS_W rows — the
-    merge costs one tiny shuffle whatever the batch size). Same
+    """Merge a batch's cell counts (``cms_state_for``) into the
+    standing sketch and rotate a dated snapshot (sum-by-key over
+    <= CMS_D x CMS_W rows — the merge costs one tiny shuffle whatever
+    the batch size). Same
     idempotence/ordering contract as every additive maintainer —
     operators/additive_state.py holds the single implementation:
     committed stamp -> repoint only; crashed partial directory ->

@@ -7,8 +7,10 @@ DSIR's two hashed-ngram distributions (queries/data_selection.py) are
 plain occurrence counts per bucket, so the state IS the aggregate:
 one row per bucket carrying (ct, cr), merged by sum-by-key, bounded
 at DSIR_B rows FOREVER regardless of corpus size. A nightly batch (or
-a micro-batch) folds its gram counts in, and the importance-weight
-table re-derives from state alone — the raw corpus is never
+a micro-batch) folds its gram counts in (``dsir_state_for``), and
+``dsir_weights_from_state`` — the same read the one-shot
+``dsir_importance_weights`` runs over the whole corpus — re-derives
+the importance-weight table from state alone; the raw corpus is never
 re-scanned. Scoring new documents is a broadcast join against the
 (tiny) re-derived weight table, so the ingest path
 (streaming/dsir_stream.py) touches no state at all.
@@ -22,38 +24,20 @@ the overwrite merge; an out-of-order batch replay raises.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.additive_state import (
     maintain_additive_state,
 )
-from namegraph_collections_spark.queries.data_selection import (
-    DSIR_B,
-    _lp_micro_sql,
-    dsir_hashed_grams_of,
-)
-
-#: State schema: one row per feature bucket — at most DSIR_B rows.
-STATE_COLS = ["bucket", "ct", "cr"]
-
-
-def dsir_state_for(docs: DataFrame) -> DataFrame:
-    """A batch's additive contribution to the bucket state — the
-    IDENTICAL hashed-gram program as the one-shot query, aggregated to
-    (bucket, target-count, raw-count)."""
-    hashed = dsir_hashed_grams_of(docs.select("doc_id", "source", "text"))
-    return hashed.groupBy("bucket").agg(
-        F.sum(F.col("is_target").cast("long")).alias("ct"),
-        F.sum((~F.col("is_target")).cast("long")).alias("cr"),
-    )
+from namegraph_collections_spark.queries.data_selection import dsir_state_for
 
 
 def maintain_dsir_state(
     spark: SparkSession, base_dir: str, new_docs: DataFrame, stamp: str
 ) -> DataFrame:
-    """Merge a batch's bucket counts into the standing state and
-    rotate a dated snapshot (sum-by-key over <= {DSIR_B} rows — the
-    merge itself costs one tiny shuffle whatever the batch size).
+    """Merge a batch's bucket counts (``dsir_state_for``) into the
+    standing state and rotate a dated snapshot (sum-by-key over
+    <= DSIR_B rows — the merge itself costs one tiny shuffle whatever
+    the batch size).
     Same idempotence/ordering contract as every additive maintainer —
     operators/additive_state.py holds the single implementation:
     committed stamp -> repoint only; crashed partial directory ->
@@ -67,18 +51,3 @@ def maintain_dsir_state(
         stamp=stamp,
     )
 
-
-def dsir_weights_from_state(state: DataFrame) -> DataFrame:
-    """Re-derive the (bucket, lw_micro) importance-weight table from
-    the bucket state alone: the totals are state sums, so the
-    re-derivation never re-reads a document. Equal by construction to
-    ``dsir_bucket_weights_of`` over the union of every merged batch
-    (pinned by tests/test_dsir_maintain.py)."""
-    tot = state.agg(
-        F.sum("ct").alias("t_tot"), F.sum("cr").alias("r_tot")
-    )
-    return state.crossJoin(F.broadcast(tot)).selectExpr(
-        "bucket",
-        f"{_lp_micro_sql('ct', 't_tot')}"
-        f" - {_lp_micro_sql('cr', 'r_tot')} AS lw_micro",
-    )

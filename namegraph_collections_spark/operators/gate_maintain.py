@@ -10,9 +10,12 @@ The standard IVM answer is to maintain state at the DISTINCT KEY's
 grain — one row per (domain, norm_url) carrying the additive measures
 — because at that grain everything IS additive: merging a batch is a
 sum-by-key, distinct pages per domain is a row count, and the gate
-re-derives exactly. Same dated-snapshot rotation as the MinHash band
-index (operators/dedup_index.py); day N+1's batch merges into day N's
-state.
+re-derives exactly. The state program and its read
+(``gate_state_for`` / ``gate_from_state``) live next to the one-shot
+rollup, which is exactly that read over the whole corpus's state;
+this module merges batches. Same dated-snapshot rotation as the
+MinHash band index (operators/dedup_index.py); day N+1's batch
+merges into day N's state.
 
 Scale shape: per batch, the fused per-doc program (scan bandwidth) +
 one (domain, norm_url)-keyed partial-aggregated shuffle of the batch
@@ -27,31 +30,14 @@ a reduction, never a re-scan of any document.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.additive_state import (
     maintain_additive_state,
 )
 from namegraph_collections_spark.queries.web_rollup import (
-    finish_rollup,
+    gate_state_for,
     per_doc_web_frame_of,
 )
-
-#: State schema: one row per (domain, norm_url) — the distinct key's
-#: grain, where every measure is additive.
-STATE_COLS = ["domain", "norm_url", "n_docs", "n_keep", "sum_words"]
-
-
-def gate_state_for(docs: DataFrame) -> DataFrame:
-    """Page-grain state contribution of a batch — the IDENTICAL fused
-    per-doc arithmetic as the full-corpus rollup, aggregated to the
-    (domain, norm_url) key."""
-    per_doc = per_doc_web_frame_of(docs.select("doc_id", "source", "text"))
-    return per_doc.groupBy("domain", "norm_url").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum("n_words").cast("long").alias("sum_words"),
-    )
 
 
 def maintain_gate_state(
@@ -59,36 +45,22 @@ def maintain_gate_state(
 ) -> DataFrame:
     """Merge a batch into the standing page-grain state and rotate a
     dated snapshot; returns the rotated state as read back from
-    storage. The merge, the per-stamp replay idempotence (committed
+    storage (``gate_from_state`` reads the gate from it). The batch's
+    contribution is ``gate_state_for`` over its fused per-doc frame.
+    The merge, the per-stamp replay idempotence (committed
     ``_SUCCESS`` snapshots only repoint; crashed half-writes fall
     through to a safe overwrite merge), and the out-of-order replay
     guard are the shared additive-state contract —
     operators/additive_state.py holds the single implementation and
-    the full durability docstring; this module contributes only the
-    gate's page-grain contribution program. Callers key the stamp to
-    the batch identity (the streaming twin stamps with the
-    zero-padded micro-batch id) and keep stamps lexicographically
-    monotonic."""
+    the full durability docstring. Callers key the stamp to the batch
+    identity (the streaming twin stamps with the zero-padded
+    micro-batch id) and keep stamps lexicographically monotonic."""
     return maintain_additive_state(
         spark,
         base_dir,
-        gate_state_for(new_docs),
+        gate_state_for(per_doc_web_frame_of(new_docs.select("doc_id", "source", "text"))),
         key_cols=["domain", "norm_url"],
         sum_cols=["n_docs", "n_keep", "sum_words"],
         stamp=stamp,
     )
 
-
-def gate_from_state(state: DataFrame) -> DataFrame:
-    """Re-derive the gate table from the page-grain state: distinct
-    pages per domain is a ROW COUNT at this grain, everything else a
-    sum — then the shared ``finish_rollup`` emits the exact
-    host_quality_rollup schema (pinned equal to the one-shot rollup
-    by tests/test_gate_maintain.py)."""
-    agg = state.groupBy("domain").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_pages"),
-        F.sum("n_keep").alias("n_keep"),
-        F.sum("sum_words").alias("sum_words"),
-    )
-    return finish_rollup(agg)

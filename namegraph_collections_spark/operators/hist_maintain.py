@@ -9,10 +9,10 @@ table itself — clamped to HIST_MAX_B rows by construction — and a
 batch merge is a sum-by-key. Because bucketing is a per-ROW function
 of l_extendedprice, ANY batching of the table partitions the counts,
 and the maintained histogram equals the one-shot histogram EXACTLY;
-the quantile read (``hist_quantiles_from_buckets``, shared with the
-one-shot query) therefore re-derives exactly the registered
-``histogram_quantiles`` output from state alone — no re-scan
-(pinned by tests/test_hist_maintain.py).
+the quantile read (``hist_quantiles_from_buckets``, which the
+one-shot query runs over ``hist_buckets_of``) therefore re-derives
+exactly the registered ``histogram_quantiles`` output from state
+alone — no re-scan (pinned by tests/test_hist_maintain.py).
 
 This is the production shape for percentile monitoring over a
 100 TB fact stream: each day folds its <= 2048-row grid in, and
@@ -28,42 +28,22 @@ from pyspark.sql import DataFrame, SparkSession
 from namegraph_collections_spark.operators.additive_state import (
     maintain_additive_state,
 )
-from namegraph_collections_spark.queries.percentiles import (
-    hist_buckets_of,
-    hist_quantiles_from_buckets,
-)
-
-#: State schema: one row per grid bucket — at most HIST_MAX_B rows.
-STATE_COLS = ["bucket", "c"]
-
-
-def hist_state_for(li: DataFrame, extra: str | None = None) -> DataFrame:
-    """A batch's additive contribution: the IDENTICAL grid program as
-    the one-shot histogram, over the batch's rows only. ``extra``
-    names a pass-through grouping column (the single-pass fold
-    fixture's batch tag — see ivf_state_for's docstring)."""
-    return hist_buckets_of(li, extra=extra)
+from namegraph_collections_spark.queries.percentiles import hist_buckets_of
 
 
 def maintain_hist_state(
     spark: SparkSession, base_dir: str, new_rows: DataFrame, stamp: str
 ) -> DataFrame:
-    """Merge a batch's grid counts into the standing histogram and
-    rotate a dated snapshot. Same idempotence/ordering contract as
-    every additive maintainer — operators/additive_state.py holds the
-    single implementation."""
+    """Merge a batch's grid counts (``hist_buckets_of``) into the
+    standing histogram and rotate a dated snapshot. Same
+    idempotence/ordering contract as every additive maintainer —
+    operators/additive_state.py holds the single implementation."""
     return maintain_additive_state(
         spark,
         base_dir,
-        hist_state_for(new_rows),
+        hist_buckets_of(new_rows),
         key_cols=["bucket"],
         sum_cols=["c"],
         stamp=stamp,
     )
 
-
-def hist_quantiles_from_state(state: DataFrame) -> DataFrame:
-    """Re-derive p50/p90/p99 from the maintained grid alone — the
-    shared read path, equal by construction to the one-shot query
-    over the union of every merged batch."""
-    return hist_quantiles_from_buckets(state)

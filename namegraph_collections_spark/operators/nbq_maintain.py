@@ -10,8 +10,9 @@ state alone. State layout: one row per feature bucket carrying
 (cp, cn) gram counts, plus ONE sentinel row ``bucket = -1`` carrying
 the train DOC counts (np, nn) in the same two columns — the sentinel
 keeps the whole model in a single additive frame so the shared
-maintainer handles it unchanged; the read path splits it back out.
-Bounded at NBQ_B + 1 rows forever.
+maintainer handles it unchanged; the read path
+(``nbq_model_from_state``, the same read the one-shot fit runs over the
+whole corpus) splits it back out. Bounded at NBQ_B + 1 rows forever.
 
 This closes the loop on the filter's deployment story
 (queries/quality_classifier.py): fit once -> apply at ingest
@@ -23,80 +24,21 @@ twin below) without ever re-scanning the labeled corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.additive_state import (
     maintain_additive_state,
 )
-from namegraph_collections_spark.queries.quality_classifier import (
-    _NBQ_IS_TRAIN_SPARK,
-    _NBQ_POS_PRED,
-    _lnr_micro_sql,
-    _lp_micro_sql,
-    NBQ_B,
-    nbq_hashed_grams_of,
-)
-
-#: State schema: (bucket, cp, cn) — gram counts per class for buckets
-#: >= 0; the bucket = -1 sentinel row carries train DOC counts.
-STATE_COLS = ["bucket", "cp", "cn"]
-
-#: Sentinel bucket id for the prior (train document) counts.
-PRIOR_BUCKET = -1
-
-
-def nbq_state_for(
-    docs: DataFrame,
-    positive_pred: str = _NBQ_POS_PRED,
-    extra: str | None = None,
-) -> DataFrame:
-    """A labeled batch's additive contribution: TRAIN-split gram
-    counts per (bucket, class) — the IDENTICAL feature program as the
-    one-shot fit — plus the sentinel prior row.
-
-    ``extra`` names a pass-through grouping column (the single-pass
-    fold fixture's batch tag — see ivf_state_for's docstring). In
-    extra mode the prior groups by the tag too, so a batch with zero
-    train documents contributes no prior row instead of a (0, 0) row;
-    the SUM-merged state is identical whenever the corpus has at
-    least one train document (always true of the driver fixtures)."""
-    grp = [extra] if extra is not None else []
-    hashed = nbq_hashed_grams_of(docs, positive_pred, extra=extra)
-    grams = hashed.filter("is_train").groupBy("bucket", *grp).agg(
-        F.sum(F.col("label_hq").cast("long")).alias("cp"),
-        F.sum((~F.col("label_hq")).cast("long")).alias("cn"),
-    )
-    prior = (
-        docs.selectExpr(
-            *grp,
-            f"{positive_pred} AS label_hq",
-            _NBQ_IS_TRAIN_SPARK.format(c="doc_id") + " AS is_train",
-        )
-        .filter("is_train")
-        # Coalesce to 0: a batch with ZERO train-split documents
-        # aggregates to one (NULL, NULL) row, and a NULL prior count
-        # seeded into state would make nbq_model_from_state emit a
-        # NULL prior (ln of NULL) until a train-carrying batch merges
-        # and F.sum skips the NULL. With 0s the state is well-formed
-        # from the first rotation; the model itself still needs at
-        # least one train doc PER CLASS before the prior is usable —
-        # that precondition is the caller's (first-rotation) contract.
-        .groupBy(*grp)  # empty grp = the global agg (always one row)
-        .agg(
-            F.coalesce(F.sum(F.col("label_hq").cast("long")), F.lit(0)).alias("cp"),
-            F.coalesce(F.sum((~F.col("label_hq")).cast("long")), F.lit(0)).alias("cn"),
-        )
-        .select(F.lit(PRIOR_BUCKET).cast("long").alias("bucket"), *grp, "cp", "cn")
-    )
-    return grams.select("bucket", *grp, "cp", "cn").unionByName(prior)
+from namegraph_collections_spark.queries.quality_classifier import nbq_state_for
 
 
 def maintain_nbq_state(
     spark: SparkSession, base_dir: str, new_docs: DataFrame, stamp: str
 ) -> DataFrame:
-    """Merge a labeled batch into the standing model counts and rotate
-    a dated snapshot (sum-by-key over <= NBQ_B + 1 rows). Same
-    idempotence/ordering contract as every additive maintainer."""
+    """Merge a labeled batch's counts (``nbq_state_for``) into the
+    standing model counts and rotate a dated snapshot (sum-by-key
+    over <= NBQ_B + 1 rows). Same idempotence/ordering contract as
+    every additive maintainer; ``nbq_model_from_state`` reads the
+    model back."""
     return maintain_additive_state(
         spark,
         base_dir,
@@ -106,35 +48,3 @@ def maintain_nbq_state(
         stamp=stamp,
     )
 
-
-def nbq_model_from_state(state: DataFrame):
-    """Re-derive the (weights, prior) model from the count state alone
-    — equal by construction to ``nbq_model_of`` over the union of
-    every merged batch (pinned by tests/test_nbq_maintain.py). The
-    gram totals are state sums; unseen buckets get their smoothed
-    weight because the table enumerates range(NBQ_B)."""
-    spark = state.sparkSession
-    grams = state.filter(F.col("bucket") != PRIOR_BUCKET)
-    tots = grams.agg(
-        F.sum("cp").alias("t_pos"), F.sum("cn").alias("t_neg")
-    )
-    w = (
-        spark.range(NBQ_B)
-        .select(F.col("id").alias("bucket"))
-        .join(F.broadcast(grams), "bucket", "left")
-        .crossJoin(F.broadcast(tots))
-        .selectExpr(
-            "bucket",
-            f"{_lp_micro_sql('COALESCE(cp, 0)', 't_pos')}"
-            f" - {_lp_micro_sql('COALESCE(cn, 0)', 't_neg')} AS w_micro",
-        )
-    )
-    prior = (
-        state.filter(F.col("bucket") == PRIOR_BUCKET)
-        .selectExpr("cp AS np", "cn AS nn")
-        .selectExpr(
-            f"{_lnr_micro_sql('np', 'np + nn')}"
-            f" - {_lnr_micro_sql('nn', 'np + nn')} AS prior_micro"
-        )
-    )
-    return w, prior

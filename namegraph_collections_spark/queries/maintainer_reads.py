@@ -35,16 +35,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_sql
-
-# The operators/*_maintain modules import back into queries/ (they
-# share the feature programs), so importing them at module level from
-# INSIDE the queries package would make any direct
-# ``import operators.x_maintain`` re-enter a partially-initialized
-# module. They are imported lazily in the battery body instead.
-from namegraph_collections_spark.queries.corpus_stats import _QVEC_SQL
-from namegraph_collections_spark.queries.percentiles import HIST_MAX_B
+from namegraph_collections_spark.operators.vocab_maintain import (
+    vocab_head_from_state,
+    vocab_state_for,
+    vocab_stats_from_state,
+)
+from namegraph_collections_spark.queries.corpus_stats import (
+    _QVEC_SQL,
+    diversity_from_state,
+    diversity_state_for,
+)
+from namegraph_collections_spark.queries.percentiles import (
+    HIST_MAX_B,
+    hist_buckets_of,
+    hist_quantiles_from_buckets,
+)
 from namegraph_collections_spark.queries.quality_classifier import (
     _NBQ_FIT_CTES,
+    nbq_model_from_state,
+    nbq_state_for,
 )
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
@@ -59,6 +68,7 @@ from namegraph_collections_spark.queries.rollups import (
     CMS_TOP,
     cms_bigrams_of,
     cms_estimates_from,
+    cms_state_for,
 )
 from namegraph_collections_spark.queries.similarity import DIM, KMEANS_K
 
@@ -254,30 +264,14 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     embed the registered component oracles VERBATIM; the NB legs embed
     the scores oracle's fit CTEs verbatim), so the driver row hashes
     both the read-path outputs and the fold == one-shot identity."""
-    from namegraph_collections_spark.operators.cms_maintain import (
-        cms_state_for,
-    )
-    from namegraph_collections_spark.operators.diversity_maintain import (
-        diversity_from_state,
-        diversity_state_for,
-    )
-    from namegraph_collections_spark.operators.hist_maintain import (
-        hist_quantiles_from_state,
-        hist_state_for,
-    )
+    # ivf_maintain imports queries.corpus_stats, so importing it at
+    # module level from INSIDE the queries package would make a direct
+    # ``import operators.ivf_maintain`` re-enter a partially-initialized
+    # module; it is imported here instead.
     from namegraph_collections_spark.operators.ivf_maintain import (
         centroids_from_state,
         ivf_state_for,
         list_balance_from_state,
-    )
-    from namegraph_collections_spark.operators.nbq_maintain import (
-        nbq_model_from_state,
-        nbq_state_for,
-    )
-    from namegraph_collections_spark.operators.vocab_maintain import (
-        vocab_head_from_state,
-        vocab_state_for,
-        vocab_stats_from_state,
     )
 
     # persist the spread sources: emb feeds two maintainers' fixtures
@@ -329,7 +323,7 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs, "doc_id", nbq_state_for, ["bucket"], {"cp": "sum", "cn": "sum"}
             ).localCheckpoint(eager=True),
             lambda: folded_state(
-                li, "l_orderkey", hist_state_for, ["bucket"], {"c": "sum"}
+                li, "l_orderkey", hist_buckets_of, ["bucket"], {"c": "sum"}
             ).localCheckpoint(eager=True),
             lambda: folded_state(
                 docs, "doc_id", cms_state_for, ["d", "bucket"], {"c": "sum"}
@@ -364,6 +358,6 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         diversity=diversity_from_state(div_state),
         nbq_w=w,
         nbq_prior=prior,
-        hist=hist_quantiles_from_state(hist_state),
+        hist=hist_quantiles_from_buckets(hist_state),
         cms_probe=cms_estimates_from(cms_state, cand.select("token")),
     )

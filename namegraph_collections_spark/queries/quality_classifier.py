@@ -120,7 +120,9 @@ def nbq_hashed_grams_of(
     """The feature program as a pure transformation — (doc_id,
     label_hq, is_train, bucket), one row per lowercased unigram/bigram
     occurrence. Shared by the one-shot query and any incremental
-    maintenance so the paths can never drift (the DSIR seam shape).
+    maintenance so the paths can never drift (the DSIR seam shape):
+    the count state (``nbq_state_for``) and the scorer
+    (``nbq_score_against``) both run it.
     ``positive_pred`` parameterizes the label column for callers
     fitting against a different reference corpus (and the closed-form
     tests); ``extra`` names one pass-through column (the single-pass
@@ -158,30 +160,83 @@ def nbq_hashed_grams_of(
     )
 
 
-def nbq_weights_of(hashed: DataFrame) -> DataFrame:
-    """(bucket, w_micro) for ALL NBQ_B buckets from a hashed-gram
-    frame's TRAIN rows: w_micro = lp_hq(bucket) - lp_lq(bucket) in
-    exact integer micro-nats, with add-1 smoothing giving unseen
-    buckets their nonzero prior weight too (which is why the table
-    enumerates range(B) instead of only observed buckets). Always
-    <= NBQ_B rows — broadcast class at any corpus size."""
-    spark = hashed.sparkSession
-    tr = hashed.filter("is_train")
-    cpos = tr.filter("label_hq").groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("cp")
+#: Sentinel bucket id of the NB state's prior row (train DOC counts).
+PRIOR_BUCKET = -1
+
+
+def nbq_state_for(
+    docs: DataFrame,
+    positive_pred: str = _NBQ_POS_PRED,
+    extra: str | None = None,
+) -> DataFrame:
+    """The fit's state program: a multinomial NB model IS its training
+    counts, all plain sums. One (bucket, cp, cn) row per feature bucket
+    carries the TRAIN-split gram counts per class, and ONE sentinel row
+    ``bucket = PRIOR_BUCKET`` carries the train DOC counts (np, nn) in
+    the same two columns — so the whole model is a single additive
+    frame of at most NBQ_B + 1 rows. The one-shot fit reads it over the
+    whole corpus (``nbq_model_of``); operators/nbq_maintain.py folds it
+    batch by batch.
+
+    ``extra`` names a pass-through grouping column (the single-pass
+    fold fixture's batch tag — queries/maintainer_reads.py). In
+    extra mode the prior groups by the tag too, so a batch with zero
+    train documents contributes no prior row instead of a (0, 0) row;
+    the SUM-merged state is identical whenever the corpus has at
+    least one train document (always true of the driver fixtures)."""
+    hashed = nbq_hashed_grams_of(docs, positive_pred, extra=extra)
+    return _nbq_counts(docs, hashed, positive_pred, extra)
+
+
+def _nbq_counts(
+    docs: DataFrame, hashed: DataFrame, positive_pred: str, extra: str | None
+) -> DataFrame:
+    grp = [extra] if extra is not None else []
+    grams = hashed.filter("is_train").groupBy("bucket", *grp).agg(
+        F.sum(F.col("label_hq").cast("long")).alias("cp"),
+        F.sum((~F.col("label_hq")).cast("long")).alias("cn"),
     )
-    cneg = tr.filter("NOT label_hq").groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("cn")
+    prior = (
+        docs.selectExpr(
+            *grp,
+            f"{positive_pred} AS label_hq",
+            _NBQ_IS_TRAIN_SPARK.format(c="doc_id") + " AS is_train",
+        )
+        .filter("is_train")
+        # Coalesce to 0: a batch with ZERO train-split documents
+        # aggregates to one (NULL, NULL) row, and a NULL prior count
+        # seeded into maintained state would stay NULL until a
+        # train-carrying batch merges and F.sum skips it. With 0s the
+        # state is well-formed from the first rotation; the model
+        # itself still needs at least one train doc PER CLASS before
+        # the prior is usable (module docstring precondition).
+        .groupBy(*grp)  # empty grp = the global agg (always one row)
+        .agg(
+            F.coalesce(F.sum(F.col("label_hq").cast("long")), F.lit(0)).alias("cp"),
+            F.coalesce(F.sum((~F.col("label_hq")).cast("long")), F.lit(0)).alias("cn"),
+        )
+        .select(F.lit(PRIOR_BUCKET).cast("long").alias("bucket"), *grp, "cp", "cn")
     )
-    tots = tr.agg(
-        F.sum(F.col("label_hq").cast("long")).alias("t_pos"),
-        F.sum((~F.col("label_hq")).cast("long")).alias("t_neg"),
+    return grams.select("bucket", *grp, "cp", "cn").unionByName(prior)
+
+
+def nbq_model_from_state(state: DataFrame):
+    """Read the (weights, prior) model from the count state alone:
+    the <= {NBQ_B}-row (bucket, w_micro) table — w_micro = lp_hq -
+    lp_lq in exact integer micro-nats, with add-1 smoothing giving
+    unseen buckets their nonzero weight too (which is why the table
+    enumerates range(NBQ_B) instead of only observed buckets) — and
+    the 1-row prior_micro frame. The gram totals are state sums, so
+    the read never re-reads a document."""
+    spark = state.sparkSession
+    grams = state.filter(F.col("bucket") != PRIOR_BUCKET)
+    tots = grams.agg(
+        F.sum("cp").alias("t_pos"), F.sum("cn").alias("t_neg")
     )
-    return (
+    w = (
         spark.range(NBQ_B)
         .select(F.col("id").alias("bucket"))
-        .join(F.broadcast(cpos), "bucket", "left")
-        .join(F.broadcast(cneg), "bucket", "left")
+        .join(F.broadcast(grams), "bucket", "left")
         .crossJoin(F.broadcast(tots))
         .selectExpr(
             "bucket",
@@ -189,34 +244,27 @@ def nbq_weights_of(hashed: DataFrame) -> DataFrame:
             f" - {_lp_micro_sql('COALESCE(cn, 0)', 't_neg')} AS w_micro",
         )
     )
-
-
-def nbq_model_of(docs: DataFrame, positive_pred: str = _NBQ_POS_PRED):
-    """Fit only: returns (weights, prior) — the <= {NBQ_B}-row
-    (bucket, w_micro) table and the 1-row prior_micro frame. This is
-    the artifact a production gate persists once and applies at the
-    door (the deployment split the papers imply: train on the
-    standing corpus, filter new crawl as it arrives)."""
-    hashed = nbq_hashed_grams_of(docs, positive_pred).localCheckpoint(
-        eager=False
-    )
-    w = nbq_weights_of(hashed)
+    # NULLIF: a state with no train document carries (0, 0) prior
+    # counts, and 0/0 would raise under ANSI; its prior is NULL instead
+    # (as the oracle's ln of a NULL ratio is), and so is every margin.
     prior = (
-        docs.selectExpr(
-            f"{positive_pred} AS label_hq",
-            _NBQ_IS_TRAIN_SPARK.format(c="doc_id") + " AS is_train",
-        )
-        .filter("is_train")
-        .agg(
-            F.sum(F.col("label_hq").cast("long")).alias("np"),
-            F.sum((~F.col("label_hq")).cast("long")).alias("nn"),
-        )
+        state.filter(F.col("bucket") == PRIOR_BUCKET)
+        .selectExpr("cp AS np", "cn AS nn", "NULLIF(cp + cn, 0) AS n_train")
         .selectExpr(
-            f"{_lnr_micro_sql('np', 'np + nn')}"
-            f" - {_lnr_micro_sql('nn', 'np + nn')} AS prior_micro"
+            f"{_lnr_micro_sql('np', 'n_train')}"
+            f" - {_lnr_micro_sql('nn', 'n_train')} AS prior_micro"
         )
     )
     return w, prior
+
+
+def nbq_model_of(docs: DataFrame, positive_pred: str = _NBQ_POS_PRED):
+    """Fit only: returns (weights, prior) — ``nbq_model_from_state``
+    over the whole corpus's state. This is the artifact a production
+    gate persists once and applies at the door (the deployment split
+    the papers imply: train on the standing corpus, filter new crawl
+    as it arrives)."""
+    return nbq_model_from_state(nbq_state_for(docs, positive_pred))
 
 
 def nbq_score_against(
@@ -232,15 +280,21 @@ def nbq_score_against(
     one-shot query minus the split flag (arriving crawl has no split).
     Scores are batching-invariant because the model is fixed — the
     property the streaming parity test pins."""
-    db = (
-        nbq_hashed_grams_of(docs, positive_pred)
-        .groupBy("doc_id", "label_hq", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
+    return _nbq_score_grams(nbq_hashed_grams_of(docs, positive_pred), w, prior)
+
+
+def _nbq_score_grams(
+    hashed: DataFrame, w: DataFrame, prior: DataFrame, *carry: str
+) -> DataFrame:
+    """The scorer over a hashed-gram frame; ``carry`` names per-doc
+    columns of that frame to keep (the one-shot query's split flag)."""
+    db = hashed.groupBy("doc_id", "label_hq", *carry, "bucket").agg(
+        F.count(F.lit(1)).alias("c")
     )
     return (
         db.join(F.broadcast(w), "bucket")
         .crossJoin(F.broadcast(prior))
-        .groupBy("doc_id", "label_hq", "prior_micro")
+        .groupBy("doc_id", "label_hq", *carry, "prior_micro")
         .agg(
             F.sum("c").cast("long").alias("n_grams"),
             F.sum(F.col("c") * F.col("w_micro")).alias("dot_micro"),
@@ -248,6 +302,7 @@ def nbq_score_against(
         .selectExpr(
             "doc_id",
             "label_hq",
+            *carry,
             "n_grams",
             "CAST(prior_micro + dot_micro AS BIGINT) AS margin_micro",
             "(prior_micro + dot_micro) >= 0 AS pred_hq",
@@ -342,15 +397,23 @@ def nb_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production gate would apply to unlabeled crawl, and ``correct``
     makes the held-out rows directly consumable by the eval.
 
-    Scale shape (the DSIR audit carries over): ONE gram explode feeds
-    (a) the per-(doc, bucket) counts — a partial-aggregated shuffle
-    with at most {NBQ_B} keys per doc — and (b) the two class bucket
-    tables, which are <= {NBQ_B} rows REGARDLESS of corpus size and
-    broadcast back; totals and priors are 1-row broadcast cross
-    joins. The per-doc reduce is one groupBy. Fitting is exactly two
-    aggregations — no optimizer iterations, no driver-side state —
-    which is the reason NB is the family member chosen for the
-    distributed gate. No global sort, no window, no Python anywhere.
+    The fit is the maintainer's own program read over the whole
+    corpus (``nbq_model_from_state`` over the counts ``nbq_state_for``
+    takes) and the scoring is the ingest-time scorer's
+    (``nbq_score_against``), so the one-shot query, the maintained
+    model and the streaming scorer share one definition; the pipeline
+    only feeds both halves one hashed-gram frame.
+
+    Scale shape (the DSIR audit carries over): the count state is ONE
+    partial-aggregated groupBy of the train grams plus a 1-row prior
+    aggregate — <= {NBQ_B} + 1 rows REGARDLESS of corpus size — and the
+    weight table read from it broadcasts onto the per-(doc, bucket)
+    counts, a partial-aggregated shuffle with at most {NBQ_B} keys per
+    doc; totals and priors are 1-row broadcast cross joins. The per-doc
+    reduce is one groupBy. Fitting is one aggregation — no optimizer
+    iterations, no driver-side state — which is the reason NB is the
+    family member chosen for the distributed gate. No global sort, no
+    window, no Python anywhere.
     """
     return nb_quality_scores_of(spread(tbl(spark, sf_dir, "documents"), "doc_id"))
 
@@ -362,48 +425,20 @@ def nb_quality_scores_of(
     the seam the closed-form property tests drive with handcrafted
     corpora (and a caller would point at a different reference
     corpus via ``positive_pred``)."""
+    # The pipeline's one cut: the fit (the count state, read three
+    # times) and the scoring all read the hashed grams, and without it
+    # the md5 gram explode runs once per consumer. Paired at sf0.1 on 4
+    # cores, nb_quality_scores build + execute: 2.55 / 3.05 s with the
+    # cut against 3.74 / 3.61 s without; task time 5.7 / 6.7 s against
+    # 9.2 / 9.1 s.
     hashed = nbq_hashed_grams_of(docs, positive_pred).localCheckpoint(eager=False)
-    # localCheckpoint: the hashed-gram frame feeds four aggregations
-    # (class counts x2, totals, per-doc counts); without the cut each
-    # replays the scan+explode (the battery-wide ReusedExchange
-    # finding).
-    w = nbq_weights_of(hashed)
-    base = docs.selectExpr(
-        "doc_id",
-        f"{positive_pred} AS label_hq",
-        _NBQ_IS_TRAIN_SPARK.format(c="doc_id") + " AS is_train",
-    )
-    prior = (
-        base.filter("is_train")
-        .agg(
-            F.sum(F.col("label_hq").cast("long")).alias("np"),
-            F.sum((~F.col("label_hq")).cast("long")).alias("nn"),
-        )
-        .selectExpr(
-            f"{_lnr_micro_sql('np', 'np + nn')}"
-            f" - {_lnr_micro_sql('nn', 'np + nn')} AS prior_micro"
-        )
-    )
-    db = hashed.groupBy("doc_id", "label_hq", "is_train", "bucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    return (
-        db.join(F.broadcast(w), "bucket")
-        .crossJoin(F.broadcast(prior))
-        .groupBy("doc_id", "label_hq", "is_train", "prior_micro")
-        .agg(
-            F.sum("c").cast("long").alias("n_grams"),
-            F.sum(F.col("c") * F.col("w_micro")).alias("dot_micro"),
-        )
-        .selectExpr(
-            "doc_id",
-            "label_hq",
-            "is_train",
-            "n_grams",
-            "CAST(prior_micro + dot_micro AS BIGINT) AS margin_micro",
-            "(prior_micro + dot_micro) >= 0 AS pred_hq",
-            "((prior_micro + dot_micro) >= 0) = label_hq AS correct",
-        )
+    w, prior = nbq_model_from_state(_nbq_counts(docs, hashed, positive_pred, None))
+    # is_train rides the grouping keys, as a stored column of the cut:
+    # recomputed from doc_id after the scoring, a NOT is_train filter
+    # downstream (nb_quality_eval) is pushed into the gram scan as an md5
+    # per gram row (+0.7 s of task time at sf0.1).
+    return _nbq_score_grams(hashed, w, prior, "is_train").select(
+        "*", (F.col("pred_hq") == F.col("label_hq")).alias("correct")
     )
 
 

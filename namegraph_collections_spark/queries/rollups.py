@@ -432,6 +432,19 @@ def cms_sketch_of(occ: DataFrame, extra: str | None = None) -> DataFrame:
     )
 
 
+def cms_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
+    """The sketch's state program over a documents frame: the bigram
+    stream's cell counts — a batch's additive contribution to the
+    maintained sketch (operators/cms_maintain.py).
+
+    ``extra`` names a pass-through grouping column (the single-pass
+    fold fixture's batch tag — queries/maintainer_reads.py)."""
+    cols = ["text"] if extra is None else [extra, "text"]
+    return cms_sketch_of(
+        cms_bigrams_of(docs.select(*cols), extra=extra), extra=extra
+    )
+
+
 def cms_estimates_from(state: DataFrame, tokens: DataFrame) -> DataFrame:
     """Probe a (d, bucket, c) sketch — one-shot or maintained state,
     identical read path — with a frame of distinct ``token`` rows:

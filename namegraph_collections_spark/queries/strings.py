@@ -170,7 +170,8 @@ from namegraph_collections_spark.queries import pii  # noqa: E402,F401
 from namegraph_collections_spark.queries import url_ops  # noqa: E402,F401
 from namegraph_collections_spark.queries.web_rollup import (  # noqa: E402
     domain_gated_corpus_from,
-    host_quality_rollup_from,
+    gate_from_state,
+    gate_state_for,
     per_doc_web_frame,
 )
 from namegraph_collections_spark.queries import c4_clean  # noqa: E402,F401
@@ -256,7 +257,7 @@ def string_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup aggregation feeds both the hostq leg and the gated leg's
     # broadcast side.
     per_doc = per_doc_web_frame(spark, sf_dir).localCheckpoint(eager=False)
-    roll = host_quality_rollup_from(per_doc).localCheckpoint(eager=False)
+    roll = gate_from_state(gate_state_for(per_doc)).localCheckpoint(eager=False)
     return _STRING_OPS.union(
         spark,
         sf_dir,

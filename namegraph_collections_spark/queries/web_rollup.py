@@ -25,13 +25,15 @@ corpus is Wikidata); this is a training-data-pipeline extension per
 the brief, built from the public RefinedWeb/C4 method descriptions.
 
 Scale shape: one documents scan (the fused per-doc project is
-shuffle-free), then ONE partial-aggregated groupBy on ``domain`` —
-domains are low-cardinality relative to pages, so the shuffle moves
-per-partition partials, not rows. ``COUNT(DISTINCT norm_url)`` adds
-the standard two-phase distinct expansion keyed by (domain, norm_url)
-— still one exchange of slim keys. At 100 TB this is the cheapest
-rollup shape available; the output table (one row per domain) then
-broadcast-joins back onto the corpus as the actual drop filter.
+shuffle-free), then the gate's page-grain state — ONE partial-
+aggregated groupBy on (domain, norm_url), one exchange of slim keys —
+and a second groupBy on ``domain`` over that state, which is where
+the distinct page count becomes a row count. The same two steps are
+the incremental gate's state program and read
+(operators/gate_maintain.py), so the one-shot rollup and the
+maintained one share one definition. The output table (one row per
+domain) then broadcast-joins back onto the corpus as the actual drop
+filter.
 """
 
 from __future__ import annotations
@@ -95,12 +97,13 @@ _GATE_SQL = (
 def host_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quality/duplication rollup + domain keep gate
     (module docstring). One scan: the URL columns and the quality
-    signals are fused via the components' ``carry`` seams, then one
-    domain-keyed aggregation. The oracle embeds both component
+    signals are fused via the components' ``carry`` seams, then the
+    page-grain state (``gate_state_for``) and its domain-keyed read
+    (``gate_from_state``). The oracle embeds both component
     oracles verbatim (battery construction rule) and joins them on
     doc_id — oracle-side clarity over oracle-side economy.
     """
-    return host_quality_rollup_from(per_doc_web_frame(spark, sf_dir))
+    return gate_from_state(gate_state_for(per_doc_web_frame(spark, sf_dir)))
 
 
 def per_doc_web_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,30 +119,49 @@ def per_doc_web_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def per_doc_web_frame_of(docs: DataFrame) -> DataFrame:
     """The fused per-doc program over any (doc_id, source, text) frame
     — split out so the incremental gate maintenance
-    (operators/gate_maintain.py) runs the IDENTICAL arithmetic on a
+    (operators/gate_maintain.py) and the ingest-time gate
+    (streaming/filter_stream.py) run the IDENTICAL arithmetic on a
     batch as the full-corpus rollup runs on the table."""
     url = url_canonicalize_of(docs, carry=("text",))
     return quality_signals_of(url, carry=("norm_url", "domain"))
 
 
-def host_quality_rollup_from(per_doc: DataFrame) -> DataFrame:
-    """The rollup over an ALREADY-BUILT fused per-doc frame — the
-    sharing seam string_ops_battery and domain_gated_corpus use so
-    one scan feeds every consumer."""
-    agg = per_doc.groupBy("domain").agg(
+def gate_state_for(per_doc: DataFrame) -> DataFrame:
+    """The gate's state program over a fused per-doc frame
+    (``per_doc_web_frame_of``): one (domain, norm_url, n_docs, n_keep,
+    sum_words) row per canonical page. ``n_pages`` is a distinct count,
+    which is not additive across batches (two batches can carry the
+    same URL), but at the distinct key's grain every measure IS
+    additive: merging batches is a sum-by-key and distinct pages per
+    domain is a row count. The one-shot rollup reads it over the whole
+    corpus; operators/gate_maintain.py folds it batch by batch."""
+    return per_doc.groupBy("domain", "norm_url").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.countDistinct("norm_url").cast("long").alias("n_pages"),
         F.sum(F.col("keep").cast("long")).alias("n_keep"),
         F.sum("n_words").cast("long").alias("sum_words"),
+    )
+
+
+def gate_from_state(state: DataFrame) -> DataFrame:
+    """The gate table from the page-grain state: distinct pages per
+    domain is a count of the non-NULL pages at this grain (a NULL
+    canonical URL is no page, as in ``COUNT(DISTINCT norm_url)``),
+    everything else a sum — then ``finish_rollup`` adds the rates and
+    the gate. |pages| → |domains|, a reduction, never a re-scan."""
+    agg = state.groupBy("domain").agg(
+        # a document count is never NULL; the coalesce tells Spark so,
+        # keeping n_docs the non-nullable column a count(*) gives
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+        F.count("norm_url").cast("long").alias("n_pages"),
+        F.sum("n_keep").alias("n_keep"),
+        F.sum("sum_words").alias("sum_words"),
     )
     return finish_rollup(agg)
 
 
 def finish_rollup(agg: DataFrame) -> DataFrame:
     """Micro-unit rates + the gate over a (domain, n_docs, n_pages,
-    n_keep, sum_words) aggregate — shared by the one-shot rollup and
-    the incremental state's re-aggregation, so both emit the
-    identical gate table."""
+    n_keep, sum_words) aggregate."""
     m = agg.select(
         "domain",
         "n_docs",
@@ -194,7 +216,7 @@ def domain_gated_corpus_from(
     frame) when the caller already built the rollup, so the battery
     does not aggregate the same frame twice."""
     if gate is None:
-        gate = host_quality_rollup_from(per_doc)
+        gate = gate_from_state(gate_state_for(per_doc))
     gate = gate.select("domain", "domain_keep")
     with_url_keep = per_doc.select(
         "doc_id",

@@ -131,16 +131,3 @@ def assemble_entities(triples: DataFrame) -> DataFrame:
     ]
     return triples.groupBy("subject").agg(*aggs)
 
-
-# S9/S10 replacements: per-store projections of the entities table.
-def store_view(entities: DataFrame, store: str) -> DataFrame:
-    """db2..db6 as projections (create_kv.py:27-35); db1/db1_rev come
-    from the wikimapper table (S8/S10 — plain column swaps)."""
-    stores = {
-        "db2": ["instance_of", "subclass_of"],
-        "db3": ["is_a_list_of", "category_contains"],
-        "db4": ["list_related_to_category", "category_related_to_list"],
-        "db5": ["name", "label", "description", "image", "page_banner"],
-        "db6": ["same_as"],
-    }
-    return entities.select("subject", *stores[store])

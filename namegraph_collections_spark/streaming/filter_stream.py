@@ -1,17 +1,20 @@
-"""Streaming ingest filters: quality signals + PII scan at the point
+"""Streaming ingest filters: the per-row filter family at the point
 of arrival.
 
-A production corpus build runs its per-row filter family (Gopher
-quality signals, PII redaction) as documents LAND, not as a nightly
-batch — and because both operators are pure scan+project column
-programs (no shuffle, no state), Spark's unified API runs the
-IDENTICAL transformation on a streaming source: `quality_signals_of`
-and `pii_scan_of` are the same functions the batch queries
-`doc_quality_signals` / `pii_scan_redact` call, applied to a
-`readStream` DataFrame. Append mode, zero state, per-microbatch cost
-proportional to the new files only — the cheapest possible streaming
-shape, and batch/stream parity holds by construction (pinned by
-tests/test_streaming.py).
+A production corpus build runs its per-row filters (Gopher quality
+signals, PII redaction, language ID, C4 line cleaning, URL
+canonicalization) as documents LAND, not as a nightly batch — and
+because each is a pure scan+project column program (no shuffle, no
+state), Spark's unified API runs the IDENTICAL transformation on a
+streaming source: apply the batch ``*_of`` function
+(``quality_signals_of``, ``pii_scan_of``, ``language_id_of``,
+``c4_clean_of``, ``url_canonicalize_of``) to a ``readStream``
+DataFrame from the readers below. Append mode, zero state,
+per-microbatch cost proportional to the new files only — the
+cheapest possible streaming shape, and batch/stream parity holds by
+construction (pinned by tests/test_filter_stream.py). This module
+adds the readers and the one stream-specific composition,
+``domain_gate_stream``.
 """
 
 from __future__ import annotations
@@ -25,12 +28,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from namegraph_collections_spark.queries.c4_clean import c4_clean_of
-from namegraph_collections_spark.queries.pii import pii_scan_of
-from namegraph_collections_spark.queries.quality_signals import quality_signals_of
-from namegraph_collections_spark.queries.text_analysis import language_id_of
-from namegraph_collections_spark.queries.url_ops import url_canonicalize_of
 
 DOCUMENTS_SCHEMA = StructType(
     [
@@ -69,41 +66,6 @@ def read_customer_stream(spark: SparkSession, cust_dir: str) -> DataFrame:
     )
 
 
-def quality_filter_stream(docs_stream: DataFrame) -> DataFrame:
-    """Per-document quality signals + keep flag on a streaming source —
-    the batch operator verbatim (queries/quality_signals.py)."""
-    return quality_signals_of(docs_stream)
-
-
-def pii_scan_stream(cust_stream: DataFrame) -> DataFrame:
-    """PII detection/redaction/masking on a streaming source — the
-    batch operator verbatim (queries/pii.py)."""
-    return pii_scan_of(cust_stream)
-
-
-def language_id_stream(docs_stream: DataFrame) -> DataFrame:
-    """Per-document language identification on a streaming source —
-    the batch operator verbatim (queries/text_analysis.py). Like the
-    other two, a pure scan+project column program: zero state, append
-    mode, per-microbatch cost proportional to the new files."""
-    return language_id_of(docs_stream)
-
-
-def c4_clean_stream(docs_stream: DataFrame) -> DataFrame:
-    """C4 line-level cleaning on a streaming source — the batch
-    operator verbatim (queries/c4_clean.py): bucket counts, cleaned
-    md5 + char count, page gate, all per arriving document."""
-    return c4_clean_of(docs_stream)
-
-
-def url_canonicalize_stream(docs_stream: DataFrame) -> DataFrame:
-    """URL canonicalization on a streaming source — the batch
-    operator's canonicalization half verbatim (queries/url_ops.py).
-    The first-wins dedup window is inherently stateful and stays
-    batch-side (or probes the standing dedup index)."""
-    return url_canonicalize_of(docs_stream)
-
-
 def domain_gate_stream(docs_stream: DataFrame, gate: DataFrame) -> DataFrame:
     """Apply a batch-computed domain gate to documents AS THEY LAND —
     the stream-static join pattern: ``gate`` is the (domain,
@@ -114,7 +76,8 @@ def domain_gate_stream(docs_stream: DataFrame, gate: DataFrame) -> DataFrame:
     VERBATIM (web_rollup.per_doc_web_frame_of — one composition site,
     no drift). Emits the stateless verdict subset (domain ∧ quality);
     the first-copy-per-URL flag is inherently stateful and stays
-    batch/index-side, like the URL dedup note above.
+    batch/index-side, like URL first-wins dedup (inherently stateful —
+    it compares against ALL prior arrivals).
 
     A document from a domain the gate has never seen (the normal case
     for a live ingest stream — the rollup ran before the domain

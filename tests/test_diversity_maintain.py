@@ -10,11 +10,13 @@ import pytest
 
 from namegraph_collections_spark.operators.cdc import latest_snapshot
 from namegraph_collections_spark.operators.diversity_maintain import (
-    diversity_from_state,
-    diversity_state_for,
     maintain_diversity_state,
 )
 from namegraph_collections_spark.queries import REGISTRY
+from namegraph_collections_spark.queries.corpus_stats import (
+    diversity_from_state,
+    diversity_state_for,
+)
 from tests.conftest import SF_DIR
 
 
@@ -81,8 +83,8 @@ def test_rollup_state_matches_legacy_two_pass_shape(spark):
     (integer sums are associative; n counts vectors either way)."""
     import pyspark.sql.functions as F
 
-    from namegraph_collections_spark.operators.diversity_maintain import SENTINEL_DIM
     from namegraph_collections_spark.queries.corpus_stats import (
+        SENTINEL_DIM,
         quantized_unit_vectors,
     )
 

@@ -1,8 +1,10 @@
 """Additive-count IVM for the DSIR feature distributions
 (operators/dsir_maintain.py): maintaining the bucket state over two
-batch rotations must re-derive EXACTLY the weight table the one-shot
-computation builds over the full corpus, and scoring against the
-re-derived table must reproduce the one-shot per-document weights.
+batch rotations must re-derive EXACTLY the weight table the same
+state program gives over the full corpus in one batch (the one-shot
+fit, whose definition the DuckDB oracle checks), and scoring against
+the re-derived table must reproduce the registered query's
+per-document weights.
 Mirrors tests/test_gate_maintain.py's contract battery (two-wave
 parity, streaming twin, replay idempotence, crash window, ordering
 guard).
@@ -12,16 +14,12 @@ from __future__ import annotations
 
 import pytest
 
-from namegraph_collections_spark.operators.dsir_maintain import (
-    dsir_state_for,
-    dsir_weights_from_state,
-    maintain_dsir_state,
-)
+from namegraph_collections_spark.operators.dsir_maintain import maintain_dsir_state
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.data_selection import (
-    dsir_bucket_weights_of,
-    dsir_hashed_grams_of,
     dsir_score_against,
+    dsir_state_for,
+    dsir_weights_from_state,
 )
 from tests.conftest import SF_DIR
 
@@ -41,7 +39,7 @@ def test_two_rotations_rederive_the_one_shot_weights(spark, tmp_path):
     state2 = maintain_dsir_state(spark, base, wave2, "t1")
 
     got = dsir_weights_from_state(state2)
-    want = dsir_bucket_weights_of(dsir_hashed_grams_of(docs))
+    want = dsir_weights_from_state(dsir_state_for(docs))
     assert _rows(got) == _rows(want)
 
     # scoring against the maintained table == the one-shot query
@@ -86,7 +84,7 @@ def test_streaming_maintenance_rederives_the_one_shot_weights(spark, tmp_path):
     )
 
     got = dsir_weights_from_state(latest_snapshot(spark, base))
-    want = dsir_bucket_weights_of(dsir_hashed_grams_of(docs))
+    want = dsir_weights_from_state(dsir_state_for(docs))
     assert _rows(got) == _rows(want)
 
 
@@ -101,7 +99,7 @@ def test_streaming_scoring_matches_the_batch_scorer(spark, tmp_path):
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    bw = dsir_bucket_weights_of(dsir_hashed_grams_of(docs)).localCheckpoint()
+    bw = dsir_weights_from_state(dsir_state_for(docs)).localCheckpoint()
     zone = tmp_path / "zone"
     zone.mkdir()
     for i, pred in enumerate(["doc_id % 2 = 0", "doc_id % 2 = 1"]):
@@ -144,8 +142,8 @@ def test_partial_snapshot_is_not_treated_as_merged(spark, tmp_path):
 
     state2 = maintain_dsir_state(spark, base, wave2, "t1")
     got = dsir_weights_from_state(state2)
-    want = dsir_bucket_weights_of(
-        dsir_hashed_grams_of(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+    want = dsir_weights_from_state(
+        dsir_state_for(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
     )
     assert _rows(got) == _rows(want)
 

@@ -1,7 +1,8 @@
 """Batch/stream parity for the ingest filter family
-(streaming/filter_stream.py): the quality-signal and PII programs are
-the SAME functions the batch queries run, so draining a two-file
-landing zone through them must reproduce the batch output exactly.
+(streaming/filter_stream.py): the quality-signal, PII, language-ID,
+C4 and URL programs are the SAME ``*_of`` functions the batch queries
+run, so draining a two-file landing zone through them must reproduce
+the batch output exactly.
 """
 
 from __future__ import annotations
@@ -9,15 +10,15 @@ from __future__ import annotations
 import shutil
 
 from namegraph_collections_spark.queries import REGISTRY
+from namegraph_collections_spark.queries.c4_clean import c4_clean_of
+from namegraph_collections_spark.queries.pii import pii_scan_of
+from namegraph_collections_spark.queries.quality_signals import quality_signals_of
+from namegraph_collections_spark.queries.text_analysis import language_id_of
+from namegraph_collections_spark.queries.url_ops import url_canonicalize_of
 from namegraph_collections_spark.streaming.events import run_available_now
 from namegraph_collections_spark.streaming.filter_stream import (
-    c4_clean_stream,
-    language_id_stream,
-    pii_scan_stream,
-    quality_filter_stream,
     read_customer_stream,
     read_documents_stream,
-    url_canonicalize_stream,
 )
 from tests.conftest import SF_DIR
 
@@ -45,7 +46,7 @@ def _rows(df, cols):
 def test_quality_filter_stream_matches_batch(spark, tmp_path):
     zone = _landing_zone(spark, tmp_path, "documents", "doc_id")
     got = run_available_now(
-        quality_filter_stream(read_documents_stream(spark, zone)),
+        quality_signals_of(read_documents_stream(spark, zone)),
         str(tmp_path / "ckpt_q"),
     )
     want = REGISTRY["doc_quality_signals"].fn(spark, SF_DIR)
@@ -57,7 +58,7 @@ def test_quality_filter_stream_matches_batch(spark, tmp_path):
 def test_pii_scan_stream_matches_batch(spark, tmp_path):
     zone = _landing_zone(spark, tmp_path, "customer", "c_custkey")
     got = run_available_now(
-        pii_scan_stream(read_customer_stream(spark, zone)),
+        pii_scan_of(read_customer_stream(spark, zone)),
         str(tmp_path / "ckpt_p"),
     )
     want = REGISTRY["pii_scan_redact"].fn(spark, SF_DIR)
@@ -69,7 +70,7 @@ def test_pii_scan_stream_matches_batch(spark, tmp_path):
 def test_language_id_stream_matches_batch(spark, tmp_path):
     zone = _landing_zone(spark, tmp_path, "documents", "doc_id")
     got = run_available_now(
-        language_id_stream(read_documents_stream(spark, zone)),
+        language_id_of(read_documents_stream(spark, zone)),
         str(tmp_path / "ckpt_l"),
     )
     want = REGISTRY["language_id"].fn(spark, SF_DIR)
@@ -81,7 +82,7 @@ def test_language_id_stream_matches_batch(spark, tmp_path):
 def test_c4_clean_stream_matches_batch(spark, tmp_path):
     zone = _landing_zone(spark, tmp_path, "documents", "doc_id")
     got = run_available_now(
-        c4_clean_stream(read_documents_stream(spark, zone)),
+        c4_clean_of(read_documents_stream(spark, zone)),
         str(tmp_path / "ckpt_c4"),
     )
     want = REGISTRY["c4_line_filter"].fn(spark, SF_DIR)
@@ -91,11 +92,9 @@ def test_c4_clean_stream_matches_batch(spark, tmp_path):
 
 
 def test_url_canonicalize_stream_matches_batch(spark, tmp_path):
-    from namegraph_collections_spark.queries.url_ops import url_canonicalize_of
-
     zone = _landing_zone(spark, tmp_path, "documents", "doc_id")
     got = run_available_now(
-        url_canonicalize_stream(read_documents_stream(spark, zone)),
+        url_canonicalize_of(read_documents_stream(spark, zone)),
         str(tmp_path / "ckpt_u"),
     )
     want = url_canonicalize_of(spark.read.parquet(f"{SF_DIR}/documents.parquet"))

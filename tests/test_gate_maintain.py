@@ -8,11 +8,9 @@ double-count distinct URLs).
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.gate_maintain import (
-    gate_from_state,
-    maintain_gate_state,
-)
+from namegraph_collections_spark.operators.gate_maintain import maintain_gate_state
 from namegraph_collections_spark.queries import REGISTRY
+from namegraph_collections_spark.queries.web_rollup import gate_from_state
 from tests.conftest import SF_DIR
 
 
@@ -42,12 +40,12 @@ def test_two_rotations_rederive_the_one_shot_gate(spark, tmp_path):
     # the intermediate state is internally consistent too: wave-1-only
     # state re-derives the wave-1-only rollup
     from namegraph_collections_spark.queries.web_rollup import (
-        host_quality_rollup_from,
+        gate_state_for,
         per_doc_web_frame_of,
     )
 
-    want1 = host_quality_rollup_from(
-        per_doc_web_frame_of(wave1.select("doc_id", "source", "text"))
+    want1 = gate_from_state(
+        gate_state_for(per_doc_web_frame_of(wave1.select("doc_id", "source", "text")))
     )
     assert _rows(gate_from_state(state1)) == _rows(want1)
 

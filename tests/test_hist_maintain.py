@@ -6,12 +6,12 @@ reproduce the registered ``histogram_quantiles`` output."""
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.hist_maintain import (
-    hist_quantiles_from_state,
-    maintain_hist_state,
-)
+from namegraph_collections_spark.operators.hist_maintain import maintain_hist_state
 from namegraph_collections_spark.queries import REGISTRY
-from namegraph_collections_spark.queries.percentiles import hist_buckets_of
+from namegraph_collections_spark.queries.percentiles import (
+    hist_buckets_of,
+    hist_quantiles_from_buckets,
+)
 from tests.conftest import SF_DIR
 
 
@@ -29,7 +29,7 @@ def test_rotations_rederive_the_one_shot_quantiles(spark, tmp_path):
             spark, base, li.filter(f"l_orderkey % 3 = {i}"), f"t{i}"
         )
     assert _rows(state) == _rows(hist_buckets_of(li))
-    got = hist_quantiles_from_state(state)
+    got = hist_quantiles_from_buckets(state)
     want = REGISTRY["histogram_quantiles"].fn(spark, SF_DIR)
     assert _rows(got) == _rows(want)
 

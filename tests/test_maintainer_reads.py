@@ -59,9 +59,7 @@ def test_single_pass_fold_matches_legacy_filter_fold(spark):
     t equals ``contrib(src.filter(key % B == t))``."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    from namegraph_collections_spark.operators.cms_maintain import (
-        cms_state_for,
-    )
+    from namegraph_collections_spark.queries.rollups import cms_state_for
 
     for src, key, contrib in [
         (emb, "vec_id", ivf_state_for),

@@ -1,17 +1,16 @@
 """Additive-count IVM for the NB quality-filter model
 (operators/nbq_maintain.py): the model maintained over labeled batch
 rotations must re-derive EXACTLY the (weights, prior) the one-shot
-fit computes over the full corpus, and scoring against the maintained
-model must reproduce the registered query's scores."""
+fit (the same state program over the full corpus in one batch, whose
+definition the DuckDB oracle checks) computes, and scoring against
+the maintained model must reproduce the registered query's scores."""
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.nbq_maintain import (
-    maintain_nbq_state,
-    nbq_model_from_state,
-)
+from namegraph_collections_spark.operators.nbq_maintain import maintain_nbq_state
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.quality_classifier import (
+    nbq_model_from_state,
     nbq_model_of,
     nbq_score_against,
 )
@@ -58,7 +57,7 @@ def test_zero_train_batch_contributes_zero_not_null_prior(spark):
     prior counts, not (NULL, NULL): a NULL seeded into a fresh state
     would make nbq_model_from_state emit a NULL prior until a
     train-carrying batch heals it (round-9 advisor finding)."""
-    from namegraph_collections_spark.operators.nbq_maintain import (
+    from namegraph_collections_spark.queries.quality_classifier import (
         PRIOR_BUCKET,
         nbq_state_for,
     )

@@ -1,7 +1,8 @@
 """tools/profile_queries.py attributes a query's jobs, task time and
 shuffle bytes to that query, through perfbench/eventlog.py's fold,
-and every kept tool still compiles. No Spark session: the event log
-is a small synthetic one."""
+charges a query only for the persisted RDDs it leaves itself, and
+every kept tool still compiles. The fold tests need no Spark session:
+the event log is a small synthetic one."""
 
 from __future__ import annotations
 
@@ -119,3 +120,37 @@ def test_every_tool_compiles_and_shadows_no_stdlib_module(tmp_path):
         py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
     stems = {os.path.splitext(os.path.basename(p))[0] for p in tools}
     assert not stems & set(sys.stdlib_module_names)
+
+
+def test_persisted_rdds_counts_only_what_the_query_leaves(spark, monkeypatch):
+    """``clearCache`` does not release a localCheckpoint's blocks, so a
+    query run after one that leaves a checkpoint must not be charged
+    for it: each query counts the persisted RDD ids that are new since
+    its own build began."""
+    from types import SimpleNamespace
+
+    from namegraph_collections_spark.queries import REGISTRY
+    from tools.profile_queries import persisted_rdd_ids, profile
+
+    kept = []  # hold the checkpoints so no cleaner releases them mid-test
+
+    def leaves_a_checkpoint(spark, sf_dir):
+        kept.append(spark.range(100).localCheckpoint(eager=True))
+        return kept[-1]
+
+    monkeypatch.setitem(REGISTRY, "_leaves_one", SimpleNamespace(fn=leaves_a_checkpoint))
+    monkeypatch.setitem(REGISTRY, "_leaves_none", SimpleNamespace(fn=lambda spark, sf_dir: spark.range(100)))
+    sc = spark.sparkContext
+    start = persisted_rdd_ids(sc)
+    try:
+        runs, persisted, errors = profile(spark, ["_leaves_one", "_leaves_none"], "unused", passes=2)
+    finally:
+        # profile() tags this thread's jobs; release what the test left
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        rdds = sc._jsc.getPersistentRDDs()
+        for rdd_id in persisted_rdd_ids(sc) - start:
+            rdds.get(rdd_id).unpersist()
+    assert errors == {}
+    assert len(runs) == 4
+    assert persisted == {"_leaves_one": [1, 1], "_leaves_none": [0, 0]}

@@ -3,11 +3,15 @@
 oracles (the driver's compare, via tests/oracle_harness.py).
 
 Usage: python3 tools/check_parity.py [--sf DIR] name1 name2 ...
-       python3 tools/check_parity.py --all   # every registry query
+       python3 tools/check_parity.py [--sf DIR] --all   # every registry query
+
+Names are checked against the registry before any Spark session
+starts; an unknown name exits with status 2.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -16,27 +20,38 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-from oracle_harness import compare  # noqa: E402
-
-from namegraph_collections_spark.queries import REGISTRY  # noqa: E402
-from namegraph_collections_spark.session import get_spark  # noqa: E402
-
 
 def main() -> None:
-    args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.01"
-    if "--sf" in args:
-        i = args.index("--sf")
-        sf_dir = args[i + 1]
-        args = args[:i] + args[i + 2 :]
-    names = list(REGISTRY) if args == ["--all"] else args
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--sf", default=sf_dir, metavar="DIR",
+                    help="directory of the parquet tables (default: %(default)s)")
+    ap.add_argument("--all", action="store_true", help="check every registered query")
+    ap.add_argument("names", nargs="*", help="registered query names")
+    args = ap.parse_args()
+    if args.all and args.names:
+        ap.error("pass --all or query names, not both")
+    if not (args.all or args.names):
+        ap.error("name at least one query, or pass --all")
+
+    from namegraph_collections_spark.queries import REGISTRY
+
+    unknown = [n for n in args.names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {' '.join(unknown)}")
+    names = list(REGISTRY) if args.all else args.names
+
+    from oracle_harness import compare
+
+    from namegraph_collections_spark.session import get_spark
+
     spark = get_spark("ngcs-parity")
     bad = []
     for name in names:
         spark.catalog.clearCache()
         t0 = time.time()
         try:
-            r = compare(spark, sf_dir, name, REGISTRY[name].fn, REGISTRY[name].oracle)
+            r = compare(spark, args.sf, name, REGISTRY[name].fn, REGISTRY[name].oracle)
             ok = r.get("ok")
         except Exception as e:  # noqa: BLE001
             r, ok = {"error": f"{type(e).__name__}: {e}"}, False

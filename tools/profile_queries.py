@@ -20,9 +20,11 @@ Per query the JSON holds the median over passes of ``build_s`` and
 ``queries.build_jobs``, ``queries.plan_s`` (exec call to first job),
 ``queries.{build,exec}.*`` executor, shuffle, spill, GC, skew and core-use
 metrics and ``functions.udf_*``, and ``queries.persisted_rdds``: the
-persisted RDDs left after the query (``getPersistentRDDs().size()``, the
-largest over passes). A query that raises is reported with its error and
-left out of later passes.
+persisted RDDs the query itself leaves behind (the ids in
+``getPersistentRDDs()`` after its execute that were not there before its
+build, the largest count over passes), so a query is not charged for
+what an earlier one left. A query that raises is reported with its error
+and left out of later passes.
 """
 
 from __future__ import annotations
@@ -127,9 +129,14 @@ def warm(spark, sf_dir: str) -> None:
     spark.range(1000).select(_warm(F.col("id"))).count()
 
 
+def persisted_rdd_ids(sc) -> set[int]:
+    """Ids of the RDDs the context holds persisted (cached or checkpointed)."""
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
 def profile(spark, names: list[str], sf_dir: str, passes: int):
-    """Run the passes; return the (build, exec) span pairs, the persisted
-    RDD count after each query, and the error of each query that raised."""
+    """Run the passes; return the (build, exec) span pairs, the count of
+    persisted RDDs each query left, and the error of each query that raised."""
     from namegraph_collections_spark.queries import REGISTRY
 
     sc = spark.sparkContext
@@ -149,6 +156,7 @@ def profile(spark, names: list[str], sf_dir: str, passes: int):
                 continue
             try:
                 spark.catalog.clearCache()
+                before = persisted_rdd_ids(sc)
                 df, build = timed(q, "build", lambda: REGISTRY[q].fn(spark, sf_dir))
                 _, run = timed(q, "exec", lambda: df.write.format("noop").mode("overwrite").save())
             except Exception as e:  # noqa: BLE001 — one failing query must not lose the others
@@ -156,7 +164,7 @@ def profile(spark, names: list[str], sf_dir: str, passes: int):
                 errors[q] = f"{type(e).__name__}: {e}"
                 continue
             runs.append((build, run))
-            persisted[q].append(sc._jsc.getPersistentRDDs().size())
+            persisted[q].append(len(persisted_rdd_ids(sc) - before))
     return runs, persisted, errors
 
 
