@@ -1,25 +1,23 @@
 """Generic incremental maintenance of ADDITIVE keyed state — the
 shared machinery behind every "state at key grain, merge = sum-by-key"
-maintainer in the engine (domain gate pages, DSIR feature buckets,
-count-min cells, histogram grids).
+maintainer in the engine (domain gate pages, DSIR feature buckets, NB
+model counts, count-min cells, histogram grids, embedding-diversity and
+IVF sums, the vocabulary index).
 
 The IVM observation all of them share: pick the grain at which every
 measure is additive, and maintenance reduces to
 
     state' = (state UNION batch_contribution) GROUP BY keys SUM measures
 
-(round 10 generalization: any per-column commutative-associative
-monoid, not just SUM — ``min`` gives "first ever seen" state like the
-vocabulary index's first-document column, ``max`` high-water marks —
-via ``maintain_keyed_state``; ``maintain_additive_state`` remains the
-all-sum special case every counting maintainer uses)
-
-persisted with the dated-snapshot rotation of operators/cdc.py so day
-N+1 merges into day N's committed state. What varies per operator is
-only the CONTRIBUTION program (how a batch of documents becomes keyed
-rows) and the READ program (how state re-derives the operator's
-output) — those stay in the operator modules; the merge, the
-replay-idempotence guard, and the ordering guard live here once.
+(any per-column commutative-associative monoid, not just SUM — ``min``
+gives "first ever seen" state like the vocabulary index's first-document
+column, ``max`` high-water marks) persisted with the dated-snapshot
+rotation of operators/cdc.py so day N+1 merges into day N's committed
+state. What varies per operator is only the CONTRIBUTION program (how a
+batch becomes keyed rows), its keys and monoids — declared once as a
+:class:`KeyedState` beside the program — and the READ program (how state
+re-derives the operator's output); the merge, the replay-idempotence
+guard, and the ordering guard live here once.
 
 Durability contract (shared by every caller, pinned by
 tests/test_gate_maintain.py and test_cms_maintain.py):
@@ -49,7 +47,8 @@ key (co-located, no corpus-wide shuffle).
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,28 +123,53 @@ def snapshot_committed(spark: SparkSession, base_dir: str, stamp: str) -> bool:
 _MERGE_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
 
 
+@dataclass(frozen=True)
+class KeyedState:
+    """One maintained state, declared once next to its state program:
+    ``program(batch)`` turns a batch into keyed contribution rows (the
+    fold fixture also calls it as ``program(batch, extra=tag)`` to group
+    by a batch tag), ``keys`` are the state's key columns, and ``merge``
+    maps every other column to its monoid (``sum`` / ``min`` / ``max``).
+    The filesystem merge (:func:`maintain_keyed_state`), the in-plan
+    fold (``queries/maintainer_reads.py::folded_state``) and the
+    streaming drain (``streaming.run_maintenance_stream``) all read the
+    keys and monoids from here."""
+
+    program: Callable[..., DataFrame]
+    keys: tuple[str, ...]
+    merge: dict[str, str]
+
+    def __post_init__(self) -> None:
+        unknown = {f for f in self.merge.values() if f not in _MERGE_FNS}
+        if unknown:
+            raise ValueError(f"unsupported merge fns: {sorted(unknown)}")
+
+    @property
+    def columns(self) -> list[str]:
+        return [*self.keys, *self.merge]
+
+    def merged(self, rows: DataFrame) -> DataFrame:
+        """``rows`` merged by key with each column's monoid."""
+        return rows.groupBy(*self.keys).agg(
+            *[_MERGE_FNS[fn](c).alias(c) for c, fn in self.merge.items()]
+        )
+
+
 def maintain_keyed_state(
     spark: SparkSession,
     base_dir: str,
-    contribution: DataFrame,
-    key_cols: Sequence[str],
-    merge_cols: dict[str, str],
+    state: KeyedState,
+    batch: DataFrame,
     stamp: str,
 ) -> DataFrame:
-    """Merge a batch's keyed contribution into the standing state and
-    rotate a dated snapshot: read the marker's current state (empty
-    before the first rotation), merge-by-key with each column's
-    declared monoid (``merge_cols``: column -> 'sum' | 'min' | 'max'),
-    write, repoint. Returns the rotated state as read back from
-    storage. Replay-idempotent per stamp and ordering-guarded per the
-    module docstring."""
+    """Merge a batch's keyed contribution (``state.program(batch)``)
+    into the standing state and rotate a dated snapshot: read the
+    marker's current state (empty before the first rotation), merge by
+    key with each column's declared monoid, write, repoint. Returns the
+    rotated state as read back from storage. Replay-idempotent per
+    stamp and ordering-guarded per the module docstring."""
     from namegraph_collections_spark.operators.cdc import pruned_stamps
 
-    unknown = {f for f in merge_cols.values() if f not in _MERGE_FNS}
-    if unknown:
-        raise ValueError(f"unsupported merge fns: {sorted(unknown)}")
-    cols = [*key_cols, *merge_cols]
-    aggs = [_MERGE_FNS[fn](c).alias(c) for c, fn in merge_cols.items()]
     if canonical_stamp(stamp) in pruned_stamps(spark, base_dir):
         # The stamp WAS committed but retention deleted its snapshot
         # (operators/cdc.py::prune_snapshots): its idempotence marker
@@ -166,40 +190,15 @@ def maintain_keyed_state(
             )
         repoint_marker(spark, base_dir, stamp)
         return latest_snapshot(spark, base_dir)
+    cols = state.columns
+    rows = state.program(batch).select(*cols)
     current = latest_snapshot(spark, base_dir)
-    if current is None:
-        # Normalize the FIRST rotation through the same merge-by-key
-        # as every later one: a caller passing a non-pre-aggregated
-        # contribution must not seed the state with duplicate-key rows
-        # that read paths would then double-count. Cheap — the
-        # contribution is bounded at state grain by contract.
-        merged = contribution.select(*cols).groupBy(*key_cols).agg(*aggs)
-    else:
-        merged = (
-            current.select(*cols)
-            .unionByName(contribution.select(*cols))
-            .groupBy(*key_cols)
-            .agg(*aggs)
-        )
-    rotate_snapshot(merged.select(*cols), base_dir, stamp)
+    if current is not None:
+        rows = current.select(*cols).unionByName(rows)
+    # The FIRST rotation goes through the same merge-by-key as every
+    # later one: a program whose rows are not pre-aggregated must not
+    # seed the state with duplicate-key rows that read paths would then
+    # double-count. Cheap — the contribution is bounded at state grain
+    # by contract.
+    rotate_snapshot(state.merged(rows).select(*cols), base_dir, stamp)
     return latest_snapshot(spark, base_dir)
-
-
-def maintain_additive_state(
-    spark: SparkSession,
-    base_dir: str,
-    contribution: DataFrame,
-    key_cols: Sequence[str],
-    sum_cols: Sequence[str],
-    stamp: str,
-) -> DataFrame:
-    """The all-``sum`` special case of :func:`maintain_keyed_state` —
-    the original additive contract every counting maintainer uses."""
-    return maintain_keyed_state(
-        spark,
-        base_dir,
-        contribution,
-        key_cols,
-        {c: "sum" for c in sum_cols},
-        stamp,
-    )

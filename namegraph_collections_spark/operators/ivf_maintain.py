@@ -29,20 +29,15 @@ feature path cannot drift from the diversity operators'.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_spark
-from namegraph_collections_spark.operators.additive_state import (
-    maintain_additive_state,
-)
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.corpus_stats import (
     quantized_unit_vectors,
 )
 from namegraph_collections_spark.queries.similarity import KMEANS_K
-
-#: State schema: (cluster, dim, s, n) — see module docstring.
-STATE_COLS = ["cluster", "dim", "s", "n"]
 
 #: Sentinel dim id for the per-cluster count row.
 SENTINEL_DIM = -1
@@ -88,21 +83,10 @@ def ivf_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     return dims.unionByName(sentinel)
 
 
-def maintain_ivf_state(
-    spark: SparkSession, base_dir: str, new_emb: DataFrame, stamp: str
-) -> DataFrame:
-    """Merge an embedding batch into the standing IVF statistics and
-    rotate a dated snapshot (sum-by-key over <= KMEANS_K x (DIM + 1)
-    rows). Same idempotence/ordering contract as every keyed-state
-    maintainer (operators/additive_state.py)."""
-    return maintain_additive_state(
-        spark,
-        base_dir,
-        ivf_state_for(new_emb),
-        key_cols=["cluster", "dim"],
-        sum_cols=["s", "n"],
-        stamp=stamp,
-    )
+#: The IVF statistics' maintained state (layout and bound in the module
+#: docstring): all sums, exact under any batching because list
+#: assignment is fixed per vector.
+IVF_STATE = KeyedState(ivf_state_for, ("cluster", "dim"), {"s": "sum", "n": "sum"})
 
 
 def centroids_from_state(state: DataFrame) -> DataFrame:

@@ -1,9 +1,8 @@
-"""Incremental maintenance of the corpus vocabulary index — the first
-MIXED-monoid user of the keyed-state core (operators/
-additive_state.py::maintain_keyed_state): per token type the state
-carries its occurrence count (merge = SUM) and the smallest doc_id
-that ever contained it (merge = MIN, "first ever seen" — min is the
-other commutative-associative monoid the core now speaks).
+"""Incremental maintenance of the corpus vocabulary index — the
+MIXED-monoid user of the keyed-state core (operators/additive_state.py):
+per token type the state carries its occurrence count (merge = SUM) and
+the smallest doc_id that ever contained it (merge = MIN, "first ever
+seen").
 
 Why a pipeline wants this standing: the vocabulary is the input to
 tokenizer sizing, Heaps-law extrapolation (queries/corpus_stats.py),
@@ -14,22 +13,15 @@ against state that production bucket-joins on the token). The
 ``first_doc`` column additionally answers "did this batch add NEW
 types" — a batch whose merge leaves the type count unchanged is pure
 repetition, the vocabulary-level duplication smell.
-
-State: (tok, first_doc MIN, occ SUM) — one row per type; type-
-dictionary-bounded, not corpus-bounded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_spark
-from namegraph_collections_spark.operators.additive_state import (
-    maintain_keyed_state,
-)
-
-STATE_COLS = ["tok", "first_doc", "occ"]
+from namegraph_collections_spark.operators.additive_state import KeyedState
 
 
 def vocab_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
@@ -53,21 +45,9 @@ def vocab_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
     )
 
 
-def maintain_vocab_state(
-    spark: SparkSession, base_dir: str, new_docs: DataFrame, stamp: str
-) -> DataFrame:
-    """Merge a document batch into the standing vocabulary index and
-    rotate a dated snapshot: occurrence counts sum, first-seen doc
-    ids take the min. Same idempotence/ordering contract as every
-    keyed-state maintainer."""
-    return maintain_keyed_state(
-        spark,
-        base_dir,
-        vocab_state_for(new_docs),
-        key_cols=["tok"],
-        merge_cols={"first_doc": "min", "occ": "sum"},
-        stamp=stamp,
-    )
+#: The vocabulary index's maintained state: one row per token type —
+#: bounded by the type dictionary, not the corpus.
+VOCAB_STATE = KeyedState(vocab_state_for, ("tok",), {"first_doc": "min", "occ": "sum"})
 
 
 def vocab_head_from_state(state: DataFrame, k: int = 25) -> DataFrame:

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_spark, micro_sql
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.registry import (
     bucketed_global_rank,
     register,
@@ -194,10 +195,9 @@ def quantized_unit_vectors(
 ) -> DataFrame:
     """(key, qv) — the per-row unit-normalize + {_DIVERSITY_Q}-
     quantize program, shared by the diversity state program (which the
-    one-shot query and operators/diversity_maintain.py both read)
-    and the IVF sufficient-statistics maintainer (operators/
-    ivf_maintain.py keys it on the inverted-list id instead of the
-    label) so the feature path can never drift between them. Purely
+    one-shot query and its maintainer both read) and the IVF
+    sufficient-statistics maintainer (operators/ivf_maintain.py keys it
+    on the inverted-list id instead of the label) so the feature path can never drift between them. Purely
     row-local: norm is the index-ordered fold, quantization
     floor-form — no cross-row doubles anywhere. ``extra`` names one
     additional pass-through column (the single-pass fold fixture's
@@ -257,9 +257,9 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
     precedent): rows with ``dim >= 0`` carry the per-(label, dim)
     component sum in ``s``; ONE sentinel row per label (``dim =
     SENTINEL_DIM``) carries the label's vector count in ``n`` and
-    self-square sum in ``self2``. At most labels x (DIM + 1) rows. The
-    one-shot query reads it over the whole table; operators/
-    diversity_maintain.py folds it batch by batch.
+    self-square sum in ``self2``. The one-shot query reads it over the
+    whole table; the maintainer (``DIVERSITY_STATE``) folds it batch by
+    batch.
 
     ``extra`` names a pass-through grouping column (the single-pass
     fold fixture's batch tag — queries/maintainer_reads.py)."""
@@ -306,6 +306,16 @@ def diversity_state_for(emb: DataFrame, extra: str | None = None) -> DataFrame:
         F.when(F.col("_gid") == 1, F.col("q2")).otherwise(zero).alias("self2"),
         F.when(F.col("_gid") == 1, F.col("vecs")).otherwise(zero).alias("n"),
     )
+
+
+#: The embedding-diversity maintained state: all plain sums, so a
+#: growing embedding store folds new vectors in at batch cost and the
+#: metric re-derives exactly without rescanning the store (SemDeDup-
+#: style redundancy monitoring at ingest). At most labels x (DIM + 1)
+#: rows.
+DIVERSITY_STATE = KeyedState(
+    diversity_state_for, ("label", "dim"), {"s": "sum", "self2": "sum", "n": "sum"}
+)
 
 
 def diversity_from_state(state: DataFrame) -> DataFrame:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
     register,
@@ -81,20 +82,25 @@ def _lp_micro_sql(c: str, tot: str) -> str:
     )
 
 
-def dsir_hashed_grams_of(docs: DataFrame) -> DataFrame:
+def dsir_hashed_grams_of(docs: DataFrame, extra: str | None = None) -> DataFrame:
     """The feature program as a pure transformation — (doc_id,
     is_target, bucket), one row per unigram/bigram occurrence. Shared
     by the bucket state (``dsir_state_for``, which the one-shot query
-    and operators/dsir_maintain.py both read) and the scorer
+    and the maintainer both read) and the scorer
     (``dsir_score_against``, which the one-shot query and the
-    streaming scorer both run), so no two paths can drift."""
+    streaming scorer both run), so no two paths can drift. ``extra``
+    names one pass-through column (the fold fixture's batch tag —
+    queries/maintainer_reads.py)."""
+    grp = [extra] if extra is not None else []
     toked = docs.selectExpr(
         "doc_id",
+        *grp,
         f"{_DSIR_TARGET_PRED} AS is_target",
         "filter(split(replace(text, chr(10), ' '), ' '), x -> x != '') AS words",
     )
     grams = toked.select(
         "doc_id",
+        *grp,
         "is_target",
         F.explode(
             F.expr(
@@ -107,25 +113,34 @@ def dsir_hashed_grams_of(docs: DataFrame) -> DataFrame:
         ).alias("gram"),
     )
     return grams.select(
-        "doc_id", "is_target", F.expr(_DSIR_BUCKET_SPARK).alias("bucket")
+        "doc_id", *grp, "is_target", F.expr(_DSIR_BUCKET_SPARK).alias("bucket")
     )
 
 
-def dsir_state_for(docs: DataFrame) -> DataFrame:
+def dsir_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
     """The fit's state program: (bucket, ct, cr) — the target and raw
-    gram counts per feature bucket, at most {DSIR_B} rows whatever the
-    corpus size. Counts are plain sums, so the state of a union of
-    batches is the sum-by-key of their states: the one-shot query reads
-    it over the whole corpus, ``operators/dsir_maintain.py`` folds it
-    batch by batch, and both re-derive the same weight table."""
-    return _bucket_counts(dsir_hashed_grams_of(docs))
+    gram counts per feature bucket. The one-shot query reads it over
+    the whole corpus, the maintainer (``DSIR_STATE``) folds it batch
+    by batch, and both re-derive the same weight table. ``extra``
+    names a pass-through grouping column (the fold fixture's batch
+    tag)."""
+    return _bucket_counts(dsir_hashed_grams_of(docs, extra), extra)
 
 
-def _bucket_counts(hashed: DataFrame) -> DataFrame:
-    return hashed.groupBy("bucket").agg(
+def _bucket_counts(hashed: DataFrame, extra: str | None = None) -> DataFrame:
+    grp = [extra] if extra is not None else []
+    return hashed.groupBy("bucket", *grp).agg(
         F.sum(F.col("is_target").cast("long")).alias("ct"),
         F.sum((~F.col("is_target")).cast("long")).alias("cr"),
     )
+
+
+#: DSIR's maintained state. Gram counts are plain occurrence counts, so
+#: the state IS the aggregate: merged by sum, exact under any batching,
+#: and at most DSIR_B rows whatever the corpus size. Scoring new
+#: documents reads only the (tiny) weight table re-derived from it, so
+#: the ingest path touches no state at all.
+DSIR_STATE = KeyedState(dsir_state_for, ("bucket",), {"ct": "sum", "cr": "sum"})
 
 
 def dsir_weights_from_state(state: DataFrame) -> DataFrame:

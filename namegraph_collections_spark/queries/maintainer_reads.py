@@ -1,18 +1,17 @@
 """Driver-hashed read paths for the keyed-state MAINTAINERS — the
 round-12 closure of the registry-invisible class (round-11 verdict
-ask #2): the incremental maintainers (operators/ivf_maintain.py,
-vocab_maintain.py, diversity_maintain.py, nbq_maintain.py,
-cms_maintain.py, hist_maintain.py) were verified only by pytest
-batch-split parity; their read paths (refreshed centroids, list-
-imbalance monitor, vocabulary table, NB model/prior, sketch probes,
-quantiles) sat outside the driver's hash fence.
+ask #2): the incremental maintainers (the IVF, vocabulary, diversity,
+NB, CMS and histogram ``KeyedState`` declarations) were verified only
+by pytest batch-split parity; their read paths (refreshed centroids,
+list-imbalance monitor, vocabulary table, NB model/prior, sketch
+probes, quantiles) sat outside the driver's hash fence.
 
 ``maintainer_state_battery`` puts every read path inside it: each leg
 derives a maintainer's read-path output from a DETERMINISTICALLY
 FOLDED state fixture — the source table split into three batches by a
 fixed key rule (``key % 3``), each batch's contribution computed by
-the maintainer's OWN ``*_state_for`` program, the contributions merged
-by the maintainer's OWN monoid (sum-by-key; min for the vocabulary's
+the maintainer's OWN state program, the contributions merged by the
+maintainer's OWN declared monoid (sum-by-key; min for the vocabulary's
 ``first_doc``). Because every maintained state is an exact monoid
 fold, the folded state equals the one-shot state over the union — so
 the DuckDB oracles express the one-shot derivation, and the driver
@@ -35,25 +34,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_sql
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.operators.vocab_maintain import (
+    VOCAB_STATE,
     vocab_head_from_state,
-    vocab_state_for,
     vocab_stats_from_state,
 )
 from namegraph_collections_spark.queries.corpus_stats import (
     _QVEC_SQL,
+    DIVERSITY_STATE,
     diversity_from_state,
-    diversity_state_for,
 )
 from namegraph_collections_spark.queries.percentiles import (
     HIST_MAX_B,
-    hist_buckets_of,
+    HIST_STATE,
     hist_quantiles_from_buckets,
 )
 from namegraph_collections_spark.queries.quality_classifier import (
     _NBQ_FIT_CTES,
+    NBQ_STATE,
     nbq_model_from_state,
-    nbq_state_for,
 )
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
@@ -65,10 +65,10 @@ from namegraph_collections_spark.queries.registry import (
     tbl,
 )
 from namegraph_collections_spark.queries.rollups import (
+    CMS_STATE,
     CMS_TOP,
     cms_bigrams_of,
     cms_estimates_from,
-    cms_state_for,
 )
 from namegraph_collections_spark.queries.similarity import DIM, KMEANS_K
 
@@ -81,44 +81,31 @@ FOLD_BATCHES = 3
 VOCAB_HEAD_K = 25
 
 
-def folded_state(
-    src: DataFrame,
-    batch_key: str,
-    contrib,
-    key_cols: list[str],
-    merge_cols: dict[str, str],
-) -> DataFrame:
+def folded_state(src: DataFrame, batch_key: str, state: KeyedState) -> DataFrame:
     """The deterministic state fixture: split ``src`` into
     ``FOLD_BATCHES`` batches by ``batch_key % FOLD_BATCHES``, compute
-    each batch's contribution with the maintainer's own ``*_state_for``
-    program, and merge the contributions with the maintainer's own
-    monoid (``sum`` / ``min`` per column — exactly what
-    ``maintain_additive_state`` / ``maintain_keyed_state`` apply
-    snapshot-to-snapshot, minus the filesystem). Pure plan — no
-    side effects, so it is registry-safe.
+    each batch's contribution with the state's own program, and merge
+    the contributions with its declared monoids — exactly what
+    ``maintain_keyed_state`` applies snapshot-to-snapshot, minus the
+    filesystem. Pure plan — no side effects, so it is registry-safe.
 
     Single-pass shape (optimization round 12, guide §2.3/§2.4): the
-    original fixture built each batch as ``contrib(src.filter(key %
+    original fixture built each batch as ``program(src.filter(key %
     {FOLD_BATCHES} == i))`` — {FOLD_BATCHES} scans of the source and
     {FOLD_BATCHES} feature-extraction pipelines per maintainer, i.e.
     {FOLD_BATCHES} corpus passes at cluster scale. Because the
     batches partition the rows, tagging every row with its batch id
-    and grouping each ``*_state_for`` aggregation by (state keys,
-    tag) yields EXACTLY the same per-batch contribution rows in ONE
-    scan — the ``extra`` parameter every maintainer's state program
-    now takes. The merge is the unchanged monoid groupBy, so the
+    and grouping each state program's aggregation by (state keys, tag)
+    yields EXACTLY the same per-batch contribution rows in ONE
+    scan — the ``extra`` parameter every foldable state program
+    takes. The merge is the unchanged monoid groupBy, so the
     driver row still witnesses fold-of-{FOLD_BATCHES} == one-shot
     (equality with the legacy 3-filter shape is pinned by
     tests/test_maintainer_reads.py)."""
     tagged = src.withColumn(
         "_fold_b", (F.col(batch_key) % FOLD_BATCHES).cast("int")
     )
-    per_batch = contrib(tagged, extra="_fold_b")
-    aggs = [
-        (F.sum(c) if how == "sum" else F.min(c)).cast("long").alias(c)
-        for c, how in merge_cols.items()
-    ]
-    return per_batch.groupBy(*[F.col(c) for c in key_cols]).agg(*aggs)
+    return state.merged(state.program(tagged, extra="_fold_b"))
 
 
 #: The Spark side of ``maintainer_state_battery``. Its legs read
@@ -269,8 +256,8 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``import operators.ivf_maintain`` re-enter a partially-initialized
     # module; it is imported here instead.
     from namegraph_collections_spark.operators.ivf_maintain import (
+        IVF_STATE,
         centroids_from_state,
-        ivf_state_for,
         list_balance_from_state,
     )
 
@@ -309,25 +296,12 @@ def maintainer_state_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand,
         ) = run_parallel(
             spark,
-            lambda: folded_state(
-                emb, "vec_id", ivf_state_for, ["cluster", "dim"], {"s": "sum", "n": "sum"}
-            ).localCheckpoint(eager=True),
-            lambda: folded_state(
-                docs, "doc_id", vocab_state_for, ["tok"], {"first_doc": "min", "occ": "sum"}
-            ).localCheckpoint(eager=True),
-            lambda: folded_state(
-                emb, "vec_id", diversity_state_for, ["label", "dim"],
-                {"s": "sum", "self2": "sum", "n": "sum"},
-            ).localCheckpoint(eager=True),
-            lambda: folded_state(
-                docs, "doc_id", nbq_state_for, ["bucket"], {"cp": "sum", "cn": "sum"}
-            ).localCheckpoint(eager=True),
-            lambda: folded_state(
-                li, "l_orderkey", hist_buckets_of, ["bucket"], {"c": "sum"}
-            ).localCheckpoint(eager=True),
-            lambda: folded_state(
-                docs, "doc_id", cms_state_for, ["d", "bucket"], {"c": "sum"}
-            ).localCheckpoint(eager=True),
+            lambda: folded_state(emb, "vec_id", IVF_STATE).localCheckpoint(eager=True),
+            lambda: folded_state(docs, "doc_id", VOCAB_STATE).localCheckpoint(eager=True),
+            lambda: folded_state(emb, "vec_id", DIVERSITY_STATE).localCheckpoint(eager=True),
+            lambda: folded_state(docs, "doc_id", NBQ_STATE).localCheckpoint(eager=True),
+            lambda: folded_state(li, "l_orderkey", HIST_STATE).localCheckpoint(eager=True),
+            lambda: folded_state(docs, "doc_id", CMS_STATE).localCheckpoint(eager=True),
             lambda: ranked_topk(
                 cms_bigrams_of(docs).groupBy("token").agg(F.count(F.lit(1)).alias("n_exact")),
                 CMS_TOP,

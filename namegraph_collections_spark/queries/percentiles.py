@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.registry import register, tbl
 
 #: (label, quantile) pairs reported per source.
@@ -170,9 +171,9 @@ def hist_buckets_of(li: DataFrame, extra: str | None = None) -> DataFrame:
     """The ONE data pass as a pure transformation — (bucket, c) grid
     counts of a lineitem frame, clamped to [0, {HIST_MAX_B}). Shared
     by the one-shot query and the incremental maintenance
-    (operators/hist_maintain.py): grid counts are plain sums, so
-    histograms from different shards/days merge by adding bucket
-    counts — the property the maintainer exploits.
+    (``HIST_STATE``): grid counts are plain sums, so histograms from
+    different shards/days merge by adding bucket counts — the property
+    the maintainer exploits.
 
     ``extra`` names a pass-through grouping column (the single-pass
     fold fixture's batch tag — queries/maintainer_reads.py). The
@@ -196,6 +197,16 @@ def hist_buckets_of(li: DataFrame, extra: str | None = None) -> DataFrame:
     if extra is None:
         out = out.limit(HIST_MAX_B)  # no-op by construction; states the bound
     return out
+
+
+#: The histogram's maintained state. Bucketing is a per-ROW function of
+#: l_extendedprice, so ANY batching of the table partitions the grid
+#: counts: the state merged by sum equals the one-shot grid exactly, and
+#: the quantiles re-derive from it with no re-scan. At most HIST_MAX_B
+#: rows — each day folds its grid in, and p50/p90/p99 re-derive from
+#: the standing grid (the mergeable half of the exact-vs-mergeable
+#: trade in ``histogram_quantiles``' docstring).
+HIST_STATE = KeyedState(hist_buckets_of, ("bucket",), {"c": "sum"})
 
 
 def hist_quantiles_from_buckets(b: DataFrame) -> DataFrame:

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from namegraph_collections_spark.functions.det_round import micro_spark, micro_sql
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.data_selection import DSIR_TARGET_SRCS
 from namegraph_collections_spark.queries.registry import (
     REGISTRY,
@@ -174,9 +175,9 @@ def nbq_state_for(
     carries the TRAIN-split gram counts per class, and ONE sentinel row
     ``bucket = PRIOR_BUCKET`` carries the train DOC counts (np, nn) in
     the same two columns — so the whole model is a single additive
-    frame of at most NBQ_B + 1 rows. The one-shot fit reads it over the
-    whole corpus (``nbq_model_of``); operators/nbq_maintain.py folds it
-    batch by batch.
+    frame. The one-shot fit reads it over the whole corpus
+    (``nbq_model_of``); the maintainer (``NBQ_STATE``) folds it batch by
+    batch.
 
     ``extra`` names a pass-through grouping column (the single-pass
     fold fixture's batch tag — queries/maintainer_reads.py). In
@@ -220,6 +221,14 @@ def _nbq_counts(
     return grams.select("bucket", *grp, "cp", "cn").unionByName(prior)
 
 
+#: The NB model's maintained state: the per-class counts are plain
+#: sums, so labeled batches fold in by sum and the model re-derives
+#: exactly (never approximately) from state alone. The prior sentinel
+#: row keeps the whole model in one additive frame, so the shared merge
+#: handles it unchanged; at most NBQ_B + 1 rows.
+NBQ_STATE = KeyedState(nbq_state_for, ("bucket",), {"cp": "sum", "cn": "sum"})
+
+
 def nbq_model_from_state(state: DataFrame):
     """Read the (weights, prior) model from the count state alone:
     the <= {NBQ_B}-row (bucket, w_micro) table — w_micro = lp_hq -
@@ -230,8 +239,11 @@ def nbq_model_from_state(state: DataFrame):
     the read never re-reads a document."""
     spark = state.sparkSession
     grams = state.filter(F.col("bucket") != PRIOR_BUCKET)
+    # Coalesced: with no train gram the sums run over no rows, and the
+    # totals are 0 (the oracle's COUNT(*)), not NULL.
     tots = grams.agg(
-        F.sum("cp").alias("t_pos"), F.sum("cn").alias("t_neg")
+        F.coalesce(F.sum("cp"), F.lit(0)).alias("t_pos"),
+        F.coalesce(F.sum("cn"), F.lit(0)).alias("t_neg"),
     )
     w = (
         spark.range(NBQ_B)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from namegraph_collections_spark.functions.det_round import round6_det
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.registry import (
     events_tbl,
     ranked_topk,
@@ -392,8 +393,8 @@ _BIGRAMS_SQL = """
 def cms_bigrams_of(docs: DataFrame, extra: str | None = None) -> DataFrame:
     """The token stream the sketch summarizes — one (token) row per
     bigram occurrence, per document. A pure transformation so the
-    one-shot query and the incremental maintenance
-    (operators/cms_maintain.py) share one program and cannot drift.
+    one-shot query and the incremental maintenance (``CMS_STATE``)
+    share one program and cannot drift.
     Bigrams never cross documents, so ANY partition of the corpus
     into batches partitions this stream too — the property that makes
     the CMS state exactly additive across batches. ``extra`` names
@@ -435,7 +436,7 @@ def cms_sketch_of(occ: DataFrame, extra: str | None = None) -> DataFrame:
 def cms_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
     """The sketch's state program over a documents frame: the bigram
     stream's cell counts — a batch's additive contribution to the
-    maintained sketch (operators/cms_maintain.py).
+    maintained sketch (``CMS_STATE``).
 
     ``extra`` names a pass-through grouping column (the single-pass
     fold fixture's batch tag — queries/maintainer_reads.py)."""
@@ -443,6 +444,18 @@ def cms_state_for(docs: DataFrame, extra: str | None = None) -> DataFrame:
     return cms_sketch_of(
         cms_bigrams_of(docs.select(*cols), extra=extra), extra=extra
     )
+
+
+#: The Count-Min sketch's maintained state: cell counts are plain sums,
+#: so sketches of two streams combine by cell-wise addition (Cormode &
+#: Muthukrishnan 2005 §4.1), and because bigrams never cross documents
+#: the merged sketch equals the one-shot sketch EXACTLY under any
+#: batching. At most CMS_D x CMS_W rows forever. Only the sketch is
+#: maintained: a streaming top-k candidate ledger is approximate under
+#: merges, so exact heavy hitters stay the one-shot ``cms_heavy_hitters``
+#: and a rolling candidate list probes this state with
+#: ``cms_estimates_from``.
+CMS_STATE = KeyedState(cms_state_for, ("d", "bucket"), {"c": "sum"})
 
 
 def cms_estimates_from(state: DataFrame, tokens: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 from namegraph_collections_spark.functions.det_round import round6_det, round6_det_sql
 from namegraph_collections_spark.functions.porter_sql import porter_ctes
 from namegraph_collections_spark.functions.stemmer import porter_stem
-from namegraph_collections_spark.queries.registry import register, spread, tbl
+from namegraph_collections_spark.queries.registry import ranked_topk, register, spread, tbl
 
 QUERY_TERMS = ["spark", "join", "merge", "window"]
 #: Query terms after the analyzer: what stemmed_bm25 actually matches.
@@ -44,15 +44,6 @@ PUBLIC_SQL = "doc_id % 7 <> 0"
 
 def _public(docs: DataFrame) -> DataFrame:
     return docs.filter(F.col("doc_id") % 7 != 0)
-
-
-def _ranked_topk(df: DataFrame, k: int, *order, rnk: str = "rnk") -> DataFrame:
-    """Alias of registry.ranked_topk (the shared TakeOrderedAndProject
-    top-k; see its docstring) — kept so the search queries' call sites
-    read locally."""
-    from namegraph_collections_spark.queries.registry import ranked_topk
-
-    return ranked_topk(df, k, *order, rnk=rnk)
 
 
 # --- LTR feature set (configure-ltr.py:92-121) ------------------------------
@@ -254,7 +245,7 @@ def search_ltr_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("base_score"))
     )
-    window = _ranked_topk(
+    window = ranked_topk(
         base, RESCORE_WINDOW, F.col("base_score").desc(), F.col("doc_id").asc(), rnk="base_rnk"
     )
 
@@ -319,7 +310,7 @@ def search_ltr_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in LTR_TREES[1:]:
         acc = acc + _tree_col(t).cast("decimal(18,6)")
     rescored = feats.withColumn("ltr_score", acc.cast("double"))
-    return _ranked_topk(
+    return ranked_topk(
         rescored, FINAL_K, F.col("ltr_score").desc(), F.col("doc_id").asc()
     ).select("doc_id", "base_score", *LTR_FEATURE_NAMES, "ltr_score", "rnk")
 
@@ -420,7 +411,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_stats.filter(matched > 0)
         .select("doc_id", score.cast("double").alias("score"))
     )
-    return _ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
+    return ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
 
 
 NDCG_K = 10
@@ -697,7 +688,7 @@ def multifield_bm25_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
 
     def tag(col: str, v: str) -> DataFrame:
-        return _ranked_topk(
+        return ranked_topk(
             scores.select("doc_id", F.col(col).alias("score")),
             TOP_K,
             F.col("score").desc(),
@@ -799,6 +790,6 @@ def stemmed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.sum("c").cast("double").alias("score"))
-    return _ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
+    return ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
 
 

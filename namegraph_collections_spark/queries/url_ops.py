@@ -22,7 +22,8 @@ content dedup (no text ever has to be compared or shuffled).
 
 Determinism: every normalization expression is ONE SQL string shared
 verbatim by the Spark plan and the DuckDB oracle (split_part / lower /
-replace semantics are identical on these literals; the one regex uses
+replace semantics are identical on these literals, except split_part
+of a NULL, which ``_spark_split`` settles; the one regex uses
 a ``[.]`` character class and ``/+$`` only, so no string-literal
 escape dialect is involved); outputs are strings/booleans/BIGINTs.
 
@@ -77,6 +78,15 @@ _HOST_SQL = "split_part(split_part(base_url, '://', 2), '/', 1)"
 #: Registrable-domain heuristic: the last two host labels. ``[.]`` is
 #: a literal dot in both regex dialects with no escape involved.
 _DOMAIN_SQL = f"regexp_extract({_HOST_SQL}, '([^.]+[.][^.]+)$', 1)"
+
+
+def _spark_split(sql: str) -> str:
+    """The Spark spelling of a step over ``raw_url``: DuckDB's
+    ``split_part`` maps a NULL string to ``''`` where Spark's keeps
+    NULL, so Spark splits ``COALESCE(raw_url, '')``, and a document
+    without a source gets the oracle's ``''`` URL, host and domain (its
+    ``raw_url`` stays NULL on both engines)."""
+    return sql.replace("split_part(raw_url,", "split_part(COALESCE(raw_url, ''),")
 
 
 @register(
@@ -140,8 +150,8 @@ def url_canonicalize_of(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFra
         "doc_id",
         *carry,
         "raw_url",
-        F.expr(_BASE_URL_SQL).alias("base_url"),
-        F.expr(_ID_VAL_SQL).alias("id_val"),
+        F.expr(_spark_split(_BASE_URL_SQL)).alias("base_url"),
+        F.expr(_spark_split(_ID_VAL_SQL)).alias("id_val"),
     )
     return steps.select(
         "doc_id",

@@ -29,11 +29,10 @@ shuffle-free), then the gate's page-grain state — ONE partial-
 aggregated groupBy on (domain, norm_url), one exchange of slim keys —
 and a second groupBy on ``domain`` over that state, which is where
 the distinct page count becomes a row count. The same two steps are
-the incremental gate's state program and read
-(operators/gate_maintain.py), so the one-shot rollup and the
-maintained one share one definition. The output table (one row per
-domain) then broadcast-joins back onto the corpus as the actual drop
-filter.
+the incremental gate's state program and read (``GATE_STATE``), so
+the one-shot rollup and the maintained one share one definition. The
+output table (one row per domain) then broadcast-joins back onto the
+corpus as the actual drop filter.
 """
 
 from __future__ import annotations
@@ -41,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from namegraph_collections_spark.operators.additive_state import KeyedState
 from namegraph_collections_spark.queries.quality_signals import (
     _micro_sql,
     _micro_spark,
@@ -118,8 +118,8 @@ def per_doc_web_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def per_doc_web_frame_of(docs: DataFrame) -> DataFrame:
     """The fused per-doc program over any (doc_id, source, text) frame
-    — split out so the incremental gate maintenance
-    (operators/gate_maintain.py) and the ingest-time gate
+    — split out so the incremental gate maintenance (``GATE_STATE``)
+    and the ingest-time gate
     (streaming/filter_stream.py) run the IDENTICAL arithmetic on a
     batch as the full-corpus rollup runs on the table."""
     url = url_canonicalize_of(docs, carry=("text",))
@@ -134,12 +134,27 @@ def gate_state_for(per_doc: DataFrame) -> DataFrame:
     same URL), but at the distinct key's grain every measure IS
     additive: merging batches is a sum-by-key and distinct pages per
     domain is a row count. The one-shot rollup reads it over the whole
-    corpus; operators/gate_maintain.py folds it batch by batch."""
+    corpus; the maintainer (``GATE_STATE``) folds it batch by batch."""
     return per_doc.groupBy("domain", "norm_url").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.col("keep").cast("long")).alias("n_keep"),
         F.sum("n_words").cast("long").alias("sum_words"),
     )
+
+
+#: The domain gate's maintained state. ``n_pages`` is a distinct count,
+#: which no per-batch gate table can sum, so the state sits at the
+#: distinct key's grain, where every measure IS additive: a batch merges
+#: by sum and the gate re-derives exactly (|pages| → |domains|, never a
+#: re-scan). Bounded by the number of distinct canonical URLs — the same
+#: asymptotics as the URL-dedup index a web pipeline already keeps.
+GATE_STATE = KeyedState(
+    lambda batch: gate_state_for(
+        per_doc_web_frame_of(batch.select("doc_id", "source", "text"))
+    ),
+    ("domain", "norm_url"),
+    {"n_docs": "sum", "n_keep": "sum", "sum_words": "sum"},
+)
 
 
 def gate_from_state(state: DataFrame) -> DataFrame:

@@ -9,25 +9,30 @@ operators a training-data pipeline needs over the `events` table
 
 Two recurring shapes, both parity-pinned against their batch twins:
 
-- **Stateless ingest transforms** (filter_stream, nbq_stream, the
-  DSIR scorer): the identical column program runs on `readStream`
-  sources in append mode — per-micro-batch cost proportional to new
-  files, zero state.
-- **foreachBatch additive-state maintainers**
-  (``run_maintenance_stream`` over the gate, DSIR, CMS, vocabulary,
-  IVF and diversity maintainers): each micro-batch merges into a
-  persisted keyed state via the BATCH maintenance function verbatim
-  on the shared `operators/additive_state.py` contract (stamp-keyed
-  replay idempotence, crash-window safety, ordering guard).
+- **Stateless ingest transforms** (filter_stream, and the DSIR and NB
+  scorers through ``run_scoring_stream``): the identical column program
+  runs on `readStream` sources — per-micro-batch cost proportional to
+  new files, zero state.
+- **foreachBatch keyed-state maintainers** (``run_maintenance_stream``
+  over any ``KeyedState`` declaration — gate, DSIR, NB, CMS, histogram,
+  vocabulary, IVF, diversity): each micro-batch merges into a persisted
+  keyed state via the BATCH merge verbatim on the shared
+  `operators/additive_state.py` contract (stamp-keyed replay
+  idempotence, crash-window safety, ordering guard).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from namegraph_collections_spark.operators.additive_state import batch_stamp
+from namegraph_collections_spark.operators.additive_state import (
+    KeyedState,
+    batch_stamp,
+    maintain_keyed_state,
+)
+from namegraph_collections_spark.streaming.idempotent_sink import write_scored_batch
 
 
 def drain_batches(
@@ -52,27 +57,51 @@ def drain_batches(
 
 def run_maintenance_stream(
     stream: DataFrame,
-    maintain: Callable[[SparkSession, str, DataFrame, str], DataFrame],
+    state: KeyedState,
     base_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    """Drain a stream through a keyed-state maintainer
-    (``maintain_*_state(spark, base_dir, batch, stamp)``): every
-    micro-batch merges into the standing state under ``base_dir`` via
-    the batch function verbatim (one code path, no drift), stamped with
-    the zero-padded batch id.
+    """Drain a stream into a keyed state: every micro-batch merges into
+    the standing state under ``base_dir`` through
+    ``maintain_keyed_state`` verbatim (one code path, no drift), stamped
+    with the zero-padded batch id.
 
     foreachBatch is at-least-once: a crash between the snapshot
     rotation and the streaming checkpoint commit redelivers the same
-    batch id on restart. The maintainers are idempotent per stamp — an
+    batch id on restart. The merge is idempotent per stamp — an
     already-written ``snapshot=b<id>`` only repoints the marker — so a
     redelivery never merges twice (the replay tests in
-    tests/test_*_maintain.py merge one stamp twice). Per
-    micro-batch the cost is the maintainer's: a scan of the new files,
-    a partial-aggregated shuffle of the batch, and a merge-by-key
-    against a state bounded by its key space."""
+    tests/test_*_maintain.py merge one stamp twice). Per micro-batch
+    the cost is the state program's: a scan of the new files, a
+    partial-aggregated shuffle of the batch, and a merge-by-key against
+    a state bounded by its key space."""
     drain_batches(
         stream,
-        lambda batch_df, batch_id: maintain(batch_df.sparkSession, base_dir, batch_df, batch_stamp(batch_id)),
+        lambda batch_df, batch_id: maintain_keyed_state(
+            batch_df.sparkSession, base_dir, state, batch_df, batch_stamp(batch_id)
+        ),
+        checkpoint_dir,
+    )
+
+
+def run_scoring_stream(
+    stream: DataFrame,
+    score: Callable[[DataFrame], DataFrame],
+    out_dir: str,
+    checkpoint_dir: str,
+) -> None:
+    """Score a documents stream against an already-fitted model, e.g.
+    ``lambda b: dsir_score_against(b, bw)``: each micro-batch is scored
+    by the BATCH function verbatim and lands batch-stamp-keyed under
+    ``out_dir`` (``ingest_batch=`` partitions, dynamic overwrite), so an
+    at-least-once redelivery overwrites its own partition instead of
+    appending a duplicate (streaming/idempotent_sink.py). The model is
+    a small static broadcast side and documents arrive whole (one file
+    carries complete documents), so scores are batching-invariant and
+    the stream keeps no state; a stream that split a document across
+    micro-batches would need a stateful variant."""
+    drain_batches(
+        stream,
+        lambda batch_df, batch_id: write_scored_batch(score(batch_df), out_dir, batch_id),
         checkpoint_dir,
     )

@@ -1,9 +1,8 @@
 """The embeddings source of the streaming maintainers: new embedding
 files feed ``run_maintenance_stream`` (streaming/__init__.py) with the
-diversity or IVF maintainer (operators/diversity_maintain.py,
-operators/ivf_maintain.py), so an ingest pipeline watches its
-clusters' redundancy drift and an ANN index's sufficient statistics
-without rescanning the store.
+diversity or IVF state (``DIVERSITY_STATE``, ``IVF_STATE``), so an
+ingest pipeline watches its clusters' redundancy drift and an ANN
+index's sufficient statistics without rescanning the store.
 """
 
 from __future__ import annotations

@@ -10,9 +10,14 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from namegraph_collections_spark.operators.additive_state import (
-    maintain_additive_state,
+    KeyedState,
+    maintain_keyed_state,
     marker_stamp,
 )
+
+#: Raw keyed rows merged as they are: the identity program.
+SUM_AB = KeyedState(lambda rows: rows, ("k",), {"a": "sum", "b": "sum"})
+MIN_A_SUM_B = KeyedState(lambda rows: rows, ("k",), {"a": "min", "b": "sum"})
 
 _SETTINGS = dict(
     max_examples=6,
@@ -73,9 +78,7 @@ def test_any_batching_converges_to_the_global_aggregate(
             .groupBy("k")
             .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
         )
-        state = maintain_additive_state(
-            spark, base, contrib, ["k"], ["a", "b"], f"t{stamp}"
-        )
+        state = maintain_keyed_state(spark, base, SUM_AB, contrib, f"t{stamp}")
         stamp += 1
     assert state is not None
     assert _state_rows(state) == _expected(rows)
@@ -94,7 +97,7 @@ def test_first_rotation_normalizes_a_non_preaggregated_contribution(
     raw = spark.createDataFrame(
         [(1, 10, 1), (1, 5, 2), (2, 7, 3)], "k long, a long, b long"
     )
-    state = maintain_additive_state(spark, base, raw, ["k"], ["a", "b"], "t0")
+    state = maintain_keyed_state(spark, base, SUM_AB, raw, "t0")
     assert _state_rows(state) == [(1, 15, 3), (2, 7, 3)]
 
 
@@ -120,12 +123,10 @@ def test_batch_stamps_order_numerically_past_any_padding_width(
 
     base = str(tmp_path_factory.mktemp("astate_stampwidth"))
     contrib = spark.createDataFrame([(1, 1, 1)], "k long, a long, b long")
-    maintain_additive_state(spark, base, contrib, ["k"], ["a", "b"], "b999999")
+    maintain_keyed_state(spark, base, SUM_AB, contrib, "b999999")
     # merging the numerically-NEWER but lexicographically-smaller
     # stamp must succeed, not raise out-of-order
-    state = maintain_additive_state(
-        spark, base, contrib, ["k"], ["a", "b"], "b1000000"
-    )
+    state = maintain_keyed_state(spark, base, SUM_AB, contrib, "b1000000")
     assert _state_rows(state) == [(1, 2, 2)]
 
 
@@ -135,10 +136,6 @@ def test_mixed_monoid_batching_converges(spark, tmp_path_factory, rows, split):
     """maintain_keyed_state with {a: min, b: sum}: any slicing of the
     rows into batches converges to (min a, sum b) per key — the
     guarantee the vocabulary index's first_doc column rides."""
-    from namegraph_collections_spark.operators.additive_state import (
-        maintain_keyed_state,
-    )
-
     base = str(tmp_path_factory.mktemp("kstate"))
     batches = {0: [], 1: [], 2: []}
     for i, row in enumerate(rows):
@@ -149,9 +146,7 @@ def test_mixed_monoid_batching_converges(spark, tmp_path_factory, rows, split):
         if not batches[b]:
             continue
         contrib = spark.createDataFrame(batches[b], "k long, a long, b long")
-        state = maintain_keyed_state(
-            spark, base, contrib, ["k"], {"a": "min", "b": "sum"}, f"t{stamp}"
-        )
+        state = maintain_keyed_state(spark, base, MIN_A_SUM_B, contrib, f"t{stamp}")
         stamp += 1
     assert state is not None
     agg: dict[int, tuple[int, int]] = {}

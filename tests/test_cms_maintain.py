@@ -1,5 +1,5 @@
 """Additive-cell IVM for the Count-Min sketch
-(operators/cms_maintain.py): the sketch maintained over batch
+(``CMS_STATE``): the sketch maintained over batch
 rotations must equal the one-shot sketch EXACTLY — cell counts are
 additive and bigrams never cross documents — and the shared probe
 read path over maintained state must reproduce the one-shot query's
@@ -7,12 +7,11 @@ estimates for the same candidate tokens."""
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.cms_maintain import (
-    maintain_cms_state,
-)
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.registry import spread
 from namegraph_collections_spark.queries.rollups import (
+    CMS_STATE,
     cms_bigrams_of,
     cms_estimates_from,
     cms_sketch_of,
@@ -35,8 +34,8 @@ def test_three_rotations_equal_the_one_shot_sketch(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     state = None
     for i in range(3):
-        state = maintain_cms_state(
-            spark, base, docs.filter(f"doc_id % 3 = {i}"), f"t{i}"
+        state = maintain_keyed_state(
+            spark, base, CMS_STATE, docs.filter(f"doc_id % 3 = {i}"), f"t{i}"
         )
     assert _rows(state) == _rows(_one_shot_sketch(spark))
 
@@ -49,8 +48,8 @@ def test_probe_over_maintained_state_matches_one_shot_estimates(spark, tmp_path)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     state = None
     for i in range(2):
-        state = maintain_cms_state(
-            spark, base, docs.filter(f"doc_id % 2 = {i}"), f"t{i}"
+        state = maintain_keyed_state(
+            spark, base, CMS_STATE, docs.filter(f"doc_id % 2 = {i}"), f"t{i}"
         )
     hh = REGISTRY["cms_heavy_hitters"].fn(spark, SF_DIR)
     want = {r.token: r.cms_estimate for r in hh.collect()}
@@ -70,8 +69,8 @@ def test_replayed_batch_does_not_double_merge(spark, tmp_path):
     base = str(tmp_path / "cms_state_replay")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wave = docs.filter("doc_id % 2 = 0")
-    state1 = maintain_cms_state(spark, base, wave, "t0")
-    replayed = maintain_cms_state(spark, base, wave, "t0")
+    state1 = maintain_keyed_state(spark, base, CMS_STATE, wave, "t0")
+    replayed = maintain_keyed_state(spark, base, CMS_STATE, wave, "t0")
     assert _rows(replayed) == _rows(state1)
 
 
@@ -97,6 +96,6 @@ def test_streaming_maintenance_equals_the_one_shot_sketch(spark, tmp_path):
 
     base = str(tmp_path / "cms_state_stream")
     run_maintenance_stream(
-        read_documents_stream(spark, str(zone)), maintain_cms_state, base, str(tmp_path / "ckpt")
+        read_documents_stream(spark, str(zone)), CMS_STATE, base, str(tmp_path / "ckpt")
     )
     assert _rows(latest_snapshot(spark, base)) == _rows(_one_shot_sketch(spark))

@@ -1,10 +1,9 @@
-"""Degenerate inputs to the four fits that read their maintainer's state
-program (DSIR, NB, embedding diversity, the domain gate). Each case
-builds a variant table with pyarrow next to the unchanged other tables
-and runs the REGISTERED query on it: the result equals the DuckDB
-oracle's (or, where a component upstream of the fit already differs
-from its oracle on that input, the fit's own reference semantics) or
-raises the engine's named guard error."""
+"""Degenerate inputs to the fits that read their maintainer's state
+program (DSIR, NB, embedding diversity, the domain gate) and to the URL
+program under the gate. Each case builds a variant table with pyarrow
+next to the unchanged other tables and runs the REGISTERED query on it:
+the result equals the DuckDB oracle's, or the query raises the engine's
+named guard error."""
 
 from __future__ import annotations
 
@@ -56,19 +55,48 @@ def _check_dsir_empty(rows, spark, sf):
     assert rows == []
 
 
+def _check_nb_no_train_weights(rows, spark, sf):
+    """The battery's NB weight leg equals the oracle's ``w``: with no
+    train gram both smoothed class distributions are uniform, so every
+    bucket weighs 0, not NULL. (Only this leg: the whole battery also
+    differs in its prior leg, which gets no row from a state without a
+    prior row where the oracle has one NULL row.)"""
+    from namegraph_collections_spark.queries.quality_classifier import _NBQ_FIT_CTES
+    from tests.oracle_harness import duck_connection
+
+    con = duck_connection(sf)
+    want = sorted(con.sql(f"WITH {_NBQ_FIT_CTES} SELECT bucket, w_micro FROM w").fetchall())
+    got = sorted((r.k1, r.v1) for r in rows if r.op == "nbq_w")
+    assert got == want
+    assert got and all(w == 0 for _, w in got)
+
+
 def _check_gate_null_url(rows, spark, sf):
     """n_pages is COUNT(DISTINCT norm_url) per domain: the two URL-less
-    documents form the NULL domain, which has no page. (The oracle is
-    no reference here: on a NULL source DuckDB's URL program yields ''
-    where Spark's yields NULL, upstream of the gate.)"""
+    documents form the '' domain (the oracle's value, see
+    ``url_ops._spark_split``), whose one page is the '' URL."""
     from pyspark.sql import functions as F
 
     from namegraph_collections_spark.queries.web_rollup import per_doc_web_frame
 
-    (r,) = [r for r in rows if r.domain is None]
-    assert (r.n_docs, r.n_pages) == (2, 0)
+    (r,) = [r for r in rows if r.domain == ""]
+    assert (r.n_docs, r.n_pages) == (2, 1)
+    assert all(r.domain is not None for r in rows)
     distinct = per_doc_web_frame(spark, sf).groupBy("domain").agg(F.countDistinct("norm_url").alias("n"))
     assert {r.domain: r.n_pages for r in rows} == {d.domain: d.n for d in distinct.collect()}
+
+
+def _check_url_null_source(rows, spark, sf):
+    """A document without a source has no raw URL, and the oracle's ''
+    canonical URL and domain."""
+    bare = [r for r in rows if r.raw_url is None]
+    assert len(bare) == 2
+    assert all((r.norm_url, r.domain, r.dup_count) == ("", "", 2) for r in bare)
+
+
+def _check_gated_null_source(rows, spark, sf):
+    # every document keeps its row: the URL-less pair joins the '' domain
+    assert sum(r.domain == "" for r in rows) == 2
 
 
 @pytest.mark.parametrize(
@@ -79,9 +107,15 @@ def _check_gate_null_url(rows, spark, sf):
         ("embedding_diversity", "embeddings", _null_first_embedding, "DIM-width invariant", None, False),
         ("nb_quality_scores", "documents", _test_split_only, None, _check_nb_no_train, True),
         ("dsir_importance_weights", "documents", _no_rows, None, _check_dsir_empty, True),
-        ("host_quality_rollup", "documents", _null_first_sources, None, _check_gate_null_url, False),
+        ("host_quality_rollup", "documents", _null_first_sources, None, _check_gate_null_url, True),
+        ("url_canonical_dedup", "documents", _null_first_sources, None, _check_url_null_source, True),
+        ("domain_gated_corpus", "documents", _null_first_sources, None, _check_gated_null_source, True),
+        ("maintainer_state_battery", "documents", _test_split_only, None, _check_nb_no_train_weights, False),
     ],
-    ids=["diversity-null-embedding", "nb-no-train-split", "dsir-empty-documents", "gate-null-url"],
+    ids=[
+        "diversity-null-embedding", "nb-no-train-split", "dsir-empty-documents", "gate-null-url",
+        "url-null-source", "gated-null-source", "nb-no-train-weights",
+    ],
 )
 def test_degenerate_input_gives_oracle_parity_or_a_named_error(
     spark, tmp_path, query, table, variant, error, check, oracle

@@ -1,5 +1,5 @@
 """Additive IVM for the embedding-diversity state
-(operators/diversity_maintain.py): the state merged over any batching
+(``DIVERSITY_STATE``): the state merged over any batching
 must re-derive EXACTLY the one-shot embedding_diversity table —
 per-label rows AND the corpus row — plus the standard contract
 battery (streaming twin, replay idempotence)."""
@@ -8,12 +8,11 @@ from __future__ import annotations
 
 import pytest
 
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.operators.cdc import latest_snapshot
-from namegraph_collections_spark.operators.diversity_maintain import (
-    maintain_diversity_state,
-)
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.corpus_stats import (
+    DIVERSITY_STATE,
     diversity_from_state,
     diversity_state_for,
 )
@@ -31,8 +30,8 @@ def test_two_rotations_rederive_the_one_shot_diversity(spark, tmp_path):
     wave1 = emb.filter("vec_id % 2 = 0")
     wave2 = emb.filter("vec_id % 2 = 1")
 
-    maintain_diversity_state(spark, base, wave1, "t0")
-    state = maintain_diversity_state(spark, base, wave2, "t1")
+    maintain_keyed_state(spark, base, DIVERSITY_STATE, wave1, "t0")
+    state = maintain_keyed_state(spark, base, DIVERSITY_STATE, wave2, "t1")
 
     got = diversity_from_state(state)
     want = REGISTRY["embedding_diversity"].fn(spark, SF_DIR)
@@ -43,8 +42,8 @@ def test_replayed_batch_does_not_remerge(spark, tmp_path):
     base = str(tmp_path / "div_replay")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     wave = emb.filter("vec_id % 2 = 0")
-    state1 = maintain_diversity_state(spark, base, wave, "t0")
-    replayed = maintain_diversity_state(spark, base, wave, "t0")
+    state1 = maintain_keyed_state(spark, base, DIVERSITY_STATE, wave, "t0")
+    replayed = maintain_keyed_state(spark, base, DIVERSITY_STATE, wave, "t0")
     assert _rows(replayed) == _rows(state1)
 
 
@@ -67,7 +66,7 @@ def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
 
     base = str(tmp_path / "div_stream_state")
     run_maintenance_stream(
-        read_embeddings_stream(spark, str(zone)), maintain_diversity_state, base, str(tmp_path / "ckpt")
+        read_embeddings_stream(spark, str(zone)), DIVERSITY_STATE, base, str(tmp_path / "ckpt")
     )
     got = diversity_from_state(latest_snapshot(spark, base))
     want = diversity_from_state(diversity_state_for(emb))

@@ -1,5 +1,5 @@
 """Additive-count IVM for the DSIR feature distributions
-(operators/dsir_maintain.py): maintaining the bucket state over two
+(``DSIR_STATE``): maintaining the bucket state over two
 batch rotations must re-derive EXACTLY the weight table the same
 state program gives over the full corpus in one batch (the one-shot
 fit, whose definition the DuckDB oracle checks), and scoring against
@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import pytest
 
-from namegraph_collections_spark.operators.dsir_maintain import maintain_dsir_state
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.data_selection import (
+    DSIR_STATE,
     dsir_score_against,
     dsir_state_for,
     dsir_weights_from_state,
@@ -35,8 +36,8 @@ def test_two_rotations_rederive_the_one_shot_weights(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_dsir_state(spark, base, wave1, "t0")
-    state2 = maintain_dsir_state(spark, base, wave2, "t1")
+    maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")
+    state2 = maintain_keyed_state(spark, base, DSIR_STATE, wave2, "t1")
 
     got = dsir_weights_from_state(state2)
     want = dsir_weights_from_state(dsir_state_for(docs))
@@ -53,7 +54,7 @@ def test_state_stays_bucket_bounded(spark, tmp_path):
 
     base = str(tmp_path / "dsir_state_bound")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    state = maintain_dsir_state(spark, base, docs, "t0")
+    state = maintain_keyed_state(spark, base, DSIR_STATE, docs, "t0")
     assert state.count() <= DSIR_B
     # and the contribution function agrees with the merged state for a
     # single batch
@@ -80,7 +81,7 @@ def test_streaming_maintenance_rederives_the_one_shot_weights(spark, tmp_path):
 
     base = str(tmp_path / "dsir_state_stream")
     run_maintenance_stream(
-        read_documents_stream(spark, str(zone)), maintain_dsir_state, base, str(tmp_path / "ckpt")
+        read_documents_stream(spark, str(zone)), DSIR_STATE, base, str(tmp_path / "ckpt")
     )
 
     got = dsir_weights_from_state(latest_snapshot(spark, base))
@@ -91,9 +92,7 @@ def test_streaming_maintenance_rederives_the_one_shot_weights(spark, tmp_path):
 def test_streaming_scoring_matches_the_batch_scorer(spark, tmp_path):
     import shutil
 
-    from namegraph_collections_spark.streaming.dsir_stream import (
-        run_dsir_scoring_stream,
-    )
+    from namegraph_collections_spark.streaming import run_scoring_stream
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
@@ -109,8 +108,11 @@ def test_streaming_scoring_matches_the_batch_scorer(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     out = str(tmp_path / "scored")
-    run_dsir_scoring_stream(
-        read_documents_stream(spark, str(zone)), bw, out, str(tmp_path / "ckpt")
+    run_scoring_stream(
+        read_documents_stream(spark, str(zone)),
+        lambda b: dsir_score_against(b, bw),
+        out,
+        str(tmp_path / "ckpt"),
     )
     # drop the sink's provenance partition column to compare against
     # the batch scorer's exact schema
@@ -124,8 +126,8 @@ def test_replayed_batch_does_not_double_merge(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wave1 = docs.filter("doc_id % 2 = 0")
 
-    state1 = maintain_dsir_state(spark, base, wave1, "t0")
-    replayed = maintain_dsir_state(spark, base, wave1, "t0")
+    state1 = maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")
+    replayed = maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")
     assert _rows(replayed) == _rows(state1)
 
 
@@ -135,12 +137,12 @@ def test_partial_snapshot_is_not_treated_as_merged(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_dsir_state(spark, base, wave1, "t0")
+    maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")
     partial = tmp_path / "dsir_state_crash" / "snapshot=t1"
     partial.mkdir(parents=True)
     (partial / "part-00000.parquet").write_bytes(b"not a parquet footer")
 
-    state2 = maintain_dsir_state(spark, base, wave2, "t1")
+    state2 = maintain_keyed_state(spark, base, DSIR_STATE, wave2, "t1")
     got = dsir_weights_from_state(state2)
     want = dsir_weights_from_state(
         dsir_state_for(spark.read.parquet(f"{SF_DIR}/documents.parquet"))
@@ -154,7 +156,7 @@ def test_out_of_order_batch_replay_raises(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_dsir_state(spark, base, wave1, "t0")
-    maintain_dsir_state(spark, base, wave2, "t1")
+    maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")
+    maintain_keyed_state(spark, base, DSIR_STATE, wave2, "t1")
     with pytest.raises(ValueError, match="out-of-order replay"):
-        maintain_dsir_state(spark, base, wave1, "t0")
+        maintain_keyed_state(spark, base, DSIR_STATE, wave1, "t0")

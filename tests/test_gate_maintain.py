@@ -1,4 +1,4 @@
-"""Distinct-count IVM for the domain gate (operators/gate_maintain.py):
+"""Distinct-count IVM for the domain gate (``GATE_STATE``):
 maintaining the page-grain state over two batch rotations must
 re-derive EXACTLY the gate the one-shot rollup computes over the full
 corpus — including domains whose pages arrive split across the two
@@ -8,9 +8,9 @@ double-count distinct URLs).
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.gate_maintain import maintain_gate_state
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.queries import REGISTRY
-from namegraph_collections_spark.queries.web_rollup import gate_from_state
+from namegraph_collections_spark.queries.web_rollup import GATE_STATE, gate_from_state
 from tests.conftest import SF_DIR
 
 
@@ -29,8 +29,8 @@ def test_two_rotations_rederive_the_one_shot_gate(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    state1 = maintain_gate_state(spark, base, wave1, "t0")
-    state2 = maintain_gate_state(spark, base, wave2, "t1")
+    state1 = maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
+    state2 = maintain_keyed_state(spark, base, GATE_STATE, wave2, "t1")
 
     got = gate_from_state(state2)
     want = REGISTRY["host_quality_rollup"].fn(spark, SF_DIR)
@@ -74,7 +74,7 @@ def test_streaming_maintenance_rederives_the_one_shot_gate(spark, tmp_path):
 
     base = str(tmp_path / "gate_state_stream")
     run_maintenance_stream(
-        read_documents_stream(spark, str(zone)), maintain_gate_state, base, str(tmp_path / "ckpt")
+        read_documents_stream(spark, str(zone)), GATE_STATE, base, str(tmp_path / "ckpt")
     )
 
     got = gate_from_state(latest_snapshot(spark, base))
@@ -90,8 +90,8 @@ def test_replayed_batch_does_not_double_merge(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wave1 = docs.filter("doc_id % 2 = 0")
 
-    state1 = maintain_gate_state(spark, base, wave1, "t0")
-    replayed = maintain_gate_state(spark, base, wave1, "t0")
+    state1 = maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
+    replayed = maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
     assert _rows(replayed) == _rows(state1)
     assert _rows(gate_from_state(replayed)) == _rows(gate_from_state(state1))
 
@@ -107,14 +107,14 @@ def test_partial_snapshot_is_not_treated_as_merged(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_gate_state(spark, base, wave1, "t0")
+    maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
     # simulate the crash: t1's directory exists with partial data but
     # no _SUCCESS commit marker
     partial = tmp_path / "gate_state_crash" / "snapshot=t1"
     partial.mkdir(parents=True)
     (partial / "part-00000.parquet").write_bytes(b"not a parquet footer")
 
-    state2 = maintain_gate_state(spark, base, wave2, "t1")
+    state2 = maintain_keyed_state(spark, base, GATE_STATE, wave2, "t1")
     got = gate_from_state(state2)
     want = REGISTRY["host_quality_rollup"].fn(spark, SF_DIR)
     assert _rows(got) == _rows(want)
@@ -132,10 +132,10 @@ def test_out_of_order_batch_replay_raises(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_gate_state(spark, base, wave1, "t0")
-    state2 = maintain_gate_state(spark, base, wave2, "t1")
+    maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
+    state2 = maintain_keyed_state(spark, base, GATE_STATE, wave2, "t1")
     with pytest.raises(ValueError, match="out-of-order replay"):
-        maintain_gate_state(spark, base, wave1, "t0")
+        maintain_keyed_state(spark, base, GATE_STATE, wave1, "t0")
     # the guard left the state untouched
     from namegraph_collections_spark.operators.cdc import latest_snapshot
 

@@ -9,12 +9,13 @@ from __future__ import annotations
 
 import shutil
 
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.operators.cdc import latest_snapshot
 from namegraph_collections_spark.operators.ivf_maintain import (
+    IVF_STATE,
     centroids_from_state,
     ivf_state_for,
     list_balance_from_state,
-    maintain_ivf_state,
 )
 from tests.conftest import SF_DIR
 
@@ -28,8 +29,8 @@ def test_two_rotations_rederive_the_one_shot_statistics(spark, tmp_path):
     base = str(tmp_path / "ivf_state")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     # split so every list receives vectors in BOTH waves
-    maintain_ivf_state(spark, base, emb.filter("vec_id % 2 = 0"), "t0")
-    state = maintain_ivf_state(spark, base, emb.filter("vec_id % 2 = 1"), "t1")
+    maintain_keyed_state(spark, base, IVF_STATE, emb.filter("vec_id % 2 = 0"), "t0")
+    state = maintain_keyed_state(spark, base, IVF_STATE, emb.filter("vec_id % 2 = 1"), "t1")
 
     want = ivf_state_for(emb)
     assert _rows(state) == _rows(want)
@@ -42,11 +43,11 @@ def test_two_rotations_rederive_the_one_shot_statistics(spark, tmp_path):
 def test_replayed_batch_does_not_remerge(spark, tmp_path):
     base = str(tmp_path / "ivf_replay")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    maintain_ivf_state(spark, base, emb, "t0")
+    maintain_keyed_state(spark, base, IVF_STATE, emb, "t0")
     before = _rows(latest_snapshot(spark, base))
     # at-least-once redelivery: committed stamp is re-pointed, never
     # re-summed (a re-merge would double every count and component)
-    maintain_ivf_state(spark, base, emb, "t0")
+    maintain_keyed_state(spark, base, IVF_STATE, emb, "t0")
     assert _rows(latest_snapshot(spark, base)) == before
 
 
@@ -76,7 +77,7 @@ def test_streaming_twin_matches_the_one_shot(spark, tmp_path):
 
     base = str(tmp_path / "ivf_stream_state")
     run_maintenance_stream(
-        read_embeddings_stream(spark, str(zone)), maintain_ivf_state, base, str(tmp_path / "ckpt")
+        read_embeddings_stream(spark, str(zone)), IVF_STATE, base, str(tmp_path / "ckpt")
     )
     got = centroids_from_state(latest_snapshot(spark, base))
     want = centroids_from_state(ivf_state_for(emb))

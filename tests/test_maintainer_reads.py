@@ -1,6 +1,6 @@
 """Contract tests for the maintainer read-path battery's state
 fixture (queries/maintainer_reads.py): the in-plan 3-batch fold must
-equal BOTH the one-shot ``*_state_for`` over the full input (the
+equal BOTH the one-shot state program over the full input (the
 monoid identity the DuckDB oracles rely on) AND the filesystem
 maintainer's merged snapshot over the same batches (so the battery's
 fixture is the maintainers' actual merge semantics, not a lookalike).
@@ -13,19 +13,27 @@ from pyspark.sql import functions as F
 
 from namegraph_collections_spark.operators.additive_state import (
     latest_snapshot,
+    maintain_keyed_state,
 )
 from namegraph_collections_spark.operators.ivf_maintain import (
+    IVF_STATE,
     ivf_state_for,
-    maintain_ivf_state,
 )
 from namegraph_collections_spark.operators.vocab_maintain import (
+    VOCAB_STATE,
     vocab_head_from_state,
     vocab_state_for,
 )
+from namegraph_collections_spark.queries.corpus_stats import DIVERSITY_STATE
+from namegraph_collections_spark.queries.data_selection import DSIR_STATE
 from namegraph_collections_spark.queries.maintainer_reads import (
     FOLD_BATCHES,
     folded_state,
 )
+from namegraph_collections_spark.queries.percentiles import HIST_STATE
+from namegraph_collections_spark.queries.quality_classifier import NBQ_STATE
+from namegraph_collections_spark.queries.rollups import CMS_STATE
+from namegraph_collections_spark.queries.web_rollup import GATE_STATE
 from tests.conftest import SF_DIR
 
 
@@ -33,20 +41,40 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_folded_state_equals_one_shot_and_filesystem_merge(spark, tmp_path):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    fold = folded_state(
-        emb, "vec_id", ivf_state_for, ["cluster", "dim"],
-        {"s": "sum", "n": "sum"},
-    )
-    # monoid identity: fold-of-3 == one-shot over the union
-    assert _rows(fold) == _rows(ivf_state_for(emb))
-    # and == the filesystem maintainer folding the same batches
-    base = str(tmp_path / "ivf_state")
+#: Every maintained state: its declaration, source table and fold key.
+STATES = {
+    "dsir": (DSIR_STATE, "documents", "doc_id"),
+    "nbq": (NBQ_STATE, "documents", "doc_id"),
+    "diversity": (DIVERSITY_STATE, "embeddings", "vec_id"),
+    "hist": (HIST_STATE, "lineitem", "l_orderkey"),
+    "cms": (CMS_STATE, "documents", "doc_id"),
+    "gate": (GATE_STATE, "documents", "doc_id"),
+    "vocab": (VOCAB_STATE, "documents", "doc_id"),
+    "ivf": (IVF_STATE, "embeddings", "vec_id"),
+}
+
+
+@pytest.mark.parametrize("name", list(STATES))
+def test_keyed_state_declaration(spark, tmp_path, name):
+    """A declaration's program emits exactly its keys and merge columns;
+    and for every foldable state the in-plan fold equals BOTH the
+    one-shot program over the union (the monoid identity the DuckDB
+    oracles rely on) AND the filesystem merge of the same batches (so
+    the battery's fixture is the maintainers' actual merge semantics,
+    not a lookalike)."""
+    state, table, key = STATES[name]
+    src = spark.read.parquet(f"{SF_DIR}/{table}.parquet")
+    one_shot = state.program(src)
+    assert one_shot.columns == state.columns
+    if state is GATE_STATE:
+        # its program reads (doc_id, source, text) only, so no fold tag
+        return
+    fold = folded_state(src, key, state)
+    assert _rows(fold) == _rows(one_shot)
+    base = str(tmp_path / name)
     for i in range(FOLD_BATCHES):
-        maintain_ivf_state(
-            spark, base,
-            emb.filter(F.col("vec_id") % FOLD_BATCHES == i), f"t{i}",
+        maintain_keyed_state(
+            spark, base, state, src.filter(F.col(key) % FOLD_BATCHES == i), f"t{i}"
         )
     assert _rows(fold) == _rows(latest_snapshot(spark, base))
 
@@ -80,10 +108,7 @@ def test_vocab_fold_respects_the_min_monoid(spark):
     """first_doc merges by MIN — a sum-style merge would double-count;
     pin the fold's per-column monoid dispatch and the head read."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fold = folded_state(
-        docs, "doc_id", vocab_state_for, ["tok"],
-        {"first_doc": "min", "occ": "sum"},
-    )
+    fold = folded_state(docs, "doc_id", VOCAB_STATE)
     assert _rows(fold) == _rows(vocab_state_for(docs))
     head = vocab_head_from_state(fold, 10).collect()
     assert len(head) == 10

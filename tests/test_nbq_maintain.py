@@ -1,5 +1,5 @@
 """Additive-count IVM for the NB quality-filter model
-(operators/nbq_maintain.py): the model maintained over labeled batch
+(``NBQ_STATE``): the model maintained over labeled batch
 rotations must re-derive EXACTLY the (weights, prior) the one-shot
 fit (the same state program over the full corpus in one batch, whose
 definition the DuckDB oracle checks) computes, and scoring against
@@ -7,9 +7,10 @@ the maintained model must reproduce the registered query's scores."""
 
 from __future__ import annotations
 
-from namegraph_collections_spark.operators.nbq_maintain import maintain_nbq_state
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.queries import REGISTRY
 from namegraph_collections_spark.queries.quality_classifier import (
+    NBQ_STATE,
     nbq_model_from_state,
     nbq_model_of,
     nbq_score_against,
@@ -27,8 +28,8 @@ def test_rotations_rederive_the_one_shot_model_and_scores(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     state = None
     for i in range(3):
-        state = maintain_nbq_state(
-            spark, base, docs.filter(f"doc_id % 3 = {i}"), f"t{i}"
+        state = maintain_keyed_state(
+            spark, base, NBQ_STATE, docs.filter(f"doc_id % 3 = {i}"), f"t{i}"
         )
     w_got, p_got = nbq_model_from_state(state)
     w_want, p_want = nbq_model_of(docs)
@@ -47,8 +48,8 @@ def test_replayed_batch_does_not_double_merge(spark, tmp_path):
     base = str(tmp_path / "nbq_state_replay")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wave = docs.filter("doc_id % 2 = 0")
-    state1 = maintain_nbq_state(spark, base, wave, "t0")
-    replayed = maintain_nbq_state(spark, base, wave, "t0")
+    state1 = maintain_keyed_state(spark, base, NBQ_STATE, wave, "t0")
+    replayed = maintain_keyed_state(spark, base, NBQ_STATE, wave, "t0")
     assert _rows(replayed) == _rows(state1)
 
 

@@ -178,9 +178,7 @@ def test_streaming_scorer_matches_batch_scores(spark, tmp_path):
     from namegraph_collections_spark.streaming.filter_stream import (
         read_documents_stream,
     )
-    from namegraph_collections_spark.streaming.nbq_stream import (
-        run_nbq_scoring_stream,
-    )
+    from namegraph_collections_spark.streaming import run_scoring_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     w, prior = nbq_model_of(docs)
@@ -198,8 +196,10 @@ def test_streaming_scorer_matches_batch_scores(spark, tmp_path):
             shutil.copy(f, zone / f"file-{i}.parquet")
 
     out = str(tmp_path / "scored")
-    run_nbq_scoring_stream(
-        read_documents_stream(spark, str(zone)), w, prior, out,
+    run_scoring_stream(
+        read_documents_stream(spark, str(zone)),
+        lambda b: nbq_score_against(b, w, prior),
+        out,
         str(tmp_path / "ckpt"),
     )
     got = _scored_rows(spark.read.parquet(out))

@@ -9,7 +9,8 @@ from __future__ import annotations
 import pytest
 
 from namegraph_collections_spark.operators.additive_state import (
-    maintain_additive_state,
+    KeyedState,
+    maintain_keyed_state,
     marker_stamp,
 )
 from namegraph_collections_spark.operators.cdc import (
@@ -19,13 +20,17 @@ from namegraph_collections_spark.operators.cdc import (
 )
 
 
+#: Raw keyed rows merged as they are: the identity program.
+_SUM_A = KeyedState(lambda rows: rows, ("k",), {"a": "sum"})
+
+
 def _state_rows(df):
     return sorted((r.k, r.a) for r in df.collect())
 
 
 def _merge(spark, base, rows, stamp):
     contrib = spark.createDataFrame(rows, "k long, a long")
-    return maintain_additive_state(spark, base, contrib, ["k"], ["a"], stamp)
+    return maintain_keyed_state(spark, base, _SUM_A, contrib, stamp)
 
 
 def _snapshot_dirs(tmp):

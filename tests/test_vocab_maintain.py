@@ -7,9 +7,10 @@ replay idempotence)."""
 
 from __future__ import annotations
 
+from namegraph_collections_spark.operators.additive_state import maintain_keyed_state
 from namegraph_collections_spark.operators.cdc import latest_snapshot
 from namegraph_collections_spark.operators.vocab_maintain import (
-    maintain_vocab_state,
+    VOCAB_STATE,
     vocab_state_for,
     vocab_stats_from_state,
 )
@@ -29,8 +30,8 @@ def test_two_rotations_rederive_the_one_shot_state(spark, tmp_path):
     wave1 = docs.filter("doc_id % 2 = 0")
     wave2 = docs.filter("doc_id % 2 = 1")
 
-    maintain_vocab_state(spark, base, wave1, "t0")
-    state = maintain_vocab_state(spark, base, wave2, "t1")
+    maintain_keyed_state(spark, base, VOCAB_STATE, wave1, "t0")
+    state = maintain_keyed_state(spark, base, VOCAB_STATE, wave2, "t1")
 
     want = vocab_state_for(docs)
     assert _rows(state) == _rows(want)
@@ -47,8 +48,8 @@ def test_first_doc_takes_the_min_across_waves(spark, tmp_path):
     )
     # deliver the HIGH doc ids first: the min-merge must later lower
     # first_doc when an older id arrives
-    maintain_vocab_state(spark, base, docs.filter("doc_id >= 7"), "t0")
-    state = maintain_vocab_state(spark, base, docs.filter("doc_id < 7"), "t1")
+    maintain_keyed_state(spark, base, VOCAB_STATE, docs.filter("doc_id >= 7"), "t0")
+    state = maintain_keyed_state(spark, base, VOCAB_STATE, docs.filter("doc_id < 7"), "t1")
     got = {r.tok: (r.first_doc, r.occ) for r in state.collect()}
     assert got == {"alpha": (7, 3), "beta": (3, 2), "gamma": (3, 1)}
 
@@ -57,8 +58,8 @@ def test_replayed_batch_does_not_remerge(spark, tmp_path):
     base = str(tmp_path / "vocab_replay")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wave = docs.filter("doc_id % 2 = 0")
-    state1 = maintain_vocab_state(spark, base, wave, "t0")
-    replayed = maintain_vocab_state(spark, base, wave, "t0")
+    state1 = maintain_keyed_state(spark, base, VOCAB_STATE, wave, "t0")
+    replayed = maintain_keyed_state(spark, base, VOCAB_STATE, wave, "t0")
     assert _rows(replayed) == _rows(state1)
 
 
@@ -81,7 +82,7 @@ def test_streaming_twin_matches_the_batch_path(spark, tmp_path):
 
     base = str(tmp_path / "vocab_stream_state")
     run_maintenance_stream(
-        read_documents_stream(spark, str(zone)), maintain_vocab_state, base, str(tmp_path / "ckpt")
+        read_documents_stream(spark, str(zone)), VOCAB_STATE, base, str(tmp_path / "ckpt")
     )
     got = latest_snapshot(spark, base)
     assert _rows(got) == _rows(vocab_state_for(docs))
