@@ -256,12 +256,16 @@ def nbq_model_from_state(state: DataFrame):
             f" - {_lp_micro_sql('COALESCE(cn, 0)', 't_neg')} AS w_micro",
         )
     )
-    # NULLIF: a state with no train document carries (0, 0) prior
-    # counts, and 0/0 would raise under ANSI; its prior is NULL instead
-    # (as the oracle's ln of a NULL ratio is), and so is every margin.
+    # A global aggregate, so the prior is one row whatever the state
+    # holds, as the oracle's `prior` CTE is. A state with no train
+    # document has no prior row (a fold of batches without one) or a
+    # (0, 0) row (the one-shot program): NULL sums or NULLIF's NULL
+    # (0/0 would raise under ANSI) give it a NULL prior, as the
+    # oracle's ln of a NULL ratio is, and so every margin is NULL.
     prior = (
         state.filter(F.col("bucket") == PRIOR_BUCKET)
-        .selectExpr("cp AS np", "cn AS nn", "NULLIF(cp + cn, 0) AS n_train")
+        .agg(F.sum("cp").alias("np"), F.sum("cn").alias("nn"))
+        .selectExpr("np", "nn", "NULLIF(np + nn, 0) AS n_train")
         .selectExpr(
             f"{_lnr_micro_sql('np', 'n_train')}"
             f" - {_lnr_micro_sql('nn', 'n_train')} AS prior_micro"

@@ -44,6 +44,7 @@ from dataclasses import dataclass
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -104,8 +105,61 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
+#: The confs Spark 4.1's ParquetToSparkSchemaConverter reads. With a
+#: file's footer they decide the schema ``spark.read.parquet`` infers.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+_SCHEMAS: dict[tuple[bytes, tuple[str, ...]], StructType] = {}
+
+
+def _parquet_footer(path: str) -> bytes | None:
+    """The footer of the single Parquet file at ``path`` (its metadata,
+    length and magic), or None when Python cannot open ``path`` as one
+    (a directory, a URI, a missing or non-Parquet file)."""
+    try:
+        with open(path, "rb") as f:
+            f.seek(-8, os.SEEK_END)
+            tail = f.read(8)
+            if tail[4:] != b"PAR1":
+                return None
+            f.seek(-8 - int.from_bytes(tail[:4], "little"), os.SEEK_END)
+            return f.read()
+    except OSError:
+        return None
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The table ``name`` of ``sf_dir``, read with a memoized schema.
+
+    ``spark.read.parquet`` infers the schema with a Spark job (~60-90
+    ms); given the schema, the read runs none (~10 ms). The inferred
+    schema is a pure function of the file's footer bytes and the
+    converter confs, so that pair keys a per-process memo: a file
+    rewritten with another schema has another footer and is inferred
+    afresh. A path Python cannot open as one Parquet file is read as
+    before. Each call still returns a fresh DataFrame, so self-joins
+    of two reads get distinct attribute ids.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    footer = _parquet_footer(path)
+    if footer is None:
+        return spark.read.parquet(path)
+    key = (footer, tuple(spark.conf.get(k) for k in _PARQUET_SCHEMA_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def spread(df: DataFrame, key: str) -> DataFrame:
@@ -459,6 +513,6 @@ def events_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = tbl(spark, sf_dir, "events")
     dtype = dict(df.dtypes)["ts"]
     return df.withColumn("ts_us", ts_us_expr(dtype)).drop("ts")

@@ -129,14 +129,6 @@ def _tree_sql(tree) -> str:
     )
 
 
-def _tree_col(tree):
-    rf, rt, (lf, lt, ll, lr), (gf, gt, gl, gr) = tree
-    return F.when(
-        F.col(rf) <= rt,
-        F.when(F.col(lf) <= lt, F.lit(ll)).otherwise(F.lit(lr)),
-    ).otherwise(F.when(F.col(gf) <= gt, F.lit(gl)).otherwise(F.lit(gr)))
-
-
 def _ltr_feats_cte() -> str:
     """The shared WITH-body producing `feats` (doc_id, base_score, 22
     feature columns) for the rescore window — used by the LTR oracle
@@ -199,18 +191,19 @@ def _ltr_feats_cte() -> str:
     )"""
 
 
+#: The tree ensemble as one SQL expression, shared by the oracle and
+#: the Spark query. Leaf values are ≤3-decimal constants, so the sum is
+#: exact in DECIMAL(18,6) on both engines.
+_LTR_MODEL_SQL = " + ".join(f"CAST({_tree_sql(t)} AS DECIMAL(18,6))" for t in LTR_TREES)
+
+
 def _ltr_oracle_sql() -> str:
-    # Leaf values are ≤3-decimal constants, so the ensemble sum is
-    # exact in DECIMAL(18,6) — the usual cross-engine determinism
-    # treatment (DuckDB parses numeric literals as DECIMAL, Spark as
-    # DOUBLE; summing decimals on both sides removes the mismatch).
-    model = " + ".join(f"CAST({_tree_sql(t)} AS DECIMAL(18,6))" for t in LTR_TREES)
     feat_cols = ", ".join(LTR_FEATURE_NAMES)
     return f"""
     WITH {_ltr_feats_cte()},
     rescored AS (
       SELECT doc_id, base_score, {feat_cols},
-             CAST({model} AS DOUBLE) AS ltr_score
+             CAST({_LTR_MODEL_SQL} AS DOUBLE) AS ltr_score
       FROM feats
     )
     SELECT doc_id, base_score, {feat_cols}, ltr_score, rnk FROM (
@@ -300,16 +293,13 @@ def search_ltr_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [F.col("s_tokens").cast("double").alias("f_size_names")]
     )
     feats = stats.select("doc_id", "base_score", *feat_cols)
-    # left-associative fold over the tree outputs — the exact addition
-    # order of the oracle's `tree1 + tree2 + …`, so the float sum is
-    # bit-identical across engines. The base score carries weight 0 in
-    # the rescore, matching the reference's `"query_weight": 0`
+    # The ensemble is the oracle's own SQL text: the same left-to-right
+    # `tree1 + tree2 + …` over the same literals, so the decimal sum is
+    # identical across engines. The base score carries weight 0 in the
+    # rescore, matching the reference's `"query_weight": 0`
     # (research/learning-to-rank/search.py:88) — inside the window the
     # model alone ranks.
-    acc = _tree_col(LTR_TREES[0]).cast("decimal(18,6)")
-    for t in LTR_TREES[1:]:
-        acc = acc + _tree_col(t).cast("decimal(18,6)")
-    rescored = feats.withColumn("ltr_score", acc.cast("double"))
+    rescored = feats.withColumn("ltr_score", F.expr(f"CAST({_LTR_MODEL_SQL} AS DOUBLE)"))
     return ranked_topk(
         rescored, FINAL_K, F.col("ltr_score").desc(), F.col("doc_id").asc()
     ).select("doc_id", "base_score", *LTR_FEATURE_NAMES, "ltr_score", "rnk")
@@ -577,59 +567,6 @@ _FIELD_CONTRIB_SQL = f"""
 """
 
 
-def _field_contribs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(doc, field, term) boosted BM25 contributions — the shared
-    stats pipeline of both multi-field variants: one explode, per-field
-    token stats, per-field BM25 with the field's boost and b."""
-    docs = spread(_public(tbl(spark, sf_dir, "documents")), "doc_id")
-    all_toks = F.split(F.lower("text"), " ")
-    fields = docs.select(
-        "doc_id", F.lit("title").alias("field"), F.slice(all_toks, 1, TITLE_TOKENS).alias("toks")
-    ).unionByName(
-        docs.select(
-            "doc_id",
-            F.lit("body").alias("field"),
-            F.slice(
-                all_toks, TITLE_TOKENS + 1, F.greatest(F.size(all_toks) - TITLE_TOKENS, F.lit(0))
-            ).alias("toks"),
-        )
-    )
-    toks = fields.select("doc_id", "field", F.explode("toks").alias("token"))
-    doclen = toks.groupBy("doc_id", "field").agg(F.count(F.lit(1)).alias("dl"))
-    corpus = doclen.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.col("dl").cast("double")).alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("token").isin(QUERY_TERMS))
-        .groupBy("doc_id", "field", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("field", "token").agg(F.countDistinct("doc_id").alias("df"))
-    boost = F.when(F.col("field") == "title", F.lit(FIELD_SPECS["title"]["boost"])).otherwise(
-        F.lit(FIELD_SPECS["body"]["boost"])
-    )
-    b = F.when(F.col("field") == "title", F.lit(FIELD_SPECS["title"]["b"])).otherwise(
-        F.lit(FIELD_SPECS["body"]["b"])
-    )
-    return (
-        tf.join(F.broadcast(df), ["field", "token"])
-        .join(doclen, ["doc_id", "field"])
-        .join(F.broadcast(corpus), "field")
-        .select(
-            "doc_id",
-            "token",
-            round6_det(
-                boost
-                * F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-                * (F.col("tf") * (K1 + 1))
-                / (F.col("tf") + K1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-            )
-            .cast("decimal(18,6)")
-            .alias("c"),
-        )
-    )
-
-
 @register(
     "multifield_bm25_variants",
     oracle=f"""
@@ -661,41 +598,96 @@ def multifield_bm25_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     field's boost and b. ``most_fields`` SUMS a term's per-field
     scores per doc; ``cross_fields`` treats the fields as one blended
     field — per term the BEST field contribution counts (ES's blended
-    term query with tie_breaker=0), then terms sum. The expensive
-    stats pipeline (one explode + per-field aggs) is computed once and
-    shared; only the final aggregation differs, so the variant
-    dimension costs one extra tiny agg, not another pass over the
-    corpus. Public docs only (F13).
+    term query with tie_breaker=0), then terms sum. Public docs only
+    (F13).
+
+    Plan shape: ``bm25_search``'s row-wise plan, per field. A field's
+    ``dl`` is the size of its token slice, and each term's tf is a size
+    difference over the field's matched tokens (one ``filter(isin)`` per
+    field, then ``array_remove`` per term): no explode, no token-stream
+    aggregate. One broadcast global aggregate gives each field's ``n``
+    and ``avgdl`` and each (field, term) ``df``; a doc whose field has
+    no token (the body of a short doc) is left out of that field's
+    stats, as the oracle's unnest leaves it out. Both scores are row
+    expressions over the per-(field, term) contributions: most = their
+    sum, cross = the sum over terms of the larger of the title and body
+    contribution. A row generator stacks the two variants for each doc
+    with a query term, and a window partitioned on the variant ranks
+    them. The build runs no Spark job, and the scores are SQL text: a
+    few py4j calls instead of one per Column operation.
     """
-    contrib = _field_contribs(spark, sf_dir)
-    per_term = contrib.groupBy("doc_id", "token").agg(
-        F.sum("c").alias("sum_c"), F.max("c").alias("max_c")
+    toks = "split(lower(text), ' ')"
+    fields = {
+        "title": f"slice({toks}, 1, {TITLE_TOKENS})",
+        "body": f"slice({toks}, {TITLE_TOKENS + 1}, greatest(size({toks}) - {TITLE_TOKENS}, 0))",
+    }
+    terms = list(enumerate(QUERY_TERMS))
+    in_terms = ", ".join(f"'{t}'" for t in QUERY_TERMS)
+    per_doc = (
+        spread(_public(tbl(spark, sf_dir, "documents")), "doc_id")
+        .selectExpr(
+            "doc_id",
+            *[f"size({s}) AS dl_{f}" for f, s in fields.items()],
+            *[f"filter({s}, x -> x IN ({in_terms})) AS m_{f}" for f, s in fields.items()],
+        )
+        .selectExpr(
+            "doc_id",
+            *[f"dl_{f}" for f in fields],
+            *[
+                f"size(m_{f}) - size(array_remove(m_{f}, '{t}')) AS tf_{f}_{i}"
+                for f in fields
+                for i, t in terms
+            ],
+        )
     )
-    # Both variants from ONE aggregation pass: most_fields = Σ all
-    # field contribs, cross_fields = Σ per-term best-field contrib.
-    # localCheckpoint is load-bearing twice over: (a) it materializes
-    # the expensive stats pipeline once instead of once per variant,
-    # and (b) it cuts the lineage so the two top-k branches below do
-    # not share an agg+window subtree — Spark's plan deduplication
-    # mis-rewrites the second occurrence of an identical aggregate
-    # chain under a union (observed: the second branch's groupBy
-    # silently drops terms), and a checkpointed leaf sidesteps the
-    # rewrite entirely. The checkpointed set is one row of two doubles
-    # per MATCHED doc — small at any corpus size.
-    scores = per_term.groupBy("doc_id").agg(
-        F.sum("sum_c").cast("double").alias("most_score"),
-        F.sum("max_c").cast("double").alias("cross_score"),
-    ).localCheckpoint()
+    stats = per_doc.selectExpr(
+        *[f"count(CASE WHEN dl_{f} > 0 THEN 1 END) AS n_{f}" for f in fields],
+        *[f"avg(CASE WHEN dl_{f} > 0 THEN CAST(dl_{f} AS DOUBLE) END) AS avgdl_{f}" for f in fields],
+        *[f"sum(CAST(tf_{f}_{i} > 0 AS BIGINT)) AS df_{f}_{i}" for f in fields for i, _ in terms],
+    )
 
-    def tag(col: str, v: str) -> DataFrame:
-        return ranked_topk(
-            scores.select("doc_id", F.col(col).alias("score")),
-            TOP_K,
-            F.col("score").desc(),
-            F.col("doc_id").asc(),
-        ).select(F.lit(v).alias("variant"), "doc_id", "score", "rnk")
+    def contrib(f: str, i: int) -> str:
+        # bm25_search's term contribution and round6_det, operation for
+        # operation, with DOUBLE literals (a bare 0.5 is a DECIMAL in
+        # Spark SQL), so the doubles are bit-identical to theirs
+        tf, df, boost, b = f"tf_{f}_{i}", f"df_{f}_{i}", FIELD_SPECS[f]["boost"], FIELD_SPECS[f]["b"]
+        bm25 = (
+            f"{boost}D * ln(1 + (n_{f} - {df} + 0.5D) / ({df} + 0.5D)) * ({tf} * {K1 + 1}D)"
+            f" / ({tf} + {K1}D * (1 - {b}D + {b}D * dl_{f} / avgdl_{f}))"
+        )
+        return (
+            f"CASE WHEN {tf} > 0 THEN CAST(floor(({bm25}) * 1000000.0D + 0.5D) / 1000000.0D"
+            f" AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END AS c_{f}_{i}"
+        )
 
-    return tag("most_score", "most_fields").unionByName(tag("cross_score", "cross_fields"))
+    tfs = ", ".join(f"tf_{f}_{i}" for f in fields for i, _ in terms)
+    most = " + ".join(f"c_{f}_{i}" for f in fields for i, _ in terms)
+    cross = " + ".join(f"greatest(c_title_{i}, c_body_{i})" for i, _ in terms)
+    # inline of NULL gives no row, so a doc without a query term is
+    # dropped inside the generator. A Filter would be pushed below
+    # spread()'s exchange into the single-task scan, and the stats
+    # branch could then not reuse that exchange.
+    return (
+        per_doc.crossJoin(F.broadcast(stats))
+        .selectExpr(
+            "doc_id",
+            f"greatest({tfs}) > 0 AS hit",
+            *[contrib(f, i) for f in fields for i, _ in terms],
+        )
+        .selectExpr(
+            "doc_id",
+            "inline(CASE WHEN hit THEN array("
+            f"named_struct('variant', 'most_fields', 'score', CAST({most} AS DOUBLE)),"
+            f" named_struct('variant', 'cross_fields', 'score', CAST({cross} AS DOUBLE))) END)",
+        )
+        .selectExpr(
+            "variant",
+            "doc_id",
+            "score",
+            "row_number() OVER (PARTITION BY variant ORDER BY score DESC, doc_id ASC) AS rnk",
+        )
+        .filter(f"rnk <= {TOP_K}")
+    )
 
 
 @register(

@@ -28,9 +28,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Load every synthetic table from ``sf_dir`` as a DataFrame."""
+    """Load every synthetic table from ``sf_dir`` as a DataFrame, through
+    the query registry's schema-memoizing ``tbl``."""
+    from namegraph_collections_spark.queries.registry import tbl
+
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in TABLE_NAMES}
+    return {name: tbl(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:

@@ -58,9 +58,8 @@ def _check_dsir_empty(rows, spark, sf):
 def _check_nb_no_train_weights(rows, spark, sf):
     """The battery's NB weight leg equals the oracle's ``w``: with no
     train gram both smoothed class distributions are uniform, so every
-    bucket weighs 0, not NULL. (Only this leg: the whole battery also
-    differs in its prior leg, which gets no row from a state without a
-    prior row where the oracle has one NULL row.)"""
+    bucket weighs 0, not NULL. The whole battery, its ``nbq_prior``
+    leg's one NULL row included, is checked against its oracle too."""
     from namegraph_collections_spark.queries.quality_classifier import _NBQ_FIT_CTES
     from tests.oracle_harness import duck_connection
 
@@ -69,6 +68,7 @@ def _check_nb_no_train_weights(rows, spark, sf):
     got = sorted((r.k1, r.v1) for r in rows if r.op == "nbq_w")
     assert got == want
     assert got and all(w == 0 for _, w in got)
+    assert [r.v1 for r in rows if r.op == "nbq_prior"] == [None]
 
 
 def _check_gate_null_url(rows, spark, sf):
@@ -110,7 +110,7 @@ def _check_gated_null_source(rows, spark, sf):
         ("host_quality_rollup", "documents", _null_first_sources, None, _check_gate_null_url, True),
         ("url_canonical_dedup", "documents", _null_first_sources, None, _check_url_null_source, True),
         ("domain_gated_corpus", "documents", _null_first_sources, None, _check_gated_null_source, True),
-        ("maintainer_state_battery", "documents", _test_split_only, None, _check_nb_no_train_weights, False),
+        ("maintainer_state_battery", "documents", _test_split_only, None, _check_nb_no_train_weights, True),
     ],
     ids=[
         "diversity-null-embedding", "nb-no-train-split", "dsir-empty-documents", "gate-null-url",
