@@ -2,9 +2,12 @@
 
 The reference serves ranked full-text search from Elasticsearch
 (bool{multi_match + rank_feature} — research/learning-to-rank/
-measure-times.py:12-105). BM25 is fully expressible relationally:
-token stats (df, tf, doc length) via explode+groupBy, then the Lucene
-BM25 formula as column math, then a ranked window for top-k.
+measure-times.py:12-105). BM25 is fully expressible relationally. One
+scorer, ``_bm25_scored``, computes it for ``bm25_search``,
+``stemmed_bm25`` and ``multifield_bm25_variants``: per-field token
+stats (doc length, tf) as row-wise array expressions, one broadcast
+global aggregate for the corpus stats (n, avgdl, df), the Lucene BM25
+formula as SQL text, then a ranked window for top-k.
 
 Determinism: per-term contributions are rounded then summed as
 DECIMAL(18,6) so the cross-engine sum is exact; ranking orders by the
@@ -19,7 +22,7 @@ from pyspark.sql.window import Window
 
 from namegraph_collections_spark.functions.det_round import round6_det, round6_det_sql
 from namegraph_collections_spark.functions.porter_sql import porter_ctes
-from namegraph_collections_spark.functions.stemmer import porter_stem
+from namegraph_collections_spark.functions.stemmer import porter_stem, porter_stem_tokens_udf
 from namegraph_collections_spark.queries.registry import ranked_topk, register, spread, tbl
 
 QUERY_TERMS = ["spark", "join", "merge", "window"]
@@ -43,7 +46,126 @@ PUBLIC_SQL = "doc_id % 7 <> 0"
 
 
 def _public(docs: DataFrame) -> DataFrame:
-    return docs.filter(F.col("doc_id") % 7 != 0)
+    return docs.filter(PUBLIC_SQL)
+
+
+def _bm25_scored(per_doc: DataFrame, fields: dict, terms: list[str], scores: dict) -> DataFrame:
+    """BM25 scores of the docs of ``per_doc`` that hold a query term:
+    one row of ``doc_id`` and the ``scores`` columns per such doc.
+
+    ``fields`` maps each field ``f`` to (the SQL of its token array over
+    ``per_doc``'s columns, its boost, its b). Each ``scores`` entry is a
+    SQL sum over the per-(field, term) contributions ``c_<f>_<i>``,
+    ``i`` indexing ``terms``; a term absent from a field contributes an
+    exact 0.
+
+    Plan shape: a field's ``dl`` is the size of its token array, and
+    each term's tf is a size difference over the field's matched tokens
+    (one ``filter(isin)`` per field, then ``array_remove`` per term): no
+    explode, no token-stream aggregate. One broadcast global aggregate
+    gives each field's ``n`` and ``avgdl`` and each (field, term) ``df``;
+    a doc whose field has no token (a NULL text, the body of a short
+    doc) is left out of that field's stats, as the oracles' unnest
+    leaves it out. The build runs no Spark job, and the contributions
+    are SQL text: a few py4j calls instead of one per Column operation.
+    """
+    in_terms = ", ".join(f"'{t}'" for t in terms)
+    ix = range(len(terms))
+    per_field = per_doc.selectExpr(
+        "doc_id",
+        *[f"size({s}) AS dl_{f}" for f, (s, _, _) in fields.items()],
+        *[f"filter({s}, x -> x IN ({in_terms})) AS m_{f}" for f, (s, _, _) in fields.items()],
+    ).selectExpr(
+        "doc_id",
+        *[f"dl_{f}" for f in fields],
+        *[
+            f"size(m_{f}) - size(array_remove(m_{f}, '{t}')) AS tf_{f}_{i}"
+            for f in fields
+            for i, t in enumerate(terms)
+        ],
+    )
+    stats = per_field.selectExpr(
+        *[f"count(CASE WHEN dl_{f} > 0 THEN 1 END) AS n_{f}" for f in fields],
+        *[f"avg(CASE WHEN dl_{f} > 0 THEN CAST(dl_{f} AS DOUBLE) END) AS avgdl_{f}" for f in fields],
+        *[f"sum(CAST(tf_{f}_{i} > 0 AS BIGINT)) AS df_{f}_{i}" for f in fields for i in ix],
+    )
+
+    def contrib(f: str, i: int) -> str:
+        # idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)), boosted, then
+        # round6_det, with DOUBLE literals (a bare 0.5 is a DECIMAL in
+        # Spark SQL): the same IEEE operations as the oracles'
+        _, boost, b = fields[f]
+        tf, df = f"tf_{f}_{i}", f"df_{f}_{i}"
+        bm25 = (
+            f"{boost}D * ln(1 + (n_{f} - {df} + 0.5D) / ({df} + 0.5D)) * ({tf} * {K1 + 1}D)"
+            f" / ({tf} + {K1}D * (1 - {b}D + {b}D * dl_{f} / avgdl_{f}))"
+        )
+        return (
+            f"CASE WHEN {tf} > 0 THEN CAST(floor(({bm25}) * 1000000.0D + 0.5D) / 1000000.0D"
+            f" AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END AS c_{f}_{i}"
+        )
+
+    tfs = ", ".join(f"tf_{f}_{i}" for f in fields for i in ix)
+    row = ", ".join(f"'{c}', CAST({s} AS DOUBLE)" for c, s in scores.items())
+    # inline of NULL gives no row, so a doc without a query term is
+    # dropped inside the generator. A Filter would be pushed below
+    # spread()'s exchange into the single-task scan, and the stats
+    # branch could then not reuse that exchange.
+    return (
+        per_field.crossJoin(F.broadcast(stats))
+        .selectExpr(
+            "doc_id",
+            f"greatest({tfs}) > 0 AS hit",
+            *[contrib(f, i) for f in fields for i in ix],
+        )
+        .selectExpr("doc_id", f"inline(CASE WHEN hit THEN array(named_struct({row})) END)")
+    )
+
+
+#: The one-field rows' score: the sum of the `text` field's terms.
+_TEXT_SCORE = {"score": " + ".join(f"c_text_{i}" for i in range(len(QUERY_TERMS)))}
+
+
+def _bm25_oracle(terms: list[str], ctes: str = "", tokens: str = "toks") -> str:
+    """DuckDB oracle of a one-field BM25 top-k over the public
+    documents' text, written in DuckDB SQL alone. The term frequencies
+    count the (doc_id, token) rows of ``tokens``, which may read the
+    extra ``ctes``; doc lengths and corpus averages count the raw
+    tokens."""
+    return f"""
+    WITH toks AS (
+      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
+      FROM documents WHERE {PUBLIC_SQL}
+    ),
+    doclen AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
+    corpus AS (SELECT COUNT(*) AS n_docs, AVG(CAST(dl AS DOUBLE)) AS avgdl FROM doclen),{ctes}
+    tf AS (
+      SELECT doc_id, token, COUNT(*) AS tf FROM {tokens}
+      WHERE token IN ({", ".join(f"'{t}'" for t in terms)})
+      GROUP BY doc_id, token
+    ),
+    df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY token),
+    contrib AS (
+      SELECT tf.doc_id,
+        CAST({round6_det_sql(f'''
+          ln(1 + (corpus.n_docs - df.df + 0.5) / (df.df + 0.5))
+          * (tf.tf * ({K1} + 1))
+          / (tf.tf + {K1} * (1 - {B} + {B} * doclen.dl / corpus.avgdl))''')}
+        AS DECIMAL(18,6)) AS c
+      FROM tf
+      JOIN df ON tf.token = df.token
+      JOIN doclen ON tf.doc_id = doclen.doc_id
+      CROSS JOIN corpus
+    ),
+    scored AS (
+      SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS score FROM contrib GROUP BY doc_id
+    )
+    SELECT doc_id, score, rnk FROM (
+      SELECT doc_id, score,
+             ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
+      FROM scored
+    ) WHERE rnk <= {TOP_K}
+    """
 
 
 # --- LTR feature set (configure-ltr.py:92-121) ------------------------------
@@ -305,102 +427,25 @@ def search_ltr_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "base_score", *LTR_FEATURE_NAMES, "ltr_score", "rnk")
 
 
-@register(
-    "bm25_search",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents WHERE {PUBLIC_SQL}
-    ),
-    doclen AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-    corpus AS (SELECT COUNT(*) AS n_docs, AVG(CAST(dl AS DOUBLE)) AS avgdl FROM doclen),
-    tf AS (
-      SELECT doc_id, token, COUNT(*) AS tf FROM toks
-      WHERE token IN ({", ".join(f"'{t}'" for t in QUERY_TERMS)})
-      GROUP BY doc_id, token
-    ),
-    df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY token),
-    contrib AS (
-      SELECT tf.doc_id,
-        CAST({round6_det_sql(f'''
-          ln(1 + (corpus.n_docs - df.df + 0.5) / (df.df + 0.5))
-          * (tf.tf * ({K1} + 1))
-          / (tf.tf + {K1} * (1 - {B} + {B} * doclen.dl / corpus.avgdl))''')}
-        AS DECIMAL(18,6)) AS c
-      FROM tf
-      JOIN df ON tf.token = df.token
-      JOIN doclen ON tf.doc_id = doclen.doc_id
-      CROSS JOIN corpus
-    ),
-    scored AS (
-      SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS score FROM contrib GROUP BY doc_id
-    )
-    SELECT doc_id, score, rnk FROM (
-      SELECT doc_id, score,
-             ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= {TOP_K}
-    """,
-)
+@register("bm25_search", oracle=_bm25_oracle(QUERY_TERMS))
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene-style BM25 top-k over `documents` (SURVEY §2.9 ★).
 
     idf = ln(1 + (N−df+0.5)/(df+0.5)); score = Σ idf·tf·(k1+1)/(tf +
     k1·(1−b+b·dl/avgdl)).
 
-    Plan shape: with a fixed small term set, per-doc stats (dl + one
-    tf per term) are row-wise ARRAY expressions over the materialized
-    token column — no explode, no token-stream shuffle at all. One
-    tiny global agg produces corpus stats AND every per-term df
-    together and broadcasts back; the score is then a single rounded-
-    decimal row expression (terms with tf=0 contribute exact 0), and
-    the only shuffle in the whole query is the final top-k window over
-    matched docs. Mirrors the ES query at
+    Plan shape: ``_bm25_scored`` over one field, the lower-cased text
+    split on spaces. spread()'s exchange is the one scan of
+    `documents`: the per-doc array expressions run above it, and the
+    stats branch reuses it. Past it, the plan shuffles only to the
+    one-row stats aggregate and its broadcast, and the top-k runs
+    per partition before a k-row rank. Mirrors the ES query at
     research/learning-to-rank/measure-times.py:86-105 with b/k1 from
     populate.py:106-112; F13's public filter applied like every
     reference search (measure-times.py:15).
     """
-    docs = _public(tbl(spark, sf_dir, "documents"))
-    toked = spread(docs, "doc_id").select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
-    )
-    per_doc = toked.select(
-        "doc_id",
-        F.size("toks").alias("dl"),
-        *[
-            F.size(F.filter("toks", lambda x: x == F.lit(t))).alias(f"tf_{i}")  # noqa: B023 — filter() invokes the lambda at build time, inside this iteration
-            for i, t in enumerate(QUERY_TERMS)
-        ],
-    )
-    stats = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")
-            for i in range(len(QUERY_TERMS))
-        ],
-    )
-    with_stats = per_doc.crossJoin(F.broadcast(stats))
-
-    def term_contrib(i: int):
-        tf, df = F.col(f"tf_{i}"), F.col(f"df_{i}")
-        c = round6_det(
-            F.log(1 + (F.col("n_docs") - df + 0.5) / (df + 0.5))
-            * (tf * (K1 + 1))
-            / (tf + K1 * (1 - B + B * F.col("dl") / F.col("avgdl")))
-        ).cast("decimal(18,6)")
-        return F.when(tf > 0, c).otherwise(F.lit(0).cast("decimal(18,6)"))
-
-    score = term_contrib(0)
-    for i in range(1, len(QUERY_TERMS)):
-        score = score + term_contrib(i)
-    matched = sum(
-        (F.col(f"tf_{i}") for i in range(1, len(QUERY_TERMS))), F.col("tf_0")
-    )
-    scored = (
-        with_stats.filter(matched > 0)
-        .select("doc_id", score.cast("double").alias("score"))
-    )
+    docs = spread(_public(tbl(spark, sf_dir, "documents")), "doc_id")
+    scored = _bm25_scored(docs, {"text": ("split(lower(text), ' ')", 1.0, B)}, QUERY_TERMS, _TEXT_SCORE)
     return ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
 
 
@@ -601,84 +646,32 @@ def multifield_bm25_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     term query with tie_breaker=0), then terms sum. Public docs only
     (F13).
 
-    Plan shape: ``bm25_search``'s row-wise plan, per field. A field's
-    ``dl`` is the size of its token slice, and each term's tf is a size
-    difference over the field's matched tokens (one ``filter(isin)`` per
-    field, then ``array_remove`` per term): no explode, no token-stream
-    aggregate. One broadcast global aggregate gives each field's ``n``
-    and ``avgdl`` and each (field, term) ``df``; a doc whose field has
-    no token (the body of a short doc) is left out of that field's
-    stats, as the oracle's unnest leaves it out. Both scores are row
-    expressions over the per-(field, term) contributions: most = their
-    sum, cross = the sum over terms of the larger of the title and body
-    contribution. A row generator stacks the two variants for each doc
-    with a query term, and a window partitioned on the variant ranks
-    them. The build runs no Spark job, and the scores are SQL text: a
-    few py4j calls instead of one per Column operation.
+    Plan shape: ``_bm25_scored`` over the two fields, with both
+    variants as its scores; a row generator stacks the two for each
+    doc with a query term, and a window partitioned on the variant
+    ranks them.
     """
     toks = "split(lower(text), ' ')"
-    fields = {
+    slices = {
         "title": f"slice({toks}, 1, {TITLE_TOKENS})",
         "body": f"slice({toks}, {TITLE_TOKENS + 1}, greatest(size({toks}) - {TITLE_TOKENS}, 0))",
     }
-    terms = list(enumerate(QUERY_TERMS))
-    in_terms = ", ".join(f"'{t}'" for t in QUERY_TERMS)
-    per_doc = (
-        spread(_public(tbl(spark, sf_dir, "documents")), "doc_id")
-        .selectExpr(
-            "doc_id",
-            *[f"size({s}) AS dl_{f}" for f, s in fields.items()],
-            *[f"filter({s}, x -> x IN ({in_terms})) AS m_{f}" for f, s in fields.items()],
-        )
-        .selectExpr(
-            "doc_id",
-            *[f"dl_{f}" for f in fields],
-            *[
-                f"size(m_{f}) - size(array_remove(m_{f}, '{t}')) AS tf_{f}_{i}"
-                for f in fields
-                for i, t in terms
-            ],
-        )
+    fields = {f: (s, FIELD_SPECS[f]["boost"], FIELD_SPECS[f]["b"]) for f, s in slices.items()}
+    ix = range(len(QUERY_TERMS))
+    scored = _bm25_scored(
+        spread(_public(tbl(spark, sf_dir, "documents")), "doc_id"),
+        fields,
+        QUERY_TERMS,
+        {
+            "most_fields": " + ".join(f"c_{f}_{i}" for f in fields for i in ix),
+            "cross_fields": " + ".join(f"greatest(c_title_{i}, c_body_{i})" for i in ix),
+        },
     )
-    stats = per_doc.selectExpr(
-        *[f"count(CASE WHEN dl_{f} > 0 THEN 1 END) AS n_{f}" for f in fields],
-        *[f"avg(CASE WHEN dl_{f} > 0 THEN CAST(dl_{f} AS DOUBLE) END) AS avgdl_{f}" for f in fields],
-        *[f"sum(CAST(tf_{f}_{i} > 0 AS BIGINT)) AS df_{f}_{i}" for f in fields for i, _ in terms],
-    )
-
-    def contrib(f: str, i: int) -> str:
-        # bm25_search's term contribution and round6_det, operation for
-        # operation, with DOUBLE literals (a bare 0.5 is a DECIMAL in
-        # Spark SQL), so the doubles are bit-identical to theirs
-        tf, df, boost, b = f"tf_{f}_{i}", f"df_{f}_{i}", FIELD_SPECS[f]["boost"], FIELD_SPECS[f]["b"]
-        bm25 = (
-            f"{boost}D * ln(1 + (n_{f} - {df} + 0.5D) / ({df} + 0.5D)) * ({tf} * {K1 + 1}D)"
-            f" / ({tf} + {K1}D * (1 - {b}D + {b}D * dl_{f} / avgdl_{f}))"
-        )
-        return (
-            f"CASE WHEN {tf} > 0 THEN CAST(floor(({bm25}) * 1000000.0D + 0.5D) / 1000000.0D"
-            f" AS DECIMAL(18,6)) ELSE CAST(0 AS DECIMAL(18,6)) END AS c_{f}_{i}"
-        )
-
-    tfs = ", ".join(f"tf_{f}_{i}" for f in fields for i, _ in terms)
-    most = " + ".join(f"c_{f}_{i}" for f in fields for i, _ in terms)
-    cross = " + ".join(f"greatest(c_title_{i}, c_body_{i})" for i, _ in terms)
-    # inline of NULL gives no row, so a doc without a query term is
-    # dropped inside the generator. A Filter would be pushed below
-    # spread()'s exchange into the single-task scan, and the stats
-    # branch could then not reuse that exchange.
     return (
-        per_doc.crossJoin(F.broadcast(stats))
-        .selectExpr(
+        scored.selectExpr(
             "doc_id",
-            f"greatest({tfs}) > 0 AS hit",
-            *[contrib(f, i) for f in fields for i, _ in terms],
-        )
-        .selectExpr(
-            "doc_id",
-            "inline(CASE WHEN hit THEN array("
-            f"named_struct('variant', 'most_fields', 'score', CAST({most} AS DOUBLE)),"
-            f" named_struct('variant', 'cross_fields', 'score', CAST({cross} AS DOUBLE))) END)",
+            "inline(array(named_struct('variant', 'most_fields', 'score', most_fields),"
+            " named_struct('variant', 'cross_fields', 'score', cross_fields)))",
         )
         .selectExpr(
             "variant",
@@ -690,54 +683,22 @@ def multifield_bm25_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stemmed_bm25",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      FROM documents WHERE {PUBLIC_SQL}
-    ),
-    -- doclen counts RAW tokens: the analyzer is 1:1, so stemming
-    -- cannot change document length or the corpus averages.
-    doclen AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-    corpus AS (SELECT COUNT(*) AS n_docs, AVG(CAST(dl AS DOUBLE)) AS avgdl FROM doclen),
-    -- Exact pre-filter before the (large) SQL stemmer: Porter never
-    -- alters the first 3 characters of a word whose stem is >= 4
-    -- chars (it only strips/replaces suffixes and appends 'e'/'i';
-    -- no replacement string can fabricate these terms), so only
-    -- tokens sharing a query term's 3-char prefix can match.
+#: The stemmed oracle's extra CTEs. An exact pre-filter runs before the
+#: (large) SQL stemmer: Porter never alters the first 3 characters of a
+#: word whose stem is >= 4 chars (it only strips/replaces suffixes and
+#: appends 'e'/'i'; no replacement string can fabricate these terms),
+#: so only tokens sharing a query term's 3-char prefix can match.
+_STEM_CTES = f"""
     cand AS MATERIALIZED (
       SELECT doc_id, token AS w FROM toks
       WHERE substring(token, 1, 3) IN ({", ".join(f"'{t[:3]}'" for t in STEMMED_TERMS)})
     ),
-    {porter_ctes("cand")},
-    tf AS (
-      SELECT doc_id, w AS token, COUNT(*) AS tf FROM p_done
-      WHERE w IN ({", ".join(f"'{t}'" for t in STEMMED_TERMS)})
-      GROUP BY doc_id, w
-    ),
-    df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY token),
-    contrib AS (
-      SELECT tf.doc_id,
-        CAST({round6_det_sql(f'''
-          ln(1 + (corpus.n_docs - df.df + 0.5) / (df.df + 0.5))
-          * (tf.tf * ({K1} + 1))
-          / (tf.tf + {K1} * (1 - {B} + {B} * doclen.dl / corpus.avgdl))''')}
-        AS DECIMAL(18,6)) AS c
-      FROM tf
-      JOIN df ON tf.token = df.token
-      JOIN doclen ON tf.doc_id = doclen.doc_id
-      CROSS JOIN corpus
-    ),
-    scored AS (
-      SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS score FROM contrib GROUP BY doc_id
-    )
-    SELECT doc_id, score, rnk FROM (
-      SELECT doc_id, score,
-             ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
-      FROM scored
-    ) WHERE rnk <= {TOP_K}
-    """,
+    {porter_ctes("cand")},"""
+
+
+@register(
+    "stemmed_bm25",
+    oracle=_bm25_oracle(STEMMED_TERMS, _STEM_CTES, "(SELECT doc_id, w AS token FROM p_done)"),
 )
 def stemmed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 over the porter-stemmed analyzer (§2.9 — the index's
@@ -746,42 +707,17 @@ def stemmed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL twin of the stemmer (functions/porter_sql.py, parity-tested
     on 28k adversarial words) so this path gets a full value check.
 
-    Analyzer shape at scale: stemming runs ONCE per document over the
-    token array (Arrow-batched, after spread()), not per token row —
-    then the stats pipeline is the plain JVM BM25.
+    Plan shape: ``bm25_search``'s, over the stemmed token array. The
+    stemmer maps each document's token array (Arrow-batched, after
+    spread()); a second spread() above it puts the stemmed arrays in one
+    exchange that the stats and the score branch both read, so the
+    analyzer runs once per document, not once per branch. The analyzer
+    is 1:1, so stemming changes no document length or corpus average.
     """
-    from namegraph_collections_spark.functions.stemmer import porter_stem, porter_stem_tokens_udf
-
     docs = spread(_public(tbl(spark, sf_dir, "documents")), "doc_id")
-    stemmed = docs.select(
-        "doc_id", porter_stem_tokens_udf(F.split(F.lower("text"), " ")).alias("toks")
+    stemmed = spread(
+        docs.select("doc_id", porter_stem_tokens_udf(F.split(F.lower("text"), " ")).alias("toks")),
+        "doc_id",
     )
-    toks = stemmed.select("doc_id", F.explode("toks").alias("token"))
-    terms = [porter_stem(t) for t in QUERY_TERMS]
-    doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    corpus = doclen.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.col("dl").cast("double")).alias("avgdl")
-    )
-    tf = toks.filter(F.col("token").isin(terms)).groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    df = tf.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
-    contrib = (
-        tf.join(F.broadcast(df), "token")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(corpus))
-        .select(
-            "doc_id",
-            round6_det(
-                F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-                * (F.col("tf") * (K1 + 1))
-                / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.col("avgdl")))
-            )
-            .cast("decimal(18,6)")
-            .alias("c"),
-        )
-    )
-    scored = contrib.groupBy("doc_id").agg(F.sum("c").cast("double").alias("score"))
+    scored = _bm25_scored(stemmed, {"text": ("toks", 1.0, B)}, STEMMED_TERMS, _TEXT_SCORE)
     return ranked_topk(scored, TOP_K, F.col("score").desc(), F.col("doc_id").asc())
-
-

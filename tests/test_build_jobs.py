@@ -1,11 +1,13 @@
 """Query builds that start no Spark job: ``registry.tbl``'s schema memo
-and the builds of the benchmark's short queries."""
+and the builds of the benchmark's short queries; and the plan shape
+of the BM25 rows."""
 
 from __future__ import annotations
 
 import ast
 import itertools
 import os
+import re
 from contextlib import contextmanager
 
 import pyarrow as pa
@@ -116,3 +118,49 @@ def test_short_query_build_starts_no_job(spark, name):
 def test_multifield_bm25_plan_has_no_checkpoint(spark):
     df = REGISTRY["multifield_bm25_variants"].fn(spark, SF_DIR)
     assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+_BM25_ROWS = ["bm25_search", "stemmed_bm25", "multifield_bm25_variants"]
+#: F13's public predicate as the scan's Filter prints it.
+_PUBLIC_FILTER = "Filter (isnotnull(doc_id) AND NOT ((doc_id % 7) = 0))"
+
+
+def _final_plan(spark, name: str) -> str:
+    """The final adaptive plan of the row at SF_DIR, after a noop
+    execute of its own query execution, without expression ids."""
+    qe = REGISTRY[name].fn(spark, SF_DIR)._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return re.sub(r"#\d+L?", "", plan.split("== Initial Plan ==")[0])
+
+
+def _below(lines: list[str], i: int) -> list[str]:
+    """The lines of the subtree under the operator on line ``i``."""
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for line in lines[i + 1:]:
+        if col(line) <= col(lines[i]):
+            break
+        out.append(line)
+    return out
+
+
+@pytest.mark.parametrize("name", _BM25_ROWS)
+def test_bm25_plan_filters_nothing_below_spread(spark, name):
+    """Below spread()'s exchange only the public predicate filters: a
+    filter on the tokens pushed there runs the token work in the
+    single-task scan and gives the stats branch an exchange of its own."""
+    lines = _final_plan(spark, name).splitlines()
+    spreads = [i for i, line in enumerate(lines)
+               if "+- Exchange hashpartitioning(doc_id, " in line and "REPARTITION_BY_NUM" in line]
+    assert spreads
+    for i in spreads:
+        filters = [line.lstrip(" :+-*()0123456789") for line in _below(lines, i) if " Filter " in line]
+        assert all(f == _PUBLIC_FILTER for f in filters), filters
+
+
+def test_stemmed_bm25_runs_its_analyzer_once(spark):
+    assert _final_plan(spark, "stemmed_bm25").count("ArrowEvalPython") == 1

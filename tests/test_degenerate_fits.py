@@ -1,9 +1,9 @@
 """Degenerate inputs to the fits that read their maintainer's state
-program (DSIR, NB, embedding diversity, the domain gate) and to the URL
-program under the gate. Each case builds a variant table with pyarrow
-next to the unchanged other tables and runs the REGISTERED query on it:
-the result equals the DuckDB oracle's, or the query raises the engine's
-named guard error."""
+program (DSIR, NB, embedding diversity, the domain gate), to the URL
+program under the gate and to the BM25 scorer. Each case builds a
+variant table with pyarrow next to the unchanged other tables and runs
+the REGISTERED query on it: the result equals the DuckDB oracle's, or
+the query raises the engine's named guard error."""
 
 from __future__ import annotations
 
@@ -43,6 +43,23 @@ def _null_first_sources(t: pa.Table) -> pa.Table:
     col = t["source"].to_pylist()
     col[0] = col[1] = None
     return t.set_column(t.schema.get_field_index("source"), "source", pa.array(col, t.schema.field("source").type))
+
+
+def _null_public_texts(t: pa.Table) -> pa.Table:
+    """Two public documents (F13: ``doc_id % 7 <> 0``) without a text."""
+    col = t["text"].to_pylist()
+    for i in [i for i, d in enumerate(t["doc_id"].to_pylist()) if d % 7][:2]:
+        col[i] = None
+    return t.set_column(t.schema.get_field_index("text"), "text", pa.array(col, t.schema.field("text").type))
+
+
+def _check_textless_unranked(rows, spark, sf):
+    """A document without a text has no token: it is not ranked, and
+    the oracle check shows it is not counted in the corpus stats."""
+    docs = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id", "text"]).to_pydict()
+    textless = {d for d, t in zip(docs["doc_id"], docs["text"]) if t is None}
+    assert len(textless) == 2
+    assert rows and not textless & {r.doc_id for r in rows}
 
 
 def _check_nb_no_train(rows, spark, sf):
@@ -111,10 +128,16 @@ def _check_gated_null_source(rows, spark, sf):
         ("url_canonical_dedup", "documents", _null_first_sources, None, _check_url_null_source, True),
         ("domain_gated_corpus", "documents", _null_first_sources, None, _check_gated_null_source, True),
         ("maintainer_state_battery", "documents", _test_split_only, None, _check_nb_no_train_weights, True),
+        # bm25_search used to count a text-less document in n and avgdl,
+        # where the oracle's unnest leaves it out.
+        ("bm25_search", "documents", _null_public_texts, None, _check_textless_unranked, True),
+        ("stemmed_bm25", "documents", _null_public_texts, None, _check_textless_unranked, True),
+        ("multifield_bm25_variants", "documents", _null_public_texts, None, _check_textless_unranked, True),
     ],
     ids=[
         "diversity-null-embedding", "nb-no-train-split", "dsir-empty-documents", "gate-null-url",
         "url-null-source", "gated-null-source", "nb-no-train-weights",
+        "bm25-null-text", "stemmed-bm25-null-text", "multifield-bm25-null-text",
     ],
 )
 def test_degenerate_input_gives_oracle_parity_or_a_named_error(

@@ -43,10 +43,11 @@ def test_query_matches_oracle(spark, sf_dir, name):
         )
 
 
-# stemmed_bm25 has no SQL oracle (pandas-UDF analyzer); pin its full
-# sf0.001 result as a golden so the stemmer+BM25 pipeline is still
-# value-checked. Regenerate deliberately if QUERY_TERMS / stemmer /
-# BM25 constants change.
+# stemmed_bm25's oracle stems with functions/porter_sql.py's SQL twin
+# of the pandas-UDF analyzer; its full sf0.001 result is also pinned
+# as a golden, a second check that does not rest on that twin.
+# Regenerate deliberately if QUERY_TERMS / stemmer / BM25 constants
+# change.
 STEMMED_BM25_GOLDEN = [
     (206, 1.65443, 1),
     (96, 1.535825, 2),
